@@ -6,7 +6,9 @@ one (key, json_array, ttl) row per date, then ``foreachPartition`` with a
 pluggable client factory — one connection per partition, pipelined writes,
 no driver collect. Redis isn't in this container, so the default client is
 an in-memory dict-backed stub exercising the exact same code path; swap
-``client_factory`` for ``redis.Redis`` in deployment.
+``client_factory`` for ``redis.Redis`` in deployment. The returned key
+count is the keys counted during the write (an accumulator), no second
+pass over the plan.
 """
 
 from __future__ import annotations
@@ -67,20 +69,28 @@ def export_to_cache(
     namespace: str = "default",
 ) -> int:
     """Write one document per date key through the client, partition-local.
-    Returns the number of keys written (a driver-side count, not a collect
-    of the documents)."""
+    Returns the number of keys written: keys counted during the write, no
+    second pass. Each partition adds its count to an accumulator after its
+    flush, and Spark applies an action's accumulator updates once per
+    successful task, so retried tasks are not double-counted. Re-evaluating
+    the plan to count would not be guaranteed to match the write either:
+    gold carries ``current_date()`` and ``current_timestamp()``."""
     docs = aggregate_per_date(payload)
+    written = payload.sparkSession.sparkContext.accumulator(0)
 
     def write_partition(rows) -> None:
         client = client_factory() if client_factory else DictCacheClient(namespace)
+        n = 0
         for row in rows:
             client.setex(row.cache_key, int(row.ttl_seconds), row.document)
+            n += 1
         flush = getattr(client, "flush", None)
         if flush is not None:  # pipelined clients buffer writes (Redis)
             flush()
+        written.add(n)
 
     docs.foreachPartition(write_partition)
-    return docs.count()
+    return written.value
 
 
 def redis_client_factory(

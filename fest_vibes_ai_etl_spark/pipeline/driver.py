@@ -9,7 +9,8 @@ date-partitioned DataFrame:
       → validate + quarantine              (P8)
       → normalize to silver star schema    (dims → fact → bridges)
       → enrich: geocode venues, embed artists/venues/events  (U1-U4)
-      → gold: per-date event documents + TTL  (§3.4 query)
+      → gold: per-date event documents + TTL  (§3.4 query, over the
+        geocoded but un-embedded silver: the document has no embedding)
       → cache payload export               (S10)
 
 The per-date fan-out disappears: dates are partitions of one DataFrame, and
@@ -37,7 +38,14 @@ def run_pipeline(
     with_embeddings: bool = True,
 ) -> dict[str, DataFrame]:
     """Bronze → silver → gold for the given dates. Returns every layer
-    (callers persist with ``df.write.partitionBy(...)`` as needed)."""
+    (callers persist with ``df.write.partitionBy(...)`` as needed).
+
+    Gold reads the un-embedded silver: the cache document carries latitude
+    and longitude but no embedding, and ``mapInPandas`` is opaque to column
+    pruning, so a gold plan over embedded silver would re-run every
+    embedding UDF only to drop its output. Embeddings are a silver-only
+    output: the returned ``artists``, ``venues`` and ``events`` layers carry
+    them when ``with_embeddings`` is set."""
     # Externally-created sessions (the correctness driver's, a user's) need
     # the package shipped to executor workers before any UDF stage runs.
     configure(spark)
@@ -45,6 +53,7 @@ def run_pipeline(
     quarantined = normalize.quarantine_events(bronze)
 
     silver["venues"] = geocode_with_cache(silver["venues"], cache=geocode_cache)
+    unembedded = dict(silver)
 
     if with_embeddings:
         genre_lists = (
@@ -90,7 +99,7 @@ def run_pipeline(
         )
 
     golds = {
-        d: gold.to_cache_payload(gold.events_for_date(silver, d, ref_date=ref_date))
+        d: gold.to_cache_payload(gold.events_for_date(unembedded, d, ref_date=ref_date))
         for d in dates
     }
     gold_all = None

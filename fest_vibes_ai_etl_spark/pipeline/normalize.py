@@ -4,8 +4,9 @@ The reference loads row-at-a-time with per-row upserts and embedded lookups
 (/root/reference/src/loader/service.py:904-1050). Here the same phase
 structure (genres → artists → venues → events → bridges, §3.3) is five
 set-oriented jobs over one validated DataFrame. Every dim build is a
-distinct + dedup + deterministic surrogate key; every FK resolution is an
-equi-join against a (broadcastable) dim. Idempotent by construction: running
+distinct + dedup + deterministic surrogate key; every fact FK resolution
+is an equi-join against a (broadcastable) dim, and the bridges derive their
+keys from the natural keys they carry. Idempotent by construction: running
 normalize twice over the same bronze produces identical silver.
 
 Scale: bronze is partitioned by scrape date; dims are small (10²-10⁴ rows)
@@ -192,28 +193,27 @@ def build_event_fact(bronze: DataFrame, artist_dim: DataFrame, venue_dim: DataFr
     )
 
 
-def build_bridges(
-    bronze: DataFrame,
-    genre_dim: DataFrame,
-    artist_dim: DataFrame,
-    venue_dim: DataFrame,
-    event_fact: DataFrame,
-) -> dict[str, DataFrame]:
+def build_bridges(bronze: DataFrame, event_fact: DataFrame) -> dict[str, DataFrame]:
     """J5/J6 bridge tables, recomputed set-oriented from the arrays
-    (replace-associations semantics — see operators/merge.py)."""
-    g = broadcast(genre_dim.select("genre_id", F.col("name").alias("genre_name")))
-    a = broadcast(artist_dim.select("artist_id", F.col("name").alias("artist_name")))
+    (replace-associations semantics — see operators/merge.py).
 
+    ``bronze`` is the validated bronze the dims and the fact were built
+    from, so every trimmed, non-empty name or non-null href a bridge reads
+    has its dim or fact row, and every key is ``surrogate_key`` of that
+    natural key: the bridges key their rows directly. A join back to a dim
+    or to the fact would re-derive that dim's dedup, and the venue
+    geocoding behind the fact, in every plan that reads a bridge."""
+    genre_name = F.trim("genre_name")
     artist_genres = (
         bronze.select(
             F.trim(F.col("artist_data.name")).alias("artist_name"),
             F.explode_outer("artist_data.genres").alias("genre_name"),
         )
-        .filter(F.col("genre_name").isNotNull())
-        .select("artist_name", F.trim("genre_name").alias("genre_name"))
-        .join(a, "artist_name")
-        .join(g, "genre_name")
-        .select("artist_id", "genre_id")
+        .filter(F.col("genre_name").isNotNull() & (genre_name != ""))
+        .select(
+            surrogate_key(F.col("artist_name")).alias("artist_id"),
+            surrogate_key(genre_name).alias("genre_id"),
+        )
         .distinct()
     )
     event_genres = (
@@ -226,11 +226,15 @@ def build_bridges(
                 ).otherwise(F.col("artist_data.genres"))  # P5 genre propagation
             ).alias("genre_name"),
         )
-        .filter(F.col("genre_name").isNotNull())
-        .select("wwoz_event_href", F.trim("genre_name").alias("genre_name"))
-        .join(broadcast(event_fact.select("event_id", "wwoz_event_href")), "wwoz_event_href")
-        .join(g, "genre_name")
-        .select("event_id", "genre_id")
+        .filter(
+            F.col("wwoz_event_href").isNotNull()
+            & F.col("genre_name").isNotNull()
+            & (genre_name != "")
+        )
+        .select(
+            surrogate_key(F.col("wwoz_event_href")).alias("event_id"),
+            surrogate_key(genre_name).alias("genre_id"),
+        )
         .distinct()
     )
     venue_artists = (
@@ -238,7 +242,6 @@ def build_bridges(
         .filter(F.col("venue_id").isNotNull() & F.col("artist_id").isNotNull())
         .distinct()
     )
-    rel = broadcast(artist_dim.select(F.col("artist_id").alias("related_artist_id"), F.col("name").alias("related_name")))
     artist_relations = (
         bronze.select(
             F.trim(F.col("artist_data.name")).alias("artist_name"),
@@ -250,9 +253,10 @@ def build_bridges(
             & (F.col("related_name") != "")
             & (F.col("related_name") != F.col("artist_name"))  # SO2 self-removal
         )
-        .join(a, "artist_name")
-        .join(rel, "related_name")
-        .select("artist_id", "related_artist_id")
+        .select(
+            surrogate_key(F.col("artist_name")).alias("artist_id"),
+            surrogate_key(F.col("related_name")).alias("related_artist_id"),
+        )
         .distinct()
     )
     return {
@@ -271,7 +275,7 @@ def normalize(bronze: DataFrame) -> dict[str, DataFrame]:
     artists = build_artist_dim(valid)
     venues = build_venue_dim(valid)
     events = build_event_fact(valid, artists, venues)
-    bridges = build_bridges(valid, genres, artists, venues, events)
+    bridges = build_bridges(valid, events)
     return {
         "genres": genres,
         "artists": artists,

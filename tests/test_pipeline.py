@@ -69,6 +69,116 @@ def test_bridges(silver):
     assert rel == {("Ellis Marsalis Quartet", "Kermit Ruffins")}
 
 
+def _bridges_by_dim_join(valid, silver):
+    """Reference bridges: every key resolved by an equi-join against its dim
+    or the fact, instead of derived from the natural key."""
+    from pyspark.sql.functions import broadcast
+
+    g = broadcast(silver["genres"].select("genre_id", F.col("name").alias("genre_name")))
+    a = broadcast(silver["artists"].select("artist_id", F.col("name").alias("artist_name")))
+    rel = broadcast(
+        silver["artists"].select(
+            F.col("artist_id").alias("related_artist_id"), F.col("name").alias("related_name")
+        )
+    )
+    artist_genres = (
+        valid.select(
+            F.trim(F.col("artist_data.name")).alias("artist_name"),
+            F.explode_outer("artist_data.genres").alias("genre_name"),
+        )
+        .filter(F.col("genre_name").isNotNull())
+        .select("artist_name", F.trim("genre_name").alias("genre_name"))
+        .join(a, "artist_name")
+        .join(g, "genre_name")
+        .select("artist_id", "genre_id")
+        .distinct()
+    )
+    event_genres = (
+        valid.select(
+            F.col("event_data.wwoz_event_href").alias("wwoz_event_href"),
+            F.explode_outer(
+                F.when(
+                    F.size(F.coalesce(F.col("event_data.genres"), F.array())) > 0,
+                    F.col("event_data.genres"),
+                ).otherwise(F.col("artist_data.genres"))
+            ).alias("genre_name"),
+        )
+        .filter(F.col("genre_name").isNotNull())
+        .select("wwoz_event_href", F.trim("genre_name").alias("genre_name"))
+        .join(silver["events"].select("event_id", "wwoz_event_href"), "wwoz_event_href")
+        .join(g, "genre_name")
+        .select("event_id", "genre_id")
+        .distinct()
+    )
+    artist_relations = (
+        valid.select(
+            F.trim(F.col("artist_data.name")).alias("artist_name"),
+            F.explode_outer("event_data.related_artists").alias("ra"),
+        )
+        .select("artist_name", F.trim(F.col("ra.name")).alias("related_name"))
+        .filter(
+            F.col("related_name").isNotNull()
+            & (F.col("related_name") != "")
+            & (F.col("related_name") != F.col("artist_name"))
+        )
+        .join(a, "artist_name")
+        .join(rel, "related_name")
+        .select("artist_id", "related_artist_id")
+        .distinct()
+    )
+    return {
+        "artist_genres": artist_genres,
+        "event_genres": event_genres,
+        "artist_relations": artist_relations,
+    }
+
+
+def test_bridges_match_dim_join_reference(spark):
+    """Bridges key their rows from natural keys; they must equal bridges
+    resolved by joining the dims and the fact, also for padded and blank
+    names, blank genres, self-relations and a null event href."""
+    import datetime as dt
+
+    from fest_vibes_ai_etl_spark.pipeline.fixtures import bronze_rows
+    from fest_vibes_ai_etl_spark.schemas import EVENT_DTO
+
+    ts = dt.datetime(2025, 2, 28, 12, 0, 0)
+    perf = dt.datetime(2025, 3, 1, 23, 0, 0)
+    edge = [
+        (
+            (" Dr. John ", "d", [" Funk ", "  ", None], [], None, None),
+            ("Snug Harbor", "626 Frenchmen St", None, "New Orleans", "LA", "70116",
+             None, True, None, None, None),
+            ("2025-03-01", "/events/700", " Dr. John ", None, None,
+             [("  Kermit Ruffins ", None), ("   ", None), ("Dr. John", None),
+              ("New Stub ", "/artists/999")],
+             ["  ", "Zydeco"]),
+            perf, ts,
+        ),
+        (
+            ("Galactic", "d", ["Funk", " Soul"], [], None, None),
+            ("Snug Harbor", "626 Frenchmen St", None, "New Orleans", "LA", "70116",
+             None, True, None, None, None),
+            ("2025-03-01", None, "Galactic", None, None, [], ["Jazz"]),
+            perf, ts,
+        ),
+        (
+            ("Kermit Ruffins", "d", [" Jazz", "Blues "], [], None, None),
+            ("Maple Leaf Bar", "8316 Oak St", None, "New Orleans", "LA", "70118",
+             None, True, None, None, None),
+            ("2025-03-02", "/events/701", "Kermit Ruffins", None, None, [], None),
+            perf, ts,
+        ),
+    ]
+    bronze = spark.createDataFrame(bronze_rows() + edge, EVENT_DTO)
+    silver = normalize.normalize(bronze)
+    want = _bridges_by_dim_join(normalize.validate_events(bronze), silver)
+    for name, ref in want.items():
+        got = sorted(silver[name].collect())
+        assert got == sorted(ref.collect()), name
+        assert len(got) > 0, name
+
+
 def test_gold_document_shape_and_order(silver):
     g = gold.events_for_date(silver, "2025-03-01", ref_date="2025-03-01")
     rows = g.collect()

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import json
 import tempfile
+import uuid
 from pathlib import Path
 
 import pytest
@@ -68,6 +69,98 @@ def test_export_to_cache_filesystem_client(spark, result):
     assert payload["ttl"] == 3600  # today tier
     names = [d["artist_data"]["name"] for d in docs]
     assert names == ["Galactic", "Ellis Marsalis Quartet", "Kermit Ruffins"]  # W1 order
+
+
+def test_gold_plan_reads_unembedded_silver(result):
+    """The cache document carries no embedding, and mapInPandas is opaque
+    to column pruning: a gold plan over embedded silver re-runs every
+    embedding UDF and drops its output. Gold must read the un-embedded
+    silver while the returned silver layers keep their embeddings."""
+    plan = result["cache_payload"]._jdf.queryExecution().optimizedPlan().toString()
+    assert "_embedding" not in plan
+    for layer, col in (
+        ("artists", "description_embedding"),
+        ("venues", "venue_info_embedding"),
+        ("events", "event_text_embedding"),
+    ):
+        assert col in result[layer].columns, (layer, col)
+
+
+def test_export_to_cache_evaluates_payload_once(spark, tmp_path):
+    """The key count comes from the write itself: the payload plan runs
+    once, and the return value is the number of keys the client wrote."""
+    from pyspark.sql import functions as F
+
+    rows = [
+        ("events:2025-03-01", '{"e":1}', 3600, 1, 1),
+        ("events:2025-03-01", '{"e":2}', 3600, 2, 2),
+        ("events:2025-03-01", '{"e":3}', 3600, 3, 3),
+        ("events:2025-03-02", '{"e":4}', 86400, 1, 4),
+        ("events:2025-03-02", '{"e":5}', 86400, 2, 5),
+    ]
+    base = spark.createDataFrame(
+        rows, "cache_key string, payload string, ttl_seconds int, sort_ts long, event_id long"
+    )
+    evaluated = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def counted(key):
+        evaluated.add(1)
+        return key
+
+    payload = base.withColumn("cache_key", counted("cache_key"))
+
+    class FileClient:
+        """One file per setex call, so the test sees every write."""
+
+        def setex(self, key, ttl, value):
+            (tmp_path / f"setex_{uuid.uuid4().hex}").write_text(key)
+
+    n = cache_sink.export_to_cache(payload, client_factory=FileClient)
+    assert evaluated.value == len(rows)
+    written = sorted(p.read_text() for p in tmp_path.glob("setex_*"))
+    assert written == ["events:2025-03-01", "events:2025-03-02"]
+    assert n == len(written)
+    assert cache_sink.export_to_cache(base.filter("false"), client_factory=FileClient) == 0
+
+
+# Jobs the daily job submits over bronze_fixture: run_pipeline, the silver
+# events write, the gold write and the cache export. 64-65 measured (one
+# job more in a fresh session); 106 before gold read the un-embedded silver,
+# the bridges stopped joining back to their dims and the fact, and the
+# export counted its keys during the write. Reverting only the first adds 5
+# jobs, only the second 10.
+DAILY_JOB_MAX_JOBS = 68
+
+
+def test_daily_job_count_ceiling(spark, tmp_path):
+    """Job-count ceiling for the daily EventDTO job: a reintroduced second
+    pass over the gold plan, embedding UDFs back in the gold plan, or
+    bridges joined back to their dims adds jobs and fails here."""
+    from pyspark.sql import functions as F
+
+    from fest_vibes_ai_etl_spark.sources.lakehouse import write_partitioned
+
+    sc = spark.sparkContext
+    sc.setJobGroup("daily_job", "run_pipeline -> silver/gold writes -> export")
+    try:
+        layers = driver.run_pipeline(
+            spark,
+            bronze_fixture(spark),
+            dates=["2025-03-01", "2025-03-02"],
+            ref_date="2025-03-01",
+        )
+        write_partitioned(layers["events"], str(tmp_path / "silver_events"), ["event_date"])
+        gold = layers["cache_payload"].withColumn(
+            "event_date", F.to_date(F.regexp_extract("cache_key", r"events:(.*)$", 1))
+        )
+        write_partitioned(gold, str(tmp_path / "gold"), ["event_date"])
+        keys = cache_sink.export_to_cache(layers["cache_payload"], namespace="daily_job")
+    finally:
+        sc.setJobGroup("daily_job_done", "after")
+    n = len(sc.statusTracker().getJobIdsForGroup("daily_job"))
+    assert keys == 2
+    assert 0 < n <= DAILY_JOB_MAX_JOBS, f"daily job submitted {n} Spark jobs"
 
 
 def test_pipeline_persists_into_versioned_table(spark, tmp_path):
