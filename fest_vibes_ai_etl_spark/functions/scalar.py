@@ -49,18 +49,6 @@ def performance_timestamp_utc(
     return F.to_utc_timestamp(performance_timestamp(date_col, time_text_col), tz)
 
 
-# --- F3: lenient timestamp parse with fallback chain ----------------------
-# Reference: src/loader/service.py:751-767 — dateutil parse, now() on failure.
-
-def parse_timestamp_lenient(col: Column) -> Column:
-    return F.coalesce(
-        F.try_to_timestamp(col),
-        F.try_to_timestamp(col, F.lit("yyyy-MM-dd h:mma")),
-        F.try_to_timestamp(col, F.lit("MM/dd/yyyy HH:mm")),
-        F.current_timestamp(),
-    )
-
-
 # --- F5/P9: staleness ------------------------------------------------------
 # Reference: src/shared/db/models/models.py:107-114 — needs_geocoding.
 
@@ -87,13 +75,6 @@ def full_url(base_url: str, href: Column) -> Column:
 
 def full_address(thoroughfare: Column, locality: Column, state: Column, postal: Column) -> Column:
     return F.concat_ws(", ", thoroughfare, locality, F.concat_ws(" ", state, postal))
-
-
-# --- F12: coalesce-merge ---------------------------------------------------
-# Reference: src/loader/service.py:348-351 — new value unless null, else keep.
-
-def coalesce_merge(new: Column, old: Column) -> Column:
-    return F.coalesce(new, old)
 
 
 # --- F13: TTL tiering ------------------------------------------------------
@@ -126,10 +107,6 @@ def capacity_bucket(capacity: Column, lo: int = 100, hi: int = 500) -> Column:
 
 # --- P13/P14: name/status flags -------------------------------------------
 # Reference: src/extractor/service.py:246-253; src/loader/service.py:572-575.
-
-def is_active_status(status_text: Column) -> Column:
-    return F.lower(F.trim(status_text)) == "active"
-
 
 def is_indoors(venue_name: Column) -> Column:
     return ~F.lower(venue_name).contains("outdoor")

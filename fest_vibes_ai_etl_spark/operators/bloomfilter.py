@@ -8,16 +8,15 @@ reaches the shuffle of the real join. The payoff at 100 TB: rows that would
 be dropped by the join never get shuffled (bloom probe is a map-side
 operation), at the cost of shipping a bitmap measured in KB–MB.
 
-Distributed build, no driver bottleneck until the final bitmap collect:
-key → k seeded xxhash64 positions (JVM-side), positions → (word, bit) →
-``bit_or`` aggregate per 64-bit word — the collected result is ``num_bits/64``
-longs regardless of input size. The probe is one Arrow-batched pandas UDF
-over the k precomputed hash columns (vectorized bitmap lookups); no hash
-function is reimplemented in Python, so build and probe can never disagree.
+Distributed build, no driver collect: key → k seeded xxhash64 positions
+(JVM-side), positions → (word, bit) → ``bit_or`` aggregate per 64-bit word,
+assembled into a one-row ``num_bits/64``-long array regardless of input
+size. The probe evaluates the same k positions against that array in
+whole-stage codegen, so build and probe can never disagree.
 
-Sizing: FP rate ≈ (1 - e^{-k·n/m})^k. The default 2^20 bits / 5 hashes holds
-~100k keys at ~2% FP; scale ``num_bits`` with the build side (128 MB of
-bitmap holds ~100M keys) — beyond that, prefer a plain shuffle semi join.
+Sizing: FP rate ≈ (1 - e^{-k·n/m})^k. :func:`bloom_semi_join` sizes the
+bitmap from the build side; a build side that needs more than
+``NATIVE_ATTACH_MAX_BITS`` gets the plain semi join instead.
 
 The reference has no analogue (single-node Postgres joins never pay a
 shuffle); this is pure scale machinery for the Spark engine.
@@ -25,10 +24,8 @@ shuffle); this is pure scale machinery for the Spark engine.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 DEFAULT_BITS = 1 << 20
 DEFAULT_HASHES = 5
@@ -40,66 +37,6 @@ def _positions(key: Column, num_bits: int, num_hashes: int) -> list[Column]:
     ]
 
 
-def build_bloom(
-    build_side: DataFrame,
-    key: str,
-    num_bits: int = DEFAULT_BITS,
-    num_hashes: int = DEFAULT_HASHES,
-):
-    """Aggregate the build side into a bloom bitmap (numpy int64 array of
-    ``num_bits/64`` words). Build cost: one explode + one distinct + one
-    64-bit-word bit_or aggregate — all distributed; only the fixed-size
-    bitmap is collected."""
-    import numpy as np
-
-    pos = (
-        build_side.select(
-            F.explode(F.array(*_positions(F.col(key), num_bits, num_hashes))).alias("p")
-        )
-        .distinct()
-    )
-    words = (
-        pos.select(
-            F.shiftright(F.col("p"), 6).alias("w"),
-            F.expr("shiftleft(1L, CAST(p % 64 AS INT))").alias("m"),
-        )
-        .groupBy("w")
-        .agg(F.bit_or("m").alias("word"))
-        .collect()
-    )
-    bitmap = np.zeros(num_bits >> 6, dtype=np.int64)
-    for r in words:
-        bitmap[r.w] = r.word
-    return bitmap
-
-
-def bloom_might_contain(
-    bitmap, key: Column, num_bits: int = DEFAULT_BITS, num_hashes: int = DEFAULT_HASHES
-) -> Column:
-    """Boolean probe column: true iff all k bits for ``key`` are set. Hashes
-    are computed JVM-side (same xxhash64 as the build); the UDF only does
-    vectorized bitmap lookups on the Arrow batch."""
-    words = bitmap.tobytes()  # closure ships the raw words, not a numpy pickle
-    n_words = len(bitmap)
-
-    @pandas_udf("boolean")
-    def _probe(hs: pd.Series) -> pd.Series:
-        import numpy as np  # self-contained on executors
-
-        bm = np.frombuffer(words, dtype=np.int64)
-        assert len(bm) == n_words
-        H = np.vstack(hs.to_numpy()).astype(np.int64)
-        hit = (bm[H >> 6] >> (H & 63)) & 1
-        return pd.Series(hit.all(axis=1))
-
-    # nondeterministic ONLY to stop InferFiltersFromConstraints from copying
-    # this probe onto the build side of the downstream semi join (the build
-    # side already defines the bitmap — probing it is pure waste); the filter
-    # itself stays exactly where it's placed, right above the probe scan.
-    _probe = _probe.asNondeterministic()
-    return _probe(F.array(*_positions(key, num_bits, num_hashes)))
-
-
 def bloom_words_df(
     build_side: DataFrame,
     key: str,
@@ -107,12 +44,11 @@ def bloom_words_df(
     num_hashes: int = DEFAULT_HASHES,
 ) -> DataFrame:
     """The bloom bitmap as a ONE-ROW DataFrame (``bm``: array<bigint> of
-    ``num_bits/64`` words) instead of a driver-side numpy array: the build
-    aggregation stays identical to :func:`build_bloom` (explode → distinct
-    → per-word ``bit_or``), but the dense word array is assembled in the
-    final one-row aggregate — so the bitmap never round-trips through a
-    ``collect()`` and the whole build+probe composes into ONE Spark job
-    (the bitmap ships to executors as an ordinary broadcast relation)."""
+    ``num_bits/64`` words): explode → distinct → per-word ``bit_or``, with
+    the dense word array assembled in the final one-row aggregate — so the
+    bitmap never round-trips through a ``collect()`` and the whole
+    build+probe composes into ONE Spark job (the bitmap ships to executors
+    as an ordinary broadcast relation)."""
     n_words = num_bits >> 6
     pos = (
         build_side.select(
@@ -143,10 +79,9 @@ def bloom_might_contain_native(
     bm: Column, key: Column, num_bits: int = DEFAULT_BITS, num_hashes: int = DEFAULT_HASHES
 ) -> Column:
     """JVM-native probe over a word-array bitmap COLUMN (from
-    :func:`bloom_words_df`): the same k seeded-xxhash64 positions and the
-    same word/bit layout as the pandas-UDF probe, evaluated entirely in
-    whole-stage codegen — no Arrow boundary, no Python workers, and the
-    hash columns never cross into Python (guide §4.1: prefer built-ins)."""
+    :func:`bloom_words_df`): the build's k seeded-xxhash64 positions and
+    word/bit layout, evaluated entirely in whole-stage codegen — no Arrow
+    boundary, no Python workers (guide §4.1: prefer built-ins)."""
     cond = None
     for i in range(num_hashes):
         h = F.pmod(F.xxhash64(key, F.lit(i)), F.lit(num_bits))
@@ -167,14 +102,13 @@ def bloom_might_contain_native(
 # rows. Round-15 isolation at 6x sf0.1 (3.6M probe rows, OPTIMIZATION_r15):
 # the per-row probe cost is proportional to the ATTACHED ARRAY's width, not
 # to the 5 bit tests — 2^20 bits (16384 longs) measured 3.3-7.7 s where
-# 2^16 bits measured ~0.8-1.1 s and 2^13 ~0.6 s. Above this, the pandas-UDF
-# probe (driver bitmap shipped ONCE per task in the closure, vectorized
-# numpy lookups) is the scalable shape — it measured 2.2 s where the
-# native 2^20 attach measured 4.1 s on the same window.
+# 2^16 bits measured ~0.8-1.1 s and 2^13 ~0.6 s. Above this, the plain
+# broadcast semi join (0.8-1.2 s on the same window) beats every bloom
+# probe measured there, so the pre-filter is skipped.
 NATIVE_ATTACH_MAX_BITS = 1 << 16
 
 
-def sized_bits(n_keys: int, num_hashes: int = DEFAULT_HASHES) -> int:
+def sized_bits(n_keys: int) -> int:
     """Bitmap bits for ~1% FP at ``n_keys`` (m ≈ 9.6·n, the standard
     -n·ln p/ln²2 sizing), floored at 1024 bits and rounded to whole
     64-bit words. With k=5 hashes the realized FP at m=9.6n is ~1.1%."""
@@ -209,11 +143,13 @@ def bloom_semi_join(
     6x sf0.1. Small sized bitmaps keep the round-14 JVM-native probe (the
     bitmap rides a one-row broadcast, bit tests in codegen, no
     ArrowEvalPython); a build side big enough to need more than
-    ``NATIVE_ATTACH_MAX_BITS`` falls back to the pandas probe, whose
-    driver-collected bitmap ships once per task instead of riding every
-    row. Pass ``num_bits`` explicitly to skip the sizing count."""
+    ``NATIVE_ATTACH_MAX_BITS`` skips the pre-filter and runs the plain
+    semi join (``exact=False`` then returns ``probe_side`` unfiltered —
+    a superset with no false negatives). Pass ``num_bits`` explicitly to
+    skip the sizing count."""
     if num_bits is None:
-        num_bits = sized_bits(build_side.count(), num_hashes)
+        num_bits = sized_bits(build_side.count())
+    pre = probe_side
     if num_bits <= NATIVE_ATTACH_MAX_BITS:
         bm = bloom_words_df(build_side, build_key, num_bits, num_hashes)
         pre = (
@@ -224,11 +160,6 @@ def bloom_semi_join(
                 )
             )
             .drop("bm")
-        )
-    else:
-        bitmap = build_bloom(build_side, build_key, num_bits, num_hashes)
-        pre = probe_side.filter(
-            bloom_might_contain(bitmap, F.col(probe_key), num_bits, num_hashes)
         )
     if not exact:
         return pre

@@ -53,15 +53,6 @@ def _shingle_arrays(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFr
     return toks.select("id", T.word_shingles(F.col("tk"), k).alias("sh"))
 
 
-def _doc_shingles(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
-    """(id, shingle) distinct pairs. The shingle is carried as a 64-bit hash:
-    8-byte shuffle keys instead of strings (collision odds ~n²/2⁶⁵ —
-    negligible against the shuffle-bytes saved at 100 TB)."""
-    return _shingle_arrays(df, id_col, text_col, k).select(
-        "id", F.explode(F.transform("sh", lambda s: F.xxhash64(s))).alias("shingle")
-    )
-
-
 def shingle_signature(
     df: DataFrame,
     id_col: str,

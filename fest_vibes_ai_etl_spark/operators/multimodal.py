@@ -118,21 +118,6 @@ def decode_media(df: DataFrame, decoder: str = "fake") -> DataFrame:
     return df.mapInPandas(run, schema=DECODED_SCHEMA)
 
 
-def frame_sample(decoded: DataFrame, every_n: int = 30) -> DataFrame:
-    """Frame-sampling plan for video rows: one output row per sampled frame
-    index (pure ``sequence``+``explode`` — the per-frame decode would be a
-    second mapInPandas stage)."""
-    return (
-        decoded.filter(F.col("media_type") == "video")
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_n))
-            ).alias("frame_idx"),
-        )
-    )
-
-
 def media_byte_stats_arrow(df: DataFrame) -> DataFrame:
     """Arrow-native byte statistics over the binary media column via
     ``mapInArrow``: the RecordBatch level skips the Arrow→pandas→Arrow

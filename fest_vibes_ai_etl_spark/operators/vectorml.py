@@ -66,10 +66,6 @@ def seed_centroids(
     return [[float(x) for x in r[vec_col]] for r in rows]
 
 
-def _lit_vec(c: list[float]) -> Column:
-    return F.array(*[F.lit(float(x)) for x in c])
-
-
 def _lit_codebook(centers: list[list[float]]) -> Column:
     """One literal array<array<double>> column. Materializing the codebook
     ONCE and indexing it with higher-order lambdas keeps the expression

@@ -27,7 +27,8 @@ from .catalog import register
 def bloom_semi_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue from lineitems shipped by negative-balance suppliers, with the
     semi join gated by an explicit bloom filter: the ~6%-selective supplier
-    set aggregates into a 128 KB bitmap, the fact table is pre-filtered
+    set aggregates into a bitmap sized from its count (1024 bits at
+    sf0.01), the fact table is pre-filtered
     map-side (non-matching rows never reach a shuffle), and a final semi
     join removes bloom false positives — so the result is EXACTLY the
     oracle's IN-subquery. At 100 TB this is the pattern for semi joins whose

@@ -8,7 +8,8 @@ two JDBC shapes (MIGRATION.md narrates both; this module implements them):
 
 1. **Partitioned read** of an existing Postgres table — Spark's built-in
    JDBC source with explicit stride parallelism, so a 10⁹-row table arrives
-   as N concurrent range scans instead of one connection's full-table cursor.
+   as N concurrent range scans instead of one connection's full-table cursor
+   (:func:`jdbc_read_options` builds the reader's options).
 2. **Upsert write** — Spark's JDBC writer has only append/overwrite, no
    MERGE, so the scalable upsert is the classic two-phase shape: stage the
    DataFrame into a temp table with the parallel JDBC writer, then execute
@@ -31,7 +32,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def jdbc_read_options(
@@ -65,11 +66,6 @@ def jdbc_read_options(
             numPartitions=str(num_partitions),
         )
     return opts
-
-
-def read_jdbc_table(spark: SparkSession, **options) -> DataFrame:
-    """``spark.read.format('jdbc')`` with :func:`jdbc_read_options` output."""
-    return spark.read.format("jdbc").options(**jdbc_read_options(**options)).load()
 
 
 def _q(ident: str) -> str:

@@ -718,11 +718,10 @@ class BandedFingerprintIndex:
 
     def invalidate(self, spark: SparkSession) -> None:
         """Delete the index, its marker, AND the compaction siblings.
-        Called by the streams when a batch appends to the corpus WITHOUT
-        maintaining the index (scan mode): an index that silently stops
-        covering the corpus would make a later bucketed run miss
-        duplicates forever — absence forces the migration rebuild instead.
-        The _precompact/_compacting leftovers must die too: a stale
+        Called by the streams when the corpus is absent or the stored
+        layout contradicts theirs: an index that does not cover the
+        corpus would make the stream miss duplicates forever — absence
+        forces the migration rebuild instead. The _precompact/_compacting leftovers must die too: a stale
         _precompact surviving invalidation would let a later compact()
         'recover' exactly the stale index this call deleted."""
         fs, path = self._fs(spark)

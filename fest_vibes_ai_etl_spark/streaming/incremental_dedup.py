@@ -11,20 +11,19 @@ Why this is replay-convergent with no transactional sink: the fingerprint
 AUTHORITATIVE write to race), so a replayed batch re-anti-joins against a
 corpus that already contains its rows and appends nothing.
 
-History probe (the scale seam): the default ``history_probe="bucketed"``
-maintains the family's ``<corpus>_exactidx`` sidecar (see
-``banded_index``) — here (fp, fpk = xxhash64(fp)) rows banded on ``fpk``
-(no id column: the exact stream dedups purely by fingerprint). A batch can
-only collide on fingerprints the batch itself carries, so the anti-join
-reads ONLY the batch's own fpk band directories instead of the whole
-corpus fp column — the linear-per-batch (quadratic-over-a-backfill) read
-the pre-round-8 guard paid forever. The anti-join still compares the full
-md5 string, so an fpk band collision costs extra rows read, never a wrong
-drop. The sidecar persists its layout (``_meta.json``); a restart whose
-key derivation (key_col/schema_tag) contradicts the stored layout is
-rebuilt from the corpus, never probed across (the stored band count
-itself always wins — physical sizing, grown by maintenance). ``history_probe="scan"`` keeps the corpus-column path for A/B
-measurement.
+History probe (the scale seam): the stream maintains the family's
+``<corpus>_exactidx`` sidecar (see ``banded_index``) — here (fp, fpk =
+xxhash64(fp)) rows banded on ``fpk`` (no id column: the exact stream
+dedups purely by fingerprint). A batch can only collide on fingerprints
+the batch itself carries, so the anti-join reads ONLY the batch's own
+fpk band directories instead of the whole corpus fp column — the
+linear-per-batch (quadratic-over-a-backfill) read the pre-round-8 guard
+paid forever. The anti-join still compares the full md5 string, so an
+fpk band collision costs extra rows read, never a wrong drop. The
+sidecar persists its layout (``_meta.json``); a restart whose key
+derivation (key_col/schema_tag) contradicts the stored layout is rebuilt
+from the corpus, never probed across (the stored band count itself
+always wins — physical sizing, grown by maintenance).
 
 Crash consistency: an in-flight marker brackets the corpus append and the
 index append (corpus first). A crash in the window can only leave the
@@ -106,7 +105,6 @@ def make_exact_dedup_processor(
     corpus_dir: str,
     text_col: str = "text",
     n_bands: int | None = None,
-    history_probe: str = "bucketed",
     maintain_every: int | None = 16,
     maintain_max_files: int = 8,
     fs_options: dict | None = None,
@@ -118,11 +116,6 @@ def make_exact_dedup_processor(
     ``fs_options`` passes through to the sidecar's direct-append writer
     (pyarrow S3FileSystem options: endpoint_override + credentials for
     S3-compatible stores — see ``banded_index``)."""
-    if history_probe not in ("bucketed", "scan"):
-        raise ValueError(
-            f"unknown history_probe {history_probe!r}: "
-            f"expected 'bucketed' or 'scan'"
-        )
     exact_index = BandedFingerprintIndex(
         exact_index_path(corpus_dir),
         key_col="fpk",
@@ -157,7 +150,6 @@ def make_exact_dedup_processor(
             purge_recover(spark, corpus_dir)
             purge_checked.append(True)
         tomb = read_tombstones(spark, corpus_dir)
-        use_index = history_probe == "bucketed"
         fresh = batch_df.withColumn("fp", fingerprint(text_col)).dropDuplicates(["fp"])
         if tomb is not None:
             # burned fingerprints (this stream dedups purely by fp):
@@ -189,15 +181,7 @@ def make_exact_dedup_processor(
             exact_index.invalidate(spark)
             if not idx_settled:
                 idx_settled.append(True)
-        elif not use_index and not idx_settled:
-            # scan mode appends corpus rows WITHOUT maintaining the index:
-            # a stale one would make a later bucketed run miss duplicates
-            # forever (exists() would skip the migration rebuild). One
-            # shot per run suffices here — single-writer discipline means
-            # no one else can create an index mid-run.
-            exact_index.invalidate(spark)
-            idx_settled.append(True)
-        if hist is not None and use_index:
+        else:
             _settle_indexes(
                 spark,
                 ((exact_index, lambda: _pairs(hist)),),
@@ -205,9 +189,8 @@ def make_exact_dedup_processor(
             )
             need_heal = exact_index.was_inflight(spark)
         replayed = None
-        ebands = None
         if hist is not None:
-            if use_index and not need_heal:
+            if not need_heal:
                 # steady state: bucket-local replay guard — only the
                 # batch's own fpk bands are read; the md5 compare keeps an
                 # fpk band collision from ever dropping a fresh row
@@ -218,38 +201,35 @@ def make_exact_dedup_processor(
                 if erows is not None:
                     fresh = fresh.join(erows.select("fp"), "fp", "left_anti")
             else:
-                # scan mode, or post-crash heal: the corpus fp column is
-                # the authority (the index may be missing rows)
+                # post-crash heal: the corpus fp column is the authority
+                # (the index may be missing rows)
                 seen = hist.select(
                     F.coalesce("fp", F.lit(NULL_TEXT_SENTINEL)).alias("fp")
                 )
-                if need_heal:
-                    # fingerprints already stored may be missing from the
-                    # index after a crash between the corpus and index
-                    # appends — capture them before the anti-join
-                    replayed = fresh.join(seen, "fp", "left_semi").select("fp")
+                # fingerprints already stored may be missing from the
+                # index after a crash between the corpus and index
+                # appends — capture them before the anti-join
+                replayed = fresh.join(seen, "fp", "left_semi").select("fp")
                 fresh = fresh.join(seen, "fp", "left_anti")
-        if use_index and need_heal and replayed is not None:
+        if replayed is not None:
             _heal_exact_index(
                 spark,
                 exact_index,
                 replayed.withColumn("fpk", F.xxhash64(F.col("fp"))),
             )
-        if use_index:
-            exact_index.mark_inflight(spark)
+        exact_index.mark_inflight(spark)
         fresh.write.mode("append").parquet(corpus_dir)
-        if use_index:
-            # index append AFTER the corpus commit (crash ⇒ missing index
-            # rows, healed on replay — never phantom rows). The re-
-            # evaluation of `fresh` here is safe: dropDuplicates may pick a
-            # different within-batch survivor on re-run, but the sidecar
-            # stores only (fp, fpk), identical across survivors. The
-            # append itself reports the bands it wrote, feeding
-            # maintain()'s batch-proportional detection exactly.
-            exact_index.append(_pairs(fresh))
-            exact_index.clear_inflight(spark)
+        # index append AFTER the corpus commit (crash ⇒ missing index
+        # rows, healed on replay — never phantom rows). The re-evaluation
+        # of `fresh` here is safe: dropDuplicates may pick a different
+        # within-batch survivor on re-run, but the sidecar stores only
+        # (fp, fpk), identical across survivors. The append itself
+        # reports the bands it wrote, feeding maintain()'s
+        # batch-proportional detection exactly.
+        exact_index.append(_pairs(fresh))
+        exact_index.clear_inflight(spark)
         n_done[0] += 1
-        if use_index and maintain_every and n_done[0] % maintain_every == 0:
+        if maintain_every and n_done[0] % maintain_every == 0:
             # fold tombstoned fingerprints out of every band this tick
             # rewrites (the fp-only sidecar keys rows by "fp")
             exact_index.maintain(
@@ -269,7 +249,6 @@ def start_incremental_dedup(
     text_col: str = "text",
     available_now: bool = True,
     n_bands: int | None = None,
-    history_probe: str = "bucketed",
     maintain_every: int | None = 16,
     maintain_max_files: int = 8,
     fs_options: dict | None = None,
@@ -290,7 +269,6 @@ def start_incremental_dedup(
         corpus_dir,
         text_col=text_col,
         n_bands=n_bands,
-        history_probe=history_probe,
         maintain_every=maintain_every,
         maintain_max_files=maintain_max_files,
         fs_options=fs_options,

@@ -18,8 +18,8 @@ No second state store to race with the data write, so replay is convergent
 by construction: a replayed batch finds its own rows in history at J = 1
 and appends nothing.
 
-History probe (the scale seam): the default ``history_probe="bucketed"``
-maintains TWO band-partitioned sidecars (see ``banded_index``):
+History probe (the scale seam): the stream maintains TWO
+band-partitioned sidecars (see ``banded_index``):
 
 - ``<corpus>_bandidx`` — the pre-computed (id, band, band_hash) LSH rows,
   partitioned by ``pmod(band_hash, n_buckets)``. A batch can only collide
@@ -43,9 +43,8 @@ key-derivation parameters (key_col/schema_tag) contradict the stored
 layout is detected and the stream invalidates + rebuilds from the corpus
 instead of probing a wrong subset (the stored bucket count itself always
 wins — physical sizing, grown by maintenance, never a rebuild trigger).
-``history_probe="scan"`` keeps the pre-round-7 path (re-derive band
-hashes from all stored ``sig`` arrays per batch) for A/B measurement in
-``tools/probe_scaling.py``.
+``tools/probe_scaling.py`` records the probe's walls at growing
+accumulated history.
 
 Crash consistency mirrors the span variant: one in-flight marker
 brackets the corpus append and BOTH index appends; a surviving marker
@@ -146,28 +145,27 @@ def _verified_victims(
 
 
 def _near_dup_ids(
-    probe: DataFrame,
-    target: DataFrame,
+    batch: DataFrame,
     id_col: str,
     num_hashes: int,
     bands: int,
     threshold: float,
-    self_pairs_ordered: bool,
 ) -> DataFrame:
-    """ids of ``probe`` rows whose exact Jaccard vs some ``target`` row is
-    ≥ threshold. When probe IS target (``self_pairs_ordered``), only pairs
-    a<b count, so the lowest id of each dup group survives."""
-    pb = _band_hashes(probe, id_col, num_hashes, bands)
-    tb = _band_hashes(target, id_col, num_hashes, bands)
-    cond = (pb["band"] == tb["band"]) & (pb["band_hash"] == tb["band_hash"])
-    if self_pairs_ordered:
-        cond = cond & (tb["bid"] < pb["bid"])
+    """ids of ``batch`` rows whose exact Jaccard vs a LOWER-id ``batch``
+    row is ≥ threshold, so the lowest id of each dup group survives."""
+    pb = _band_hashes(batch, id_col, num_hashes, bands)
+    tb = _band_hashes(batch, id_col, num_hashes, bands)
+    cond = (
+        (pb["band"] == tb["band"])
+        & (pb["band_hash"] == tb["band_hash"])
+        & (tb["bid"] < pb["bid"])
+    )
     cand = (
         pb.join(tb, cond)
         .select(pb["bid"].alias("p_id"), tb["bid"].alias("t_id"))
         .dropDuplicates(["p_id", "t_id"])
     )
-    return _verified_victims(cand, probe, target, id_col, threshold)
+    return _verified_victims(cand, batch, batch, id_col, threshold)
 
 
 def make_near_dedup_processor(
@@ -179,7 +177,6 @@ def make_near_dedup_processor(
     bands: int = 8,
     threshold: float = 0.2,
     n_buckets: int | None = None,
-    history_probe: str = "bucketed",
     maintain_every: int | None = 16,
     maintain_max_files: int = 8,
     metrics: dict | None = None,
@@ -202,11 +199,6 @@ def make_near_dedup_processor(
     them adds one ``count()`` over the (pruned, batch-sized) candidate
     frame only on batches where the gate opened — batches that would pay
     a full verify anyway."""
-    if history_probe not in ("bucketed", "scan"):
-        raise ValueError(
-            f"unknown history_probe {history_probe!r}: "
-            f"expected 'bucketed' or 'scan'"
-        )
     band_index = BandedFingerprintIndex(
         near_index_path(corpus_dir),
         key_col="band_hash",
@@ -221,11 +213,9 @@ def make_near_dedup_processor(
         schema_tag="exact:md5-xxh64",
         fs_options=fs_options,
     )
-    # one-time per-stream index reconciliation flag. Meaning depends on
-    # mode: bucketed — "both indexes validated/migrated, skip further
-    # existence stats"; scan — "any stale index has been invalidated".
-    # Either way: non-empty = the mode's index state is settled for this
-    # stream, don't redo the check per batch.
+    # one-time per-stream index reconciliation flag: non-empty = both
+    # indexes are validated/migrated for this stream, don't redo the
+    # existence stats per batch.
     idx_settled: list[bool] = []
     n_done: list[int] = [0]  # completed batches, drives maintenance
     purge_checked: list[bool] = []  # once-per-stream purge-crash heal
@@ -243,7 +233,6 @@ def make_near_dedup_processor(
         # (id, fp) tombstones — one fs stat per batch when no delete was
         # ever issued; a small broadcastable suppression set otherwise
         tomb = read_tombstones(spark, corpus_dir)
-        use_index = history_probe == "bucketed"
         # keep a handle to the persisted frame itself: unpersist() requires
         # the SAME plan (uncacheQuery is sameResult-based), and `fresh` is
         # reassigned through joins below — unpersisting the derived frame
@@ -254,21 +243,13 @@ def make_near_dedup_processor(
         fresh = cached
         if tomb is not None:
             # burned ids AND fingerprints: erased content (or a row
-            # reusing its id) can never re-enter the corpus, in either
-            # guard mode
+            # reusing its id) can never re-enter the corpus
             fresh = fresh.join(
                 tomb.select(id_col), id_col, "left_anti"
             ).join(tomb.select("fp"), "fp", "left_anti")
         hist = None
-        hist_cached = None
         try:
             hist = spark.read.parquet(corpus_dir)
-            if not use_index:
-                # the scan path reads history many times per batch — cache
-                # it (the bucketed path reads only thin pruned slices, so
-                # caching the whole corpus would defeat the point)
-                hist_cached = hist.persist()
-                hist = hist_cached
             hist.schema  # force resolution (replaces the count() probe)
         except AnalysisException as exc:
             # ONLY PATH_NOT_FOUND is a legitimate first batch; an existing-
@@ -293,16 +274,7 @@ def make_near_dedup_processor(
             exact_index.invalidate(spark)
             if not idx_settled:
                 idx_settled.append(True)
-        elif not use_index and not idx_settled:
-            # scan mode appends corpus rows WITHOUT maintaining any index:
-            # a stale one would make a later bucketed run miss duplicates
-            # forever (exists() would skip the migration rebuild). One
-            # shot per run suffices — single-writer discipline means no
-            # one else can create an index mid-run.
-            band_index.invalidate(spark)
-            exact_index.invalidate(spark)
-            idx_settled.append(True)
-        if hist is not None and use_index:
+        else:
             _settle_indexes(
                 spark,
                 (
@@ -326,10 +298,9 @@ def make_near_dedup_processor(
         keep = fresh.groupBy("fp").agg(F.min(F.col(id_col)).alias(id_col))
         fresh = fresh.join(keep, ["fp", id_col], "left_semi")
         replayed = None
-        ebands = None
         bbands = None
         if hist is not None:
-            if use_index and not need_heal:
+            if not need_heal:
                 # steady state: ONE driver collect computes BOTH sidecars'
                 # touched-band sets (each collect is a whole job
                 # submission — two per batch was a measured slice of the
@@ -356,169 +327,149 @@ def make_near_dedup_processor(
                 if erows is not None:
                     fresh = fresh.join(erows.select("fp"), "fp", "left_anti")
             else:
-                # scan mode, or post-crash heal: the corpus fp column is
-                # the authority (the exact index may be missing rows)
+                # post-crash heal: the corpus fp column is the authority
+                # (the exact index may be missing rows)
                 hkeys = hist.select(
                     F.coalesce("fp", F.lit(NULL_TEXT_SENTINEL)).alias("fp"),
                     F.col(id_col),
                 )
-                if need_heal:
-                    # TRUE replays (same id AND same bytes already stored)
-                    # may have missing index rows in EITHER sidecar after a
-                    # crash between corpus and index appends — capture for
-                    # heal before the anti-join
-                    replayed = fresh.join(hkeys, ["fp", id_col], "left_semi")
+                # TRUE replays (same id AND same bytes already stored) may
+                # have missing index rows in EITHER sidecar after a crash
+                # between corpus and index appends — capture for heal
+                # before the anti-join
+                replayed = fresh.join(hkeys, ["fp", id_col], "left_semi")
                 fresh = fresh.join(hkeys.select("fp"), "fp", "left_anti")
         # near dedup WITHIN the batch: lowest id of each near-dup pair wins
-        batch_victims = _near_dup_ids(
-            fresh, fresh, id_col, num_hashes, bands, threshold, self_pairs_ordered=True
-        )
+        batch_victims = _near_dup_ids(fresh, id_col, num_hashes, bands, threshold)
         fresh = fresh.join(batch_victims, id_col, "left_anti")
         # near dedup vs HISTORY
         if hist is not None:
-            if use_index:
-                pb = _band_hashes(fresh, id_col, num_hashes, bands)
-                heal_rows = (
-                    _band_hashes(replayed, id_col, num_hashes, bands).select(
-                        F.col("bid").alias("id"), "band", "band_hash"
-                    )
-                    if replayed is not None
-                    else None
+            pb = _band_hashes(fresh, id_col, num_hashes, bands)
+            heal_rows = (
+                _band_hashes(replayed, id_col, num_hashes, bands).select(
+                    F.col("bid").alias("id"), "band", "band_hash"
                 )
-                if bbands is not None:
-                    # steady state: the fused collect above already named
-                    # the buckets (cached superset covers pb)
-                    buckets = bbands
-                else:
-                    # post-crash heal (rare): the probe must also cover
-                    # the replayed rows' band hashes
-                    probe_keys = pb.select("band_hash")
-                    if heal_rows is not None:
-                        probe_keys = probe_keys.union(
-                            heal_rows.select("band_hash")
-                        )
-                    buckets = band_index.touched_bands(probe_keys)
-                idx_rows = (
-                    band_index.read_bands(spark, buckets) if buckets else None
-                )
-                if idx_rows is not None and tomb is not None:
-                    # erased docs stop generating candidates NOW — and the
-                    # probe behaves identically before and after the
-                    # physical purge (stale sidecar rows are folded out by
-                    # maintenance, hidden here meanwhile)
-                    idx_rows = idx_rows.join(
-                        tomb.select(F.col(id_col).alias("id")),
-                        "id",
-                        "left_anti",
-                    )
-                missing = None
-                if heal_rows is not None:
-                    if idx_rows is not None:
-                        missing = heal_rows.join(
-                            idx_rows, ["id", "band", "band_hash"], "left_anti"
-                        )
-                    elif buckets:
-                        # none of the touched buckets exist yet: every
-                        # replayed row's pairs are missing by definition
-                        missing = heal_rows
-                # the candidate target must INCLUDE the heal rows: a
-                # replayed doc IS stored history, and its band hashes are
-                # exactly what the index is missing — probing the index
-                # alone would let a batch-mate near-dup of it (dropped
-                # within-batch by the crashed attempt, so no longer paired
-                # in-batch on replay) slip past the history check.
-                cols = ["id", "band", "band_hash"]
-                target = idx_rows.select(*cols) if idx_rows is not None else None
-                if missing is not None:
-                    m = missing.select(*cols)
-                    target = m if target is None else target.union(m)
-                if target is not None:
-                    # emptiness-gated verify: the exact-Jaccard verify
-                    # reads the corpus (id, sh, n) columns — a full
-                    # thin-column scan — so it's only launched when some
-                    # band actually collided. The gate re-evaluates the
-                    # (cheap, pruned) candidate join rather than persisting
-                    # it: persist() of a frame derived from the foreachBatch
-                    # input measurably CORRUPTED later batches' dedup here
-                    # (cache-substitution inside the micro-batch plan), so
-                    # no caching across this seam.
-                    cand = (
-                        pb.join(target, ["band", "band_hash"])
-                        .select(F.col("bid").alias("p_id"), F.col("id").alias("t_id"))
-                        .dropDuplicates(["p_id", "t_id"])
-                    )
-                    if metrics is None:
-                        gate_open = not cand.isEmpty()
-                    else:
-                        # count() doubles as the emptiness gate when the
-                        # caller wants the trigger telemetry — same pruned
-                        # batch-sized frame, one job either way
-                        n_cand = cand.count()
-                        gate_open = n_cand > 0
-                        if gate_open:
-                            metrics["verify_cand_pairs"] = (
-                                metrics.get("verify_cand_pairs", 0) + n_cand
-                            )
-                    if gate_open:
-                        if metrics is not None:
-                            metrics["verify_launched"] = (
-                                metrics.get("verify_launched", 0) + 1
-                            )
-                        hist_victims = _verified_victims(
-                            cand, fresh, hist, id_col, threshold
-                        )
-                        fresh = fresh.join(hist_victims, id_col, "left_anti")
-                if missing is not None and not missing.isEmpty():
-                    band_index.append(missing)
-                # heal the exact sidecar the same way: replayed rows'
-                # (id, fp, fpk) may be missing after a crash
-                if replayed is not None:
-                    _heal_exact_index(spark, exact_index, _exact_pairs(replayed, id_col))
+                if replayed is not None
+                else None
+            )
+            if bbands is not None:
+                # steady state: the fused collect above already named
+                # the buckets (cached superset covers pb)
+                buckets = bbands
             else:
-                htarget = hist
-                if tomb is not None:
-                    htarget = hist.join(
-                        tomb.select(id_col), id_col, "left_anti"
+                # post-crash heal (rare): the probe must also cover
+                # the replayed rows' band hashes
+                probe_keys = pb.select("band_hash")
+                if heal_rows is not None:
+                    probe_keys = probe_keys.union(
+                        heal_rows.select("band_hash")
                     )
-                hist_victims = _near_dup_ids(
-                    fresh, htarget, id_col, num_hashes, bands, threshold,
-                    self_pairs_ordered=False,
+                buckets = band_index.touched_bands(probe_keys)
+            idx_rows = (
+                band_index.read_bands(spark, buckets) if buckets else None
+            )
+            if idx_rows is not None and tomb is not None:
+                # erased docs stop generating candidates NOW — and the
+                # probe behaves identically before and after the
+                # physical purge (stale sidecar rows are folded out by
+                # maintenance, hidden here meanwhile)
+                idx_rows = idx_rows.join(
+                    tomb.select(F.col(id_col).alias("id")),
+                    "id",
+                    "left_anti",
                 )
-                fresh = fresh.join(hist_victims, id_col, "left_anti")
+            missing = None
+            if heal_rows is not None:
+                if idx_rows is not None:
+                    missing = heal_rows.join(
+                        idx_rows, ["id", "band", "band_hash"], "left_anti"
+                    )
+                elif buckets:
+                    # none of the touched buckets exist yet: every
+                    # replayed row's pairs are missing by definition
+                    missing = heal_rows
+            # the candidate target must INCLUDE the heal rows: a
+            # replayed doc IS stored history, and its band hashes are
+            # exactly what the index is missing — probing the index
+            # alone would let a batch-mate near-dup of it (dropped
+            # within-batch by the crashed attempt, so no longer paired
+            # in-batch on replay) slip past the history check.
+            cols = ["id", "band", "band_hash"]
+            target = idx_rows.select(*cols) if idx_rows is not None else None
+            if missing is not None:
+                m = missing.select(*cols)
+                target = m if target is None else target.union(m)
+            if target is not None:
+                # emptiness-gated verify: the exact-Jaccard verify
+                # reads the corpus (id, sh, n) columns — a full
+                # thin-column scan — so it's only launched when some
+                # band actually collided. The gate re-evaluates the
+                # (cheap, pruned) candidate join rather than persisting
+                # it: persist() of a frame derived from the foreachBatch
+                # input measurably CORRUPTED later batches' dedup here
+                # (cache-substitution inside the micro-batch plan), so
+                # no caching across this seam.
+                cand = (
+                    pb.join(target, ["band", "band_hash"])
+                    .select(F.col("bid").alias("p_id"), F.col("id").alias("t_id"))
+                    .dropDuplicates(["p_id", "t_id"])
+                )
+                if metrics is None:
+                    gate_open = not cand.isEmpty()
+                else:
+                    # count() doubles as the emptiness gate when the
+                    # caller wants the trigger telemetry — same pruned
+                    # batch-sized frame, one job either way
+                    n_cand = cand.count()
+                    gate_open = n_cand > 0
+                    if gate_open:
+                        metrics["verify_cand_pairs"] = (
+                            metrics.get("verify_cand_pairs", 0) + n_cand
+                        )
+                if gate_open:
+                    if metrics is not None:
+                        metrics["verify_launched"] = (
+                            metrics.get("verify_launched", 0) + 1
+                        )
+                    hist_victims = _verified_victims(
+                        cand, fresh, hist, id_col, threshold
+                    )
+                    fresh = fresh.join(hist_victims, id_col, "left_anti")
+            if missing is not None and not missing.isEmpty():
+                band_index.append(missing)
+            # heal the exact sidecar the same way: replayed rows'
+            # (id, fp, fpk) may be missing after a crash
+            if replayed is not None:
+                _heal_exact_index(spark, exact_index, _exact_pairs(replayed, id_col))
         # ONE evaluation of the dedup lineage (every `fresh` step above
         # is a semi/anti row filter of the persisted `cached`, so the
         # rebuild is exact); size-gated, see rebuild_from_survivor_ids
         fresh = rebuild_from_survivor_ids(batch_df, cached, fresh, id_col)
-        if use_index:
-            band_index.mark_inflight(spark)
+        band_index.mark_inflight(spark)
         fresh.write.mode("append").parquet(corpus_dir)
-        if use_index:
-            # index appends AFTER the corpus commit (crash ⇒ missing index
-            # rows, healed on replay — never phantom rows); one marker
-            # brackets both appends, which run FUSED as a single Spark
-            # job (two job submissions per batch was a measured slice of
-            # fixed overhead). The write reports each sidecar's band
-            # set, feeding maintain()'s batch-proportional detection
-            # exactly.
-            append_many(
-                [
-                    (exact_index, _exact_pairs(fresh, id_col)),
-                    (
-                        band_index,
-                        _band_hashes(fresh, id_col, num_hashes, bands).select(
-                            F.col("bid").alias("id"), "band", "band_hash"
-                        ),
+        # index appends AFTER the corpus commit (crash ⇒ missing index
+        # rows, healed on replay — never phantom rows); one marker
+        # brackets both appends, which run FUSED as a single Spark job
+        # (two job submissions per batch was a measured slice of fixed
+        # overhead). The write reports each sidecar's band set, feeding
+        # maintain()'s batch-proportional detection exactly.
+        append_many(
+            [
+                (exact_index, _exact_pairs(fresh, id_col)),
+                (
+                    band_index,
+                    _band_hashes(fresh, id_col, num_hashes, bands).select(
+                        F.col("bid").alias("id"), "band", "band_hash"
                     ),
-                ]
-            )
-            band_index.clear_inflight(spark)
+                ),
+            ]
+        )
+        band_index.clear_inflight(spark)
         cached.unpersist()
-        if hist_cached is not None:
-            hist_cached.unpersist()
         n_done[0] += 1
         if metrics is not None:
             metrics["batches"] = metrics.get("batches", 0) + 1
-        if use_index and maintain_every and n_done[0] % maintain_every == 0:
+        if maintain_every and n_done[0] % maintain_every == 0:
             # fold tombstoned docs' rows out of every band this tick
             # rewrites (both sidecars key rows by "id")
             ex = (
@@ -549,7 +500,6 @@ def start_incremental_near_dedup(
     threshold: float = 0.2,
     available_now: bool = True,
     n_buckets: int | None = None,
-    history_probe: str = "bucketed",
     maintain_every: int | None = 16,
     maintain_max_files: int = 8,
     metrics: dict | None = None,
@@ -577,7 +527,6 @@ def start_incremental_near_dedup(
         bands=bands,
         threshold=threshold,
         n_buckets=n_buckets,
-        history_probe=history_probe,
         maintain_every=maintain_every,
         maintain_max_files=maintain_max_files,
         metrics=metrics,

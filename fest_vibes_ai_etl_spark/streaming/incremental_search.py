@@ -23,7 +23,7 @@ sidecars and the IVF cell store:
 - ``<index_dir>_docidx`` — a :class:`BandedFingerprintIndex` over the
   indexed doc ids, so the per-batch "already indexed?" replay guard
   reads only the batch's OWN id bands instead of the whole doclen
-  column (``history_probe="scan"`` keeps the full-column path for A/B).
+  column.
 - ``<index_dir>/forward/db=<bucket>/`` (round 13) — the doc-major
   FORWARD sidecar: the same (term, tf, doc_id) rows bucketed by
   ``pmod(xxhash64(cast(id as string)), n_doc_buckets)``, appended with
@@ -46,17 +46,15 @@ stored layout REFUSES loudly: probing across a bucket-count change would
 silently miss posting lists — the config-drift class the banded and IVF
 indexes already close.
 
-Crash matrix (postings FIRST — that append is replay-idempotent in both
-guard modes, so every window before the doclen commit replays cleanly
-with no marker at all; the marker brackets only doclen → docidx):
+Crash matrix (postings FIRST — that append is replay-idempotent, so
+every window before the doclen commit replays cleanly with no marker at
+all; the marker brackets only doclen → docidx):
 - die during/after the postings append, before doclen: nothing is
   authoritatively indexed; the replay's guard passes every doc, the
   postings re-append under the SAME append id skips landed buckets and
   fills holes (direct path) or anti-joins (term, doc) against the
-  batch's buckets (committer fallback), doclen commits once. This is
-  the whole crash story for ``history_probe="scan"``, which keeps no
-  marker.
-- die between doclen and the docidx append (bucketed only): the replay
+  batch's buckets (committer fallback), doclen commits once.
+- die between doclen and the docidx append: the replay
   sees the surviving marker, falls back to the authoritative doclen
   scan, and captures the crashed window's docs as the ids doclen
   recorded but the docidx append never reached (ids already in the
@@ -1061,7 +1059,7 @@ def purge_search_tombstones(spark, index_dir: str, clear: bool = False) -> dict:
     tombstone set) — purge timing is an operations choice, not a
     correctness event. The tombstone set is KEPT by default (the id stays
     burned — the ``_docidx`` replay guard still holds it, so a re-sent id
-    is skipped in both guard modes); ``clear=True`` drops it when the
+    is skipped); ``clear=True`` drops it when the
     erasure must also forget the ids. Single-writer: stream stopped or
     between batches."""
     from pyspark.errors import AnalysisException
@@ -1188,9 +1186,9 @@ def purge_search_tombstones(spark, index_dir: str, clear: bool = False) -> dict:
             fs.delete(fwp, True)
     if clear:
         # forget the ids EVERYWHERE: without the tombstone entry burn, a
-        # stale _docidx row would make bucketed-mode streams skip a
-        # re-sent id forever while scan mode (doclen purged) re-indexes
-        # it — fold the sidecar too, so the guard modes stay equivalent
+        # stale _docidx row would make the stream skip a re-sent id
+        # forever although doclen (purged) no longer holds it — fold the
+        # sidecar too
         docidx = BandedFingerprintIndex(
             _docidx_path(index_dir), key_col="fpk", schema_tag=_SCHEMA_TAG
         )
@@ -1390,7 +1388,6 @@ def make_search_index_processor(
     text_col: str = "text",
     n_term_buckets: int = 64,
     n_bands: int | None = None,
-    history_probe: str = "bucketed",
     maintain_every: int | None = 16,
     maintain_max_files: int = 8,
     n_doc_buckets: int | None = 32,
@@ -1413,10 +1410,6 @@ def make_search_index_processor(
     every crash window the postings survive."""
     from ..functions import text as T
 
-    if history_probe not in ("bucketed", "scan"):
-        raise ValueError(
-            f"unknown history_probe {history_probe!r}: expected 'bucketed' or 'scan'"
-        )
     docidx = BandedFingerprintIndex(
         _docidx_path(index_dir),
         key_col="fpk",
@@ -1462,7 +1455,6 @@ def make_search_index_processor(
             # and the caller disabled settling)
             fw_ndb.append(meta.get("n_doc_buckets"))
             meta_ok.append(True)
-        use_index = history_probe == "bucketed"
         # Intra-batch winner must be DETERMINISTIC (min text per id), not
         # dropDuplicates' partition-order pick: the append id fingerprints
         # the batch CONTENT, so a crashed-then-replayed batch that chose a
@@ -1475,8 +1467,8 @@ def make_search_index_processor(
         # on the same append id.
         deduped = batch_df.groupBy(id_col).agg(F.min(text_col).alias(text_col))
         fresh = deduped
-        # burned ids: a tombstoned id can never be (re-)indexed, in either
-        # guard mode — the content was erased. Read per batch (one fs stat
+        # burned ids: a tombstoned id can never be (re-)indexed — the
+        # content was erased. Read per batch (one fs stat
         # when no delete was ever issued). The append-id fingerprint stays
         # computed over the PRE-burn `deduped` rows so a replayed batch
         # converges on the same skip-if-landed names even if a delete
@@ -1494,6 +1486,7 @@ def make_search_index_processor(
         except AnalysisException as exc:
             if not is_path_not_found(exc):
                 raise
+        need_heal = False
         if hist is None:
             # no doclen ⇒ nothing is authoritatively indexed; a surviving
             # sidecar describes a gone index and must die on every
@@ -1501,18 +1494,14 @@ def make_search_index_processor(
             docidx.invalidate(spark)
             if not idx_settled:
                 idx_settled.append(True)
-        elif not use_index and not idx_settled:
-            docidx.invalidate(spark)
-            idx_settled.append(True)
-        need_heal = False
-        if hist is not None and use_index:
+        else:
             _settle_indexes(
                 spark, ((docidx, lambda: _id_pairs(hist, id_col)),), idx_settled
             )
             need_heal = docidx.was_inflight(spark)
         replayed = None
         if hist is not None:
-            if use_index and not need_heal:
+            if not need_heal:
                 bands = docidx.touched_bands(_id_pairs(fresh, id_col).select("fpk"))
                 rows = docidx.read_bands(spark, bands) if bands else None
                 if rows is not None:
@@ -1522,23 +1511,23 @@ def make_search_index_processor(
                         "left_anti",
                     )
             else:
+                # post-crash heal: the doclen id column is the authority
                 seen = hist.select(F.col(id_col))
-                if need_heal:
-                    # the crashed window's docs are the ones doclen recorded
-                    # but the docidx append never reached — ids ALREADY in
-                    # the sidecar were fully committed by earlier batches
-                    # (their postings live under a DIFFERENT append id, so
-                    # re-appending them would duplicate, not fill holes)
-                    repl = fresh.join(seen, id_col, "left_semi")
-                    rb = docidx.touched_bands(_id_pairs(repl, id_col).select("fpk"))
-                    rrows = docidx.read_bands(spark, rb) if rb else None
-                    if rrows is not None:
-                        repl = repl.join(
-                            rrows.select(F.col("fp").cast("string").alias("__done")),
-                            repl[id_col].cast("string") == F.col("__done"),
-                            "left_anti",
-                        )
-                    replayed = repl
+                # the crashed window's docs are the ones doclen recorded
+                # but the docidx append never reached — ids ALREADY in the
+                # sidecar were fully committed by earlier batches (their
+                # postings live under a DIFFERENT append id, so
+                # re-appending them would duplicate, not fill holes)
+                repl = fresh.join(seen, id_col, "left_semi")
+                rb = docidx.touched_bands(_id_pairs(repl, id_col).select("fpk"))
+                rrows = docidx.read_bands(spark, rb) if rb else None
+                if rrows is not None:
+                    repl = repl.join(
+                        rrows.select(F.col("fp").cast("string").alias("__done")),
+                        repl[id_col].cast("string") == F.col("__done"),
+                        "left_anti",
+                    )
+                replayed = repl
                 fresh = fresh.join(seen, id_col, "left_anti")
 
         # Content fingerprint of the DEDUPED batch — ids AND winner text,
@@ -1726,7 +1715,7 @@ def make_search_index_processor(
             )
             fw_resolved.append((kind, dest))
 
-        if use_index and need_heal and replayed is not None:
+        if replayed is not None:
             # docs recorded in doclen whose postings/docidx rows the
             # crashed attempt may not have landed: guarded re-append under
             # a DISTINCT id — their rows may sit under the crashed
@@ -1758,33 +1747,29 @@ def make_search_index_processor(
                 .withColumn("tb", term_bucket(F.col("term"), n_term_buckets))
             )
             # postings FIRST: this append is replay-idempotent, so a crash
-            # anywhere before the doclen commit replays cleanly in BOTH
-            # guard modes (scan mode has no marker — it must not have a
-            # loss window after doclen). The forward append sits in the
-            # same pre-doclen window under the same idempotence.
+            # anywhere before the doclen commit replays cleanly with no
+            # marker. The forward append sits in the same pre-doclen
+            # window under the same idempotence.
             append_postings(post, append_id, guard=False)
             if fw_ndb[0] is not None:
                 append_forward(forward_of(post), append_id + "f", guard=False)
-            if use_index:
-                docidx.mark_inflight(spark)
+            docidx.mark_inflight(spark)
             (
                 enriched.select(F.col(id_col), F.size("tk").alias("dl"))
                 .filter(F.col("dl") > 0)
                 .write.mode("append")
                 .parquet(doclen_dir)
             )
-            if use_index:
-                docidx.append(_id_pairs(enriched, id_col))
-                docidx.clear_inflight(spark)
+            docidx.append(_id_pairs(enriched, id_col))
+            docidx.clear_inflight(spark)
         finally:
             enriched.unpersist()
         n_done[0] += 1
         if maintain_every and n_done[0] % maintain_every == 0:
-            if use_index:
-                docidx.maintain(spark, max_files_per_band=maintain_max_files)
-            # postings + doclen gain one file per batch in BOTH guard
-            # modes; compact the buckets this stream dirtied (full walk
-            # only after a committer-fallback append, which reports none)
+            docidx.maintain(spark, max_files_per_band=maintain_max_files)
+            # postings + doclen gain one file per batch; compact the
+            # buckets this stream dirtied (full walk only after a
+            # committer-fallback append, which reports none)
             maintain_search_index(
                 spark,
                 index_dir,
@@ -1807,7 +1792,6 @@ def start_incremental_search_index(
     text_col: str = "text",
     n_term_buckets: int = 64,
     available_now: bool = True,
-    history_probe: str = "bucketed",
     maintain_every: int | None = 16,
     maintain_max_files: int = 8,
     fs_options: dict | None = None,
@@ -1820,7 +1804,6 @@ def start_incremental_search_index(
         id_col=id_col,
         text_col=text_col,
         n_term_buckets=n_term_buckets,
-        history_probe=history_probe,
         maintain_every=maintain_every,
         maintain_max_files=maintain_max_files,
         fs_options=fs_options,

@@ -15,8 +15,8 @@ history (fp anti-join) and appends nothing — convergence does NOT depend
 on the span rule, so even fingerprint-poor short docs can't duplicate on
 replay.
 
-History probe (the scale seam): the default ``history_probe="bucketed"``
-maintains TWO band-partitioned sidecars (see ``banded_index``):
+History probe (the scale seam): the stream maintains TWO
+band-partitioned sidecars (see ``banded_index``):
 
 - ``<corpus>_fpidx`` — the pre-exploded (id, fp) winnow pairs. A batch
   can only share a fingerprint that the batch itself carries, so the
@@ -38,9 +38,8 @@ key-derivation parameters (key_col/schema_tag) contradict the stored
 layout is detected and the stream invalidates + rebuilds from the corpus
 instead of probing a wrong subset (the stored band count itself always
 wins — physical sizing, grown by maintenance, never a rebuild trigger).
-``history_probe="scan"`` keeps the pre-round-7 full-scan path (re-explode
-stored ``wfps`` per batch) for A/B measurement; ``tools/probe_scaling.py``
-records the walls of both at growing accumulated history.
+``tools/probe_scaling.py`` records the probe's walls at growing
+accumulated history.
 
 Crash consistency: one in-flight marker brackets the corpus append and
 BOTH index appends (corpus first, indexes second), so a crash in the
@@ -122,7 +121,6 @@ def make_span_dedup_processor(
     w: int = 15,
     min_shared: int = 3,
     n_bands: int | None = None,
-    history_probe: str = "bucketed",
     max_doc_chars: int | None = None,
     maintain_every: int | None = 16,
     maintain_max_files: int = 8,
@@ -135,11 +133,6 @@ def make_span_dedup_processor(
     both sidecars' direct-append writers (pyarrow S3FileSystem options:
     endpoint_override + credentials for S3-compatible stores — see
     ``banded_index``)."""
-    if history_probe not in ("bucketed", "scan"):
-        raise ValueError(
-            f"unknown history_probe {history_probe!r}: "
-            f"expected 'bucketed' or 'scan'"
-        )
     fp_index = BandedFingerprintIndex(
         span_index_path(corpus_dir),
         key_col="fp",
@@ -154,11 +147,9 @@ def make_span_dedup_processor(
         schema_tag="exact:md5-xxh64",
         fs_options=fs_options,
     )
-    # one-time per-stream index reconciliation flag. Meaning depends on
-    # mode: bucketed — "both indexes validated/migrated, skip further
-    # existence stats"; scan — "any stale index has been invalidated".
-    # Either way: non-empty = the mode's index state is settled for this
-    # stream, don't redo the check per batch.
+    # one-time per-stream index reconciliation flag: non-empty = both
+    # indexes are validated/migrated for this stream, don't redo the
+    # existence stats per batch.
     idx_settled: list[bool] = []
     n_done: list[int] = [0]  # completed batches, drives maintenance
     purge_checked: list[bool] = []  # once-per-stream purge-crash heal
@@ -210,7 +201,6 @@ def make_span_dedup_processor(
             if not is_path_not_found(exc):
                 raise
             hist = None
-        use_index = history_probe == "bucketed"
         need_heal = False
         if hist is None:
             # The corpus is ABSENT — first batch, or deleted out from
@@ -225,16 +215,7 @@ def make_span_dedup_processor(
             exact_index.invalidate(spark)
             if not idx_settled:
                 idx_settled.append(True)
-        elif not use_index and not idx_settled:
-            # scan mode appends corpus rows WITHOUT maintaining any index:
-            # a stale one would make a later bucketed run miss duplicates
-            # forever (exists() would skip the migration rebuild). One
-            # shot per run suffices — single-writer discipline means no
-            # one else can create an index mid-run.
-            fp_index.invalidate(spark)
-            exact_index.invalidate(spark)
-            idx_settled.append(True)
-        if hist is not None and use_index:
+        else:
             _settle_indexes(
                 spark,
                 (
@@ -258,10 +239,9 @@ def make_span_dedup_processor(
         fresh = fresh.join(keep, ["fp", id_col], "left_semi")
         replayed = None
         replayed_keys = None
-        ebands = None
         fbands = None
         if hist is not None:
-            if use_index and not need_heal:
+            if not need_heal:
                 # steady state: ONE driver collect computes BOTH sidecars'
                 # touched-band sets (each collect is a whole job
                 # submission — two per batch was a measured slice of the
@@ -285,21 +265,20 @@ def make_span_dedup_processor(
                 if erows is not None:
                     fresh = fresh.join(erows.select("fp"), "fp", "left_anti")
             else:
-                # scan mode, or post-crash heal: the corpus fp column is
-                # the authority (the exact index may be missing rows)
+                # post-crash heal: the corpus fp column is the authority
+                # (the exact index may be missing rows)
                 hkeys = hist.select(
                     F.coalesce("fp", F.lit(NULL_TEXT_SENTINEL)).alias("fp"),
                     F.col(id_col),
                 )
-                if need_heal:
-                    # TRUE replays (same id AND same bytes already stored):
-                    # the crashed attempt's rows may be missing index pairs
-                    # in EITHER sidecar — capture (id, fp) before the
-                    # anti-join drops them
-                    replayed_keys = fresh.join(
-                        hkeys, ["fp", id_col], "left_semi"
-                    ).select(F.col(id_col).alias("id"), "fp")
-                    replayed = replayed_keys.select("id")
+                # TRUE replays (same id AND same bytes already stored):
+                # the crashed attempt's rows may be missing index pairs
+                # in EITHER sidecar — capture (id, fp) before the
+                # anti-join drops them
+                replayed_keys = fresh.join(
+                    hkeys, ["fp", id_col], "left_semi"
+                ).select(F.col(id_col).alias("id"), "fp")
+                replayed = replayed_keys.select("id")
                 fresh = fresh.join(hkeys.select("fp"), "fp", "left_anti")
         # span dedup WITHIN the batch: lowest id of each pair wins
         live_fps = wf.join(fresh.select(F.col(id_col).alias("id")), "id", "left_semi")
@@ -310,118 +289,101 @@ def make_span_dedup_processor(
             live_fps = wf.join(
                 fresh.select(F.col(id_col).alias("id")), "id", "left_semi"
             )
-            if use_index:
-                heal_fps = (
-                    wf.join(replayed, "id", "left_semi")
-                    if replayed is not None
-                    else None
-                )
-                if fbands is not None:
-                    # steady state: the fused collect above already named
-                    # the bands (wf superset covers live_fps)
-                    bands = fbands
-                else:
-                    # post-crash heal (rare): the probe must also cover
-                    # the replayed rows' fingerprints
-                    probe_keys = live_fps.select("fp")
-                    if heal_fps is not None:
-                        probe_keys = probe_keys.union(heal_fps.select("fp"))
-                    bands = fp_index.touched_bands(probe_keys)
-                idx_rows = (
-                    fp_index.read_bands(spark, bands) if bands else None
-                )
-                if idx_rows is not None and tomb is not None:
-                    # erased docs stop generating span candidates NOW —
-                    # identical behavior before and after physical purge
-                    idx_rows = idx_rows.join(
-                        tomb.select(F.col(id_col).alias("id")),
-                        "id",
-                        "left_anti",
-                    )
-                missing = None
-                if heal_fps is not None:
-                    if idx_rows is not None:
-                        missing = heal_fps.join(
-                            idx_rows, ["id", "fp"], "left_anti"
-                        )
-                    elif bands:
-                        # none of the touched bands exist yet: every
-                        # replayed row's pairs are missing by definition
-                        missing = heal_fps
-                # the probe's target must INCLUDE the heal rows: a
-                # replayed doc IS stored history, and its pairs are
-                # exactly what the index is missing — probing the index
-                # alone would let a batch-mate that shared a passage with
-                # it (dropped within-batch by the crashed attempt, so no
-                # longer paired in-batch on replay) slip past. `missing`
-                # is disjoint from idx_rows by construction, so the union
-                # can't double-count n_shared.
-                target = idx_rows.select("id", "fp") if idx_rows is not None else None
-                if missing is not None:
-                    m = missing.select("id", "fp")
-                    target = m if target is None else target.union(m)
-                if target is not None:
-                    hvictims = _span_victims(
-                        live_fps, target, id_col, min_shared, False
-                    )
-                    fresh = fresh.join(hvictims, id_col, "left_anti")
-                if missing is not None and not missing.isEmpty():
-                    fp_index.append(missing)
-                # heal the exact sidecar the same way: replayed rows'
-                # (id, fp, fpk) may be missing after a crash
-                if replayed_keys is not None:
-                    _heal_exact_index(
-                        spark,
-                        exact_index,
-                        replayed_keys.withColumn("fpk", F.xxhash64(F.col("fp"))),
-                    )
+            heal_fps = (
+                wf.join(replayed, "id", "left_semi")
+                if replayed is not None
+                else None
+            )
+            if fbands is not None:
+                # steady state: the fused collect above already named
+                # the bands (wf superset covers live_fps)
+                bands = fbands
             else:
-                htarget = hist
-                if tomb is not None:
-                    htarget = hist.join(
-                        tomb.select(id_col), id_col, "left_anti"
-                    )
-                hist_fps = htarget.select(
-                    F.col(id_col).alias("id"), F.explode("wfps").alias("fp")
+                # post-crash heal (rare): the probe must also cover
+                # the replayed rows' fingerprints
+                probe_keys = live_fps.select("fp")
+                if heal_fps is not None:
+                    probe_keys = probe_keys.union(heal_fps.select("fp"))
+                bands = fp_index.touched_bands(probe_keys)
+            idx_rows = (
+                fp_index.read_bands(spark, bands) if bands else None
+            )
+            if idx_rows is not None and tomb is not None:
+                # erased docs stop generating span candidates NOW —
+                # identical behavior before and after physical purge
+                idx_rows = idx_rows.join(
+                    tomb.select(F.col(id_col).alias("id")),
+                    "id",
+                    "left_anti",
                 )
+            missing = None
+            if heal_fps is not None:
+                if idx_rows is not None:
+                    missing = heal_fps.join(
+                        idx_rows, ["id", "fp"], "left_anti"
+                    )
+                elif bands:
+                    # none of the touched bands exist yet: every
+                    # replayed row's pairs are missing by definition
+                    missing = heal_fps
+            # the probe's target must INCLUDE the heal rows: a
+            # replayed doc IS stored history, and its pairs are
+            # exactly what the index is missing — probing the index
+            # alone would let a batch-mate that shared a passage with
+            # it (dropped within-batch by the crashed attempt, so no
+            # longer paired in-batch on replay) slip past. `missing`
+            # is disjoint from idx_rows by construction, so the union
+            # can't double-count n_shared.
+            target = idx_rows.select("id", "fp") if idx_rows is not None else None
+            if missing is not None:
+                m = missing.select("id", "fp")
+                target = m if target is None else target.union(m)
+            if target is not None:
                 hvictims = _span_victims(
-                    live_fps, hist_fps, id_col, min_shared, False
+                    live_fps, target, id_col, min_shared, False
                 )
                 fresh = fresh.join(hvictims, id_col, "left_anti")
+            if missing is not None and not missing.isEmpty():
+                fp_index.append(missing)
+            # heal the exact sidecar the same way: replayed rows'
+            # (id, fp, fpk) may be missing after a crash
+            if replayed_keys is not None:
+                _heal_exact_index(
+                    spark,
+                    exact_index,
+                    replayed_keys.withColumn("fpk", F.xxhash64(F.col("fp"))),
+                )
         # ONE evaluation of the dedup lineage (exact guard, within-batch
         # span, history span probe — a measured ~1.5-2 s slice of the
         # fixed per-batch overhead when run twice); size-gated, see
         # rebuild_from_survivor_ids
         fresh = rebuild_from_survivor_ids(batch_df, cached, fresh, id_col)
-        if use_index:
-            fp_index.mark_inflight(spark)
+        fp_index.mark_inflight(spark)
         fresh.write.mode("append").parquet(corpus_dir)
-        if use_index:
-            # index appends AFTER the corpus commit (crash ⇒ missing index
-            # rows, healed on replay — never phantom rows); one marker
-            # brackets both appends, which run FUSED as a single Spark
-            # job (two job submissions per batch was a measured ~4 s of
-            # fixed overhead). The write reports each sidecar's band
-            # set, feeding maintain()'s batch-proportional detection
-            # exactly.
-            append_many(
-                [
-                    (exact_index, _exact_pairs(fresh, id_col)),
-                    (
-                        fp_index,
-                        wf.join(
-                            fresh.select(F.col(id_col).alias("id")),
-                            "id",
-                            "left_semi",
-                        ),
+        # index appends AFTER the corpus commit (crash ⇒ missing index
+        # rows, healed on replay — never phantom rows); one marker
+        # brackets both appends, which run FUSED as a single Spark job
+        # (two job submissions per batch was a measured ~4 s of fixed
+        # overhead). The write reports each sidecar's band set, feeding
+        # maintain()'s batch-proportional detection exactly.
+        append_many(
+            [
+                (exact_index, _exact_pairs(fresh, id_col)),
+                (
+                    fp_index,
+                    wf.join(
+                        fresh.select(F.col(id_col).alias("id")),
+                        "id",
+                        "left_semi",
                     ),
-                ]
-            )
-            fp_index.clear_inflight(spark)
+                ),
+            ]
+        )
+        fp_index.clear_inflight(spark)
         cached.unpersist()
         wf.unpersist()
         n_done[0] += 1
-        if use_index and maintain_every and n_done[0] % maintain_every == 0:
+        if maintain_every and n_done[0] % maintain_every == 0:
             # fold tombstoned docs' rows out of every band this tick
             # rewrites (both sidecars key rows by "id")
             ex = (
@@ -451,7 +413,6 @@ def start_incremental_span_dedup(
     min_shared: int = 3,
     available_now: bool = True,
     n_bands: int | None = None,
-    history_probe: str = "bucketed",
     max_doc_chars: int | None = None,
     maintain_every: int | None = 16,
     maintain_max_files: int = 8,
@@ -480,7 +441,6 @@ def start_incremental_span_dedup(
         w=w,
         min_shared=min_shared,
         n_bands=n_bands,
-        history_probe=history_probe,
         max_doc_chars=max_doc_chars,
         maintain_every=maintain_every,
         maintain_max_files=maintain_max_files,

@@ -1,5 +1,5 @@
-"""Banded fingerprint index: partition-pruned probes, scan/bucketed
-equivalence of the incremental dedup streams, and crash-gap healing."""
+"""Banded fingerprint index: partition-pruned probes, the incremental
+dedup streams' stored sets, and crash-gap healing."""
 
 from __future__ import annotations
 
@@ -33,7 +33,7 @@ def _write_batches(spark, src):
         ).write.mode("append").parquet(src)
 
 
-def _run_span(spark, src, corpus, ckpt, mode, n_bands=16):
+def _run_span(spark, src, corpus, ckpt, n_bands=16):
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
@@ -41,12 +41,12 @@ def _run_span(spark, src, corpus, ckpt, mode, n_bands=16):
     )
     q = start_incremental_span_dedup(
         stream, corpus, ckpt, k=20, w=15, min_shared=3,
-        n_bands=n_bands, history_probe=mode,
+        n_bands=n_bands,
     )
     assert q.awaitTermination(180), "stream did not finish in 180s"
 
 
-def _run_near(spark, src, corpus, ckpt, mode, n_buckets=16):
+def _run_near(spark, src, corpus, ckpt, n_buckets=16):
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
@@ -54,7 +54,7 @@ def _run_near(spark, src, corpus, ckpt, mode, n_buckets=16):
     )
     q = start_incremental_near_dedup(
         stream, corpus, ckpt, k=3, num_hashes=32, bands=8, threshold=0.2,
-        n_buckets=n_buckets, history_probe=mode,
+        n_buckets=n_buckets,
     )
     assert q.awaitTermination(180), "stream did not finish in 180s"
 
@@ -137,30 +137,24 @@ def _stored_ids(spark, corpus):
     return {r.doc_id for r in spark.read.parquet(corpus).select("doc_id").collect()}
 
 
-def test_span_bucketed_probe_equals_scan_probe(spark, tmp_path):
+def test_span_probe_stores_expected_ids(spark, tmp_path):
     src = str(tmp_path / "src")
     _write_batches(spark, src)
-    for mode in ("scan", "bucketed"):
-        _run_span(spark, src, str(tmp_path / f"c_{mode}"), str(tmp_path / f"k_{mode}"), mode)
-    scan_ids = _stored_ids(spark, str(tmp_path / "c_scan"))
-    bucketed_ids = _stored_ids(spark, str(tmp_path / "c_bucketed"))
-    assert scan_ids == bucketed_ids
-    # the span rule fired cross-batch: 10 carries B1's passage, 2000 is an
-    # exact dup of 2 — neither stored
-    assert 10 not in scan_ids and 2000 not in scan_ids
-    assert {1, 2, 3, 11} <= scan_ids
+    _run_span(spark, src, str(tmp_path / "c"), str(tmp_path / "k"))
+    # B1 is all fresh. The span rule fired cross-batch: 10 carries B1's
+    # 63-char PASSAGE and shares 6 winnowed fingerprints with 1 (≥
+    # min_shared = 3); 2000 is an exact dup of 2; 11 shares none
+    assert _stored_ids(spark, str(tmp_path / "c")) == {1, 2, 3, 11}
 
 
-def test_near_bucketed_probe_equals_scan_probe(spark, tmp_path):
+def test_near_probe_stores_expected_ids(spark, tmp_path):
     src = str(tmp_path / "src")
     _write_batches(spark, src)
-    for mode in ("scan", "bucketed"):
-        _run_near(spark, src, str(tmp_path / f"c_{mode}"), str(tmp_path / f"k_{mode}"), mode)
-    scan_ids = _stored_ids(spark, str(tmp_path / "c_scan"))
-    bucketed_ids = _stored_ids(spark, str(tmp_path / "c_bucketed"))
-    assert scan_ids == bucketed_ids
-    assert 2000 not in scan_ids  # exact dup dropped cross-batch
-    assert {1, 2, 3} <= scan_ids
+    _run_near(spark, src, str(tmp_path / "c"), str(tmp_path / "k"))
+    # 2000 is an exact dup of 2; 10 shares PASSAGE's 11 word 3-shingles
+    # with 1 (Jaccard 11 / (16 + 18 - 11) ≈ 0.48 ≥ 0.2, and the seeded
+    # minhash bands of the two collide); 3 and 11 share nothing
+    assert _stored_ids(spark, str(tmp_path / "c")) == {1, 2, 3, 11}
 
 
 def _index_pairs(spark, idx_dir):
@@ -194,8 +188,8 @@ def test_span_index_heals_after_crash_between_corpus_and_index(spark, tmp_path):
     corpus = str(tmp_path / "corpus")
     spark.createDataFrame(B1, "doc_id long, text string").coalesce(1).write.parquet(src1)
     spark.createDataFrame(B2, "doc_id long, text string").coalesce(1).write.parquet(src2)
-    _run_span(spark, src1, corpus, str(tmp_path / "k1"), "bucketed")
-    _run_span(spark, src2, corpus, str(tmp_path / "k2"), "bucketed")
+    _run_span(spark, src1, corpus, str(tmp_path / "k1"))
+    _run_span(spark, src2, corpus, str(tmp_path / "k2"))
     idx_dir = span_index_path(corpus)
     full = _index_pairs(spark, idx_dir)
     assert full == _corpus_pairs(spark, corpus)
@@ -210,7 +204,7 @@ def test_span_index_heals_after_crash_between_corpus_and_index(spark, tmp_path):
     assert _index_pairs(spark, idx_dir) < full
     open(idx_dir + ".inflight", "w").close()
     # checkpoint recovery replays batch 2 (fresh checkpoint over src2)
-    _run_span(spark, src2, corpus, str(tmp_path / "k3"), "bucketed")
+    _run_span(spark, src2, corpus, str(tmp_path / "k3"))
     assert spark.read.parquet(corpus).count() == n0   # convergent
     assert _index_pairs(spark, idx_dir) == full       # healed
     assert not os.path.exists(idx_dir + ".inflight")  # marker cleared
@@ -519,7 +513,7 @@ def test_span_stream_deleted_corpus_invalidates_sidecars(spark, tmp_path):
     passage with gone history, losing them forever."""
     src, corpus = str(tmp_path / "src"), str(tmp_path / "corpus")
     spark.createDataFrame(B1, "doc_id long, text string").coalesce(1).write.parquet(src)
-    _run_span(spark, src, corpus, str(tmp_path / "k1"), "bucketed")
+    _run_span(spark, src, corpus, str(tmp_path / "k1"))
     assert _stored_ids(spark, corpus) == {1, 2, 3}
     import shutil
 
@@ -529,7 +523,7 @@ def test_span_stream_deleted_corpus_invalidates_sidecars(spark, tmp_path):
     )
 
     assert os.path.exists(span_index_path(corpus))
-    _run_span(spark, src, corpus, str(tmp_path / "k2"), "bucketed")
+    _run_span(spark, src, corpus, str(tmp_path / "k2"))
     assert _stored_ids(spark, corpus) == {1, 2, 3}  # nothing dropped
     # the rebuilt sidecars cover the new corpus exactly
     assert _index_pairs(spark, span_index_path(corpus)) == _corpus_pairs(spark, corpus)
@@ -588,7 +582,7 @@ def test_near_heal_catches_batchmate_of_replayed_doc(spark, tmp_path):
         spark.createDataFrame([(99, "zz", 5)], "id long, fp string, fpk long")
     )
     open(near_index_path(corpus) + ".inflight", "w").close()
-    _run_near(spark, src, corpus, str(tmp_path / "ckpt"), "bucketed", n_buckets=16)
+    _run_near(spark, src, corpus, str(tmp_path / "ckpt"), n_buckets=16)
     ids = _stored_ids(spark, corpus)
     assert ids == {1}, f"B escaped the heal-path near-dup check: {ids}"
     assert not os.path.exists(near_index_path(corpus) + ".inflight")
@@ -621,8 +615,8 @@ def test_span_stream_restart_with_different_n_bands_stays_correct(spark, tmp_pat
     corpus = str(tmp_path / "corpus")
     spark.createDataFrame(B1, "doc_id long, text string").coalesce(1).write.parquet(src1)
     spark.createDataFrame(B2, "doc_id long, text string").coalesce(1).write.parquet(src2)
-    _run_span(spark, src1, corpus, str(tmp_path / "k1"), "bucketed", n_bands=16)
-    _run_span(spark, src2, corpus, str(tmp_path / "k2"), "bucketed", n_bands=32)
+    _run_span(spark, src1, corpus, str(tmp_path / "k1"), n_bands=16)
+    _run_span(spark, src2, corpus, str(tmp_path / "k2"), n_bands=32)
     ids = _stored_ids(spark, corpus)
     assert 10 not in ids and 2000 not in ids and {1, 2, 3, 11} <= ids
     # the stored layout won; the index stayed consistent with the corpus
@@ -734,7 +728,7 @@ def test_span_heal_catches_batchmate_of_replayed_doc(spark, tmp_path):
         spark.createDataFrame([(99, "zz", 5)], "id long, fp string, fpk long")
     )
     open(span_index_path(corpus) + ".inflight", "w").close()
-    _run_span(spark, src, corpus, str(tmp_path / "ckpt"), "bucketed", n_bands=16)
+    _run_span(spark, src, corpus, str(tmp_path / "ckpt"), n_bands=16)
     ids = _stored_ids(spark, corpus)
     assert ids == {1}, f"B escaped the heal-path span check: {ids}"
     # and the heal re-appended A's pairs
@@ -763,7 +757,7 @@ def test_near_stream_rebuilds_on_key_derivation_change(spark, tmp_path):
         )
         q = start_incremental_near_dedup(
             stream, corpus, ckpt, k=3, num_hashes=32, bands=bands,
-            threshold=0.2, n_buckets=16, history_probe="bucketed",
+            threshold=0.2, n_buckets=16,
         )
         assert q.awaitTermination(180), "stream did not finish in 180s"
 
@@ -804,7 +798,7 @@ def test_span_stream_soak_bounds_files_and_caches(spark, tmp_path):
     )
     q = start_incremental_span_dedup(
         stream, corpus, str(tmp_path / "ckpt"), k=8, w=4, min_shared=3,
-        n_bands=16, history_probe="bucketed",
+        n_bands=16,
         maintain_every=10, maintain_max_files=4,
     )
     assert q.awaitTermination(600), "stream did not finish in 600s"
@@ -836,16 +830,25 @@ def test_span_stream_soak_bounds_files_and_caches(spark, tmp_path):
     }
 
 
-def test_span_bucketed_migrates_scan_built_corpus(spark, tmp_path):
-    """A corpus built with history_probe='scan' (or by an older round) has
-    no index; the first bucketed batch must build it and still dedup."""
+def test_span_migrates_sidecarless_corpus(spark, tmp_path):
+    """A corpus whose sidecars are gone (written by an older round, or the
+    sidecars were deleted) must get them rebuilt by the next batch, which
+    still dedups."""
+    import shutil
+
+    from fest_vibes_ai_etl_spark.streaming._exact_guard import (
+        exact_index_path,
+    )
+
     src1, src2 = str(tmp_path / "s1"), str(tmp_path / "s2")
     corpus = str(tmp_path / "corpus")
     spark.createDataFrame(B1, "doc_id long, text string").coalesce(1).write.parquet(src1)
-    _run_span(spark, src1, corpus, str(tmp_path / "k1"), "scan")
+    _run_span(spark, src1, corpus, str(tmp_path / "k1"))
+    shutil.rmtree(span_index_path(corpus))
+    shutil.rmtree(exact_index_path(corpus))
     assert not os.path.exists(span_index_path(corpus))
     spark.createDataFrame(B2, "doc_id long, text string").coalesce(1).write.parquet(src2)
-    _run_span(spark, src2, corpus, str(tmp_path / "k2"), "bucketed")
+    _run_span(spark, src2, corpus, str(tmp_path / "k2"))
     ids = _stored_ids(spark, corpus)
     assert 10 not in ids and 2000 not in ids and {1, 2, 3, 11} <= ids
     # migration built the index covering BOTH old and new rows

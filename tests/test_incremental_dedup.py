@@ -10,13 +10,13 @@ from fest_vibes_ai_etl_spark.sources import table
 from fest_vibes_ai_etl_spark.streaming.incremental_dedup import start_incremental_dedup
 
 
-def _run(spark, src, corpus, ckpt, mode="bucketed"):
+def _run(spark, src, corpus, ckpt):
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = start_incremental_dedup(stream, corpus, ckpt, history_probe=mode)
+    q = start_incremental_dedup(stream, corpus, ckpt)
     assert q.awaitTermination(120), "stream did not finish in 120s"
 
 
@@ -41,10 +41,12 @@ def test_incremental_dedup_across_batches(spark, tmp_path):
     assert spark.read.parquet(corpus).count() == n_unique_texts
 
 
-def test_exact_bucketed_probe_equals_scan_probe(spark, tmp_path):
-    """The fpk-banded replay guard must store exactly what the full
-    corpus-column scan stores, and reopening the sidecar must adopt its
-    persisted layout."""
+def test_exact_probe_stores_md5_of_distinct_texts(spark, tmp_path):
+    """The fpk-banded replay guard must store exactly one fingerprint per
+    distinct text (an md5 reference computed in Python from the source
+    rows), its sidecar must cover the corpus, and reopening the sidecar
+    must adopt its persisted layout."""
+    import hashlib
     import json
     import os
 
@@ -58,21 +60,19 @@ def test_exact_bucketed_probe_equals_scan_probe(spark, tmp_path):
     docs.filter("doc_id >= 40 AND doc_id < 100").coalesce(1).write.mode(
         "append"
     ).parquet(src)
-    fps = {}
-    for mode in ("scan", "bucketed"):
-        corpus = str(tmp_path / f"c_{mode}")
-        _run(spark, src, corpus, str(tmp_path / f"k_{mode}"), mode)
-        fps[mode] = {
-            r.fp for r in spark.read.parquet(corpus).select("fp").collect()
-        }
-    assert fps["scan"] == fps["bucketed"]
-    # scan mode maintains no index; bucketed's exactly covers its corpus
-    assert not os.path.exists(exact_index_path(str(tmp_path / "c_scan")))
-    idx_dir = exact_index_path(str(tmp_path / "c_bucketed"))
+    texts = {r.text for r in docs.filter("doc_id < 100").collect()}
+    want = {hashlib.md5(t.encode()).hexdigest() for t in texts}
+    corpus = str(tmp_path / "corpus")
+    _run(spark, src, corpus, str(tmp_path / "ckpt"))
+    fps = {r.fp for r in spark.read.parquet(corpus).select("fp").collect()}
+    assert fps == want
+    assert spark.read.parquet(corpus).count() == len(want)
+    # the sidecar exactly covers the corpus
+    idx_dir = exact_index_path(corpus)
     stored = {
         r.fp for r in spark.read.parquet(idx_dir).select("fp").collect()
     }
-    assert stored == fps["bucketed"]
+    assert stored == fps
     assert json.load(open(idx_dir + "/_meta.json"))["schema_tag"] == (
         "exact:md5-xxh64:fp-only"
     )
@@ -140,11 +140,12 @@ def test_exact_index_heals_after_crash_between_corpus_and_index(spark, tmp_path)
     assert not os.path.exists(idx_dir + ".inflight")
 
 
-def test_exact_bucketed_migrates_scan_built_corpus(spark, tmp_path):
-    """A corpus built in scan mode (or by an older round) has no sidecar;
-    the first bucketed batch must build it from the corpus and still drop
-    historical duplicates bucket-locally."""
+def test_exact_migrates_sidecarless_corpus(spark, tmp_path):
+    """A corpus whose sidecar is gone (written by an older round, or the
+    sidecar was deleted) must get it rebuilt from the corpus by the next
+    batch, which still drops historical duplicates bucket-locally."""
     import os
+    import shutil
 
     from fest_vibes_ai_etl_spark.streaming._exact_guard import (
         exact_index_path,
@@ -155,9 +156,10 @@ def test_exact_bucketed_migrates_scan_built_corpus(spark, tmp_path):
     corpus = str(tmp_path / "corpus")
     docs.filter("doc_id < 50").coalesce(1).write.parquet(src1)
     docs.filter("doc_id >= 20 AND doc_id < 90").coalesce(1).write.parquet(src2)
-    _run(spark, src1, corpus, str(tmp_path / "k1"), "scan")
+    _run(spark, src1, corpus, str(tmp_path / "k1"))
+    shutil.rmtree(exact_index_path(corpus))
     assert not os.path.exists(exact_index_path(corpus))
-    _run(spark, src2, corpus, str(tmp_path / "k2"), "bucketed")
+    _run(spark, src2, corpus, str(tmp_path / "k2"))
     stored = spark.read.parquet(corpus)
     assert stored.select("fp").distinct().count() == stored.count()
     n_unique = (

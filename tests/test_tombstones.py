@@ -137,21 +137,17 @@ def _near_proc(corpus, **kw):
     )
 
 
-import pytest  # noqa: E402
-
-
-@pytest.mark.parametrize("mode", ["bucketed", "scan"])
-def test_near_dedup_deleted_doc_stops_suppressing_and_burns(spark, tmp_path, mode):
+def test_near_dedup_deleted_doc_stops_suppressing_and_burns(spark, tmp_path):
     rows = lambda *r: spark.createDataFrame(list(r), "doc_id long, text string")
     # control: without a delete, the near-copy IS suppressed
     ctl = str(tmp_path / "ctl")
-    p0 = _near_proc(ctl, history_probe=mode)
+    p0 = _near_proc(ctl)
     p0(rows((1, BASE), (10, OTHER)), 0)
     p0(rows((2, NEAR)), 1)
     assert spark.read.parquet(ctl).filter("doc_id = 2").count() == 0
 
     corpus = str(tmp_path / "corpus")
-    proc = _near_proc(corpus, history_probe=mode)
+    proc = _near_proc(corpus)
     proc(rows((1, BASE), (10, OTHER)), 0)
     assert tb.delete_from_dedup_corpus(spark, corpus, [1]) == 1
     # the near-copy of the ERASED doc is admitted now

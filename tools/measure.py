@@ -1,20 +1,19 @@
 #!/usr/bin/env python
-"""Round-15 optimization measurement harness.
+"""Per-query isolation measurement harness.
 
 Times individual catalog queries in isolation (bench methodology: fn().count()
 after warmup, plus a noop-sink wall that forces every column — guide §1.4) and
-dumps each query's `.explain("formatted")` to plans/r14/<name>_<tag>.txt.
+dumps each query's `.explain("formatted")` to plans/<plans-tag>/<name>_<tag>.txt.
 
 Usage:
-  python tools/r14_measure.py --queries q1_pricing_summary,dedup_containment \
+  python tools/measure.py --queries q1_pricing_summary,dedup_containment \
       --tag before --reps 3 [--sf /root/testdata/sf0.1] [--explain-only]
-  python tools/r14_measure.py --all-bench --tag before --reps 3
+  python tools/measure.py --all-bench --tag before --reps 3 [--plans-tag r15]
 """
 
 from __future__ import annotations
 
 import argparse
-import os
 import contextlib
 import io
 import json
@@ -33,6 +32,8 @@ def main() -> None:
     ap.add_argument("--queries", default="")
     ap.add_argument("--all-bench", action="store_true")
     ap.add_argument("--tag", default="before")
+    ap.add_argument("--plans-tag", default="r15",
+                    help="plan dumps go to plans/<plans-tag>/")
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--warm-sf", default="/root/testdata/sf0.001")
@@ -40,6 +41,8 @@ def main() -> None:
     ap.add_argument("--noop", action="store_true",
                     help="also time the noop sink (forces all columns)")
     args = ap.parse_args()
+    if args.reps < 1 and not args.explain_only:
+        ap.error("--reps must be at least 1")
 
     queries()  # populate REGISTRY
     if args.all_bench:
@@ -50,10 +53,10 @@ def main() -> None:
     if missing:
         sys.exit(f"unknown queries: {missing}")
 
-    plans_dir = Path(__file__).resolve().parents[1] / "plans" / os.environ.get("PLANS_TAG", "r15")
+    plans_dir = Path(__file__).resolve().parents[1] / "plans" / args.plans_tag
     plans_dir.mkdir(parents=True, exist_ok=True)
 
-    spark = get_spark("r14-measure")
+    spark = get_spark("measure")
     spark.sparkContext.setLogLevel("ERROR")
 
     out: dict[str, dict] = {}

@@ -1,15 +1,14 @@
 #!/usr/bin/env python
-"""Incremental-dedup history-probe scaling: bucketed index vs full scan.
+"""Incremental-dedup history-probe scaling of the banded sidecar index.
 
 The round-6 verdict's one scale exposure: the incremental span/near dedup
 streams re-derived their probe side from the ENTIRE stored corpus on every
-micro-batch — linear per batch, quadratic over a backfill. Round 7 adds the
-band-partitioned sidecar (``streaming/banded_index.py``). This tool measures
-what that buys: it prebuilds accumulated history at 1×/4×/16× (replica-
-scaled documents with disjoint ids and per-replica token salting, the
-``scaling_curve.py`` convention), then times ONE fixed-size micro-batch
-through the real ``foreachBatch`` path under ``history_probe="scan"`` vs
-``"bucketed"``, and fits b in  wall = a·history^b  for each.
+micro-batch — linear per batch, quadratic over a backfill. Round 7 added the
+band-partitioned sidecar (``streaming/banded_index.py``) they probe instead.
+This tool prebuilds accumulated history at 1×/4×/16× (replica-scaled documents
+with disjoint ids and per-replica token salting, the ``scaling_curve.py``
+convention) plus its sidecars, then times ONE fixed-size micro-batch
+through the real ``foreachBatch`` path and fits b in  wall = a·history^b.
 
 What to expect (and why, so the numbers aren't read naively):
 
@@ -198,7 +197,7 @@ def measure_verify_gate(spark, base: str, out: str, work_corpus: str,
 
 
 def run_one_batch(spark, family: str, src: str, corpus: str, ckpt: str,
-                  mode: str, n_bands: int) -> float:
+                  n_bands: int) -> float:
     from fest_vibes_ai_etl_spark.streaming.incremental_near_dedup import (
         start_incremental_near_dedup,
     )
@@ -215,12 +214,12 @@ def run_one_batch(spark, family: str, src: str, corpus: str, ckpt: str,
     if family == "span":
         q = start_incremental_span_dedup(
             stream, corpus, ckpt, k=20, w=15, min_shared=3,
-            n_bands=n_bands, history_probe=mode,
+            n_bands=n_bands,
         )
     else:
         q = start_incremental_near_dedup(
             stream, corpus, ckpt, k=3, num_hashes=32, bands=8, threshold=0.2,
-            n_buckets=n_bands, history_probe=mode,
+            n_buckets=n_bands,
         )
     q.awaitTermination(600)
     return time.perf_counter() - t0
@@ -274,7 +273,7 @@ def main() -> None:
 
     results: dict[str, dict] = {}
     for fam in families:
-        walls: dict[str, list[float]] = {"scan": [], "bucketed": []}
+        walls: list[float] = []
         guard_reads: list[dict] = []
         warmed = False
         for r in scales:
@@ -362,50 +361,44 @@ def main() -> None:
                 }
             )
             log(f"[{fam}] x{r} exact-guard rows read: {guard_reads[-1]}")
-            for mode in ("scan", "bucketed"):
-                # the batch APPENDS; run each mode against a throwaway copy
-                reps = 2 if not warmed else 1  # first timing discards a
-                for rep in range(reps):        # JVM/stream warmup pass
-                    work = os.path.join(args.out, "work")
-                    shutil.rmtree(work, ignore_errors=True)
-                    corpus = os.path.join(work, "corpus")
-                    shutil.copytree(proto, corpus)
-                    if mode == "bucketed":
-                        # scan mode INVALIDATES any existing index on its
-                        # first batch (stale-index guard) — copying one in
-                        # would both waste setup and put the recursive
-                        # delete of thousands of band dirs on the timer
-                        idx_dst = (
-                            span_index_path(corpus) if fam == "span"
-                            else near_index_path(corpus)
-                        )
-                        for src_d, dst_d in (
-                            (idx_proto, idx_dst),
-                            (exact_proto, exact_index_path(corpus)),
-                        ):
-                            shutil.copytree(src_d, dst_d)
-                            meta = src_d.rstrip("/") + "_meta.json"
-                            if os.path.exists(meta):
-                                shutil.copy(meta, dst_d.rstrip("/") + "_meta.json")
-                    wall = run_one_batch(
-                        spark, fam, src, corpus, os.path.join(work, "ckpt"),
-                        mode, args.n_bands,
-                    )
-                    if reps == 2 and rep == 0:
-                        log(f"[{fam}] x{r} {mode} (warmup, discarded): {wall:.2f}s")
-                        continue
-                    walls[mode].append(wall)
-                    log(f"[{fam}] x{r} {mode}: {wall:.2f}s")
+            # the batch APPENDS; run it against a throwaway copy
+            reps = 2 if not warmed else 1  # first timing discards a
+            for rep in range(reps):        # JVM/stream warmup pass
+                work = os.path.join(args.out, "work")
+                shutil.rmtree(work, ignore_errors=True)
+                corpus = os.path.join(work, "corpus")
+                shutil.copytree(proto, corpus)
+                idx_dst = (
+                    span_index_path(corpus) if fam == "span"
+                    else near_index_path(corpus)
+                )
+                for src_d, dst_d in (
+                    (idx_proto, idx_dst),
+                    (exact_proto, exact_index_path(corpus)),
+                ):
+                    shutil.copytree(src_d, dst_d)
+                    meta = src_d.rstrip("/") + "_meta.json"
+                    if os.path.exists(meta):
+                        shutil.copy(meta, dst_d.rstrip("/") + "_meta.json")
+                wall = run_one_batch(
+                    spark, fam, src, corpus, os.path.join(work, "ckpt"),
+                    args.n_bands,
+                )
+                if reps == 2 and rep == 0:
+                    log(f"[{fam}] x{r} (warmup, discarded): {wall:.2f}s")
+                    continue
+                walls.append(wall)
+                log(f"[{fam}] x{r}: {wall:.2f}s")
             warmed = True
         results[fam] = {
             "scales": scales,
-            "walls": {m: [round(w, 3) for w in ws] for m, ws in walls.items()},
-            "b": {m: round(fit_b(scales, ws), 3) for m, ws in walls.items()},
+            "walls": [round(w, 3) for w in walls],
+            "b": round(fit_b(scales, walls), 3),
             "exact_guard": guard_reads,
         }
         if fam == "near":
             # verify-trigger telemetry at the LARGEST accumulated history,
-            # against the timed loop's surviving bucketed work corpus
+            # against the timed loop's surviving work corpus
             log("[near] measuring verify-gate trigger rate ...")
             results[fam]["verify_gate"] = measure_verify_gate(
                 spark, args.base, args.out,
@@ -417,12 +410,11 @@ def main() -> None:
     print(json.dumps({"probe_scaling": results,
                       "batch_docs": args.batch_docs,
                       "n_bands": args.n_bands}))
-    print("\n| family | mode | " + " | ".join(f"x{s}" for s in scales) + " | b |")
-    print("|---|---|" + "---|" * (len(scales) + 1))
+    print("\n| family | " + " | ".join(f"x{s}" for s in scales) + " | b |")
+    print("|---|" + "---|" * (len(scales) + 1))
     for fam, res in results.items():
-        for mode in ("scan", "bucketed"):
-            row = " | ".join(f"{w:.2f}s" for w in res["walls"][mode])
-            print(f"| {fam} | {mode} | {row} | {res['b'][mode]:.2f} |")
+        row = " | ".join(f"{w:.2f}s" for w in res["walls"])
+        print(f"| {fam} | {row} | {res['b']:.2f} |")
 
 
 if __name__ == "__main__":
