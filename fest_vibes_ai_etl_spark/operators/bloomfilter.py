@@ -123,17 +123,11 @@ def bloom_semi_join(
     build_key: str,
     num_bits: int | None = None,
     num_hashes: int = DEFAULT_HASHES,
-    exact: bool = True,
 ) -> DataFrame:
-    """Semi-join ``probe_side`` to ``build_side`` with a bloom pre-filter.
-    With ``exact`` (default) a real semi join runs after the pre-filter to
-    remove bloom false positives — the result is then EXACTLY the semi join,
-    but only the ~FP-rate excess of matching rows ever reaches the shuffle.
-    ``exact=False`` keeps the pure map-side filter (no shuffle at all) for
-    consumers that tolerate the FP rate (e.g. pre-aggregation pruning) —
-    note its row set depends on the bitmap sizing (FPs differ), so pin
-    ``num_bits`` explicitly if reproducibility of the approximate set
-    matters across data sizes.
+    """Semi-join ``probe_side`` to ``build_side`` with a bloom pre-filter,
+    then a real semi join that removes the bloom false positives — the
+    result is EXACTLY the semi join, but only the ~FP-rate excess of
+    matching rows ever reaches the shuffle.
 
     Round 15: the bitmap is SIZED FROM THE BUILD SIDE (``num_bits=None``
     counts it — one cheap job on what is by contract the small side —
@@ -144,9 +138,7 @@ def bloom_semi_join(
     bitmap rides a one-row broadcast, bit tests in codegen, no
     ArrowEvalPython); a build side big enough to need more than
     ``NATIVE_ATTACH_MAX_BITS`` skips the pre-filter and runs the plain
-    semi join (``exact=False`` then returns ``probe_side`` unfiltered —
-    a superset with no false negatives). Pass ``num_bits`` explicitly to
-    skip the sizing count."""
+    semi join. Pass ``num_bits`` explicitly to skip the sizing count."""
     if num_bits is None:
         num_bits = sized_bits(build_side.count())
     pre = probe_side
@@ -161,7 +153,5 @@ def bloom_semi_join(
             )
             .drop("bm")
         )
-    if not exact:
-        return pre
     keys = build_side.select(F.col(build_key).alias(probe_key)).distinct()
     return pre.join(keys, probe_key, "left_semi")

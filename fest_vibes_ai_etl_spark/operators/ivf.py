@@ -14,11 +14,17 @@ produced (cell_id, vec) table is ideally *partitioned by cell_id* so a probe
 reads only its cells' files; queries broadcast-join against the probed
 cells. No pyspark.ml on the path — the fit is pure numpy, the assignment one
 vectorized scan.
+
+The cell store is also streaming state: :func:`make_index_add_processor`
+adds vectors under the frozen quantizer per micro-batch, guarded against
+replays by an anti-join over the batch's own cells only, and lands them
+through the index stores' shared ``PartitionedAppend``
+(``streaming/banded_index.py``). Updates go through
+:func:`revise_ivf_vector`, deletes through :func:`delete_from_ivf_index`;
+both are absorbed at re-train/rebuild.
 """
 
 from __future__ import annotations
-
-import logging
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -527,7 +533,6 @@ def make_index_add_processor(
     centers: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    replay_guard: str = "pruned",
     fs_options: dict | None = None,
     metrics: dict | None = None,
 ):
@@ -546,27 +551,24 @@ def make_index_add_processor(
     (the same two seams the incremental-dedup family closed in rounds
     7-10, see ``streaming/banded_index.py``):
 
-    - ``replay_guard="pruned"`` (default) reads ONLY the batch's own
-      cell directories: the quantizer is frozen and assignment
-      deterministic, so a replayed vector lands in the same cell it was
-      stored under — other cells cannot hold its id. (Corollary of the
-      same contract: the index is append-only per id; an id re-sent
-      with a DIFFERENT embedding is an update, which belongs to the
-      rebuild path, not add.) ``"full"`` keeps the pre-round-10
-      whole-id-column anti-join — linear per batch, quadratic over a
-      backfill (~8 GB/batch of id column at 10⁹ vectors), kept for A/B
-      measurement (``tools/ivf_add_scaling.py``) and for an operator
-      who explicitly wants update-tolerant adds at that cost.
-    - the append writes directly from executors
-      (``direct_partitioned_append``) instead of through the
-      dynamic-partition committer's ~10 ms-per-cell-directory
-      driver-side commit work; a mid-job death leaves invisible
-      ``_tmp-`` staging files (swept here, bounded to the batch's own
-      cells) and possibly PARTIAL landed cells, which the replay's
-      anti-join converges — the guard reads exactly the cells any
-      partial files landed in. Untrusted filesystems fall back to the
-      committer write, warning ONCE per processor instance and naming
-      the cost; the destination probe itself runs once, not per batch.
+    - the replay guard reads ONLY the batch's own cell directories: the
+      quantizer is frozen and assignment deterministic, so a replayed
+      vector lands in the same cell it was stored under — other cells
+      cannot hold its id. (Corollary of the same contract: the index is
+      append-only per id; an UPDATE goes through
+      :func:`revise_ivf_vector`, and a re-trained quantizer is a
+      rebuild.)
+    - the append is the index stores' shared ``PartitionedAppend``
+      (``streaming/banded_index.py``): written directly from executors
+      instead of through the dynamic-partition committer's
+      ~10 ms-per-cell-directory driver-side commit work; a mid-job
+      death leaves invisible ``_tmp-`` staging files (swept here,
+      bounded to the batch's own cells) and possibly PARTIAL landed
+      cells, which the replay's anti-join converges — the guard reads
+      exactly the cells any partial files landed in. Untrusted
+      filesystems fall back to the committer write, warned once per
+      processor instance; the destination probe runs once, not per
+      batch.
 
     Config drift is refused, not absorbed: the index persists a
     ``_meta.json`` (centers fingerprint + column names) validated at the
@@ -583,26 +585,17 @@ def make_index_add_processor(
     stats and the re-train trigger they feed: see
     :func:`_record_staleness_metrics`.
     """
-    if replay_guard not in ("pruned", "full"):
-        raise ValueError(
-            f"unknown replay_guard {replay_guard!r}: expected 'pruned' or 'full'"
-        )
-    # per-instance once-only state: layout reconciliation, the resolved
-    # direct-append destination (the probe constructs a pyarrow
-    # filesystem — a JNI load for hdfs — so it must not rerun per batch),
-    # the committer-fallback warning, and the stored index's parquet
-    # schema (inference re-reads footers for every new cell set — the
-    # same per-probe cost the banded index's schema cache removes; the
-    # schema is layout-pinned by _meta.json, so caching is sound)
-    state: dict = {"checked": False, "dest": None, "warned": False,
-                   "schema": None}
+    from ..streaming.banded_index import PartitionedAppend
+
+    appender = PartitionedAppend(index_dir, "cell_id", fs_options)
+    # per-instance once-only state: layout reconciliation and the stored
+    # index's parquet schema (inference re-reads footers for every new
+    # cell set — the same per-probe cost the banded index's schema cache
+    # removes; the schema is layout-pinned by _meta.json, so caching is
+    # sound)
+    state: dict = {"checked": False, "schema": None}
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        from ..streaming.banded_index import (
-            _resolve_direct_destination,
-            direct_partitioned_append,
-        )
-
         spark = batch_df.sparkSession
         jvm = spark._jvm
         root = jvm.org.apache.hadoop.fs.Path(index_dir)
@@ -675,24 +668,7 @@ def make_index_add_processor(
                     has_data = True
             if has_data:
                 live.append(d)
-        if existing_cells and replay_guard == "full":
-            # the whole-index read still needs ≥1 data file somewhere for
-            # schema inference; the presence probe short-circuits at the
-            # first populated cell (≤ nlist listings, the mode's own
-            # index-proportional read dwarfs them)
-            has_any = bool(live) or any(
-                _dir_has_data_files(fs, jpath, f"{index_dir}/{c}")
-                for c in sorted(existing_cells)
-            )
-            if has_any:
-                # no schema-cache here: replay_guard is fixed per
-                # processor, so the pruned branch (the cache's only
-                # reader) is unreachable in full mode
-                seen = spark.read.parquet(index_dir)
-                assigned = assigned.join(
-                    seen.select(id_col), id_col, "left_anti"
-                )
-        elif live:
+        if live:
             from ..streaming.banded_index import _read_parquet_dirs
 
             seen = _read_parquet_dirs(
@@ -701,34 +677,7 @@ def make_index_add_processor(
             if state["schema"] is None:
                 state["schema"] = seen.schema
             assigned = assigned.join(seen.select(id_col), id_col, "left_anti")
-        if state["dest"] is None:
-            state["dest"] = _resolve_direct_destination(spark, index_dir)
-        kind, dest, reason = state["dest"]
-        written = None
-        if kind is not None:
-            written = direct_partitioned_append(
-                assigned, index_dir, "cell_id",
-                fs_options=fs_options, resolved=(kind, dest),
-            )
-        if written is None:
-            # no trusted pyarrow mapping: committer write, never wrong —
-            # but name the cost once, like the banded index does
-            if not state["warned"]:
-                logging.getLogger(__name__).warning(
-                    "IVF add index %s: direct executor-side appends "
-                    "unavailable (%s) — falling back to the Spark "
-                    "dynamic-partition committer, which pays ~10 ms of "
-                    "driver-side commit work per touched cell directory "
-                    "per micro-batch; extend the direct-append filesystem "
-                    "mapping for this scheme to restore batch-proportional "
-                    "appends",
-                    index_dir,
-                    reason or "direct append declined",
-                )
-                state["warned"] = True
-            assigned.repartition("cell_id").write.mode("append").partitionBy(
-                "cell_id"
-            ).parquet(index_dir)
+        appender.append(assigned)
 
     return process
 
@@ -1057,7 +1006,6 @@ def start_incremental_index_add(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     available_now: bool = True,
-    replay_guard: str = "pruned",
     fs_options: dict | None = None,
     metrics: dict | None = None,
 ):
@@ -1066,7 +1014,7 @@ def start_incremental_index_add(
     staleness metrics, and the direct-append design)."""
     process = make_index_add_processor(
         index_dir, centers, id_col=id_col, vec_col=vec_col,
-        replay_guard=replay_guard, fs_options=fs_options, metrics=metrics,
+        fs_options=fs_options, metrics=metrics,
     )
     writer = (
         vectors.writeStream.foreachBatch(process)

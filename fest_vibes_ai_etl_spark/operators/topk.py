@@ -12,11 +12,8 @@ Spark ≥3.5 performs this prune NATIVELY: the rank-limit pushdown rule
 (``spark.sql.optimizer.windowGroupLimitThreshold``, on by default) inserts
 a JVM-side ``WindowGroupLimit ... Partial`` operator before the exchange
 whenever the plan is ``row_number()/rank() ... <= k`` — check any probe
-plan in EXPLAIN.md. The ``prune=True`` Arrow pass below implements the
-same idea in Python for engines/configs without that rule; stacked on top
-of WindowGroupLimit it is pure overhead (serialize → pandas sort → back),
-so it is OFF by default and the default path is a plain window that the
-optimizer prunes itself."""
+plan in EXPLAIN.md. The pinned Spark has the rule, so the operator is a
+plain window that the optimizer prunes itself."""
 
 from __future__ import annotations
 
@@ -30,33 +27,12 @@ def topk_per_group(
     order_col: str,
     id_col: str,
     k: int,
-    prune: bool = False,
 ) -> DataFrame:
     """Exact top-k rows per group by (order_col DESC, id_col ASC). Spark's
-    own WindowGroupLimit rule prunes map-side (see module docstring);
-    ``prune=True`` adds the explicit Arrow-batched pre-prune for engines
-    without that rule — identical result, only needed off-Spark-3.5+."""
-    out = df
-    if prune:
-        cols = df.columns
-        gcols = list(group_cols)
-
-        def local_prune(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    yield pdf
-                    continue
-                ranked = pdf.sort_values(
-                    [*gcols, order_col, id_col],
-                    ascending=[True] * len(gcols) + [False, True],
-                    kind="mergesort",
-                )
-                yield ranked.groupby(gcols, sort=False).head(k)[cols]
-
-        out = df.mapInPandas(local_prune, schema=df.schema)
+    own WindowGroupLimit rule prunes map-side (see module docstring)."""
     w = Window.partitionBy(*group_cols).orderBy(F.desc(order_col), F.asc(id_col))
     return (
-        out.withColumn("rk", F.row_number().over(w))
+        df.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
         .select(*df.columns, "rk")
     )

@@ -31,6 +31,10 @@ delete fresh data on replay). The replayed batch finds its rows
 byte-identical in the corpus, and the stream HEALS the gap: replayed rows'
 missing (id, key) pairs are re-appended (see the callers' heal step), so
 the index converges to the corpus.
+
+The executor-side append is shared: :class:`PartitionedAppend` is the one
+per-batch partitioned append of every corpus-as-state store (these
+sidecars, the IVF cells, the search postings and forward rows).
 """
 
 from __future__ import annotations
@@ -65,6 +69,14 @@ _AUTO_BANDS_FACTOR = 8
 # per-band cost is always proportional to what the index HOLDS, not to
 # what its first batch implied.
 _MAX_AUTO_BANDS = 1024
+
+# Writer-task count for per-batch appends. Hash-partitioning on the
+# partition column puts each partition value in exactly one task at ANY
+# partition count, so this only trades task-launch overhead against
+# file-creation parallelism: appends are micro-batch-sized, and inheriting
+# spark.sql.shuffle.partitions (200 on a stock cluster) would launch
+# hundreds of mostly-empty Python workers per append, twice per batch.
+_APPEND_WRITE_TASKS = 16
 
 # serializes the scoped parallelPartitionDiscovery.threshold raise in
 # _read_parquet_dirs (spark.conf is session-global; see there)
@@ -250,19 +262,11 @@ class BandedFingerprintIndex:
         self.key_col = key_col
         self.n_bands = n_bands
         self.schema_tag = schema_tag
-        # extra pyarrow S3FileSystem constructor options for the direct
-        # executor-side append writer (endpoint_override for
-        # S3-compatible stores — MinIO, on-prem gateways, test servers —
-        # plus access_key/secret_key/region when the standard AWS chain
-        # doesn't apply on the executors). None = pyarrow's
-        # FileSystem.from_uri defaults.
-        self.fs_options = fs_options
+        # where appends land (destination resolved once per instance);
+        # append_many fuses several indexes' direct writes into one job
+        self._appender = PartitionedAppend(path, "pband", fs_options)
         self._layout_checked = False
         self._ctor_n_bands = n_bands  # invalidate() restores the caller's hint
-        # resolved direct-append destination, cached per instance: the
-        # hdfs probe (a JNI libhdfs load) and the fallback warning should
-        # both happen once, not per append
-        self._append_dest: tuple[str | None, str | None] | None = None
         # the index's parquet schema, cached after the first pruned read
         # (inference re-reads footers for every new band set — ~1 s per
         # probe); cleared by invalidate()
@@ -550,84 +554,19 @@ class BandedFingerprintIndex:
             self._data_schema = df.schema
         return df.drop("pband")
 
-    def _append_destination(self, spark: SparkSession):
-        """Resolve where direct appends write, through the SAME Hadoop
-        filesystem every other index operation uses — the executor-side
-        pyarrow writer must land bytes exactly where ``read_bands``/
-        ``maintain`` will look. Returns ``(kind, dest)``, cached per
-        instance (the hdfs probe and the fallback warning run once):
-
-        - ``("local", /abs/path)`` — the Hadoop fs is ``file:``;
-        - ``("s3", s3://bucket/key)`` — s3/s3a/s3n map onto pyarrow's
-          S3 support (credentials come from the standard AWS chain on
-          the executors — the documented deployment seam; Hadoop
-          ``fs.s3a.*`` settings are NOT read by pyarrow.
-          ``fs_options`` overrides the chain: endpoint_override /
-          access_key / secret_key / region for S3-compatible stores);
-        - ``("hdfs", hdfs://host:port/path)`` — pyarrow's
-          HadoopFileSystem (JNI libhdfs). Availability is PROBED here,
-          driver-side, before trusting it: libhdfs missing or
-          unloadable falls back loudly rather than failing every
-          executor task (drivers and executors run the same image on a
-          real cluster, so a driver-side load is the cheap proxy);
-        - ``("gs"/"abfs"/"abfss", <uri>)`` — pyarrow's GcsFileSystem /
-          AzureFileSystem, same driver-side construction probe; the
-          abfs container (the URI's userinfo part) is preserved.
-          Credentials are ambient on the executors (application-default
-          / managed identity — see ``_map_destination``);
-        - ``(None, None)`` — any other scheme: no pyarrow mapping this
-          code trusts, so append() falls back to the Spark committer
-          write — slower (the per-partition commit cost) and it
-          degrades maintenance detection to full walks (the committer
-          reports no band set), never wrong. The fallback logs ONCE per
-          instance naming that cost."""
-        if self._append_dest is not None:
-            return self._append_dest
-        kind, dest, reason = _resolve_direct_destination(spark, self.path)
-        if kind is None:
-            self._warn_committer_fallback(reason)
-        self._append_dest = (kind, dest)
-        return self._append_dest
-
-    def _warn_committer_fallback(self, reason: str) -> None:
-        logging.getLogger(__name__).warning(
-            "banded index %s: direct executor-side appends unavailable "
-            "(%s) — falling back to the Spark dynamic-partition "
-            "committer, which pays ~10 ms of driver-side commit work "
-            "per touched band per append (measured ~12 s per "
-            "fingerprint-dense micro-batch) and degrades maintenance "
-            "detection to full index walks; extend the direct-append "
-            "filesystem mapping for this scheme to restore "
-            "batch-proportional appends",
-            self.path,
-            reason,
-        )
-
-    def _append_via_committer(
+    def _append_unfused(
         self, spark: SparkSession, banded: DataFrame, creating: bool
     ) -> list[int]:
-        """The no-trusted-pyarrow-mapping append: correctness over
-        speed. The write set is unknown afterwards (the committer
-        reports nothing), so dirty tracking degrades to one full walk
-        at the next maintenance tick."""
-        (
-            banded.repartition(self._APPEND_WRITE_TASKS, F.col("pband"))
-            .write.mode("append")
-            .partitionBy("pband")
-            .parquet(self.path)
-        )
+        """This index's own append, outside :func:`append_many`'s fused
+        job — taken when some fused spec has no trusted direct-append
+        destination. The write set is treated as unknown afterwards (a
+        committer write reports nothing), so dirty tracking degrades to
+        one full walk at the next maintenance tick."""
+        self._appender.append(banded)
         self._reset_maintenance_state()
         if creating:
             self._write_meta(spark)
         return []
-
-    # Writer-task count for direct appends. Hash-partitioning on the band
-    # column puts each band in exactly one task at ANY partition count, so
-    # this only trades task-launch overhead against file-creation
-    # parallelism: appends are micro-batch-sized, and inheriting
-    # spark.sql.shuffle.partitions (200 on a stock cluster) would launch
-    # hundreds of mostly-empty Python workers per append, twice per batch.
-    _APPEND_WRITE_TASKS = 16
 
     def append(self, pairs: DataFrame) -> list[int]:
         """Append (id, key) rows; the band column is derived here so
@@ -646,7 +585,7 @@ class BandedFingerprintIndex:
         of touched bands) pays EVERY micro-batch forever. Direct writes
         cut that to the file I/O itself. Filesystems without a trusted
         pyarrow mapping fall back to the committer path (see
-        ``_append_destination``) — slow, never wrong.
+        :class:`PartitionedAppend`) — slow, never wrong.
 
         Failure model, replacing what the Hadoop task-commit protocol
         gave the old path:
@@ -1259,14 +1198,21 @@ def _resolve_direct_destination(
     """Map a Hadoop-qualified path onto a pyarrow direct-write
     destination: ``(kind, dest, fallback_reason)`` where kind/dest are
     None (and the reason says why) when no trusted mapping exists and
-    the caller must take the Spark-committer write instead. Shared by
-    the banded index and any other per-batch partitioned append (the
-    IVF cell index) — the qualification goes through the SAME Hadoop
-    filesystem the readers use, so executor-side bytes land exactly
-    where the probes will look. hdfs is PROBED driver-side (a JNI
-    libhdfs load) before being trusted: failing every executor task on
-    a missing native lib would be a far worse failure mode than one
-    slow-but-correct committer write."""
+    the caller must take the Spark-committer write instead. Called by
+    :meth:`PartitionedAppend.destination` only — the qualification goes
+    through the SAME Hadoop filesystem the readers use, so executor-side
+    bytes land exactly where the probes will look:
+
+    - ``("local", /abs/path)`` — the Hadoop fs is ``file:``;
+    - ``("s3", s3://bucket/key)`` — s3/s3a/s3n map onto pyarrow's S3
+      support (credentials come from the standard AWS chain on the
+      executors; Hadoop ``fs.s3a.*`` settings are NOT read by pyarrow —
+      ``fs_options`` overrides the chain for S3-compatible stores);
+    - ``("hdfs"/"gs"/"abfs"/"abfss", <uri>)`` — PROBED driver-side
+      before being trusted (see :func:`_map_destination`): failing every
+      executor task on a missing native lib would be a far worse failure
+      mode than one slow-but-correct committer write;
+    - ``(None, None)`` — any other scheme."""
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(path)
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -1493,24 +1439,23 @@ def append_many(
     degraded to the full-walk state — a dead job may have staged temps
     into bands no dirty set ever learned.
 
-    Any spec whose filesystem lacks a trusted pyarrow mapping sends ALL
-    specs down the per-index committer fallback (mixed trusted/untrusted
-    sidecar destinations aren't a real deployment shape — both sidecars
-    sit next to the same corpus — and the fallback write reports no band
-    set, so there is nothing to fuse)."""
+    Any spec whose filesystem lacks a trusted pyarrow mapping sends every
+    spec down its own unfused append, the committer write for the
+    untrusted ones (mixed trusted/untrusted sidecar destinations aren't a
+    real deployment shape — both sidecars sit next to the same corpus —
+    and the committer write reports no band set, so there is nothing to
+    fuse)."""
     if not specs:
         return []
-    import uuid as _uuid
-
     spark = specs[0][1].sparkSession
     creating: list[bool] = []
     dests: list[dict] = []
     for idx, pairs in specs:
         creating.append(not idx._exists_raw(spark))
         idx._resolve_bands_for_write(spark, pairs)
-        kind, dest = idx._append_destination(spark)
+        kind, dest = idx._appender.destination(spark)
         dests.append(
-            {"kind": kind, "dest": dest, "fs_options": idx.fs_options}
+            {"kind": kind, "dest": dest, "fs_options": idx._appender.fs_options}
         )
     if any(d["kind"] is None for d in dests):
         out = []
@@ -1518,11 +1463,9 @@ def append_many(
             banded = pairs.withColumn(
                 "pband", idx.band_of(F.col(idx.key_col))
             )
-            out.append(
-                idx._append_via_committer(spark, banded, was_creating)
-            )
+            out.append(idx._append_unfused(spark, banded, was_creating))
         return out
-    append_id = _uuid.uuid4().hex  # deterministic final names per append
+    append_id = uuid.uuid4().hex  # deterministic final names per append
     schemas = [pairs.schema for _, pairs in specs]
     for i, schema in enumerate(schemas):
         dests[i]["cols"] = [(f"i{i}_{f.name}", f.name) for f in schema.fields]
@@ -1554,7 +1497,7 @@ def append_many(
     try:
         written = (
             union.repartition(
-                BandedFingerprintIndex._APPEND_WRITE_TASKS,
+                _APPEND_WRITE_TASKS,
                 F.col("idx_pos"),
                 F.col("pband"),
             )
@@ -1595,80 +1538,147 @@ def append_many(
     return out
 
 
-def direct_partitioned_append(
-    df: DataFrame,
-    path: str,
-    part_col: str,
-    fs_options: dict | None = None,
-    write_tasks: int = BandedFingerprintIndex._APPEND_WRITE_TASKS,
-    resolved: tuple[str, str] | None = None,
-    append_id: str | None = None,
-) -> list[int] | None:
-    """Direct executor-side append of ``df`` under hive-style
-    ``path/<part_col>=<value>/`` directories — the general form of the
-    banded index's append, for any OTHER per-micro-batch partitioned
-    append that would otherwise pay the dynamic-partition committer's
-    ~10 ms-per-directory driver-side commit work (the IVF cell index is
-    the in-repo consumer). ``part_col`` must be integer-valued (hive
-    partition inference reads the directory names back as ints, matching
-    a Spark-written layout). Returns the partition values written, or
-    None when the filesystem has no trusted pyarrow mapping — the caller
-    must then fall back to the committer write (slower, never wrong).
+class PartitionedAppend:
+    """The per-micro-batch append of every corpus-as-state index store
+    (banded sidecars, IVF cells, search postings and forward rows):
+    ``df`` lands under hive-style ``path/<part_col>=<value>/``
+    directories (``part_col`` integer-valued, as hive partition
+    inference reads it back), written DIRECTLY from executors — the
+    dynamic-partition committer costs ~10 ms of driver-side commit work
+    per partition directory per write, paid every micro-batch forever.
 
-    Failure model is the banded index's: per-attempt ``_tmp-`` staging
-    (invisible to parquet readers), deterministic skip-if-landed final
-    names so task retries replace rather than duplicate, and a mid-job
-    death leaves some partitions' files landed and others missing —
-    callers must be replay-convergent (an anti-join/idempotence guard on
-    replay), exactly as a committer append's task-level atomicity never
-    covered multi-batch crashes either.
+    Failure model (the banded index's, see
+    :meth:`BandedFingerprintIndex.append`): invisible ``_tmp-`` staging,
+    then skip-if-landed final names ``part-{append_id}-b{value}``. A
+    caller that derives ``append_id`` DETERMINISTICALLY from its batch
+    content gets REPLAY-IDEMPOTENT appends (a crashed attempt's landed
+    partitions are skipped, missing ones filled); otherwise it must
+    converge replays itself — ``key_cols`` + ``guard``, or its own
+    anti-join.
 
-    ``resolved`` is a pre-resolved ``(kind, dest)`` from
-    :func:`_resolve_direct_destination` — per-batch callers (the IVF add
-    processor) resolve ONCE and pass it in, so the driver-side probe
-    (pyarrow filesystem construction, a JNI load for hdfs) doesn't rerun
-    every micro-batch.
+    A filesystem without a trusted pyarrow mapping takes the committer
+    write instead — slower, never wrong, warned ONCE per instance — and
+    ``append`` returns None: the write set is unknown.
 
-    ``append_id`` (default: a fresh uuid) names the final files
-    ``part-{append_id}-b{partition}``; the writer skips a final name that
-    already exists. A caller that derives it DETERMINISTICALLY from its
-    micro-batch id (and replays identical batch content, as foreachBatch
-    under a checkpoint does) therefore gets REPLAY-IDEMPOTENT appends:
-    a crashed attempt's landed partitions are skipped, missing ones are
-    filled — no duplicate rows across replays, not just across task
-    retries. Callers with non-deterministic per-call content must keep
-    the uuid default and guard with an anti-join instead."""
-    spark = df.sparkSession
-    if resolved is None:
-        kind, dest, _reason = _resolve_direct_destination(spark, path)
-    else:
-        kind, dest = resolved
-    if kind is None:
-        return None
-    if append_id is None:
-        import uuid as _uuid
+    ``fs_options`` are extra pyarrow ``S3FileSystem`` constructor
+    options for the executor-side writer (endpoint_override and
+    credentials for S3-compatible stores — MinIO, on-prem gateways, test
+    servers). None = pyarrow's ``FileSystem.from_uri`` defaults.
+    ``key_cols`` is the row identity the guard anti-joins on (see
+    :meth:`append`); None = an unkeyed store, never guarded here."""
 
-        append_id = _uuid.uuid4().hex
-    data_cols = [f for f in df.schema.fields if f.name != part_col]
-    frame = df.select(
-        F.lit(0).cast("int").alias("idx_pos"),
-        F.col(part_col).cast("int").alias("pband"),
-        *[F.col(f.name).alias(f"i0_{f.name}") for f in data_cols],
-    )
-    dests = [
-        {
-            "kind": kind,
-            "dest": dest,
-            "fs_options": fs_options,
-            "cols": [(f"i0_{f.name}", f.name) for f in data_cols],
-            "part_prefix": part_col,
-        }
-    ]
-    written = (
-        frame.repartition(write_tasks, F.col("pband"))
-        .mapInArrow(
-            _make_band_writer(dests, append_id), "idx_pos long, pband long, n long"
-        )
-        .collect()
-    )
-    return sorted({r.pband for r in written})
+    def __init__(
+        self,
+        path: str,
+        part_col: str,
+        fs_options: dict | None = None,
+        key_cols: list[str] | None = None,
+    ):
+        self.path = path
+        self.part_col = part_col
+        self.fs_options = fs_options
+        self.key_cols = key_cols
+        self._dest: tuple[str | None, str | None] | None = None
+
+    def destination(self, spark: SparkSession) -> tuple[str | None, str | None]:
+        """``(kind, dest)`` for the executor-side writer, ``(None, None)``
+        when the committer write must be taken. Resolved once per
+        instance: the hdfs probe (a JNI libhdfs load) and the fallback
+        warning run once, not per append."""
+        if self._dest is None:
+            kind, dest, reason = _resolve_direct_destination(spark, self.path)
+            if kind is None:
+                logging.getLogger(__name__).warning(
+                    "partitioned store %s: direct executor-side appends "
+                    "unavailable (%s) — falling back to the Spark "
+                    "dynamic-partition committer, which pays ~10 ms of "
+                    "driver-side commit work per partition directory per "
+                    "append (measured ~12 s per fingerprint-dense "
+                    "micro-batch), reports no write set (maintenance then "
+                    "walks every partition) and, on a keyed store, "
+                    "anti-joins each append against its partitions' stored "
+                    "rows; extend the direct-append filesystem mapping for "
+                    "this scheme to restore batch-proportional appends",
+                    self.path,
+                    reason,
+                )
+            self._dest = (kind, dest)
+        return self._dest
+
+    def append(
+        self, df: DataFrame, append_id: str | None = None, guard: bool = False
+    ) -> list[int] | None:
+        """Append ``df``; returns the partition values written, or None
+        after a committer write (write set unknown). ``append_id``
+        defaults to a fresh uuid.
+
+        With ``key_cols`` set, ``df`` is first anti-joined at ``key_cols``
+        against the rows already stored under ``df``'s own partitions
+        when ``guard=True`` — rows that may have landed under a
+        DIFFERENT append id (a crashed attempt's, unknowable after a
+        checkpoint re-point), which name-based skipping cannot see — and
+        whenever the write falls back to the committer, which has no
+        skip-if-landed names at all."""
+        spark = df.sparkSession
+        kind, dest = self.destination(spark)
+        guard = self.key_cols is not None and (guard or kind is None)
+        if guard:
+            # read twice: the partition collect, then the write
+            df = df.persist()
+        try:
+            rows = self._unstored(df) if guard else df
+            if kind is None:
+                (
+                    rows.repartition(_APPEND_WRITE_TASKS, F.col(self.part_col))
+                    .write.mode("append")
+                    .partitionBy(self.part_col)
+                    .parquet(self.path)
+                )
+                return None
+            data_cols = [f.name for f in rows.schema.fields if f.name != self.part_col]
+            frame = rows.select(
+                F.lit(0).cast("int").alias("idx_pos"),
+                F.col(self.part_col).cast("int").alias("pband"),
+                *[F.col(c).alias(f"i0_{c}") for c in data_cols],
+            )
+            dests = [
+                {
+                    "kind": kind,
+                    "dest": dest,
+                    "fs_options": self.fs_options,
+                    "cols": [(f"i0_{c}", c) for c in data_cols],
+                    "part_prefix": self.part_col,
+                }
+            ]
+            writer = _make_band_writer(dests, append_id or uuid.uuid4().hex)
+            written = (
+                frame.repartition(_APPEND_WRITE_TASKS, F.col("pband"))
+                .mapInArrow(writer, "idx_pos long, pband long, n long")
+                .collect()
+            )
+            return sorted({r.pband for r in written})
+        finally:
+            if guard:
+                df.unpersist()
+
+    def _unstored(self, df: DataFrame) -> DataFrame:
+        """Rows of ``df`` whose ``key_cols`` are not already stored —
+        reading only ``df``'s own partition directories, column-pruned
+        to the key."""
+        from ..errors import is_path_not_found
+
+        parts = [r[0] for r in df.select(self.part_col).distinct().collect()]
+        if not parts:
+            return df
+        try:
+            stored = (
+                df.sparkSession.read.parquet(self.path)
+                .filter(F.col(self.part_col).isin(parts))
+                .select(*self.key_cols)
+            )
+            stored.schema
+        except AnalysisException as exc:
+            if not is_path_not_found(exc):
+                raise
+            return df
+        return df.join(stored, self.key_cols, "left_anti")

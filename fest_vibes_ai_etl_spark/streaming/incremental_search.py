@@ -13,13 +13,14 @@ sidecars and the IVF cell store:
   a crashed append leaves no visible rows.
 - ``<index_dir>/postings/tb=<bucket>/`` — (term, tf, doc_id) rows under
   hive-style term-bucket directories (tb = pmod(xxhash64(term),
-  n_term_buckets)), appended EXECUTOR-DIRECT via
-  :func:`banded_index.direct_partitioned_append` with an append id
-  derived from the micro-batch id — deterministic final names + the
-  writer's skip-if-landed rule make the postings append REPLAY-
-  IDEMPOTENT: a crashed attempt's landed buckets are skipped, holes are
-  filled, never duplicated. Untrusted filesystems fall back to the
-  dynamic-partition committer (slower, never wrong; warned once).
+  n_term_buckets)), appended through the index stores' shared
+  :class:`banded_index.PartitionedAppend` (executor-direct writes) with
+  an append id derived from the micro-batch content — deterministic
+  final names + the writer's skip-if-landed rule make the postings
+  append REPLAY-IDEMPOTENT: a crashed attempt's landed buckets are
+  skipped, holes are filled, never duplicated. Untrusted filesystems
+  fall back to the dynamic-partition committer (slower, never wrong;
+  warned once), where the store's (term, doc) key guards the append.
 - ``<index_dir>_docidx`` — a :class:`BandedFingerprintIndex` over the
   indexed doc ids, so the per-batch "already indexed?" replay guard
   reads only the batch's OWN id bands instead of the whole doclen
@@ -96,7 +97,7 @@ from pyspark.sql import functions as F
 
 from .banded_index import (
     BandedFingerprintIndex,
-    direct_partitioned_append,
+    PartitionedAppend,
     hadoop_read_json,
 )
 from ._exact_guard import _settle_indexes
@@ -1249,7 +1250,6 @@ def maintain_search_index(
     buckets: list[int] | None = None,
     max_files_per_bucket: int = 8,
     target_segment_bytes: int = 32 << 20,
-    fold_tombstones: bool = True,
     forward_buckets: list[int] | None = None,
     absorb_revised_at: float | None = 0.2,
 ) -> dict:
@@ -1309,8 +1309,10 @@ def maintain_search_index(
                 absorbed = absorb_search_revisions(spark, index_dir)[
                     "absorbed_docs"
                 ]
+    # every rewrite folds tombstoned ids out physically: the delete
+    # contract (tombstone at probe, removal at maintenance)
     tomb = None
-    if fold_tombstones and meta is not None:
+    if meta is not None:
         tomb = _search_tombstones(spark, index_dir, meta["id_col"])
     ex_cols = [meta["id_col"]] if tomb is not None else None
     if buckets is None:
@@ -1404,10 +1406,10 @@ def make_search_index_processor(
     ``n_doc_buckets`` maintains the doc-major FORWARD sidecar alongside
     the postings (settled/backfilled at open for pre-forward stores; the
     stored bucket count always wins; None disables). Its per-batch
-    append mirrors the postings append — same deterministic append-id
-    replay idempotence (suffix ``f``), same guarded heal path, same
-    committer fallback — so the two layouts stay row-identical under
-    every crash window the postings survive."""
+    append is the postings append's second store — same tokenized rows,
+    same deterministic append-id replay idempotence (suffix ``f``), same
+    guarded heal path, same committer fallback — so the two layouts stay
+    row-identical under every crash window the postings survive."""
     from ..functions import text as T
 
     docidx = BandedFingerprintIndex(
@@ -1417,11 +1419,16 @@ def make_search_index_processor(
         schema_tag=_SCHEMA_TAG,
         fs_options=fs_options,
     )
+    # both stores key a row by (term, doc): the guard's anti-join key
+    postings = PartitionedAppend(
+        _postings_dir(index_dir), "tb", fs_options, key_cols=["term", id_col]
+    )
+    forward = PartitionedAppend(
+        _forward_dir(index_dir), "db", fs_options, key_cols=["term", id_col]
+    )
     idx_settled: list[bool] = []
     n_done: list[int] = [0]
     meta_ok: list[bool] = []
-    resolved_dest: list = []  # cached (kind, dest) for the postings append
-    warned_committer: list[bool] = []
     # buckets dirtied since the last maintenance tick, reported by the
     # direct append itself — so maintain() lists only what this stream
     # actually touched (batch-proportional detection, the banded index's
@@ -1431,7 +1438,6 @@ def make_search_index_processor(
     dirty_tb: set[int] = set()
     dirty_unknown: list[bool] = []
     dirty_db: set[int] = set()
-    fw_resolved: list = []  # cached (kind, dest) for the forward append
     fw_ndb: list = []  # effective n_doc_buckets from the settled meta
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -1555,179 +1561,52 @@ def make_search_index_processor(
         batch_fp = int(fp_row["s"]) % (1 << 60)
         append_id = f"srchb{batch_id:x}-{batch_fp:015x}-{int(fp_row['n']):x}"
 
-        def postings_of(df: DataFrame) -> DataFrame:
-            toks = df.select(
-                F.col(id_col), F.explode(T.tokens(F.col(text_col))).alias("term")
-            )
-            return (
-                toks.groupBy("term", id_col)
+        def append_postings(tok: DataFrame, aid: str, guard: bool) -> None:
+            """Postings, then forward rows, of a tokenized ``(id, tk)``
+            frame. ``guard=False`` (the steady-state batch append) relies
+            on the deterministic append id for replay idempotence;
+            ``guard=True`` (the heal path) anti-joins at (term, doc) first
+            — a heal's rows may have landed under a DIFFERENT append id
+            (the crashed attempt's), so name-based skipping cannot see
+            them, and the heal's own id must differ from the main
+            append's so a heal that writes files can never cause the main
+            append's same-band files to be skipped."""
+            post = (
+                tok.select(F.col(id_col), F.explode("tk").alias("term"))
+                .groupBy("term", id_col)
                 .agg(F.count(F.lit(1)).alias("tf"))
-                .withColumn("tb", term_bucket(F.col("term"), n_term_buckets))
             )
-
-        def _anti_join_existing(post: DataFrame) -> DataFrame:
-            """(term, doc) rows of ``post`` not already in the store —
-            reading only the batch's own bucket directories (column-pruned
-            to the join key). The explicit guard for appends that cannot
-            rely on deterministic names."""
-            tbs = [r[0] for r in post.select("tb").distinct().collect()]
-            if not tbs:
-                return post
-            try:
-                existing = (
-                    spark.read.parquet(_postings_dir(index_dir))
-                    .filter(F.col("tb").isin(tbs))
-                    .select("term", id_col)
+            appends = [
+                (postings, term_bucket(F.col("term"), n_term_buckets), aid,
+                 dirty_tb),
+            ]
+            if fw_ndb[0] is not None:
+                appends.append(
+                    (forward, doc_bucket(F.col(id_col), int(fw_ndb[0])),
+                     aid + "f", dirty_db)
                 )
-                existing.schema
-            except AnalysisException as exc:
-                if not is_path_not_found(exc):
-                    raise
-                return post
-            return post.join(existing, ["term", id_col], "left_anti")
-
-        def append_postings(post: DataFrame, aid: str, guard: bool) -> None:
-            """``guard=False`` (the steady-state batch append) relies on the
-            deterministic append id for replay idempotence on the direct
-            path; ``guard=True`` (the heal path) anti-joins at (term, doc)
-            first — a heal's rows may have landed under a DIFFERENT
-            append id (the crashed attempt's), so name-based skipping
-            cannot see them, and the heal's own id must differ from the
-            main append's so a heal that writes files can never cause the
-            main append's same-band files to be skipped."""
-            post = post.persist()
-            try:
-                if guard:
-                    post_w = _anti_join_existing(post).persist()
+            for store, bucket, store_aid, dirty in appends:
+                written = store.append(
+                    post.withColumn(store.part_col, bucket),
+                    append_id=store_aid,
+                    guard=guard,
+                )
+                if written is None:
+                    dirty_unknown.append(True)
                 else:
-                    post_w = post
-                written = direct_partitioned_append(
-                    post_w,
-                    _postings_dir(index_dir),
-                    "tb",
-                    fs_options=fs_options,
-                    resolved=resolved_dest[0] if resolved_dest else None,
-                    append_id=aid,
-                )
-                if written is not None:
-                    dirty_tb.update(written)
-                if written is None:
-                    if not warned_committer:
-                        import logging
-
-                        logging.getLogger(__name__).warning(
-                            "incremental search index at %s: no trusted "
-                            "direct-append mapping for this filesystem — "
-                            "falling back to the dynamic-partition committer "
-                            "(~10 ms driver commit per bucket directory per "
-                            "batch) plus a (term, doc) anti-join whose read "
-                            "is INDEX-PROPORTIONAL in the touched buckets "
-                            "every batch. Add the filesystem to the trusted "
-                            "direct-append mapping for batch-proportional "
-                            "appends.",
-                            index_dir,
-                        )
-                        warned_committer.append(True)
-                    # the committer has no skip-if-landed names: the guard
-                    # is mandatory here
-                    final = post_w if guard else _anti_join_existing(post_w)
-                    final.repartition("tb").write.partitionBy("tb").mode(
-                        "append"
-                    ).parquet(_postings_dir(index_dir))
-                    # the committer reports no bucket set: degrade the
-                    # next maintenance tick to a full bucket walk
-                    if not dirty_unknown:
-                        dirty_unknown.append(True)
-                if guard:
-                    post_w.unpersist()
-            finally:
-                post.unpersist()
-
-        def forward_of(post: DataFrame) -> DataFrame:
-            return post.select("term", id_col, "tf").withColumn(
-                "db", doc_bucket(F.col(id_col), int(fw_ndb[0]))
-            )
-
-        def _anti_join_existing_fw(fw: DataFrame) -> DataFrame:
-            """Forward twin of _anti_join_existing: (term, doc) rows not
-            already under the batch's own db= buckets."""
-            dbs = [r[0] for r in fw.select("db").distinct().collect()]
-            if not dbs:
-                return fw
-            try:
-                existing = (
-                    spark.read.parquet(_forward_dir(index_dir))
-                    .filter(F.col("db").isin(dbs))
-                    .select("term", id_col)
-                )
-                existing.schema
-            except AnalysisException as exc:
-                if not is_path_not_found(exc):
-                    raise
-                return fw
-            return fw.join(existing, ["term", id_col], "left_anti")
-
-        def append_forward(fw: DataFrame, aid: str, guard: bool) -> None:
-            """The postings append's contract, verbatim, for the forward
-            sidecar (deterministic-name replay idempotence via the
-            ``f``-suffixed append id; guarded heal; committer fallback
-            degrades the next maintenance tick to a full walk)."""
-            fw = fw.persist()
-            try:
-                fw_w = _anti_join_existing_fw(fw).persist() if guard else fw
-                written = direct_partitioned_append(
-                    fw_w,
-                    _forward_dir(index_dir),
-                    "db",
-                    fs_options=fs_options,
-                    resolved=fw_resolved[0] if fw_resolved else None,
-                    append_id=aid,
-                )
-                if written is not None:
-                    dirty_db.update(written)
-                if written is None:
-                    final = fw_w if guard else _anti_join_existing_fw(fw_w)
-                    final.repartition("db").write.partitionBy("db").mode(
-                        "append"
-                    ).parquet(_forward_dir(index_dir))
-                    if not dirty_unknown:
-                        dirty_unknown.append(True)
-                if guard:
-                    fw_w.unpersist()
-            finally:
-                fw.unpersist()
-
-        if not resolved_dest:
-            from .banded_index import _resolve_direct_destination
-
-            kind, dest, _ = _resolve_direct_destination(
-                spark, _postings_dir(index_dir)
-            )
-            # cache even the untrusted (None, ...) answer: the probe
-            # (pyarrow construction / JNI load) must run once per stream,
-            # not once per micro-batch
-            resolved_dest.append((kind, dest))
-        if fw_ndb[0] is not None and not fw_resolved:
-            from .banded_index import _resolve_direct_destination
-
-            kind, dest, _ = _resolve_direct_destination(
-                spark, _forward_dir(index_dir)
-            )
-            fw_resolved.append((kind, dest))
+                    dirty.update(written)
 
         if replayed is not None:
             # docs recorded in doclen whose postings/docidx rows the
             # crashed attempt may not have landed: guarded re-append under
-            # a DISTINCT id — their rows may sit under the crashed
-            # attempt's (unknowable) append id, and sharing the main
-            # append's id would let a heal that writes files make the main
-            # append's same-band files skip
-            repl_post = postings_of(replayed)
-            append_postings(repl_post, append_id + "h", guard=True)
-            if fw_ndb[0] is not None:
-                append_forward(
-                    forward_of(repl_post), append_id + "hf", guard=True
-                )
+            # a DISTINCT id (forward: ``hf``) — their rows may sit under
+            # the crashed attempt's (unknowable) append id, and sharing the
+            # main append's id would let a heal that writes files make the
+            # main append's same-band files skip
+            tok = replayed.select(
+                F.col(id_col), T.tokens(F.col(text_col)).alias("tk")
+            )
+            append_postings(tok, append_id + "h", guard=True)
             from ._exact_guard import _heal_exact_index
 
             _heal_exact_index(spark, docidx, _id_pairs(replayed, id_col))
@@ -1740,19 +1619,11 @@ def make_search_index_processor(
             F.col(id_col), T.tokens(F.col(text_col)).alias("tk")
         ).persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            post = (
-                enriched.select(F.col(id_col), F.explode("tk").alias("term"))
-                .groupBy("term", id_col)
-                .agg(F.count(F.lit(1)).alias("tf"))
-                .withColumn("tb", term_bucket(F.col("term"), n_term_buckets))
-            )
             # postings FIRST: this append is replay-idempotent, so a crash
             # anywhere before the doclen commit replays cleanly with no
             # marker. The forward append sits in the same pre-doclen
             # window under the same idempotence.
-            append_postings(post, append_id, guard=False)
-            if fw_ndb[0] is not None:
-                append_forward(forward_of(post), append_id + "f", guard=False)
+            append_postings(enriched, append_id, guard=False)
             docidx.mark_inflight(spark)
             (
                 enriched.select(F.col(id_col), F.size("tk").alias("dl"))

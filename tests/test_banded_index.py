@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from fest_vibes_ai_etl_spark.streaming.banded_index import BandedFingerprintIndex
@@ -1124,32 +1125,92 @@ def test_destination_mapping_trusts_local_s3_and_probed_schemes(monkeypatch):
     assert kind is None and "wasbs" in reason
 
 
-def test_append_destination_fallback_is_loud_and_cached(monkeypatch, caplog):
-    """An untrusted destination falls back to the committer ONCE per
-    instance, with a warning naming the cost, so a production stream on
-    such a filesystem can't silently reinstate the 12 s-per-dense-append
-    driver tax; the resolution (and with it the hdfs probe) is cached —
-    one call per instance, not per append."""
+@pytest.mark.parametrize("family", ["banded", "ivf", "search"])
+def test_committer_fallback_warns_once_per_store(
+    spark, tmp_path, monkeypatch, caplog, family
+):
+    """An untrusted destination falls back to the committer with ONE
+    warning per store, naming the store path and the per-directory cost,
+    however many batches append — a production stream on such a
+    filesystem can't silently reinstate the 12 s-per-dense-append driver
+    tax. The resolution (and with it the hdfs probe) runs once per
+    store, and the rows land. Every family's stores are covered: the
+    banded index, the IVF add processor's cells, and the search
+    processor's postings, forward and doc-id stores."""
     import logging
 
+    from conftest import SF_DIR
+
+    from fest_vibes_ai_etl_spark.operators import ivf
+    from fest_vibes_ai_etl_spark.sources import table
     from fest_vibes_ai_etl_spark.streaming import banded_index as bi
+    from fest_vibes_ai_etl_spark.streaming import incremental_search as inc
 
-    calls = []
+    resolved = []
 
-    def fake_resolve(spark, path):
-        calls.append(path)
+    def untrusted(spark_, path):
+        resolved.append(path)
         return None, None, "no trusted pyarrow mapping for filesystem scheme 'gs'"
 
-    monkeypatch.setattr(bi, "_resolve_direct_destination", fake_resolve)
-    idx = BandedFingerprintIndex("gs://bucket/idx", "fp", n_bands=4)
+    monkeypatch.setattr(bi, "_resolve_direct_destination", untrusted)
+    root = str(tmp_path / "store")
+    if family == "banded":
+        idx = BandedFingerprintIndex(root, "fp", n_bands=4)
+        stores = [root]
+
+        def run(i):
+            ids = spark.range(i * 20, i * 20 + 20)
+            idx.append(ids.select(F.col("id"), F.xxhash64("id").alias("fp")))
+
+        def landed():
+            assert spark.read.parquet(root).count() == 40
+
+    elif family == "ivf":
+        emb = table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
+        _, centers = ivf.build_ivf_index(emb.filter("vec_id < 300"), k=8, seed=7)
+        process = ivf.make_index_add_processor(root, centers)
+        stores = [root]
+
+        def run(i):
+            process(emb.filter(f"vec_id >= {i * 40} and vec_id < {i * 40 + 40}"), i)
+
+        def landed():
+            assert spark.read.parquet(root).count() == 80
+
+    else:
+        process = inc.make_search_index_processor(root, n_term_buckets=8)
+        stores = [root + "/postings", root + "/forward", root + "_docidx"]
+        docs = [
+            [(1, "merge hash window"), (2, "hash join spill")],
+            [(3, "window merge sort"), (4, "spill to disk")],
+        ]
+
+        def run(i):
+            process(spark.createDataFrame(docs[i], "doc_id long, text string"), i)
+
+        def landed():
+            assert spark.read.parquet(root + "/doclen").count() == 4
+            post = spark.read.parquet(root + "/postings")
+            fw = spark.read.parquet(root + "/forward")
+            n = post.select("term", "doc_id").distinct().count()
+            assert post.count() == fw.count() == n > 0
+
     with caplog.at_level(logging.WARNING, logger=bi.__name__):
-        assert idx._append_destination(spark=None) == (None, None)
-        assert idx._append_destination(spark=None) == (None, None)
-    warnings = [r for r in caplog.records if "committer" in r.getMessage()]
-    assert len(warnings) == 1  # loud, once
-    msg = warnings[0].getMessage()
-    assert "gs" in msg and "per touched band" in msg
-    assert len(calls) == 1  # resolution cached per instance
+        run(0)
+        run(1)
+    warnings = [
+        r.getMessage()
+        for r in caplog.records
+        if "dynamic-partition committer" in r.getMessage()
+    ]
+    for store in stores:
+        naming = [w for w in warnings if f"partitioned store {store}:" in w]
+        assert len(naming) == 1, (store, warnings)  # loud, once
+        assert "'gs'" in naming[0]
+        assert "per partition directory per append" in naming[0]
+    assert len(warnings) == len(stores)
+    assert sorted(resolved) == sorted(stores)  # once per store
+    landed()
 
 
 def test_append_many_matches_sequential_appends(spark, tmp_path):

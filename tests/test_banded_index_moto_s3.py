@@ -333,22 +333,20 @@ def test_fused_writer_routes_two_indexes_to_their_roots(spark, moto_s3):
     assert "band_hash" not in ta.column_names and "fp" not in tb.column_names
 
 
-def test_ivf_direct_append_and_probe_over_moto_s3(spark, moto_s3):
+def test_ivf_direct_append_and_probe_over_moto_s3(spark, moto_s3, monkeypatch):
     """Round-11 fs_options plumbing for the IVF add path: the
-    cell-partitioned index append runs through direct_partitioned_append
-    against a real S3 endpoint (endpoint_override + explicit credentials —
-    the MinIO-class seam), with the resolution pre-computed the way
-    make_index_add_processor now caches it (Spark's Hadoop layer here
-    ships no s3 jars, so the control-plane resolution itself stays on
-    local-fs coverage; the DATA plane below is the real executor path).
-    The landed index is then probed: a pyarrow dataset read of the cells
-    feeds ivf_topk, whose full-probe results must equal brute force."""
+    cell-partitioned index append runs through PartitionedAppend against
+    a real S3 endpoint (endpoint_override + explicit credentials — the
+    MinIO-class seam), with the destination resolution stubbed to the s3
+    mapping (Spark's Hadoop layer here ships no s3 jars, so the
+    control-plane resolution itself stays on local-fs coverage; the DATA
+    plane below is the real executor path). The landed index is then
+    probed: a pyarrow dataset read of the cells feeds ivf_topk, whose
+    full-probe results must equal brute force."""
     from fest_vibes_ai_etl_spark.operators import ivf
     from fest_vibes_ai_etl_spark.operators.similarity import topk_cosine
     from fest_vibes_ai_etl_spark.sources import table
-    from fest_vibes_ai_etl_spark.streaming.banded_index import (
-        direct_partitioned_append,
-    )
+    from fest_vibes_ai_etl_spark.streaming import banded_index as bi
     from conftest import SF_DIR
 
     _, fs_options, client = moto_s3
@@ -356,13 +354,14 @@ def test_ivf_direct_append_and_probe_over_moto_s3(spark, moto_s3):
     corpus = emb.filter("vec_id < 200")
     assigned, centers = ivf.build_ivf_index(corpus, k=4, seed=7)
 
-    written = direct_partitioned_append(
-        assigned,
-        "s3://bkt/ivf_idx",
-        "cell_id",
-        fs_options=fs_options,
-        resolved=("s3", "s3://bkt/ivf_idx"),
+    monkeypatch.setattr(
+        bi,
+        "_resolve_direct_destination",
+        lambda spark_, path: ("s3", "s3://bkt/ivf_idx", None),
     )
+    written = bi.PartitionedAppend(
+        "s3a://bkt/ivf_idx", "cell_id", fs_options=fs_options
+    ).append(assigned)
     assert written, "direct append should report the cells it wrote"
     keys = _keys(client, "ivf_idx/")
     assert keys and all("/cell_id=" in k for k in keys)

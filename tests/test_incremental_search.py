@@ -11,6 +11,7 @@ from conftest import SF_DIR
 from fest_vibes_ai_etl_spark.operators.search import bm25_topk, build_postings
 from fest_vibes_ai_etl_spark.sources import table
 from fest_vibes_ai_etl_spark.streaming import incremental_search as inc
+from fest_vibes_ai_etl_spark.streaming.banded_index import PartitionedAppend
 
 TERMS = ["merge", "hash", "window"]
 
@@ -84,18 +85,18 @@ def test_stream_index_crash_in_postings_append_heals(spark, tmp_path, monkeypatc
     batches = _slices(spark)
     proc(batches[0], 0)
     calls = {"n": 0}
-    real = inc.direct_partitioned_append
+    real = PartitionedAppend.append
 
-    def dying(*a, **kw):
+    def dying(self, *a, **kw):
         calls["n"] += 1
-        real(*a, **kw)  # the files LAND (worst case), then the driver dies
+        real(self, *a, **kw)  # the files LAND (worst case), then the driver dies
         raise RuntimeError("injected crash in postings append")
 
-    monkeypatch.setattr(inc, "direct_partitioned_append", dying)
+    monkeypatch.setattr(PartitionedAppend, "append", dying)
     with pytest.raises(RuntimeError, match="injected crash"):
         proc(batches[1], 1)
     assert calls["n"] == 1
-    monkeypatch.setattr(inc, "direct_partitioned_append", real)
+    monkeypatch.setattr(PartitionedAppend, "append", real)
     proc2 = inc.make_search_index_processor(idx, n_term_buckets=8)
     proc2(batches[1], 1)
     proc2(batches[2], 2)
@@ -209,17 +210,17 @@ def test_stream_index_intra_batch_duplicate_id_deterministic(spark, tmp_path, mo
     idx = str(tmp_path / "sidx")
     proc = inc.make_search_index_processor(idx, n_term_buckets=8)
     calls = {"n": 0}
-    real = inc.direct_partitioned_append
+    real = PartitionedAppend.append
 
-    def dying(*a, **kw):
+    def dying(self, *a, **kw):
         calls["n"] += 1
-        real(*a, **kw)  # worst case: the winner's files LAND, then we die
+        real(self, *a, **kw)  # worst case: the winner's files LAND, then we die
         raise RuntimeError("injected crash in postings append")
 
-    monkeypatch.setattr(inc, "direct_partitioned_append", dying)
+    monkeypatch.setattr(PartitionedAppend, "append", dying)
     with pytest.raises(RuntimeError, match="injected crash"):
         proc(batch, 0)
-    monkeypatch.setattr(inc, "direct_partitioned_append", real)
+    monkeypatch.setattr(PartitionedAppend, "append", real)
     # replay: fresh processor (restart), same batch id, rows REORDERED —
     # the deterministic winner + content fingerprint must re-derive the
     # same append id and skip the landed buckets instead of filling the

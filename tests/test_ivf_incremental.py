@@ -133,45 +133,51 @@ def test_incremental_add_uses_direct_appends_and_sweeps_temps(spark, tmp_path):
     assert stored.select("vec_id").distinct().count() == 500
 
 
-def test_replay_guard_modes_converge_identically(spark, tmp_path):
-    """replay_guard='pruned' (batch's own cells) and 'full' (whole id
-    column, the pre-round-10 shape kept for A/B and update-tolerant
-    adds) must persist IDENTICAL indexes through adds + a replay — the
-    pruning is a read-scope optimization, never a semantic change,
-    because a frozen quantizer pins a replayed id to its stored cell."""
+def test_add_replays_converge_to_assignment(spark, tmp_path):
+    """Adds, a replay and a partial overlap must leave exactly the
+    independent reference assignment: every vec_id < 500 stored once,
+    in the cell numpy's argmax(X @ C.T) picks for its embedding — the
+    cell-pruned replay guard is a read-scope optimization, never a
+    semantic change, because a frozen quantizer pins a replayed id to
+    its stored cell."""
+    import numpy as np
+
     emb = table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
     base = emb.filter("vec_id < 400")
     assigned, centers = ivf.build_ivf_index(base, k=8, seed=7)
-    stored = {}
-    for mode in ("pruned", "full"):
-        index_dir = str(tmp_path / f"index_{mode}")
-        assigned.repartition("cell_id").write.partitionBy("cell_id").parquet(
-            index_dir
-        )
-        process = ivf.make_index_add_processor(
-            index_dir, centers, replay_guard=mode
-        )
-        batch = emb.filter("vec_id >= 400 and vec_id < 460")
-        process(batch, 0)
-        process(batch, 1)  # replay: must append nothing
-        overlap = emb.filter("vec_id >= 440 and vec_id < 500")
-        process(overlap, 2)  # partial overlap: only 460-499 are new
-        rows = spark.read.parquet(index_dir)
-        stored[mode] = sorted(
-            (r.vec_id, r.cell_id) for r in rows.select("vec_id", "cell_id").collect()
-        )
-        assert len(stored[mode]) == 500  # exactly once each
-    assert stored["pruned"] == stored["full"]
+    index_dir = str(tmp_path / "index")
+    assigned.repartition("cell_id").write.partitionBy("cell_id").parquet(index_dir)
+    process = ivf.make_index_add_processor(index_dir, centers)
+    batch = emb.filter("vec_id >= 400 and vec_id < 460")
+    process(batch, 0)
+    process(batch, 1)  # replay: must append nothing
+    overlap = emb.filter("vec_id >= 440 and vec_id < 500")
+    process(overlap, 2)  # partial overlap: only 460-499 are new
+    stored = sorted(
+        (r.vec_id, r.cell_id)
+        for r in spark.read.parquet(index_dir).select("vec_id", "cell_id").collect()
+    )
+
+    rows = sorted(
+        (r.vec_id, r.embedding)
+        for r in emb.filter("vec_id < 500").collect()
+    )
+    X = np.asarray([e for _, e in rows], dtype=np.float64)
+    cells = np.argmax(X @ np.asarray(centers, dtype=np.float64).T, axis=1)
+    want = [(vid, int(c)) for (vid, _), c in zip(rows, cells)]
+    assert len(want) == 500
+    assert stored == want  # each id exactly once, in its reference cell
 
 
 def test_incremental_add_committer_fallback_converges(spark, tmp_path, monkeypatch):
-    """When no trusted pyarrow mapping exists (direct_partitioned_append
-    returns None) the processor must take the committer write and still
-    converge a replay — slower, never wrong."""
+    """When no trusted pyarrow mapping exists the processor must take the
+    committer write and still converge a replay — slower, never wrong."""
     from fest_vibes_ai_etl_spark.streaming import banded_index as bi
 
     monkeypatch.setattr(
-        bi, "direct_partitioned_append", lambda *a, **k: None
+        bi,
+        "_resolve_direct_destination",
+        lambda spark_, path: (None, None, "forced-untrusted (test)"),
     )
     emb = table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
     base = emb.filter("vec_id < 400")
@@ -280,7 +286,7 @@ def test_legacy_index_adopted_by_sample_verify_or_refused(spark, tmp_path):
 
 def test_first_batch_crash_empty_cell_dirs_do_not_wedge_replay(spark, tmp_path):
     """Round-11 replay-wedge fix: a first-batch (or early) crash after
-    direct_partitioned_append's create_dir but before any final rename
+    the direct append's create_dir but before any final rename
     leaves touched cell directories holding only _tmp- staging files. The
     sweep empties them; the guard read must then SKIP those cells (schema
     inference over zero data files throws) — otherwise every replay hits
@@ -312,63 +318,38 @@ def test_first_batch_crash_empty_cell_dirs_do_not_wedge_replay(spark, tmp_path):
     ) as fh:
         fh.write(b"torn partial bytes")
 
-    for mode in ("pruned", "full"):
-        # replay under each guard mode converges instead of throwing
-        proc = ivf.make_index_add_processor(index_dir, centers, replay_guard=mode)
+    for _ in range(2):
+        # the replay converges instead of throwing; the second attempt
+        # replays over a now-populated index and must append nothing
+        proc = ivf.make_index_add_processor(index_dir, centers)
         proc(batch, 0)
         stored = spark.read.parquet(index_dir)
         assert stored.count() == 60
         assert stored.select("vec_id").distinct().count() == 60
-        # reset to the crash-plus-data state for the next mode? no — the
-        # second mode replays over a now-populated index and must still
-        # append nothing (modes converge on the same stored state)
     assert not os.path.exists(
         os.path.join(index_dir, f"cell_id={touched[0]}", "_tmp-dead.parquet")
     )
     del proc0
 
 
-def test_committer_fallback_warns_once_naming_the_cost(
-    spark, tmp_path, monkeypatch, caplog
-):
-    """The committer fallback must not be silent (round 11, matching
-    BandedFingerprintIndex): one warning per processor instance naming the
-    per-cell-directory driver-side cost, not one per micro-batch."""
-    import logging
-
-    from fest_vibes_ai_etl_spark.streaming import banded_index as bi
-
-    monkeypatch.setattr(bi, "direct_partitioned_append", lambda *a, **k: None)
-    emb = table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
-    _, centers = ivf.build_ivf_index(emb.filter("vec_id < 300"), k=8, seed=7)
-    index_dir = str(tmp_path / "index")
-    process = ivf.make_index_add_processor(index_dir, centers)
-    with caplog.at_level(logging.WARNING, logger="fest_vibes_ai_etl_spark.operators.ivf"):
-        process(emb.filter("vec_id < 40"), 0)
-        process(emb.filter("vec_id >= 40 and vec_id < 80"), 1)
-    warns = [r for r in caplog.records if "dynamic-partition committer" in r.message]
-    assert len(warns) == 1
-    assert spark.read.parquet(index_dir).count() == 80
-
-
 def test_processor_plumbs_fs_options_and_caches_resolution(
     spark, tmp_path, monkeypatch
 ):
-    """make_index_add_processor must hand fs_options to
-    direct_partitioned_append (round 11 — before it, S3-compatible
+    """make_index_add_processor must hand fs_options to the direct
+    append's executor writer (round 11 — before it, S3-compatible
     endpoints silently fell back to the committer here) and resolve the
-    destination ONCE, passing the cached (kind, dest) so the pyarrow
-    construction probe doesn't rerun per micro-batch."""
+    destination ONCE, so the pyarrow construction probe doesn't rerun per
+    micro-batch."""
     from fest_vibes_ai_etl_spark.streaming import banded_index as bi
 
     calls = []
-    real = bi.direct_partitioned_append
+    real = bi._make_band_writer
 
-    def spy(df, path, part_col, fs_options=None, write_tasks=8, resolved=None):
-        calls.append({"fs_options": fs_options, "resolved": resolved})
-        return real(df, path, part_col, fs_options=None, resolved=resolved)
+    def spy(dests, append_id):
+        calls.append(dests)
+        return real(dests, append_id)
 
-    monkeypatch.setattr(bi, "direct_partitioned_append", spy)
+    monkeypatch.setattr(bi, "_make_band_writer", spy)
     resolutions = []
     real_resolve = bi._resolve_direct_destination
 
@@ -385,8 +366,8 @@ def test_processor_plumbs_fs_options_and_caches_resolution(
     process = ivf.make_index_add_processor(index_dir, centers, fs_options=opts)
     process(emb.filter("vec_id < 40"), 0)
     process(emb.filter("vec_id >= 40 and vec_id < 80"), 1)
-    assert [c["fs_options"] for c in calls] == [opts, opts]
-    assert all(c["resolved"] == ("local", index_dir) for c in calls)
+    assert [d[0]["fs_options"] for d in calls] == [opts, opts]
+    assert all((d[0]["kind"], d[0]["dest"]) == ("local", index_dir) for d in calls)
     assert len(resolutions) == 1  # probed once, cached across batches
     assert spark.read.parquet(index_dir).count() == 80
 

@@ -1,4 +1,5 @@
-"""Shuffle-pruned top-k: pruned ≡ unpruned, and the prune actually prunes."""
+"""Shuffle-pruned top-k: the window equals a Python reference ranking,
+and Spark's own WindowGroupLimit does the map-side prune."""
 
 from __future__ import annotations
 
@@ -11,57 +12,48 @@ from fest_vibes_ai_etl_spark.sources import table
 
 
 def test_pruned_equals_unpruned(spark):
+    """The window (pruned map-side by Spark's WindowGroupLimit) returns
+    exactly a plain Python per-user ranking: sort by (value desc,
+    event_id asc), keep the first 3."""
     ev = table(spark, SF_DIR, "events").select(
         "event_id", "user_id", F.round("value", 2).alias("value")
     )
-    pruned = {
+    got = {
         tuple(r)
-        for r in topk_per_group(
-            ev, ["user_id"], "value", "event_id", 3, prune=True
-        ).collect()
+        for r in topk_per_group(ev, ["user_id"], "value", "event_id", 3).collect()
     }
-    plain = {
-        tuple(r)
-        for r in topk_per_group(
-            ev, ["user_id"], "value", "event_id", 3, prune=False
-        ).collect()
-    }
-    assert pruned == plain and len(pruned) > 0
+    by_user: dict = {}
+    for r in ev.collect():
+        by_user.setdefault(r.user_id, []).append(r)
+    want = set()
+    for rows in by_user.values():
+        ranked = sorted(rows, key=lambda r: (-r.value, r.event_id))
+        want |= {
+            (r.event_id, r.user_id, r.value, rk)
+            for rk, r in enumerate(ranked[:3], start=1)
+        }
+    assert got == want and len(got) > 0
 
 
 def test_map_side_prune_reduces_rows(spark):
+    """The map-side prune is Spark's own: the optimized plan carries
+    WindowGroupLimit below the final filter, and the result holds at
+    most k rows per user."""
     ev = (
         table(spark, SF_DIR, "events")
         .select("event_id", "user_id", "value")
         .repartition(8)
     )
-    total = ev.count()
-    # count rows surviving the local prune (the shuffle input)
-    from fest_vibes_ai_etl_spark.operators import topk as T
-
-    pruned = T.topk_per_group(ev, ["user_id"], "value", "event_id", 2)
+    pruned = topk_per_group(ev, ["user_id"], "value", "event_id", 2)
+    plan = pruned._jdf.queryExecution().optimizedPlan().toString()
+    assert "WindowGroupLimit" in plan
     n_users = ev.select("user_id").distinct().count()
-
-    def prune_stage(batches):  # replicate the map-side prune alone
-        for pdf in batches:
-            ranked = pdf.sort_values(
-                ["user_id", "value", "event_id"],
-                ascending=[True, False, True],
-                kind="mergesort",
-            )
-            yield ranked.groupby(["user_id"], sort=False).head(2)
-
-    survivors = ev.mapInPandas(prune_stage, schema=ev.schema).count()
-    # survivor bound: k * |users| * |partitions|; and it actually pruned
-    assert survivors <= 2 * n_users * 8
-    assert survivors < total
     assert pruned.count() <= 2 * n_users
 
 
 def test_default_path_uses_jvm_window_group_limit(spark):
     """The default (no Python prune) plan must carry Spark's own map-side
-    WindowGroupLimit and NO Python boundary — the reason prune defaults off
-    on Spark >= 3.5."""
+    WindowGroupLimit and NO Python boundary."""
     ev = table(spark, SF_DIR, "events").select("event_id", "user_id", "value")
     plan = (
         topk_per_group(ev, ["user_id"], "value", "event_id", 3)

@@ -1,20 +1,20 @@
 #!/usr/bin/env python
-"""Incremental-IVF add scaling: cell-pruned replay guard vs full id scan.
+"""Incremental-IVF add scaling: the cell-pruned replay guard.
 
 Round 10 made ``ivf.start_incremental_index_add`` batch-proportional:
 the replay guard reads only the batch's own ``cell_id=`` directories
 (the frozen quantizer pins a replayed vector to the cell it was stored
 under) instead of the whole stored id column, and the append writes
 directly from executors instead of through the dynamic-partition
-committer. This tool measures what that buys, `probe_scaling.py`-style:
-it replicates the embeddings table to 1×/8×/64× with disjoint ids,
+committer. This tool measures it, `probe_scaling.py`-style: it
+replicates the embeddings table to 1×/8×/64× with disjoint ids,
 prebuilds the cell-partitioned index once per scale, then times ONE
 fixed-size micro-batch of NOVEL vectors through the real processor
-(``make_index_add_processor``) under ``replay_guard="full"`` vs
-``"pruned"``, on a fresh copy of the index per run (an append mutates
-it). Also reports the guard's input rows (stored ids visible to the
-anti-join) for each mode — the structural number that keeps growing
-linearly for "full" at deployment scale whatever the local walls say.
+(``make_index_add_processor``) on a fresh copy of the index per run (an
+append mutates it). Also reports the guard's input rows (stored ids
+visible to the anti-join) — bounded by the batch's cells, where a
+whole-id-column guard grew linearly with the index. That guard itself
+is gone; SCALE.md keeps its recorded walls.
 
 Usage: python tools/ivf_add_scaling.py [--base /root/testdata/sf0.1]
         [--scales 1,8,64] [--batch-vecs 50] [--cells 64]
@@ -88,10 +88,8 @@ def main() -> None:
     )
     batch.count()
 
-    results: dict[str, dict] = {
-        "scales": scales,
-        "walls": {"full": [], "pruned": []},
-        "guard_rows": {"full": [], "pruned": []},
+    results: dict[str, list] = {
+        "scales": scales, "walls": [], "guard_rows": [],
     }
     for r in scales:
         proto = os.path.join(args.out, f"index_x{r}")
@@ -109,41 +107,28 @@ def main() -> None:
             .collect()
         )
         stored = spark.read.parquet(proto)
-        total_ids = stored.count()
         pruned_ids = stored.filter(F.col("cell_id").isin(touched)).count()
-        for mode in ("full", "pruned"):
-            work = os.path.join(args.out, f"work_x{r}_{mode}")
-            if os.path.exists(work):
-                shutil.rmtree(work)
-            shutil.copytree(proto, work)
-            process = ivf.make_index_add_processor(
-                work, centers, replay_guard=mode
-            )
-            t0 = time.monotonic()
-            process(batch, 0)
-            wall = time.monotonic() - t0
-            results["walls"][mode].append(round(wall, 3))
-            results["guard_rows"][mode].append(
-                total_ids if mode == "full" else pruned_ids
-            )
-            log(f"x{r} {mode}: {wall:.3f}s (guard rows "
-                f"{total_ids if mode == 'full' else pruned_ids})")
+        work = os.path.join(args.out, f"work_x{r}")
+        if os.path.exists(work):
             shutil.rmtree(work)
+        shutil.copytree(proto, work)
+        process = ivf.make_index_add_processor(work, centers)
+        t0 = time.monotonic()
+        process(batch, 0)
+        wall = time.monotonic() - t0
+        results["walls"].append(round(wall, 3))
+        results["guard_rows"].append(pruned_ids)
+        log(f"x{r}: {wall:.3f}s (guard rows {pruned_ids})")
+        shutil.rmtree(work)
 
     print(json.dumps({"ivf_add_scaling": results,
                       "batch_vecs": args.batch_vecs, "cells": args.cells}))
     print()
-    print("| guard | " + " | ".join(f"x{r}" for r in scales) + " |")
+    print("| | " + " | ".join(f"x{r}" for r in scales) + " |")
     print("|---|" + "---|" * len(scales))
-    for mode in ("full", "pruned"):
-        walls = " | ".join(f"{w:.2f}s" for w in results["walls"][mode])
-        print(f"| {mode} | {walls} |")
-    print()
-    print("| guard rows read | " + " | ".join(f"x{r}" for r in scales) + " |")
-    print("|---|" + "---|" * len(scales))
-    for mode in ("full", "pruned"):
-        rows = " | ".join(str(n) for n in results["guard_rows"][mode])
-        print(f"| {mode} | {rows} |")
+    print("| wall | " + " | ".join(f"{w:.2f}s" for w in results["walls"]) + " |")
+    print("| guard rows read | "
+          + " | ".join(str(n) for n in results["guard_rows"]) + " |")
 
 
 if __name__ == "__main__":
