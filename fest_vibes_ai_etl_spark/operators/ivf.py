@@ -536,10 +536,10 @@ def make_index_add_processor(
     fs_options: dict | None = None,
     metrics: dict | None = None,
 ):
-    """The ``foreachBatch`` processor behind
-    :func:`start_incremental_index_add`, exposed (the incremental-dedup
-    family's convention) so tests, batch backfills, and A/B measurement
-    can drive micro-batches directly. Each micro-batch of new vectors is
+    """The ``foreachBatch`` processor adding streamed vectors to the IVF
+    index; run it as a stream with ``streaming.state_store.start_stream``,
+    or drive micro-batches directly (tests, batch backfills, A/B
+    measurement). Each micro-batch of new vectors is
     assigned to the frozen quantizer's cells and appended to the
     cell-partitioned ``assigned`` table that ``ivf_topk`` probes — new
     vectors become searchable at the next probe with NO index rebuild
@@ -996,30 +996,3 @@ def read_ivf_index(spark, index_dir: str, heal: str = "repair") -> DataFrame:
     if tomb is None:
         return df
     return df.join(tomb, id_col, "left_anti")
-
-
-def start_incremental_index_add(
-    vectors: DataFrame,
-    index_dir: str,
-    centers: list[list[float]],
-    checkpoint_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    available_now: bool = True,
-    fs_options: dict | None = None,
-    metrics: dict | None = None,
-):
-    """Streaming wrapper over :func:`make_index_add_processor` (see it
-    for the batch-proportional replay-guard, the layout meta, the
-    staleness metrics, and the direct-append design)."""
-    process = make_index_add_processor(
-        index_dir, centers, id_col=id_col, vec_col=vec_col,
-        fs_options=fs_options, metrics=metrics,
-    )
-    writer = (
-        vectors.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

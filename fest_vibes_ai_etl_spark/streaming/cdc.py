@@ -36,6 +36,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .state_store import start_stream
+
 OP_COL = "op"
 VERSION_COL = "version"
 DELETED_COL = "_deleted"
@@ -269,10 +271,4 @@ def start_cdc_apply(
                 if not winners.isEmpty():
                     on_delete(spark, winners)
 
-    writer = (
-        changes.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(process, changes, checkpoint_dir, available_now)

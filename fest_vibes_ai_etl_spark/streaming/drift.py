@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import drift
+from .state_store import start_stream
 
 
 def reference_cells(
@@ -73,13 +74,7 @@ def start_drift_cell_log(
             .parquet(log_root)
         )
 
-    writer = (
-        events.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(process, events, checkpoint_dir, available_now)
 
 
 def streamed_psi(

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.freqsketch import token_mg_summaries
+from .state_store import start_stream
 
 
 def batch_fingerprint(batch_df: DataFrame, id_col: str) -> str:
@@ -79,13 +80,7 @@ def start_freq_maintenance(
             .parquet(f"{log_root}/b={fp}")
         )
 
-    writer = (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(process, docs, checkpoint_dir, available_now)
 
 
 def merged_heavy_hitters(spark: SparkSession, log_root: str) -> DataFrame:

@@ -100,7 +100,7 @@ from .banded_index import (
     PartitionedAppend,
     hadoop_read_json,
 )
-from ._exact_guard import _settle_indexes
+from .dedup_stream import _heal_exact_index, _settle_indexes
 from .writer_lease import fenced
 
 _META = "_meta.json"
@@ -1395,8 +1395,11 @@ def make_search_index_processor(
     n_doc_buckets: int | None = 32,
     fs_options: dict | None = None,
 ):
-    """The ``foreachBatch`` processor behind :func:`start_incremental_search_index`,
-    exposed so tests and batch backfills can drive micro-batches directly.
+    """The ``foreachBatch`` processor maintaining the term-bucketed
+    postings store + doclen sidecar + id replay guard under
+    ``index_dir`` (probe with :func:`bm25_over_index`); run it as a
+    stream with ``state_store.start_stream``, or drive micro-batches
+    directly from tests and batch backfills.
 
     Contract: the index is append-only per document id — a replayed or
     re-sent id is skipped (its first indexed text wins). Re-indexing a
@@ -1607,8 +1610,6 @@ def make_search_index_processor(
                 F.col(id_col), T.tokens(F.col(text_col)).alias("tk")
             )
             append_postings(tok, append_id + "h", guard=True)
-            from ._exact_guard import _heal_exact_index
-
             _heal_exact_index(spark, docidx, _id_pairs(replayed, id_col))
 
         from pyspark.storagelevel import StorageLevel
@@ -1653,38 +1654,6 @@ def make_search_index_processor(
             dirty_unknown.clear()
 
     return process
-
-
-def start_incremental_search_index(
-    docs: DataFrame,
-    index_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_term_buckets: int = 64,
-    available_now: bool = True,
-    maintain_every: int | None = 16,
-    maintain_max_files: int = 8,
-    fs_options: dict | None = None,
-):
-    """``docs`` is a streaming DataFrame of documents. Maintains the
-    term-bucketed postings store + doclen sidecar + id replay guard under
-    ``index_dir``; probe with :func:`bm25_over_index`."""
-    process = make_search_index_processor(
-        index_dir,
-        id_col=id_col,
-        text_col=text_col,
-        n_term_buckets=n_term_buckets,
-        maintain_every=maintain_every,
-        maintain_max_files=maintain_max_files,
-        fs_options=fs_options,
-    )
-    writer = docs.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def pruned_postings(

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..schemas import EVENT_DTO
+from .state_store import start_stream
 
 
 def read_bronze_stream(
@@ -191,13 +192,7 @@ def start_silver_maintenance(
                 merged = source
             merged.write.mode("overwrite").parquet(path)
 
-    return (
-        read_bronze_stream(spark, bronze_dir)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_stream(process, read_bronze_stream(spark, bronze_dir), checkpoint_dir)
 
 
 def start_versioned_upsert(
@@ -236,9 +231,4 @@ def start_versioned_upsert(
             txn=(app_id, batch_id),
         )
 
-    writer = stream_df.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(process, stream_df, checkpoint_dir, available_now)

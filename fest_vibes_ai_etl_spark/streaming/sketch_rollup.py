@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
+from .state_store import start_stream
+
 
 def _latest_snapshot(spark: SparkSession, root: str):
     """(vmax, snapshot DataFrame) for a versioned sketch table, or None if
@@ -91,13 +93,7 @@ def start_sketch_maintenance(
             .parquet(sketch_root)
         )
 
-    writer = (
-        events.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(process, events, checkpoint_dir, available_now)
 
 
 # --- KMV variant: mergeable AND intersectable distinct sets ---------------
@@ -167,9 +163,4 @@ def start_kmv_maintenance(
             .parquet(kmv_root)
         )
 
-    writer = events.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(process, events, checkpoint_dir, available_now)

@@ -17,6 +17,9 @@ family doesn't re-derive them:
   banded index's stored-n_bands-always-wins, the IVF sample re-assignment
   verify) keep those locally and share only the mismatch computation.
 
+- **Stream start** (:func:`start_stream`): every ``foreachBatch``
+  processor in the package starts through one call.
+
 - **Small-file compaction for append-per-batch directories**
   (:func:`compact_small_files` / :func:`recover_dir_compaction`): a
   directory that gains one file per micro-batch grows its listing and
@@ -312,3 +315,18 @@ def compact_small_files(
     fs.delete(jvm.org.apache.hadoop.fs.Path(man_path), False)
     fs.delete(stage_p, True)
     return len(small)
+
+
+def start_stream(
+    process, df: DataFrame, checkpoint_dir: str, available_now: bool = True
+):
+    """Run ``process(batch_df, batch_id)`` over the streaming frame ``df``
+    as a ``foreachBatch`` query checkpointed at ``checkpoint_dir``;
+    ``available_now`` drains what is available and stops. Returns the
+    started ``StreamingQuery``."""
+    writer = df.writeStream.foreachBatch(process).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()

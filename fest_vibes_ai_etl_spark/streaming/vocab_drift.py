@@ -25,6 +25,7 @@ from ..functions import text as T
 from ..operators import drift
 from ..operators.textanalysis import VOCAB_PSI_BUCKETS as VOCAB_BUCKETS
 from ..operators.textanalysis import term_bucket
+from .state_store import start_stream
 
 
 def _bucket_counts(
@@ -77,13 +78,7 @@ def start_vocab_cell_log(
             .parquet(log_root)
         )
 
-    writer = (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(process, docs, checkpoint_dir, available_now)
 
 
 def streamed_vocab_psi(

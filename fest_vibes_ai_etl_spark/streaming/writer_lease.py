@@ -90,6 +90,9 @@ class _LocalLeaseBackend:
         with open(path, "rb") as f:
             return f.read()
 
+    def mtime(self, path: str) -> float:
+        return os.stat(path).st_mtime
+
     def put_if_absent(self, path: str, data: bytes) -> bool:
         # CONTENT-atomic, not just name-atomic: a bare O_CREAT|O_EXCL
         # followed by write() exposes an empty claim file between the two
@@ -149,23 +152,35 @@ class _HadoopLeaseBackend:
         finally:
             stream.close()
 
+    def mtime(self, path: str) -> float:
+        jvm, p, fs = self._fs(path)
+        return fs.getFileStatus(p).getModificationTime() / 1000.0
+
     def put_if_absent(self, path: str, data: bytes) -> bool:
         # content-atomic (see the local backend): write a private temp
         # file, then rename WITHOUT overwrite — atomic on HDFS, so the
-        # target name never exists with a partial payload
-        jvm, p, fs = self._fs(path)
-        tmp_path = f"{path}.tmp.{uuid.uuid4().hex}"
-        _, tp, _ = self._fs(tmp_path)
-        out = fs.create(tp, True)
-        out.write(bytearray(data))
-        out.close()
+        # target name never exists with a partial payload. A filesystem
+        # failure is a typed error, never a raw Py4J trace; only a plain
+        # False from rename means the claim was lost.
+        from py4j.protocol import Py4JError
+
         try:
-            if fs.rename(tp, p):
-                return True
-            return False
-        finally:
-            if fs.exists(tp):
-                fs.delete(tp, False)
+            jvm, p, fs = self._fs(path)
+            tmp_path = f"{path}.tmp.{uuid.uuid4().hex}"
+            _, tp, _ = self._fs(tmp_path)
+            out = fs.create(tp, True)
+            out.write(bytearray(data))
+            out.close()
+            try:
+                return bool(fs.rename(tp, p))
+            finally:
+                if fs.exists(tp):
+                    fs.delete(tp, False)
+        except Py4JError as exc:
+            raise WriterLeaseError(
+                f"put-if-absent of {path} failed in the filesystem "
+                f"({type(exc).__name__}); back off and retry"
+            ) from exc
 
     def delete(self, path: str) -> None:
         jvm, p, fs = self._fs(path)
@@ -226,33 +241,36 @@ class WriterLease:
         head, claims, releases = self._scan()
         if head and head not in releases:
             # unreleased head: an active writer unless its TTL expired
+            claim_path = f"{self._lease_dir}/e{head:012d}.json"
             try:
-                payload = json.loads(
-                    self.backend.get(
-                        f"{self._lease_dir}/e{head:012d}.json"
-                    ).decode("utf-8")
-                )
+                payload = json.loads(self.backend.get(claim_path).decode("utf-8"))
             except Exception:
-                # Unreadable claim payload = ACTIVE, never expired: claims
-                # are created content-atomically, so this is a transient
-                # read glitch (or real corruption), and presuming the
-                # holder dead on it re-opens the multi-winner hole the
-                # atomic create closed. Back off like any other loser.
-                raise WriterLeaseError(
-                    f"store {self.store_dir}: writer epoch {head} claim "
-                    f"exists but its payload is unreadable — treating the "
-                    f"holder as active (single-writer contract, "
-                    f"STATE.md §5); back off and retry"
-                )
-            age = time.time() - float(payload.get("acquired_unix", 0.0))
-            if age < float(payload.get("ttl_s", self.ttl_s)):
-                raise WriterLeaseError(
-                    f"store {self.store_dir}: writer epoch {head} "
-                    f"({payload.get('op', '?')} by "
-                    f"{payload.get('owner', '?')[:8]}, {age:.0f}s old) is "
-                    f"still active — single-writer contract (STATE.md §5); "
-                    f"back off and retry after it releases"
-                )
+                # Unreadable claim payload = ACTIVE while the claim file
+                # is younger than the TTL: claims are created
+                # content-atomically, so this is a transient read glitch
+                # (or real corruption), and presuming the holder dead on
+                # it re-opens the multi-winner hole the atomic create
+                # closed. Past the TTL by the backend's own mtime it
+                # expires like any claim — corruption must not wedge the
+                # store for good.
+                if not self._older_than_ttl(claim_path):
+                    raise WriterLeaseError(
+                        f"store {self.store_dir}: writer epoch {head} claim "
+                        f"exists but its payload is unreadable — treating "
+                        f"the holder as active (single-writer contract, "
+                        f"STATE.md §5); back off and retry"
+                    )
+                payload = None
+            if payload is not None:
+                age = time.time() - float(payload.get("acquired_unix", 0.0))
+                if age < float(payload.get("ttl_s", self.ttl_s)):
+                    raise WriterLeaseError(
+                        f"store {self.store_dir}: writer epoch {head} "
+                        f"({payload.get('op', '?')} by "
+                        f"{payload.get('owner', '?')[:8]}, {age:.0f}s old) "
+                        f"is still active — single-writer contract "
+                        f"(STATE.md §5); back off and retry after it releases"
+                    )
             # expired: the holder is presumed dead; claim over it
         claim = json.dumps(
             {
@@ -274,6 +292,17 @@ class WriterLease:
         self.epoch = epoch
         self._retire_old(epoch, claims, releases)
         return epoch
+
+    def _older_than_ttl(self, path: str) -> bool:
+        from py4j.protocol import Py4JError
+
+        mtime = getattr(self.backend, "mtime", None)  # custom backends may lack it
+        if mtime is None:
+            return False
+        try:
+            return time.time() - mtime(path) >= self.ttl_s
+        except (OSError, Py4JError):  # the claim vanished or can't be stat-ed
+            return False
 
     def release(self) -> None:
         if self.epoch is None:

@@ -10,13 +10,14 @@ from pyspark.sql import functions as F
 
 from fest_vibes_ai_etl_spark.streaming.banded_index import BandedFingerprintIndex
 from fest_vibes_ai_etl_spark.streaming.incremental_near_dedup import (
+    make_near_dedup_processor,
     near_index_path,
-    start_incremental_near_dedup,
 )
 from fest_vibes_ai_etl_spark.streaming.incremental_span_dedup import (
+    make_span_dedup_processor,
     span_index_path,
-    start_incremental_span_dedup,
 )
+from fest_vibes_ai_etl_spark.streaming.state_store import start_stream
 
 PASSAGE = "the quick brown fox jumps over the lazy dog near the river bank"
 B1 = [(1, "alpha beta " + PASSAGE + " gamma delta epsilon"),
@@ -40,9 +41,10 @@ def _run_span(spark, src, corpus, ckpt, n_bands=16):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = start_incremental_span_dedup(
-        stream, corpus, ckpt, k=20, w=15, min_shared=3,
-        n_bands=n_bands,
+    q = start_stream(
+        make_span_dedup_processor(corpus, k=20, w=15, min_shared=3, n_bands=n_bands),
+        stream,
+        ckpt,
     )
     assert q.awaitTermination(180), "stream did not finish in 180s"
 
@@ -53,9 +55,13 @@ def _run_near(spark, src, corpus, ckpt, n_buckets=16):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = start_incremental_near_dedup(
-        stream, corpus, ckpt, k=3, num_hashes=32, bands=8, threshold=0.2,
-        n_buckets=n_buckets,
+    q = start_stream(
+        make_near_dedup_processor(
+            corpus, k=3, num_hashes=32, bands=8, threshold=0.2,
+            n_buckets=n_buckets,
+        ),
+        stream,
+        ckpt,
     )
     assert q.awaitTermination(180), "stream did not finish in 180s"
 
@@ -519,7 +525,7 @@ def test_span_stream_deleted_corpus_invalidates_sidecars(spark, tmp_path):
     import shutil
 
     shutil.rmtree(corpus)
-    from fest_vibes_ai_etl_spark.streaming._exact_guard import (
+    from fest_vibes_ai_etl_spark.streaming.dedup_stream import (
         exact_index_path,
     )
 
@@ -552,7 +558,7 @@ def test_near_heal_catches_batchmate_of_replayed_doc(spark, tmp_path):
     from fest_vibes_ai_etl_spark.streaming.incremental_near_dedup import (
         _with_signatures,
     )
-    from fest_vibes_ai_etl_spark.streaming._exact_guard import (
+    from fest_vibes_ai_etl_spark.streaming.dedup_stream import (
         exact_index_path,
     )
 
@@ -697,9 +703,9 @@ def test_span_heal_catches_batchmate_of_replayed_doc(spark, tmp_path):
     # batch 0 state as the crashed attempt left it: A stored in the
     # corpus (with fp + wfps), NO index rows, marker up
     from fest_vibes_ai_etl_spark.operators.dedup import winnow_fingerprints
-    from fest_vibes_ai_etl_spark.streaming.incremental_dedup import fingerprint
-    from fest_vibes_ai_etl_spark.streaming._exact_guard import (
+    from fest_vibes_ai_etl_spark.streaming.dedup_stream import (
         exact_index_path,
+        fingerprint,
     )
 
     adf = spark.createDataFrame([a], "doc_id long, text string")
@@ -756,9 +762,13 @@ def test_near_stream_rebuilds_on_key_derivation_change(spark, tmp_path):
             spark.readStream.schema("doc_id long, text string")
             .option("maxFilesPerTrigger", 1).parquet(src)
         )
-        q = start_incremental_near_dedup(
-            stream, corpus, ckpt, k=3, num_hashes=32, bands=bands,
-            threshold=0.2, n_buckets=16,
+        q = start_stream(
+            make_near_dedup_processor(
+                corpus, k=3, num_hashes=32, bands=bands, threshold=0.2,
+                n_buckets=16,
+            ),
+            stream,
+            ckpt,
         )
         assert q.awaitTermination(180), "stream did not finish in 180s"
 
@@ -797,15 +807,18 @@ def test_span_stream_soak_bounds_files_and_caches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = start_incremental_span_dedup(
-        stream, corpus, str(tmp_path / "ckpt"), k=8, w=4, min_shared=3,
-        n_bands=16,
-        maintain_every=10, maintain_max_files=4,
+    q = start_stream(
+        make_span_dedup_processor(
+            corpus, k=8, w=4, min_shared=3, n_bands=16,
+            maintain_every=10, maintain_max_files=4,
+        ),
+        stream,
+        str(tmp_path / "ckpt"),
     )
     assert q.awaitTermination(600), "stream did not finish in 600s"
     assert jsc.getPersistentRDDs().size() == cached_before  # no cache leak
     idx_dir = span_index_path(corpus)
-    from fest_vibes_ai_etl_spark.streaming._exact_guard import (
+    from fest_vibes_ai_etl_spark.streaming.dedup_stream import (
         exact_index_path,
     )
 
@@ -829,31 +842,6 @@ def test_span_stream_soak_bounds_files_and_caches(spark, tmp_path):
     assert exact_pairs == {
         (r.doc_id, r.fp) for r in stored.select("doc_id", "fp").collect()
     }
-
-
-def test_span_migrates_sidecarless_corpus(spark, tmp_path):
-    """A corpus whose sidecars are gone (written by an older round, or the
-    sidecars were deleted) must get them rebuilt by the next batch, which
-    still dedups."""
-    import shutil
-
-    from fest_vibes_ai_etl_spark.streaming._exact_guard import (
-        exact_index_path,
-    )
-
-    src1, src2 = str(tmp_path / "s1"), str(tmp_path / "s2")
-    corpus = str(tmp_path / "corpus")
-    spark.createDataFrame(B1, "doc_id long, text string").coalesce(1).write.parquet(src1)
-    _run_span(spark, src1, corpus, str(tmp_path / "k1"))
-    shutil.rmtree(span_index_path(corpus))
-    shutil.rmtree(exact_index_path(corpus))
-    assert not os.path.exists(span_index_path(corpus))
-    spark.createDataFrame(B2, "doc_id long, text string").coalesce(1).write.parquet(src2)
-    _run_span(spark, src2, corpus, str(tmp_path / "k2"))
-    ids = _stored_ids(spark, corpus)
-    assert 10 not in ids and 2000 not in ids and {1, 2, 3, 11} <= ids
-    # migration built the index covering BOTH old and new rows
-    assert _index_pairs(spark, span_index_path(corpus)) == _corpus_pairs(spark, corpus)
 
 
 def test_maintain_detection_is_batch_proportional(spark, tmp_path):
@@ -1291,6 +1279,7 @@ def test_stream_factories_plumb_fs_options(monkeypatch):
     fs_options to EVERY sidecar it constructs (a seam that only works
     for hand-built indexes in tests is not a deployment seam)."""
     from fest_vibes_ai_etl_spark.streaming import (
+        dedup_stream,
         incremental_dedup,
         incremental_near_dedup,
         incremental_span_dedup,
@@ -1303,13 +1292,13 @@ def test_stream_factories_plumb_fs_options(monkeypatch):
         (incremental_near_dedup, incremental_near_dedup.make_near_dedup_processor, 2),
     ]:
         captured = []
-        real = mod.BandedFingerprintIndex
+        real = dedup_stream.BandedFingerprintIndex
 
         def spy(*args, _real=real, _cap=captured, **kwargs):
             _cap.append(kwargs.get("fs_options"))
             return _real(*args, **kwargs)
 
-        monkeypatch.setattr(mod, "BandedFingerprintIndex", spy)
+        monkeypatch.setattr(dedup_stream, "BandedFingerprintIndex", spy)
         factory("/tmp/fsopts_probe_corpus", fs_options=opts)
         assert captured == [opts] * n_expected, (mod.__name__, captured)
 

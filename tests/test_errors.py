@@ -50,8 +50,9 @@ def test_incremental_dedup_raises_on_unreadable_history(spark, tmp_path):
     # same contract through the foreachBatch operator: empty-but-existing
     # corpus dir must FAIL the stream, not re-append the batch
     from fest_vibes_ai_etl_spark.streaming.incremental_dedup import (
-        start_incremental_dedup,
+        make_exact_dedup_processor,
     )
+    from fest_vibes_ai_etl_spark.streaming.state_store import start_stream
 
     src = tmp_path / "src"
     corpus = tmp_path / "corpus"
@@ -64,7 +65,9 @@ def test_incremental_dedup_raises_on_unreadable_history(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    q = start_incremental_dedup(stream, str(corpus), str(tmp_path / "ckpt"))
+    q = start_stream(
+        make_exact_dedup_processor(str(corpus)), stream, str(tmp_path / "ckpt")
+    )
     from pyspark.errors import StreamingQueryException
 
     with pytest.raises(StreamingQueryException):

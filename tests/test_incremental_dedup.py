@@ -7,7 +7,10 @@ from pyspark.sql import functions as F
 from conftest import SF_DIR
 
 from fest_vibes_ai_etl_spark.sources import table
-from fest_vibes_ai_etl_spark.streaming.incremental_dedup import start_incremental_dedup
+from fest_vibes_ai_etl_spark.streaming.incremental_dedup import (
+    make_exact_dedup_processor,
+)
+from fest_vibes_ai_etl_spark.streaming.state_store import start_stream
 
 
 def _run(spark, src, corpus, ckpt):
@@ -16,7 +19,7 @@ def _run(spark, src, corpus, ckpt):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = start_incremental_dedup(stream, corpus, ckpt)
+    q = start_stream(make_exact_dedup_processor(corpus), stream, ckpt)
     assert q.awaitTermination(120), "stream did not finish in 120s"
 
 
@@ -50,7 +53,7 @@ def test_exact_probe_stores_md5_of_distinct_texts(spark, tmp_path):
     import json
     import os
 
-    from fest_vibes_ai_etl_spark.streaming._exact_guard import (
+    from fest_vibes_ai_etl_spark.streaming.dedup_stream import (
         exact_index_path,
     )
 
@@ -90,7 +93,7 @@ def test_exact_index_heals_after_crash_between_corpus_and_index(spark, tmp_path)
     from fest_vibes_ai_etl_spark.streaming.banded_index import (
         BandedFingerprintIndex,
     )
-    from fest_vibes_ai_etl_spark.streaming._exact_guard import (
+    from fest_vibes_ai_etl_spark.streaming.dedup_stream import (
         exact_index_path,
     )
 
@@ -140,42 +143,6 @@ def test_exact_index_heals_after_crash_between_corpus_and_index(spark, tmp_path)
     assert not os.path.exists(idx_dir + ".inflight")
 
 
-def test_exact_migrates_sidecarless_corpus(spark, tmp_path):
-    """A corpus whose sidecar is gone (written by an older round, or the
-    sidecar was deleted) must get it rebuilt from the corpus by the next
-    batch, which still drops historical duplicates bucket-locally."""
-    import os
-    import shutil
-
-    from fest_vibes_ai_etl_spark.streaming._exact_guard import (
-        exact_index_path,
-    )
-
-    docs = table(spark, SF_DIR, "documents").select("doc_id", "text")
-    src1, src2 = str(tmp_path / "s1"), str(tmp_path / "s2")
-    corpus = str(tmp_path / "corpus")
-    docs.filter("doc_id < 50").coalesce(1).write.parquet(src1)
-    docs.filter("doc_id >= 20 AND doc_id < 90").coalesce(1).write.parquet(src2)
-    _run(spark, src1, corpus, str(tmp_path / "k1"))
-    shutil.rmtree(exact_index_path(corpus))
-    assert not os.path.exists(exact_index_path(corpus))
-    _run(spark, src2, corpus, str(tmp_path / "k2"))
-    stored = spark.read.parquet(corpus)
-    assert stored.select("fp").distinct().count() == stored.count()
-    n_unique = (
-        docs.filter("doc_id < 90").select("text").distinct().count()
-    )
-    assert stored.count() == n_unique
-    # the migration-built index covers old and new rows alike
-    idx_fps = {
-        r.fp
-        for r in spark.read.parquet(exact_index_path(corpus))
-        .select("fp")
-        .collect()
-    }
-    assert idx_fps == {r.fp for r in stored.select("fp").collect()}
-
-
 def test_deleted_corpus_invalidates_surviving_sidecar(spark, tmp_path):
     """An operator deletes the corpus (fresh ingestion, new checkpoint)
     but leaves the _exactidx sidecar behind. The first batch must
@@ -185,7 +152,7 @@ def test_deleted_corpus_invalidates_surviving_sidecar(spark, tmp_path):
     import os
     import shutil
 
-    from fest_vibes_ai_etl_spark.streaming._exact_guard import (
+    from fest_vibes_ai_etl_spark.streaming.dedup_stream import (
         exact_index_path,
     )
 
@@ -234,11 +201,9 @@ def test_legacy_null_fp_history_converges(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    from fest_vibes_ai_etl_spark.streaming.incremental_dedup import (
-        start_incremental_dedup,
+    q = start_stream(
+        make_exact_dedup_processor(corpus), stream, str(tmp_path / "ckpt")
     )
-
-    q = start_incremental_dedup(stream, corpus, str(tmp_path / "ckpt"))
     assert q.awaitTermination(120), "stream did not finish in 120s"
     stored = spark.read.parquet(corpus)
     # doc 3 (null text) matches legacy doc 1's NULL fp via the coalesce —
@@ -246,49 +211,3 @@ def test_legacy_null_fp_history_converges(spark, tmp_path):
     # so it IS appended
     ids = {r.doc_id for r in stored.select("doc_id").collect()}
     assert ids == {1, 2, 4}
-
-
-def test_mid_run_corpus_deletion_kills_sidecar(spark, tmp_path):
-    """The deleted-corpus guard must not be one-shot per stream run: if
-    the corpus vanishes while a bucketed stream is MID-RUN (after its
-    settle flag is set), the next batch must still invalidate the
-    surviving _exactidx before probing or appending — otherwise new docs
-    whose text matches the old, gone corpus are silently dropped and
-    stored nowhere. Driven through the exported batch processor (the
-    exact closure foreachBatch runs) so the deletion lands between two
-    batches of ONE run."""
-    import os
-    import shutil
-
-    from fest_vibes_ai_etl_spark.streaming._exact_guard import (
-        exact_index_path,
-    )
-    from fest_vibes_ai_etl_spark.streaming.incremental_dedup import (
-        make_exact_dedup_processor,
-    )
-
-    docs = table(spark, SF_DIR, "documents").select("doc_id", "text")
-    corpus = str(tmp_path / "corpus")
-    proc = make_exact_dedup_processor(corpus)
-    proc(docs.filter("doc_id < 40"), 0)
-    n = spark.read.parquet(corpus).count()
-    assert n > 0 and os.path.exists(exact_index_path(corpus))
-    # the corpus is deleted out from under the RUNNING stream; the
-    # sidecar survives and now describes a gone corpus
-    shutil.rmtree(corpus)
-    # same texts again, same run: every one must be stored (the old
-    # behavior probed the stale sidecar and dropped them all)
-    proc(docs.filter("doc_id < 40"), 1)
-    assert spark.read.parquet(corpus).count() == n
-    # and the recreated sidecar exactly covers the recreated corpus
-    idx_fps = {
-        r.fp
-        for r in spark.read.parquet(exact_index_path(corpus))
-        .select("fp").collect()
-    }
-    assert idx_fps == {
-        r.fp for r in spark.read.parquet(corpus).select("fp").collect()
-    }
-    # a THIRD batch of the same texts appends nothing (probe healthy)
-    proc(docs.filter("doc_id < 40"), 2)
-    assert spark.read.parquet(corpus).count() == n

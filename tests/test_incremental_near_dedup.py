@@ -9,8 +9,9 @@ from conftest import SF_DIR
 from fest_vibes_ai_etl_spark.operators import dedup
 from fest_vibes_ai_etl_spark.sources import table
 from fest_vibes_ai_etl_spark.streaming.incremental_near_dedup import (
-    start_incremental_near_dedup,
+    make_near_dedup_processor,
 )
+from fest_vibes_ai_etl_spark.streaming.state_store import start_stream
 
 THRESHOLD = 0.2
 
@@ -21,7 +22,9 @@ def _run(spark, src, corpus, ckpt):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = start_incremental_near_dedup(stream, corpus, ckpt, threshold=THRESHOLD)
+    q = start_stream(
+        make_near_dedup_processor(corpus, threshold=THRESHOLD), stream, ckpt
+    )
     assert q.awaitTermination(180), "stream did not finish in 180s"
 
 
@@ -69,56 +72,11 @@ def test_incremental_near_dedup_across_batches(spark, tmp_path):
     assert spark.read.parquet(corpus).count() == n0
 
 
-def test_mid_run_corpus_deletion_kills_sidecars(spark, tmp_path):
-    """Mid-run corpus deletion (settle flag already set) must invalidate
-    BOTH surviving sidecars before the batch probes or appends — a stale
-    _bandidx/_exactidx pair would silently drop every new doc matching
-    the old, gone corpus. Driven through the exported batch processor so
-    the deletion lands between two batches of ONE run."""
-    import os
-    import shutil
-
-    from fest_vibes_ai_etl_spark.streaming._exact_guard import (
-        exact_index_path,
-    )
-    from fest_vibes_ai_etl_spark.streaming.incremental_near_dedup import (
-        make_near_dedup_processor,
-        near_index_path,
-    )
-
-    docs = table(spark, SF_DIR, "documents").select("doc_id", "text")
-    corpus = str(tmp_path / "corpus")
-    proc = make_near_dedup_processor(corpus, threshold=THRESHOLD)
-    proc(docs.filter("doc_id < 40"), 0)
-    n = spark.read.parquet(corpus).count()
-    assert n > 0
-    assert os.path.exists(near_index_path(corpus))
-    assert os.path.exists(exact_index_path(corpus))
-    shutil.rmtree(corpus)
-    proc(docs.filter("doc_id < 40"), 1)
-    # every doc the first batch stored is stored again — nothing silently
-    # dropped against the gone corpus
-    assert spark.read.parquet(corpus).count() == n
-    # the recreated exact sidecar covers the recreated corpus
-    idx_fps = {
-        r.fp
-        for r in spark.read.parquet(exact_index_path(corpus))
-        .select("fp").collect()
-    }
-    assert idx_fps == {
-        r.fp for r in spark.read.parquet(corpus).select("fp").collect()
-    }
-
-
 def test_near_metrics_reports_verify_gate(spark, tmp_path):
     """The metrics dict must count batches, how often the emptiness gate
     actually launched the exact-Jaccard verify (the stream's one
     candidate-gated linear term), and the candidate pairs scored — the
     observability the SCALE.md trigger-rate measurement runs on."""
-    from fest_vibes_ai_etl_spark.streaming.incremental_near_dedup import (
-        make_near_dedup_processor,
-    )
-
     base = (
         "the quick brown fox jumps over the lazy dog while the band plays "
         "a slow waltz in the crowded hall tonight"

@@ -12,6 +12,7 @@ from fest_vibes_ai_etl_spark.operators.search import bm25_topk, build_postings
 from fest_vibes_ai_etl_spark.sources import table
 from fest_vibes_ai_etl_spark.streaming import incremental_search as inc
 from fest_vibes_ai_etl_spark.streaming.banded_index import PartitionedAppend
+from fest_vibes_ai_etl_spark.streaming.state_store import start_stream
 
 TERMS = ["merge", "hash", "window"]
 
@@ -191,8 +192,10 @@ def test_stream_wrapper_end_to_end(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = inc.start_incremental_search_index(
-        stream, idx, str(tmp_path / "ckpt"), n_term_buckets=8
+    q = start_stream(
+        inc.make_search_index_processor(idx, n_term_buckets=8),
+        stream,
+        str(tmp_path / "ckpt"),
     )
     assert q.awaitTermination(120), "stream did not finish in 120s"
     got = [tuple(r) for r in inc.bm25_over_index(spark, idx, TERMS, topn=10).collect()]

@@ -9,8 +9,9 @@ from conftest import SF_DIR
 from fest_vibes_ai_etl_spark.operators import dedup
 from fest_vibes_ai_etl_spark.sources import table
 from fest_vibes_ai_etl_spark.streaming.incremental_span_dedup import (
-    start_incremental_span_dedup,
+    make_span_dedup_processor,
 )
+from fest_vibes_ai_etl_spark.streaming.state_store import start_stream
 
 K, W, MIN_SHARED = 20, 15, 3
 
@@ -21,8 +22,10 @@ def _run(spark, src, corpus, ckpt):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = start_incremental_span_dedup(
-        stream, corpus, ckpt, k=K, w=W, min_shared=MIN_SHARED
+    q = start_stream(
+        make_span_dedup_processor(corpus, k=K, w=W, min_shared=MIN_SHARED),
+        stream,
+        ckpt,
     )
     assert q.awaitTermination(180), "stream did not finish in 180s"
 
@@ -107,58 +110,13 @@ def test_null_text_rows_survive_once_and_replay_converges(spark, tmp_path):
     assert spark.read.parquet(corpus).count() == 3
 
 
-def test_mid_run_corpus_deletion_kills_sidecars(spark, tmp_path):
-    """Mid-run corpus deletion (settle flag already set) must invalidate
-    BOTH surviving sidecars before the batch probes or appends — a stale
-    _fpidx/_exactidx pair would silently drop every new doc sharing a
-    passage (or bytes) with the old, gone corpus. Driven through the
-    exported batch processor so the deletion lands between two batches
-    of ONE run."""
-    import os
-    import shutil
-
-    from fest_vibes_ai_etl_spark.streaming._exact_guard import (
-        exact_index_path,
-    )
-    from fest_vibes_ai_etl_spark.streaming.incremental_span_dedup import (
-        make_span_dedup_processor,
-        span_index_path,
-    )
-
-    docs = table(spark, SF_DIR, "documents").select("doc_id", "text")
-    corpus = str(tmp_path / "corpus")
-    proc = make_span_dedup_processor(corpus, k=K, w=W, min_shared=MIN_SHARED)
-    proc(docs.filter("doc_id < 40"), 0)
-    n = spark.read.parquet(corpus).count()
-    assert n > 0
-    assert os.path.exists(span_index_path(corpus))
-    assert os.path.exists(exact_index_path(corpus))
-    shutil.rmtree(corpus)
-    proc(docs.filter("doc_id < 40"), 1)
-    # every doc the first batch stored is stored again — nothing silently
-    # dropped against the gone corpus
-    assert spark.read.parquet(corpus).count() == n
-    # both recreated sidecars cover the recreated corpus
-    idx_fps = {
-        r.fp
-        for r in spark.read.parquet(exact_index_path(corpus))
-        .select("fp").collect()
-    }
-    assert idx_fps == {
-        r.fp for r in spark.read.parquet(corpus).select("fp").collect()
-    }
-
-
 def test_oversized_batch_falls_back_to_double_evaluation(spark, tmp_path, monkeypatch):
     """The single-evaluation rebuild collects the batch's survivor ids to
     the driver — safe for real micro-batches but NOT for a bulk backfill
     delivered as one availableNow batch. Above the gate the processor
     must fall back to the pre-round-11 double evaluation and still
     produce the identical corpus."""
-    from fest_vibes_ai_etl_spark.streaming import incremental_dedup as idd
-    from fest_vibes_ai_etl_spark.streaming.incremental_span_dedup import (
-        make_span_dedup_processor,
-    )
+    from fest_vibes_ai_etl_spark.streaming import dedup_stream as idd
 
     docs = [
         (1, "alpha beta the quick brown fox jumps over the lazy dog one"),
@@ -186,34 +144,3 @@ def test_oversized_batch_falls_back_to_double_evaluation(spark, tmp_path, monkey
     assert outs["fallback"] == outs["single_eval"]
     assert 10 not in outs["fallback"]  # exact dup of doc 1's text dropped
     assert 11 in outs["fallback"]
-
-
-def test_steady_batch_job_count_bounded(spark, tmp_path):
-    """A machine-independent canary for the fixed per-batch overhead the
-    round-8-11 work keeps cutting: a steady-state span batch submits a
-    BOUNDED number of Spark jobs (43 measured with AQE's per-stage jobs;
-    60 allows planner drift). Gross regressions this catches at test
-    time instead of on the bench: a per-batch index rebuild, duplicate
-    evaluations of the dedup lineage, per-sidecar appends/collects
-    coming un-fused, or per-band job fan-out."""
-    from fest_vibes_ai_etl_spark.streaming.incremental_span_dedup import (
-        make_span_dedup_processor,
-    )
-
-    sc = spark.sparkContext
-    corpus = str(tmp_path / "c")
-    proc = make_span_dedup_processor(corpus, n_bands=64)
-    mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
-    passage = "the quick brown fox jumps over the lazy dog near the river bank today"
-    proc(mk([(i, f"doc {i} " + " ".join(f"w{i}{j}" for j in range(30)))
-             for i in range(8)]), 0)
-    proc(mk([(100 + i, f"other {i} " + " ".join(f"x{i}{j}" for j in range(30)))
-             for i in range(8)]), 1)  # warm the instance caches
-    sc.setJobGroup("steady_span", "counted steady batch")
-    try:
-        proc(mk([(200 + i, f"third {i} " + " ".join(f"y{i}{j}" for j in range(30)))
-                 for i in range(8)] + [(300, "alpha " + passage + " omega")]), 2)
-    finally:
-        sc.setJobGroup("steady_span_done", "after")
-    n = len(sc.statusTracker().getJobIdsForGroup("steady_span"))
-    assert 0 < n <= 60, f"steady span batch submitted {n} Spark jobs"

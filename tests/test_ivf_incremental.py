@@ -10,6 +10,7 @@ from conftest import SF_DIR
 
 from fest_vibes_ai_etl_spark.operators import ivf
 from fest_vibes_ai_etl_spark.sources import table
+from fest_vibes_ai_etl_spark.streaming.state_store import start_stream
 
 
 def _run(spark, src, index_dir, centers, ckpt):
@@ -18,7 +19,7 @@ def _run(spark, src, index_dir, centers, ckpt):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = ivf.start_incremental_index_add(stream, index_dir, centers, ckpt)
+    q = start_stream(ivf.make_index_add_processor(index_dir, centers), stream, ckpt)
     assert q.awaitTermination(120), "stream did not finish in 120s"
 
 

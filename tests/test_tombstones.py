@@ -174,7 +174,7 @@ def test_near_dedup_maintenance_folds_and_purge_removes(spark, tmp_path):
     # rewritten — the fold must reach doc 1's rows in both sidecars
     proc_b = _near_proc(corpus, maintain_every=1, maintain_max_files=0)
     proc_b(rows((20, "unrelated words entirely here now")), 1)
-    from fest_vibes_ai_etl_spark.streaming._exact_guard import exact_index_path
+    from fest_vibes_ai_etl_spark.streaming.dedup_stream import exact_index_path
     from fest_vibes_ai_etl_spark.streaming.incremental_near_dedup import (
         near_index_path,
     )

@@ -300,6 +300,69 @@ def test_unreadable_head_claim_is_active_not_expired(spark, tmp_path):
         b.acquire()
 
 
+def test_unreadable_head_claim_expires_by_mtime_after_ttl(spark, tmp_path):
+    """An unreadable head claim must not wedge the store for good: once
+    the claim FILE is older than the TTL by the backend's mtime, it
+    expires like any claim and the next epoch can be taken."""
+    store = str(tmp_path / "s")
+    a = WriterLease(spark, store, op="maintain", ttl_s=60)
+    a.acquire()
+    lease_dir = os.path.join(store, "_writer_lease")
+    head = sorted(n for n in os.listdir(lease_dir) if n.startswith("e"))[-1]
+    claim = os.path.join(lease_dir, head)
+    with open(claim, "wb"):
+        pass  # 0 bytes: unreadable payload
+    old = time.time() - 120
+    os.utime(claim, (old, old))
+    b = WriterLease(spark, store, op="maintain", ttl_s=60)
+    assert b.acquire() == a.epoch + 1
+    b.release()
+
+
+def test_hadoop_put_if_absent_maps_py4j_errors_to_typed_error(spark):
+    """A JVM filesystem failure inside the Hadoop backend's put-if-absent
+    surfaces as WriterLeaseError (never a raw Py4J trace escaping into
+    bump_store_gen's retry loop); a plain False from rename stays a lost
+    claim."""
+    from py4j.protocol import Py4JJavaError
+
+    from fest_vibes_ai_etl_spark.streaming.writer_lease import (
+        _HadoopLeaseBackend,
+    )
+
+    class _Out:
+        def write(self, data):
+            pass
+
+        def close(self):
+            pass
+
+    class StubFs:
+        fail = True
+
+        def create(self, path, overwrite):
+            if self.fail:
+                raise Py4JJavaError(
+                    "create failed", spark._jvm.java.io.IOException("disk gone")
+                )
+            return _Out()
+
+        def rename(self, src, dst):
+            return False
+
+        def exists(self, path):
+            return False
+
+    fs = StubFs()
+    backend = _HadoopLeaseBackend(spark)
+    backend._fs = lambda path: (None, path, fs)
+    claim = "hdfs://nn/store/_writer_lease/e000000000001.json"
+    with pytest.raises(WriterLeaseError, match="put-if-absent"):
+        backend.put_if_absent(claim, b"{}")
+    fs.fail = False
+    assert backend.put_if_absent(claim, b"{}") is False
+
+
 def test_claim_file_never_visible_partially_written(tmp_path):
     """The local backend's put-if-absent must expose the name only with
     its full payload (link-into-place), and the loser's temp must not

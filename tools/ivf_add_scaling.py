@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Incremental-IVF add scaling: the cell-pruned replay guard.
 
-Round 10 made ``ivf.start_incremental_index_add`` batch-proportional:
+Round 10 made ``ivf.make_index_add_processor`` batch-proportional:
 the replay guard reads only the batch's own ``cell_id=`` directories
 (the frozen quantizer pins a replayed vector to the cell it was stored
 under) instead of the whole stored id column, and the append writes

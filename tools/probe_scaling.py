@@ -73,34 +73,43 @@ def build_history_docs(base: str, out_dir: str, r: int) -> str:
     return dst
 
 
-def prebuild_span_corpus(spark, docs_dir: str, corpus_dir: str, k, w) -> None:
-    """History in the span-stream's storage shape: (doc_id, text, fp, wfps)."""
-    from pyspark.sql import functions as F
-
-    from fest_vibes_ai_etl_spark.operators.dedup import winnow_fingerprints
-    from fest_vibes_ai_etl_spark.streaming.incremental_dedup import fingerprint
-
-    docs = spark.read.parquet(os.path.join(docs_dir, "documents.parquet"))
-    wf = winnow_fingerprints(docs, "doc_id", "text", k=k, w=w)
-    wfps = wf.groupBy("id").agg(F.array_sort(F.collect_list("fp")).alias("wfps"))
-    (
-        docs.withColumn("fp", fingerprint("text"))
-        .join(wfps.withColumnRenamed("id", "doc_id"), "doc_id", "left")
-        .withColumn("wfps", F.coalesce("wfps", F.array().cast("array<long>")))
-        .write.mode("overwrite")
-        .parquet(corpus_dir)
-    )
-
-
-def prebuild_near_corpus(spark, docs_dir: str, corpus_dir: str, k, num_hashes) -> None:
+def make_processor(fam: str, corpus_dir: str, n_bands: int | None = None,
+                   metrics: dict | None = None):
+    """The family's stream processor at the parameters this tool measures."""
     from fest_vibes_ai_etl_spark.streaming.incremental_near_dedup import (
-        _with_signatures,
+        make_near_dedup_processor,
+    )
+    from fest_vibes_ai_etl_spark.streaming.incremental_span_dedup import (
+        make_span_dedup_processor,
     )
 
+    if fam == "span":
+        return make_span_dedup_processor(
+            corpus_dir, k=20, w=15, min_shared=3, n_bands=n_bands
+        )
+    return make_near_dedup_processor(
+        corpus_dir, k=3, num_hashes=32, bands=8, threshold=0.2,
+        n_buckets=n_bands, metrics=metrics,
+    )
+
+
+def prebuild_corpus(spark, fam: str, docs_dir: str, corpus_dir: str) -> None:
+    """History in the stream's storage shape: the documents plus fp and
+    the family's signature columns."""
     docs = spark.read.parquet(os.path.join(docs_dir, "documents.parquet"))
-    _with_signatures(docs, "doc_id", "text", k, num_hashes).write.mode(
+    make_processor(fam, corpus_dir).family.signatures(docs).write.mode(
         "overwrite"
     ).parquet(corpus_dir)
+
+
+def prebuild_sidecars(spark, proc) -> None:
+    """Build the processor's missing (or layout-stale) sidecars from its
+    corpus once, so a timed batch measures the steady-state probe, not
+    the one-time migration."""
+    from fest_vibes_ai_etl_spark.streaming.dedup_stream import _settle_indexes
+
+    hist = spark.read.parquet(proc.corpus_dir)
+    _settle_indexes(spark, proc.sidecar_builders(hist), [])
 
 
 def write_batch_source(spark, base: str, src_dir: str, n_docs: int,
@@ -170,19 +179,13 @@ def measure_verify_gate(spark, base: str, out: str, work_corpus: str,
     real processor against the timed run's surviving work corpus: one
     all-novel (steady ingest, the common case) and one carrying true
     near-dups of history (the case the verify exists for)."""
-    from fest_vibes_ai_etl_spark.streaming.incremental_near_dedup import (
-        make_near_dedup_processor,
-    )
-
     src_novel2 = os.path.join(out, "batch_src_novel2")
     src_dup = os.path.join(out, "batch_src_dup")
     write_batch_source(spark, base, src_novel2, batch_docs,
                        salt="vg", id_off=920_000_000)
     write_neardup_source(spark, base, src_dup, batch_docs)
     metrics: dict = {}
-    proc = make_near_dedup_processor(
-        work_corpus, n_buckets=n_bands, metrics=metrics
-    )
+    proc = make_processor("near", work_corpus, n_bands, metrics=metrics)
     proc(spark.read.parquet(src_novel2), 0)
     novel_launched = metrics.get("verify_launched", 0)
     proc(spark.read.parquet(src_dup), 1)
@@ -198,12 +201,7 @@ def measure_verify_gate(spark, base: str, out: str, work_corpus: str,
 
 def run_one_batch(spark, family: str, src: str, corpus: str, ckpt: str,
                   n_bands: int) -> float:
-    from fest_vibes_ai_etl_spark.streaming.incremental_near_dedup import (
-        start_incremental_near_dedup,
-    )
-    from fest_vibes_ai_etl_spark.streaming.incremental_span_dedup import (
-        start_incremental_span_dedup,
-    )
+    from fest_vibes_ai_etl_spark.streaming.state_store import start_stream
 
     stream = (
         spark.readStream.schema("doc_id long, text string")
@@ -211,16 +209,7 @@ def run_one_batch(spark, family: str, src: str, corpus: str, ckpt: str,
         .parquet(src)
     )
     t0 = time.perf_counter()
-    if family == "span":
-        q = start_incremental_span_dedup(
-            stream, corpus, ckpt, k=20, w=15, min_shared=3,
-            n_bands=n_bands,
-        )
-    else:
-        q = start_incremental_near_dedup(
-            stream, corpus, ckpt, k=3, num_hashes=32, bands=8, threshold=0.2,
-            n_buckets=n_bands,
-        )
+    q = start_stream(make_processor(family, corpus, n_bands), stream, ckpt)
     q.awaitTermination(600)
     return time.perf_counter() - t0
 
@@ -250,21 +239,7 @@ def main() -> None:
     families = ["span", "near"] if args.family == "both" else [args.family]
 
     from fest_vibes_ai_etl_spark.session import get_spark
-    from fest_vibes_ai_etl_spark.streaming.banded_index import (
-        BandedFingerprintIndex,
-    )
-    from fest_vibes_ai_etl_spark.streaming.incremental_near_dedup import (
-        _band_hashes,
-        near_index_path,
-    )
-    from fest_vibes_ai_etl_spark.streaming._exact_guard import (
-        _exact_pairs,
-        exact_index_path,
-    )
-    from fest_vibes_ai_etl_spark.streaming.incremental_span_dedup import (
-        span_index_path,
-    )
-    from pyspark.sql import functions as F
+    from fest_vibes_ai_etl_spark.streaming.dedup_stream import _fpk, fingerprint
 
     spark = get_spark()
     os.makedirs(args.out, exist_ok=True)
@@ -281,59 +256,11 @@ def main() -> None:
             proto = os.path.join(args.out, f"{fam}_hist_x{r}")
             if not os.path.exists(os.path.join(proto, "_SUCCESS")):
                 log(f"[{fam}] building x{r} history corpus ...")
-                if fam == "span":
-                    prebuild_span_corpus(spark, docs_dir, proto, 20, 15)
-                else:
-                    prebuild_near_corpus(spark, docs_dir, proto, 3, 32)
-            # prebuild the index once per scale so the timed run measures
-            # the steady-state probe, not the one-time migration
-            idx_proto = (
-                span_index_path(proto) if fam == "span" else near_index_path(proto)
-            )
-            exact_proto = exact_index_path(proto)
-            # cached protos built by early-round-8 runs predate the
-            # in-directory _meta.json; since round 9 a meta-less index
-            # REFUSES (invalidate+rebuild is the only safe upgrade), so a
-            # stale cached proto would make every timed batch pay a
-            # silent rebuild — rebuild it ONCE here instead, after which
-            # the cache carries its meta
-            for stale in (idx_proto, exact_proto):
-                if (
-                    os.path.exists(stale)
-                    and not os.path.exists(os.path.join(stale, "_meta.json"))
-                    and not os.path.exists(stale.rstrip("/") + "_meta.json")
-                ):
-                    log(f"[{fam}] cached index {stale} predates _meta.json "
-                        f"— rebuilding once")
-                    shutil.rmtree(stale)
-            if not os.path.exists(idx_proto):
-                log(f"[{fam}] building x{r} index ...")
-                hist = spark.read.parquet(proto)
-                if fam == "span":
-                    idx = BandedFingerprintIndex(idx_proto, "fp", args.n_bands)
-                    idx.build_from(
-                        hist.select(
-                            F.col("doc_id").alias("id"),
-                            F.explode("wfps").alias("fp"),
-                        )
-                    )
-                else:
-                    idx = BandedFingerprintIndex(
-                        idx_proto, "band_hash", args.n_bands
-                    )
-                    idx.build_from(
-                        _band_hashes(hist, "doc_id", 32, 8).select(
-                            F.col("bid").alias("id"), "band", "band_hash"
-                        )
-                    )
-            if not os.path.exists(exact_proto):
-                # the round-8 exact-fp sidecar: prebuilt too, so the timed
-                # run measures the steady-state probe, not the migration
-                log(f"[{fam}] building x{r} exact index ...")
-                hist = spark.read.parquet(proto)
-                BandedFingerprintIndex(exact_proto, "fpk", args.n_bands).build_from(
-                    _exact_pairs(hist, "doc_id")
-                )
+                prebuild_corpus(spark, fam, docs_dir, proto)
+            # prebuild the sidecars once per scale (a cached one whose
+            # layout meta is missing or stale is rebuilt here, once)
+            proc = make_processor(fam, proto, args.n_bands)
+            prebuild_sidecars(spark, proc)
             # exact-guard read volume: rows the bucket-local replay guard
             # actually reads for THIS batch (touched fpk bands only) vs
             # the full history the pre-round-8 guard re-scanned per batch.
@@ -341,12 +268,7 @@ def main() -> None:
             # keeps a 1/n_bands constant, and n_bands is sized to the
             # corpus at (re)build time — this is the number that must stay
             # small while hist_rows grows 512×.
-            from fest_vibes_ai_etl_spark.streaming._exact_guard import _fpk
-            from fest_vibes_ai_etl_spark.streaming.incremental_dedup import (
-                fingerprint,
-            )
-
-            eidx = BandedFingerprintIndex(exact_proto, "fpk")  # adopt meta
+            eidx = proc.exact_index
             ebands = eidx.touched_bands(
                 spark.read.parquet(src)
                 .select(fingerprint("text").alias("fp"))
@@ -367,19 +289,8 @@ def main() -> None:
                 work = os.path.join(args.out, "work")
                 shutil.rmtree(work, ignore_errors=True)
                 corpus = os.path.join(work, "corpus")
-                shutil.copytree(proto, corpus)
-                idx_dst = (
-                    span_index_path(corpus) if fam == "span"
-                    else near_index_path(corpus)
-                )
-                for src_d, dst_d in (
-                    (idx_proto, idx_dst),
-                    (exact_proto, exact_index_path(corpus)),
-                ):
-                    shutil.copytree(src_d, dst_d)
-                    meta = src_d.rstrip("/") + "_meta.json"
-                    if os.path.exists(meta):
-                        shutil.copy(meta, dst_d.rstrip("/") + "_meta.json")
+                for d in [proto] + [i.path for i in proc.sidecars]:
+                    shutil.copytree(d, corpus + d[len(proto):])
                 wall = run_one_batch(
                     spark, fam, src, corpus, os.path.join(work, "ckpt"),
                     args.n_bands,

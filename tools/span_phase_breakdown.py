@@ -66,34 +66,19 @@ def main() -> None:
     from probe_scaling import (
         build_history_docs,
         log,
-        prebuild_near_corpus,
-        prebuild_span_corpus,
+        make_processor,
+        prebuild_corpus,
+        prebuild_sidecars,
         write_batch_source,
     )
 
     from fest_vibes_ai_etl_spark.session import get_spark
-    from fest_vibes_ai_etl_spark.streaming import incremental_near_dedup as near
-    from fest_vibes_ai_etl_spark.streaming import incremental_span_dedup as span
-    from fest_vibes_ai_etl_spark.streaming._exact_guard import (
-        _exact_pairs,
-        exact_index_path,
-    )
+    from fest_vibes_ai_etl_spark.streaming import dedup_stream
     from fest_vibes_ai_etl_spark.streaming.banded_index import (
         BandedFingerprintIndex,
     )
-    from fest_vibes_ai_etl_spark.streaming.incremental_near_dedup import (
-        _band_hashes,
-        make_near_dedup_processor,
-        near_index_path,
-    )
-    from fest_vibes_ai_etl_spark.streaming.incremental_span_dedup import (
-        make_span_dedup_processor,
-        span_index_path,
-    )
-    from pyspark.sql import functions as F
 
     fam = args.family
-    mod = span if fam == "span" else near
 
     spark = get_spark(f"{fam}-phase-breakdown")
     spark.sparkContext.setLogLevel("ERROR")
@@ -104,41 +89,8 @@ def main() -> None:
     proto = os.path.join(args.out, f"{fam}_hist_x{args.scale}")
     if not os.path.exists(os.path.join(proto, "_SUCCESS")):
         log(f"building x{args.scale} {fam} history corpus ...")
-        if fam == "span":
-            prebuild_span_corpus(spark, docs_dir, proto, 20, 15)
-        else:
-            prebuild_near_corpus(spark, docs_dir, proto, 3, 32)
-    if fam == "span":
-        sidecars = (
-            (span_index_path(proto), "fp", "winnow:k=20,w=15"),
-            (exact_index_path(proto), "fpk", "exact:md5-xxh64"),
-        )
-    else:
-        sidecars = (
-            (near_index_path(proto), "band_hash", "minhash:k=3,nh=32,bands=8"),
-            (exact_index_path(proto), "fpk", "exact:md5-xxh64"),
-        )
-    for sidecar_path, key_col, tag in sidecars:
-        idx = BandedFingerprintIndex(
-            sidecar_path, key_col, n_bands=args.n_bands, schema_tag=tag
-        )
-        if not idx.exists(spark):
-            log(f"prebuilding sidecar {os.path.basename(sidecar_path)} ...")
-            hist = spark.read.parquet(proto)
-            if key_col == "fp":
-                idx.build_from(
-                    hist.select(
-                        F.col("doc_id").alias("id"), F.explode("wfps").alias("fp")
-                    )
-                )
-            elif key_col == "band_hash":
-                idx.build_from(
-                    _band_hashes(hist, "doc_id", 32, 8).select(
-                        F.col("bid").alias("id"), "band", "band_hash"
-                    )
-                )
-            else:
-                idx.build_from(_exact_pairs(hist, "doc_id"))
+        prebuild_corpus(spark, fam, docs_dir, proto)
+    prebuild_sidecars(spark, make_processor(fam, proto, args.n_bands))
 
     src = os.path.join(args.out, "batch_src")
     write_batch_source(spark, args.base, src, args.batch_docs)
@@ -161,13 +113,8 @@ def main() -> None:
     # warm the Python-worker/codegen machinery on a throwaway copy, same
     # as probe_scaling: the steady-state phase shape is the deliverable,
     # not the one-off session spin-up
-    def make_processor(corpus_dir):
-        if fam == "span":
-            return make_span_dedup_processor(corpus_dir, n_bands=args.n_bands)
-        return make_near_dedup_processor(corpus_dir, n_buckets=args.n_bands)
-
     log("warmup batch ...")
-    make_processor(fresh_copy())(batch, 0)
+    make_processor(fam, fresh_copy(), args.n_bands)(batch, 0)
 
     corpus = fresh_copy()
     walls: dict[str, float] = {}
@@ -183,16 +130,16 @@ def main() -> None:
 
         return wrap
 
-    mod.combined_touched_bands = timed(
-        "touched_bands", mod.combined_touched_bands
+    dedup_stream.combined_touched_bands = timed(
+        "touched_bands", dedup_stream.combined_touched_bands
     )
-    mod.append_many = timed("append_many", mod.append_many)
+    dedup_stream.append_many = timed("append_many", dedup_stream.append_many)
     BandedFingerprintIndex.read_bands = timed(
         "read_bands", BandedFingerprintIndex.read_bands
     )
     # corpus write (which evaluates the dedup lineage) has no seam to
     # wrap without touching product code: report it as the remainder
-    process = make_processor(corpus)
+    process = make_processor(fam, corpus, args.n_bands)
     if args.steady_warmup:
         # steady-state shape: drive THIS processor instance through one
         # disjoint novel batch first, so its per-instance caches (the
