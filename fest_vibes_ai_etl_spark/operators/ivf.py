@@ -20,8 +20,12 @@ adds vectors under the frozen quantizer per micro-batch, guarded against
 replays by an anti-join over the batch's own cells only, and lands them
 through the index stores' shared ``PartitionedAppend``
 (``streaming/banded_index.py``). Updates go through
-:func:`revise_ivf_vector`, deletes through :func:`delete_from_ivf_index`;
-both are absorbed at re-train/rebuild.
+:func:`revise_ivf_vector` (folded in by :func:`absorb_ivf_revisions`),
+deletes through :func:`delete_from_ivf_index`; a re-train/rebuild absorbs
+both. Those three ops are the versioned-identity protocol owned by
+``streaming/revisions.py`` (shared with the search index); this module
+supplies only the quantizer check, the cell assignment and the
+``cell_id=`` dirs.
 """
 
 from __future__ import annotations
@@ -32,6 +36,18 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, pandas_udf
 
 from ..functions import vector as V
+from ..streaming.revisions import (
+    absorb,
+    apply_revisions,
+    burn,
+    latest_rows,
+    partitions_holding,
+    read_or_empty,
+    read_revisions,
+    revise,
+    sidecar_dir,
+)
+from ..streaming.state_store import has_data_files
 from ..streaming.writer_lease import fenced
 
 
@@ -323,20 +339,6 @@ def centers_fingerprint(centers: list[list[float]]) -> str:
     return h.hexdigest()
 
 
-def _dir_has_data_files(fs, jpath, d: str) -> bool:
-    """True when a directory holds at least one non-hidden file — i.e.
-    something a parquet reader would actually open. An append-crash can
-    leave cell directories that exist but are EMPTY (created before any
-    final rename landed); schema inference over zero data files throws,
-    which would wedge every replay of exactly the crash the replay guard
-    exists to heal, so reads are gated on this check. Listing is bounded:
-    callers only probe the batch's own cells (≤ nlist directories)."""
-    return any(
-        not st.getPath().getName().startswith(("_", "."))
-        for st in fs.listStatus(jpath(d))
-    )
-
-
 def _check_add_layout(
     spark,
     fs,
@@ -402,11 +404,10 @@ def _check_add_layout(
             meta["id_type"] = id_type
             hadoop_write_json(spark, meta_path, meta)
         return
-    jpath = jvm.org.apache.hadoop.fs.Path
-    root = jpath(index_dir)
+    root = jvm.org.apache.hadoop.fs.Path(index_dir)
     has_data = fs.exists(root) and any(
         st.getPath().getName().startswith("cell_id=")
-        and _dir_has_data_files(fs, jpath, str(st.getPath()))
+        and has_data_files(spark, str(st.getPath()))
         for st in fs.listStatus(root)
     )
     if has_data:
@@ -682,6 +683,33 @@ def make_index_add_processor(
     return process
 
 
+def _add_meta(spark, index_dir: str, required: bool = False) -> dict | None:
+    """The incremental-add index's ``_meta.json`` (None when absent);
+    ``required`` refuses a store without one — revise and absorb need its
+    pinned quantizer and columns."""
+    from ..streaming.banded_index import hadoop_read_json
+
+    meta = hadoop_read_json(spark, index_dir.rstrip("/") + "/_meta.json")
+    if meta is None and required:
+        raise IVFIndexLayoutError(
+            f"no _meta.json under {index_dir}: not an incremental-add IVF "
+            f"index — revise and absorb need its pinned quantizer"
+        )
+    return meta
+
+
+def _vector_schema(meta: dict, *extra: str) -> str:
+    """Spark DDL of the add index's rows (plus ``extra`` columns), typed
+    from the meta — the empty frame a store without data reads as."""
+    cols = [
+        f"{meta['id_col']} {meta.get('id_type', 'bigint')}",
+        f"{meta['vec_col']} array<double>",
+        "cell_id int",
+        *extra,
+    ]
+    return ", ".join(cols)
+
+
 @fenced("delete")
 def delete_from_ivf_index(spark, index_dir: str, ids: list) -> int:
     """Tombstone vector ids in an incremental-add IVF index — the
@@ -695,92 +723,40 @@ def delete_from_ivf_index(spark, index_dir: str, ids: list) -> int:
     the (already-erased) corpus via :func:`build_ivf_index` — the same
     offline event that absorbs updates. Returns how many of the ids are
     currently stored (all requested ids are tombstoned regardless)."""
-    from pyspark.errors import AnalysisException
-    from pyspark.sql import types as T
-
-    from ..streaming.banded_index import hadoop_read_json
-    from ..streaming.tombstones import tombstones_path
-
-    meta = hadoop_read_json(spark, index_dir.rstrip("/") + "/_meta.json")
-    id_col = (meta or {}).get("id_col", "vec_id")
-    ids_df = None
-    stored = 0
+    meta = _add_meta(spark, index_dir) or {}
     try:
-        # a delete may race the add stream's first batch (no cell data
-        # yet, or only crash-emptied cell dirs): the ids still burn.
-        # Count over the RESOLVED view (revisions applied, prior
-        # tombstones excluded) so insert-via-revise vectors register.
-        stored_df = read_ivf_index(spark, index_dir).select(id_col)
-        ids_df = spark.createDataFrame(
-            [(i,) for i in ids], T.StructType([stored_df.schema[id_col]])
-        )
-        # distinct ids, not matching rows: crash-replay residue could
-        # duplicate a vector row and over-count the report
-        stored = (
-            stored_df.join(F.broadcast(ids_df), id_col, "left_semi")
-            .distinct()
-            .count()
-        )
-    except AnalysisException as exc:
-        from ..errors import is_missing_or_dataless
-
-        if not is_missing_or_dataless(exc):
-            raise
-        idt = (meta or {}).get("id_type", "bigint")
-        ids_df = spark.createDataFrame([(i,) for i in ids], f"{id_col} {idt}")
-    ids_df.distinct().coalesce(1).write.mode("append").parquet(
-        tombstones_path(index_dir)
+        # the RESOLVED view (revisions applied, prior tombstones
+        # excluded), so insert-via-revise vectors register
+        resolved = read_ivf_index(spark, index_dir)
+    except IVFIndexLayoutError:
+        resolved = None  # no layout and no cell data yet: the ids still burn
+    return burn(
+        spark, index_dir, ids, meta.get("id_col", "vec_id"), resolved,
+        meta.get("id_type", "bigint"),
     )
-    # the set's own lifecycle: every request appends one file, so the
-    # delete op compacts past the threshold (deletes already run between
-    # batches — the same single-writer window maintenance uses)
-    from ..streaming.tombstones import maintain_tombstones
-
-    maintain_tombstones(spark, index_dir)
-    return int(stored)
 
 
 @fenced("revise")
 def revise_ivf_vector(
     spark, index_dir: str, centers: list[list[float]], vec_id, new_vec
 ) -> int:
-    """UPDATE a stored vector in place — the search family's versioned-
-    identity revise (``revise_search_document``) for the IVF add index:
-    the new embedding is assigned under the FROZEN quantizer (fingerprint
-    must match the stored layout — a re-trained quantizer is a rebuild,
-    not a revise), written to a ``<index_dir>_rev`` sidecar under
-    (id, rev), and a max-rev marker makes :func:`read_ivf_index` serve it
-    while anti-joining the stale main-store row. Refuses tombstoned ids
+    """UPDATE a stored vector in place — the versioned-identity revise
+    (``streaming/revisions.py``) for the IVF add index: the new embedding
+    is assigned under the FROZEN quantizer (fingerprint must match the
+    stored layout — a re-trained quantizer is a rebuild, not a revise),
+    written to a ``<index_dir>_rev`` sidecar under (id, rev), and a
+    max-rev marker makes :func:`read_ivf_index` serve it while
+    anti-joining the stale main-store row. Refuses tombstoned ids
     (erasure burns are permanent). Marker-last crash discipline with a
-    guarded (id, rev) anti-join, so re-runs converge. Physical absorption
-    at quantizer re-train/rebuild, like deletes. Returns the new revision
-    number. Owner op (single-writer window).
+    residue purge on retry, so re-runs converge. Physical absorption via
+    :func:`absorb_ivf_revisions` or at quantizer re-train/rebuild.
+    Returns the new revision number. Owner op (single-writer window).
 
     Reference behavior matched: the loader's routine upsert overwrites
-    the row and re-embeds (/root/reference/src/loader/service.py:324-422,
-    702-806) — here the re-embed happens upstream and the index absorbs
-    the new vector incrementally."""
-    from pyspark.errors import AnalysisException
-
-    from ..errors import is_missing_or_dataless
-    from ..streaming.banded_index import hadoop_read_json
-    from ..streaming.incremental_search import (
-        invalidate_probe_memo,
-        read_revisions,
-    )
-    from ..streaming.state_store import compact_small_files
-    from ..streaming.tombstones import read_tombstones
-
-    # memo contract: this op compacts the _rev sidecar (residue purge +
-    # exit compaction) — invalidate at ENTRY so a crash mid-compaction
-    # can't hide behind a same-session memoized 'healed' claim
-    invalidate_probe_memo(index_dir)
-    meta = hadoop_read_json(spark, index_dir.rstrip("/") + "/_meta.json")
-    if meta is None:
-        raise IVFIndexLayoutError(
-            f"no _meta.json under {index_dir}: not an incremental-add IVF "
-            f"index — revise needs the pinned quantizer fingerprint"
-        )
+    the row and re-embeds (``src/loader/service.py:324-422, 702-806``) —
+    here the re-embed happens upstream and the index absorbs the new
+    vector incrementally."""
+    meta = _add_meta(spark, index_dir, required=True)
     if meta.get("centers_fingerprint") != centers_fingerprint(centers):
         raise IVFIndexLayoutError(
             f"revise refused for {index_dir}: the caller's quantizer does "
@@ -789,177 +765,50 @@ def revise_ivf_vector(
             f"a quantizer change is a rebuild"
         )
     id_col, vec_col = meta["id_col"], meta["vec_col"]
-    tomb = read_tombstones(spark, index_dir, cols=[id_col])
-    if tomb is not None and tomb.filter(F.col(id_col) == F.lit(vec_id)).count():
-        raise ValueError(
-            f"revise refused: id {vec_id!r} is tombstoned (erased) in "
-            f"{index_dir} — erasure burns are permanent; re-ingest under a "
-            f"new id or rebuild the index"
-        )
-    revs = read_revisions(spark, index_dir, id_col)
-    cur = 0
-    if revs is not None:
-        row = revs.filter(F.col(id_col) == F.lit(vec_id)).collect()
-        cur = int(row[0]["rev"]) if row else 0
-    new_rev = cur + 1
     idt = meta.get("id_type", "bigint")
     one = spark.createDataFrame(
         [(vec_id, [float(x) for x in new_vec])],
         f"{id_col} {idt}, {vec_col} array<double>",
     )
-    rows = assign_to_centers(one, centers, id_col, vec_col).withColumn(
-        "rev", F.lit(new_rev).cast("int")
+    rows = assign_to_centers(one, centers, id_col, vec_col)
+    return revise(
+        spark, index_dir, id_col, idt, vec_id, [(rows, sidecar_dir(index_dir))]
     )
-    rdir = index_dir.rstrip("/") + "_rev"
-    # a dead prior attempt may have landed a DIFFERENT vector at
-    # (id, new_rev) — purge the residue physically, then append fresh
-    # (one coalesced file per append: committer atomicity means every
-    # crash window leaves nothing or one complete row)
-    residue = 0
-    try:
-        residue = (
-            spark.read.parquet(rdir)
-            .filter(
-                (F.col(id_col) == F.lit(vec_id))
-                & (F.col("rev") == F.lit(new_rev))
-            )
-            .count()
-        )
-    except AnalysisException as exc:
-        if not is_missing_or_dataless(exc):
-            raise
-    if residue:
-        compact_small_files(
-            spark, rdir,
-            exclude=F.broadcast(
-                spark.createDataFrame(
-                    [(vec_id, new_rev)], f"{id_col} {idt}, rev int"
-                )
-            ),
-            exclude_cols=[id_col, "rev"],
-            force=True, include_graduated=True,
-        )
-    rows.coalesce(1).write.mode("append").parquet(rdir)
-    # marker LAST: from here the new rev is live at every probe
-    spark.createDataFrame(
-        [(vec_id, new_rev)], f"{id_col} {idt}, rev int"
-    ).coalesce(1).write.mode("append").parquet(
-        index_dir.rstrip("/") + "_revisions"
-    )
-    compact_small_files(spark, rdir)
-    compact_small_files(
-        spark,
-        index_dir.rstrip("/") + "_revisions",
-        transform=lambda df: df.distinct(),
-    )
-    return new_rev
 
 
 @fenced("absorb")
 def absorb_ivf_revisions(spark, index_dir: str) -> dict:
     """Physically fold pending vector revisions into the main
-    cell-partitioned store — the search family's
-    ``absorb_search_revisions`` for the IVF add index: each revised id's
-    stale row drops from its old cell, its latest-rev row lands in its
-    new cell, and the ``(id, rev)`` markers + ``_rev`` sidecar empty, so
+    cell-partitioned store: each revised id's stale row drops from its
+    old cell, its latest-rev row lands in its new cell, and the
+    ``(id, rev)`` markers + ``_rev`` sidecar empty, so
     :func:`read_ivf_index` returns to the zero-added-plan fast path
-    (``read_revisions`` → one stat → None) without a quantizer rebuild.
-    Probe-equivalent at every crash window (same argument as the search
-    family: while markers exist, probes anti-join ALL main rows of
-    revised ids — half-absorbed copies included — and serve the sidecar;
-    the marker-dir drop is the commit point; re-runs drop before they
-    union, so they converge). Like delete/revise, an owner op for a
-    HEALTHY stream: replay any crashed add batch first — a pruned-guard
-    replay checks the batch's own cells, and absorption may have moved a
-    revised id out of them."""
-    from pyspark.errors import AnalysisException
-
-    from ..errors import is_missing_or_dataless, is_path_not_found
-    from ..streaming.banded_index import hadoop_read_json
-    from ..streaming.incremental_search import (
-        invalidate_probe_memo,
-        read_revisions,
-    )
-    from ..streaming.state_store import compact_small_files
-
-    invalidate_probe_memo(index_dir)
-    meta = hadoop_read_json(spark, index_dir.rstrip("/") + "/_meta.json")
-    if meta is None:
-        raise IVFIndexLayoutError(
-            f"no _meta.json under {index_dir}: not an incremental-add IVF "
-            f"index"
-        )
+    without a quantizer rebuild. Probe-equivalent at every crash window,
+    with the marker drop as the commit point (``revisions.absorb``). Like
+    delete/revise, an owner op for a HEALTHY stream: replay any crashed
+    add batch first — a pruned-guard replay checks the batch's own
+    cells, and absorption may have moved a revised id out of them."""
+    meta = _add_meta(spark, index_dir, required=True)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
-    rdir = index_dir.rstrip("/") + "_rev"
-    mdir = index_dir.rstrip("/") + "_revisions"
-    jvm = spark._jvm
+    root = index_dir.rstrip("/")
 
-    def _rm(path: str) -> None:
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(p):
-            fs.delete(p, True)
-
-    revs = read_revisions(spark, index_dir, id_col)
-    if revs is None:
-        _rm(rdir)  # orphans from a crash between marker + sidecar drops
-        return {"absorbed_vectors": 0, "cells_rewritten": 0}
-    rev_ids = revs.select(id_col)
-    n_vecs = revs.count()
-    try:
-        fresh = (
-            spark.read.parquet(rdir)
-            .join(revs, [id_col, "rev"], "left_semi")
-            .select(id_col, vec_col, "cell_id")
-        )
-        fresh.schema
-    except AnalysisException as exc:
-        if not is_missing_or_dataless(exc):
-            raise
-        fresh = spark.createDataFrame(
-            [],
-            f"{id_col} {meta.get('id_type', 'bigint')}, "
-            f"{vec_col} array<double>, cell_id int",
-        )
-    cells: set[int] = set()
-    try:
-        cells |= {
-            r[0]
-            for r in spark.read.parquet(index_dir)
-            .join(rev_ids, id_col, "left_semi")
-            .select("cell_id")
-            .distinct()
-            .collect()
-        }
-    except AnalysisException as exc:
-        if not is_path_not_found(exc):
-            raise
-    cells |= {r[0] for r in fresh.select("cell_id").distinct().collect()}
-    for c in sorted(cells):
-        d = f"{index_dir.rstrip('/')}/cell_id={c}"
-        fresh_c = fresh.filter(F.col("cell_id") == c).select(id_col, vec_col)
-        jp = jvm.org.apache.hadoop.fs.Path(d)
-        fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-        has_files = fs.exists(jp) and any(
-            not st.getPath().getName().startswith(("_", "."))
-            and st.getPath().getName().endswith(".parquet")
-            for st in fs.listStatus(jp)
-        )
-        if has_files:
-            compact_small_files(
-                spark, d,
-                exclude=rev_ids, exclude_cols=[id_col],
-                transform=lambda df, f=fresh_c: df.unionByName(f),
-                force=True, include_graduated=True,
+    def targets(revs: DataFrame) -> list:
+        fresh = latest_rows(
+            spark, sidecar_dir(index_dir), revs, id_col,
+            _vector_schema(meta, "rev int"),
+        ).select(id_col, vec_col, "cell_id")
+        cells = partitions_holding(
+            spark, index_dir, revs.select(id_col), id_col, "cell_id"
+        ) | {r[0] for r in fresh.select("cell_id").distinct().collect()}
+        return [
+            (
+                f"{root}/cell_id={c}",
+                fresh.filter(F.col("cell_id") == c).select(id_col, vec_col),
             )
-        elif not fresh_c.isEmpty():
-            fresh_c.coalesce(1).write.mode("append").parquet(d)
-    # COMMIT POINT: markers first, sidecar second (see the search
-    # family's ordering argument — the reverse would leave marked ids
-    # with nothing to serve)
-    _rm(mdir)
-    _rm(rdir)
-    invalidate_probe_memo(index_dir)
+            for c in sorted(cells)
+        ]
+
+    n_vecs, cells = absorb(spark, index_dir, id_col, targets)
     return {"absorbed_vectors": n_vecs, "cells_rewritten": len(cells)}
 
 
@@ -970,26 +819,26 @@ def read_ivf_index(spark, index_dir: str, heal: str = "repair") -> DataFrame:
     :func:`ivf_topk` — a deleted vector is then unretrievable NOW, a
     revised one retrievable under its new embedding NOW, and the eventual
     rebuild (which drops rows physically and the sidecars with the old
-    directory) returns identical results. ``heal="detect"`` is the
-    read-only mode: a crashed tombstone-revoke swap raises instead of
-    being repaired (repair renames — single-writer only)."""
-    from ..streaming.banded_index import hadoop_read_json
-    from ..streaming.incremental_search import (
-        _apply_revisions,
-        read_revisions,
-    )
+    directory) returns identical results. A store with a meta but no cell
+    data yet (an empty first add batch, or a crash between the meta and
+    the data) reads as empty main rows, so its insert-via-revise vectors
+    still serve; with neither, :class:`IVFIndexLayoutError`.
+    ``heal="detect"`` is the read-only mode: a crashed tombstone-revoke
+    swap or sidecar compaction raises instead of being repaired (repair
+    renames — single-writer only)."""
     from ..streaming.tombstones import read_tombstones
 
-    meta = hadoop_read_json(spark, index_dir.rstrip("/") + "/_meta.json")
+    meta = _add_meta(spark, index_dir)
+    df = read_or_empty(spark, index_dir, meta and _vector_schema(meta))
+    if df is None:
+        raise IVFIndexLayoutError(
+            f"no cell data and no _meta.json under {index_dir}: not an IVF "
+            f"index"
+        )
     id_col = (meta or {}).get("id_col", "vec_id")
-    df = spark.read.parquet(index_dir)
-    revs = read_revisions(spark, index_dir, id_col)
-    # the shared resolver (search family's): crash-heals the _rev dir
-    # before reading it (detect mode raises instead), drops revised ids'
-    # stale main rows, unions the latest-rev rows
-    df = _apply_revisions(
-        spark, index_dir, df, id_col, revs,
-        rev_dir=index_dir.rstrip("/") + "_rev", cols=df.columns,
+    df = apply_revisions(
+        spark, index_dir, df, id_col, read_revisions(spark, index_dir, id_col),
+        sidecar_dir(index_dir), df.columns,
         heal="detect" if heal == "detect" else "repair",
     )
     tomb = read_tombstones(spark, index_dir, cols=[id_col], heal=heal)

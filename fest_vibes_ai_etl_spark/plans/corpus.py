@@ -330,7 +330,7 @@ def _ivf_revised_store(spark: SparkSession, sf_dir: str):
     end, without poisoning the shared batch index. Idempotent and
     crash-convergent: the add batch replays as a no-op (anti-join guard)
     and the revise marker is written last."""
-    from ..streaming.incremental_search import read_revisions
+    from ..streaming.revisions import read_revisions
 
     emb = table(spark, sf_dir, "embeddings")
     _, centers = _ivf_index(spark, sf_dir)  # shared frozen quantizer

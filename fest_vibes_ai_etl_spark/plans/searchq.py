@@ -146,10 +146,8 @@ def _revised_store(spark: SparkSession, sf_dir: str) -> str:
     has been UPDATED in place via revise_search_document — the versioned
     UPDATE path end to end. Idempotent per source fingerprint."""
     from ..operators.search import postings_store_path
-    from ..streaming.incremental_search import (
-        read_revisions,
-        revise_search_document,
-    )
+    from ..streaming.incremental_search import revise_search_document
+    from ..streaming.revisions import read_revisions
 
     path = postings_store_path(sf_dir) + "_revq"
     docs = table(spark, sf_dir, "documents")
@@ -405,9 +403,9 @@ def search_rocchio_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.incremental_search import (
         _search_tombstones,
-        read_revisions,
         recover_search_index,
     )
+    from ..streaming.revisions import read_revisions
 
     docs = table(spark, sf_dir, "documents")
     load_or_build_postings_store(spark, docs, sf_dir)  # stage once per sf

@@ -37,8 +37,12 @@ sidecars and the IVF cell store:
   (round 13) — the UPDATE path: :func:`revise_search_document` indexes
   edited content under a versioned identity (id, rev) and probes
   resolve the LATEST rev everywhere (stale main-store rows are
-  anti-joined away); physical absorption at rebuild. Erasure burns stay
-  permanent — revise refuses tombstoned ids.
+  anti-joined away); :func:`absorb_search_revisions` folds them into
+  the main store. Erasure burns stay permanent — revise refuses
+  tombstoned ids. The protocol (revise, absorb, the delete burn and the
+  probe-side resolution) is owned by ``streaming/revisions.py``, shared
+  with the IVF cell store; this module supplies only the search rows
+  and the ``tb=`` / ``db=`` / doclen dirs they land in.
 
 Layout guard: ``<index_dir>/_meta.json`` pins ``n_term_buckets`` /
 ``id_col`` (staged-then-renamed write — a torn meta cannot wedge
@@ -101,6 +105,25 @@ from .banded_index import (
     hadoop_read_json,
 )
 from .dedup_stream import _heal_exact_index, _settle_indexes
+from .revisions import (
+    absorb,
+    apply_revisions,
+    burn,
+    drop_revisions,
+    latest_rows,
+    markers_dir,
+    partitions_holding,
+    read_or_empty,
+    read_revisions,
+    revise,
+    sidecar_dir,
+)
+from .state_store import (
+    _memo_for,
+    has_data_files,
+    invalidate_probe_memo,
+    recover_dirs,
+)
 from .writer_lease import fenced
 
 _META = "_meta.json"
@@ -139,19 +162,12 @@ def _forward_dir(index_dir: str) -> str:
     return index_dir.rstrip("/") + "/forward"
 
 
-def _revisions_dir(index_dir: str) -> str:
-    """The revision markers: (id, rev) rows, max-rev-wins per id. A doc
-    with any marker is REVISED — probes drop its main-store rows and
-    serve the ``_rev`` sidecar rows at its latest rev instead."""
-    return index_dir.rstrip("/") + "_revisions"
-
-
 def _rev_terms_dir(index_dir: str) -> str:
-    return index_dir.rstrip("/") + "_rev/terms"
+    return sidecar_dir(index_dir, "terms")
 
 
 def _rev_doclen_dir(index_dir: str) -> str:
-    return index_dir.rstrip("/") + "_rev/doclen"
+    return sidecar_dir(index_dir, "doclen")
 
 
 def _id_pairs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -213,64 +229,6 @@ def _check_meta(
         settle_forward_index(spark, index_dir, n_doc_buckets)
 
 
-# --- per-(session, store) probe memo -----------------------------------------
-#
-# The probe's fixed per-call overhead (meta py4j read, crash-heal manifest
-# stats, per-bucket dataless listings) is a correctness cost exactly ONCE
-# per session per store — everything it guards against is either immutable
-# (the layout meta), monotone (a bucket with data never loses it except
-# under maintenance/purge), or owner-op-caused (a crashed compaction's
-# journal). So probes memoize per (Spark application id, store):
-#
-# - ``meta``: the layout dict — immutable after creation; the advisory
-#   backfill path (_check_meta) invalidates.
-# - ``healed``: directories recover_dir_compaction already cleared this
-#   session. Sound because only maintenance/purge can CREATE a new crash
-#   journal, and both invalidate the memo at ENTRY — a pass that dies
-#   mid-compaction leaves the memo empty, so the next probe re-heals.
-# - ``nonempty``: postings buckets known to hold data (positive knowledge
-#   only — absence is never memoized, so a stream append that creates a
-#   bucket between probes is picked up by the next listing).
-#
-# Cross-session limits are the SAME single-writer contract the heal path
-# already documents: maintenance never runs concurrently with a probe of
-# the same store. A foreign session's writes between this session's
-# probes are appends (visible: never memoized away) or its own
-# maintenance (which must not overlap probes anyway).
-
-_PROBE_MEMO: dict = {}
-
-
-def _memo_for(spark, index_dir: str) -> dict:
-    """The per-(session, store) memo, VALIDATED against the store's
-    generation stamp (round 14): every fenced owner op — in this session
-    or ANY OTHER — bumps ``<store>/_gen`` at entry, so a memo whose
-    recorded gen no longer matches is from before some writer ran (or
-    crashed mid-run) and is dropped wholesale. Cost: one directory
-    listing per call — the cross-session closure of the staleness seam
-    the same-session invalidate-at-entry cannot see (a foreign writer
-    process dying mid-compaction while this session holds a memoized
-    'healed' claim)."""
-    from .writer_lease import read_store_gen
-
-    key = (spark.sparkContext.applicationId, index_dir.rstrip("/"))
-    gen = read_store_gen(spark, index_dir)
-    memo = _PROBE_MEMO.get(key)
-    if memo is None or memo.get("gen") != gen:
-        memo = {"meta": None, "healed": set(), "nonempty": set(), "gen": gen}
-        _PROBE_MEMO[key] = memo
-    return memo
-
-
-def invalidate_probe_memo(index_dir: str) -> None:
-    """Drop every session's memo of this store — called at the ENTRY of
-    any op that can rewrite/shrink its directories (maintenance, purge)
-    or change its meta (advisory backfill)."""
-    tag = index_dir.rstrip("/")
-    for k in [k for k in _PROBE_MEMO if k[1] == tag]:
-        del _PROBE_MEMO[k]
-
-
 def load_index_meta(spark, index_dir: str) -> dict:
     memo = _memo_for(spark, index_dir)
     if memo["meta"] is not None:
@@ -326,21 +284,9 @@ def recover_search_index(
     else:
         pdir = _postings_dir(index_dir)
         dirs = [f"{pdir}/tb={b}" for b in buckets]
-    _recover_dirs(
+    recover_dirs(
         spark, index_dir, [_doclen_dir(index_dir)] + dirs, memoize=memoize
     )
-
-
-def _recover_dirs(spark, index_dir: str, dirs, memoize: bool = True) -> None:
-    """Heal crashed compactions on the given directories, skipping ones
-    the probe memo already cleared this session (see the memo contract)."""
-    from .state_store import recover_dir_compaction
-
-    healed = _memo_for(spark, index_dir)["healed"] if memoize else set()
-    for d in dirs:
-        if d not in healed:
-            recover_dir_compaction(spark, d)
-            healed.add(d)
 
 
 def _live_bucket_paths(
@@ -371,13 +317,8 @@ def _live_bucket_paths(
 
             existing = set(hadoop_list_names(jvm, fs, jp))
             for name in unknown:
-                if name not in existing:
-                    continue
                 d = f"{root_dir}/{name}"
-                if any(
-                    not st.getPath().getName().startswith(("_", "."))
-                    for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(d))
-                ):
+                if name in existing and has_data_files(spark, d):
                     paths.append(d)
                     memo_ne.add(d)
         paths.sort()
@@ -427,9 +368,6 @@ def settle_forward_index(
     the gate field — a crash anywhere re-runs the backfill; probes never
     see the field without complete data. Owner op (single-writer
     window)."""
-    from pyspark.errors import AnalysisException
-
-    from ..errors import is_missing_or_dataless
     from .banded_index import hadoop_write_json
 
     meta = load_index_meta(spark, index_dir)
@@ -445,13 +383,7 @@ def settle_forward_index(
     # leaves segment+inputs double-visible, and unlike a transient probe
     # this read's duplicates would be PERSISTED into the sidecar
     recover_search_index(spark, index_dir, memoize=False)
-    post = None
-    try:
-        post = spark.read.parquet(_postings_dir(index_dir))
-        post.schema
-    except AnalysisException as exc:
-        if not is_missing_or_dataless(exc):
-            raise
+    post = read_or_empty(spark, _postings_dir(index_dir))
     if "n_doc_buckets" in meta and post is None:
         return ndb  # gate present, nothing to build from (fresh/purged)
     if post is not None:
@@ -523,7 +455,7 @@ def forward_terms_for_docs(
                     f"repair (owner: maintain_search_index)."
                 )
     elif heal:
-        _recover_dirs(spark, index_dir, dirs)
+        recover_dirs(spark, index_dir, dirs)
     paths = _live_bucket_paths(spark, index_dir, fdir, [f"db={b}" for b in dbs])
     if not paths:
         idt = meta.get("id_type", "bigint")
@@ -539,9 +471,10 @@ def forward_terms_for_docs(
         )
     if revs is _UNSET:
         revs = read_revisions(spark, index_dir, id_col)
-    out = _apply_revisions(
+    out = apply_revisions(
         spark, index_dir, out, id_col, revs,
-        terms=None, doc_ids=ids,
+        _rev_terms_dir(index_dir), ["term", id_col, "tf"],
+        where=F.col(id_col).isin(ids),
         heal="detect" if heal == "detect" else "repair",
     )
     if tomb is _UNSET:
@@ -551,110 +484,20 @@ def forward_terms_for_docs(
     return out
 
 
-def read_revisions(spark, index_dir: str, id_col: str = "doc_id"):
-    """Current revision per revised doc — (id, rev = max marker), or None
-    when no revise was ever issued (ONE filesystem stat, the
-    read_tombstones discipline). Broadcast-hinted under the same byte
-    threshold as tombstones (revised sets are edit-rate-bounded; a set
-    grown past driver scale degrades to a shuffle join)."""
-    from .tombstones import TOMBSTONE_BROADCAST_MAX_BYTES
-
-    jvm = spark._jvm
-    rdir = _revisions_dir(index_dir)
-    p = jvm.org.apache.hadoop.fs.Path(rdir)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return None
-    visible = [
-        st
-        for st in fs.listStatus(p)
-        if not st.getPath().getName().startswith(("_", "."))
-    ]
-    if not visible:
-        return None  # dataless (a clear fold raced the dir delete)
-    nbytes = sum(st.getLen() for st in visible)
-    df = (
-        spark.read.parquet(rdir)
-        .groupBy(id_col)
-        .agg(F.max("rev").alias("rev"))
-    )
-    if nbytes <= TOMBSTONE_BROADCAST_MAX_BYTES:
-        df = F.broadcast(df)
-    return df
-
-
-def _apply_revisions(
-    spark, index_dir: str, main: DataFrame, id_col: str, revs,
-    terms: list[str] | None = None, doc_ids: list | None = None,
-    doclen: bool = False, rev_dir: str | None = None,
-    cols: list[str] | None = None, heal="repair",
-):
-    """Resolve document revisions over a main-store read: drop every
-    revised id's stale rows, union in the ``_rev`` sidecar rows at each
-    id's LATEST rev. ``revs`` is the resolved marker frame (None = no
-    revise ever issued — zero added plan). ``terms``/``doc_ids`` push
-    the caller's pruning into the sidecar read; ``doclen=True`` reads
-    the (id, rev, dl) sidecar instead of (id, rev, term, tf).
-    ``rev_dir``/``cols`` generalize to other families' sidecars (the IVF
-    ``_rev`` store passes its own). The sidecar read is crash-HEALED
-    first (memoized — revise/maintenance compact these dirs and a death
-    post-rename would otherwise double-serve every revised row to every
-    probe); ``heal="detect"`` raises for read-only consumers instead."""
-    if revs is None:
-        return main
-    from pyspark.errors import AnalysisException
-
-    from ..errors import is_missing_or_dataless
-
-    out = main.join(revs.select(id_col), id_col, "left_anti")
-    if rev_dir is None:
-        rev_dir = (
-            _rev_doclen_dir(index_dir) if doclen else _rev_terms_dir(index_dir)
-        )
-    if heal == "detect":
-        from .state_store import InFlightRecoveryError, detect_dir_compaction
-
-        if detect_dir_compaction(spark, rev_dir):
-            raise InFlightRecoveryError(
-                f"revision sidecar at {rev_dir}: unhealed compaction "
-                f"journal — read-only probes must not repair (owner: "
-                f"revise/maintain ops)."
-            )
-    else:
-        _recover_dirs(spark, index_dir, [rev_dir])
-    try:
-        side = spark.read.parquet(rev_dir)
-        side.schema
-    except AnalysisException as exc:
-        if not is_missing_or_dataless(exc):
-            raise
-        return out  # markers without rows: nothing newer to serve
-    if terms is not None:
-        side = side.filter(F.col("term").isin(terms))
-    if doc_ids is not None:
-        side = side.filter(F.col(id_col).isin(doc_ids))
-    # inner join on (id, rev) keeps exactly the latest revision's rows
-    side = side.join(revs, [id_col, "rev"], "left_semi")
-    if cols is None:
-        cols = [id_col, "dl"] if doclen else ["term", id_col, "tf"]
-    return out.unionByName(side.select(*cols))
-
-
 @fenced("revise")
 def revise_search_document(
     spark, index_dir: str, doc_id, new_text: str
 ) -> int:
     """UPDATE a document's indexed content in place — the reference's
     routine upsert-overwrites-and-re-embeds behavior
-    (/root/reference/src/loader/service.py:324-422) for the append-only
-    index: the old rows are never rewritten; instead the new content is
-    indexed under a VERSIONED identity into the ``_rev`` sidecar and a
-    monotone (id, rev) marker makes every probe serve the latest rev
-    (older revs and the main-store rows are anti-joined away). An id
-    with no prior index entry is inserted (upsert semantics). Physical
-    absorption of revisions happens at index REBUILD (fingerprint-keyed
-    stores rebuild at a new path; an in-place rebuild must also drop the
-    ``_rev``/``_revisions`` siblings).
+    (``src/loader/service.py:324-422``) for the append-only index, through
+    the versioned-identity protocol (``streaming/revisions.py``): the new
+    content's (term, tf) and doclen rows land in the ``_rev/terms`` and
+    ``_rev/doclen`` sidecars under (id, rev), and a max-rev marker makes
+    every probe serve them (older revs and the main-store rows are
+    anti-joined away). An id with no prior index entry is inserted
+    (upsert semantics). Physical absorption: :func:`absorb_search_revisions`
+    (maintenance runs it past a revised fraction) or a rebuild.
 
     NOT for erasure, and refuses burned ids: a tombstoned id was ERASED
     — serving new content under it would contradict the suppression
@@ -663,108 +506,31 @@ def revise_search_document(
     erased text was purged from), so dedup burns stay permanent by
     design; route true erase-then-recreate through a new id.
 
-    Crash-safe without a journal: the marker is written LAST, so a death
-    before it leaves the new rows invisible (probes still serve the old
-    rev) and a re-run converges — the sidecar appends are guarded by an
-    (id, rev[, term]) anti-join against what the dead attempt landed.
-    Returns the new revision number. Owner op (single-writer window)."""
-    from pyspark.errors import AnalysisException
-    from pyspark.sql import types as T
-
-    from ..errors import is_missing_or_dataless
+    Crash-safe without a journal (marker last; a retry purges a dead
+    attempt's residue first — :func:`revisions.revise`). Returns the new
+    revision number. Owner op (single-writer window)."""
     from ..functions import text as TXT
-    from .tombstones import read_tombstones
 
-    # memo contract: any op that may CREATE a compaction journal (the
-    # residue purge + the exit compactions below) invalidates at ENTRY —
-    # a crash mid-compaction then leaves no memoized 'healed' claim to
-    # mask the fresh journal from same-session probes
-    invalidate_probe_memo(index_dir)
     meta = load_index_meta(spark, index_dir)
     id_col = meta["id_col"]
-    tomb = read_tombstones(spark, index_dir, cols=[id_col])
-    if tomb is not None and tomb.filter(F.col(id_col) == F.lit(doc_id)).count():
-        raise ValueError(
-            f"revise refused: id {doc_id!r} is tombstoned (erased) in "
-            f"{index_dir} — erasure burns are permanent; re-ingest under "
-            f"a new id or rebuild the index from a corpus that contains "
-            f"the doc"
-        )
-    revs = read_revisions(spark, index_dir, id_col)
-    cur = 0
-    if revs is not None:
-        row = revs.filter(F.col(id_col) == F.lit(doc_id)).collect()
-        cur = int(row[0]["rev"]) if row else 0
-    new_rev = cur + 1
     idt = meta.get("id_type", "bigint")
     one = spark.createDataFrame(
         [(doc_id, new_text)], f"{id_col} {idt}, text string"
     )
-    toks = one.select(
-        F.col(id_col), F.explode(TXT.tokens(F.col("text"))).alias("term")
-    )
-    rows = (
-        toks.groupBy(id_col, "term")
+    terms = (
+        one.select(
+            F.col(id_col), F.explode(TXT.tokens(F.col("text"))).alias("term")
+        )
+        .groupBy(id_col, "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .withColumn("rev", F.lit(new_rev).cast("int"))
-        .select(id_col, "rev", "term", "tf")
     )
     dl = one.select(
-        F.col(id_col),
-        F.lit(new_rev).cast("int").alias("rev"),
-        F.size(TXT.tokens(F.col("text"))).alias("dl"),
+        F.col(id_col), F.size(TXT.tokens(F.col("text"))).alias("dl")
     ).filter(F.col("dl") > 0)
-    # A dead prior attempt may have landed rows at (id, new_rev) — and a
-    # RETRY may carry DIFFERENT text (the operator corrected it), so a
-    # content-blind fill-the-holes guard could weld two texts into one
-    # chimera revision. Purge the residue physically first (exact
-    # (id, rev) exclude through the journaled compactor), then append
-    # fresh: each append is one coalesced file under the committer's
-    # atomicity, so every crash window leaves either nothing or a
-    # complete, single-text row set — and the marker still lands last.
-    from .state_store import compact_small_files as _compact
-
-    key_df = F.broadcast(
-        spark.createDataFrame([(doc_id, new_rev)], f"{id_col} {idt}, rev int")
+    return revise(
+        spark, index_dir, id_col, idt, doc_id,
+        [(terms, _rev_terms_dir(index_dir)), (dl, _rev_doclen_dir(index_dir))],
     )
-    for frame, d in (
-        (rows, _rev_terms_dir(index_dir)),
-        (dl, _rev_doclen_dir(index_dir)),
-    ):
-        residue = 0
-        try:
-            residue = (
-                spark.read.parquet(d)
-                .filter(
-                    (F.col(id_col) == F.lit(doc_id))
-                    & (F.col("rev") == F.lit(new_rev))
-                )
-                .count()
-            )
-        except AnalysisException as exc:
-            if not is_missing_or_dataless(exc):
-                raise
-        if residue:
-            _compact(
-                spark, d, exclude=key_df, exclude_cols=[id_col, "rev"],
-                force=True, include_graduated=True,
-            )
-        frame.coalesce(1).write.mode("append").parquet(d)
-    # marker LAST: from here the new rev is live everywhere
-    spark.createDataFrame(
-        [(doc_id, new_rev)], f"{id_col} {idt}, rev int"
-    ).coalesce(1).write.mode("append").parquet(_revisions_dir(index_dir))
-    # the revise-side directories get the same bounded-census treatment
-    # as tombstones (one file per revise otherwise)
-    from .state_store import compact_small_files
-
-    invalidate_probe_memo(index_dir)
-    for d in (_rev_terms_dir(index_dir), _rev_doclen_dir(index_dir)):
-        compact_small_files(spark, d)
-    compact_small_files(
-        spark, _revisions_dir(index_dir), transform=lambda df: df.distinct()
-    )
-    return new_rev
 
 
 @fenced("absorb")
@@ -773,29 +539,13 @@ def absorb_search_revisions(spark, index_dir: str) -> dict:
     latest-rev rows move into their ``tb=`` postings buckets, doclen,
     and the forward sidecar; the stale main rows drop; the ``(id, rev)``
     markers and the ``_rev`` sidecars empty. Probes then return to the
-    ZERO-added-plan no-revisions fast path (``read_revisions`` → one fs
-    stat → None) without a full rebuild — the scale story for
-    high-edit-rate stores, whose probes otherwise pay the marker join +
-    rev resolution on every query forever (the round-13 limit: physical
-    absorption only rode the fingerprint-keyed rebuild). The reference's
-    UPDATE is a Postgres row overwrite
-    (/root/reference/src/loader/service.py:324-422) — absorption is that
-    overwrite executed lazily, amortized into the maintenance tick.
-
-    Probe-equivalent at EVERY crash window, so it needs no journal of
-    its own beyond the per-directory compaction manifests:
-
-    - while markers exist, probes anti-join ALL rows of revised ids from
-      the main store — including any already-absorbed fresh copies — and
-      serve the ``_rev`` sidecar, so partially-rewritten buckets are
-      invisible;
-    - the marker drop (a journaled empty-the-directory fold) is the
-      commit point: after it, the main store serves the absorbed rows
-      and the orphaned sidecar rows are never joined in (the probe's
-      (id, rev) semi-join finds no marker);
-    - a re-run converges: each bucket rewrite first drops EVERY row of
-      the revised ids (stale and previously-absorbed alike), then unions
-      the fresh rows once.
+    ZERO-added-plan no-revisions fast path without a full rebuild — the
+    scale story for high-edit-rate stores, whose probes otherwise pay the
+    marker join + rev resolution on every query forever. The reference's
+    UPDATE is a Postgres row overwrite (``src/loader/service.py:324-422``)
+    — absorption is that overwrite executed lazily, amortized into the
+    maintenance tick. Probe-equivalent at every crash window, with the
+    marker drop as the commit point (:func:`revisions.absorb`).
 
     A doc revised to empty text (no doclen row at its latest rev) is
     absorbed as a physical REMOVAL — exactly how probes already rendered
@@ -804,161 +554,43 @@ def absorb_search_revisions(spark, index_dir: str) -> dict:
     from the rev rows' term hashes), bounded by the edit set's term
     spread, never index-proportional beyond the thin scan. Owner op
     (fenced; nests inside ``maintain_search_index``'s lease)."""
-    from pyspark.errors import AnalysisException
+    from .state_store import _fs_for
 
-    from ..errors import is_missing_or_dataless, is_path_not_found
-    from .state_store import compact_small_files
-
-    invalidate_probe_memo(index_dir)
     meta = load_index_meta(spark, index_dir)
     id_col = meta["id_col"]
     idt = meta.get("id_type", "bigint")
     ntb = int(meta["n_term_buckets"])
-    revs = read_revisions(spark, index_dir, id_col)
-    rdirs = [
-        _revisions_dir(index_dir),
-        _rev_terms_dir(index_dir),
-        _rev_doclen_dir(index_dir),
-    ]
-    if revs is None:
-        # nothing pending — but a prior absorb that crashed between the
-        # marker delete and the sidecar deletes leaves orphaned _rev rows
-        # (unreachable: no markers join them in); finish that cleanup
-        jvm_ = spark._jvm
-        for d in rdirs[1:]:
-            jp = jvm_.org.apache.hadoop.fs.Path(d)
-            fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-            if fs.exists(jp):
-                fs.delete(jp, True)
-        return {"absorbed_docs": 0, "postings_buckets": 0,
-                "forward_buckets": 0}
-    recover_search_index(spark, index_dir, memoize=False)
-    _recover_dirs(spark, index_dir, rdirs, memoize=False)
-    rev_ids = revs.select(id_col)
-    n_docs = revs.count()
+    pdir, fdir = _postings_dir(index_dir), _forward_dir(index_dir)
+    _, fs, fp = _fs_for(spark, fdir)
+    forward = "n_doc_buckets" in meta and fs.exists(fp)
 
-    def _side(d: str, schema: str) -> DataFrame:
-        try:
-            df = spark.read.parquet(d)
-            df.schema
-            return df
-        except AnalysisException as exc:
-            if not is_missing_or_dataless(exc):
-                raise
-            return spark.createDataFrame([], schema)
-
-    fresh_post = (
-        _side(
-            _rev_terms_dir(index_dir),
+    def targets(revs: DataFrame) -> list:
+        recover_search_index(spark, index_dir, memoize=False)
+        rev_ids = revs.select(id_col)
+        post = latest_rows(
+            spark, _rev_terms_dir(index_dir), revs, id_col,
             f"{id_col} {idt}, rev int, term string, tf bigint",
-        )
-        .join(revs, [id_col, "rev"], "left_semi")
-        .select("term", id_col, "tf")
-    )
-    fresh_dl = (
-        _side(
-            _rev_doclen_dir(index_dir),
+        ).select("term", id_col, "tf")
+        dl = latest_rows(
+            spark, _rev_doclen_dir(index_dir), revs, id_col,
             f"{id_col} {idt}, rev int, dl bigint",
-        )
-        .join(revs, [id_col, "rev"], "left_semi")
-        .select(id_col, "dl")
-    )
-
-    pdir = _postings_dir(index_dir)
-    tbs: set[int] = set()
-    try:
-        # stale buckets: the purge op's thin semi-join scan
-        tbs |= {
-            r[0]
-            for r in spark.read.parquet(pdir)
-            .join(rev_ids, id_col, "left_semi")
-            .select("tb")
-            .distinct()
-            .collect()
+        ).select(id_col, "dl")
+        tb = term_bucket(F.col("term"), ntb)
+        tbs = partitions_holding(spark, pdir, rev_ids, id_col, "tb") | {
+            r[0] for r in post.select(tb).distinct().collect()
         }
-    except AnalysisException as exc:
-        if not is_path_not_found(exc):
-            raise
-    tbs |= {
-        r[0]
-        for r in fresh_post.select(
-            term_bucket(F.col("term"), ntb).alias("tb")
-        )
-        .distinct()
-        .collect()
-    }
+        pairs = [(f"{pdir}/tb={b}", post.filter(tb == b)) for b in sorted(tbs)]
+        if forward:
+            db = doc_bucket(F.col(id_col), int(meta["n_doc_buckets"]))
+            dbs = sorted(r[0] for r in rev_ids.select(db).distinct().collect())
+            pairs += [(f"{fdir}/db={b}", post.filter(db == b)) for b in dbs]
+        return pairs + [(_doclen_dir(index_dir), dl)]
 
-    jvm = spark._jvm
-
-    def _rewrite(d: str, fresh: DataFrame) -> None:
-        """Drop every revised id's rows, land the fresh rows — through
-        the journaled compactor when the dir has files, by direct
-        append when it doesn't (a fresh bucket no batch ever touched)."""
-        jp = jvm.org.apache.hadoop.fs.Path(d)
-        fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-        has_files = fs.exists(jp) and any(
-            not st.getPath().getName().startswith(("_", "."))
-            and st.getPath().getName().endswith(".parquet")
-            for st in fs.listStatus(jp)
-        )
-        if has_files:
-            compact_small_files(
-                spark, d,
-                exclude=rev_ids, exclude_cols=[id_col],
-                transform=lambda df: df.unionByName(fresh),
-                force=True, include_graduated=True,
-            )
-        elif not fresh.isEmpty():
-            fresh.coalesce(1).write.mode("append").parquet(d)
-
-    for b in sorted(tbs):
-        _rewrite(
-            f"{pdir}/tb={b}",
-            fresh_post.filter(term_bucket(F.col("term"), ntb) == b).select(
-                "term", id_col, "tf"
-            ),
-        )
-    dbs: list[int] = []
-    if "n_doc_buckets" in meta:
-        fdir = _forward_dir(index_dir)
-        jfp = jvm.org.apache.hadoop.fs.Path(fdir)
-        if jfp.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jfp):
-            ndb = int(meta["n_doc_buckets"])
-            dbs = sorted(
-                r[0]
-                for r in rev_ids.select(
-                    doc_bucket(F.col(id_col), ndb).alias("db")
-                )
-                .distinct()
-                .collect()
-            )
-            for b in dbs:
-                _rewrite(
-                    f"{fdir}/db={b}",
-                    fresh_post.filter(
-                        doc_bucket(F.col(id_col), ndb) == b
-                    ).select("term", id_col, "tf"),
-                )
-    _rewrite(_doclen_dir(index_dir), fresh_dl)
-    # COMMIT POINT: drop the marker dir — from here probes serve the
-    # absorbed main rows on the no-revisions fast path (read_revisions →
-    # one stat → None; a journaled fold-to-empty would instead leave a
-    # 0-row file that reads as an empty marker FRAME, keeping probes on
-    # the slow path forever). A partial (crashed) recursive delete is
-    # still probe-correct: surviving markers keep their docs on the
-    # sidecar path, deleted markers' docs serve the absorbed main rows.
-    # Sidecars drop strictly AFTER markers — the reverse order would
-    # leave marked docs with no content to serve.
-    for d in rdirs:
-        jp = jvm.org.apache.hadoop.fs.Path(d)
-        fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(jp):
-            fs.delete(jp, True)
-    invalidate_probe_memo(index_dir)
+    n_docs, dirs = absorb(spark, index_dir, id_col, targets)
     return {
         "absorbed_docs": n_docs,
-        "postings_buckets": len(tbs),
-        "forward_buckets": len(dbs),
+        "postings_buckets": sum(d.startswith(pdir + "/") for d in dirs),
+        "forward_buckets": sum(d.startswith(fdir + "/") for d in dirs),
     }
 
 
@@ -975,68 +607,14 @@ def delete_from_search_index(spark, index_dir: str, ids: list) -> int:
     delete may race a doc that is still in flight). Single-writer
     discipline: run between micro-batches of a HEALTHY stream — replay a
     crashed batch before issuing deletes."""
-    from pyspark.errors import AnalysisException
-    from pyspark.sql import types as T
-
-    from ..errors import is_path_not_found
-
-    meta = load_index_meta(spark, index_dir)
-    id_col = meta["id_col"]
-    from .tombstones import tombstones_path
-
-    doclen = None
-    try:
-        raw = spark.read.parquet(_doclen_dir(index_dir))
-        raw.schema
-        # the RESOLVED view, not the raw directory: a doc inserted via
-        # revise lives only in the _rev sidecars and must still count as
-        # stored (tombstone-filtered too — "currently stored" excludes
-        # ids already erased)
-        doclen = index_doclen(spark, index_dir, id_col=id_col)
-        id_field = raw.schema[id_col]
-    except AnalysisException as exc:
-        # a delete may race the very first batch (index created, nothing
-        # committed yet) or follow an erase-everything purge (dataless
-        # dir): the ids still burn, nothing is stored yet — unless the
-        # _rev sidecars hold insert-via-revise docs
-        from ..errors import is_missing_or_dataless
-
-        if not is_missing_or_dataless(exc):
-            raise
-        revs = read_revisions(spark, index_dir, id_col)
-        if revs is not None:
-            doclen = index_doclen(spark, index_dir, id_col=id_col)
-            id_field = doclen.schema[id_col]
-    if doclen is not None:
-        ids_df = spark.createDataFrame(
-            [(i,) for i in ids], T.StructType([id_field])
-        )
-        # distinct ids, not matching rows (doclen could carry crash-replay
-        # residue rows for one id; the report counts documents)
-        stored = (
-            doclen.select(id_col)
-            .join(F.broadcast(ids_df), id_col, "left_semi")
-            .distinct()
-            .count()
-        )
-    else:
-        # the advisory id_type recorded at index creation keeps even a
-        # pre-first-commit burn correctly typed (string-keyed indexes
-        # would otherwise get a long-typed tombstone file whose anti-join
-        # silently never matches)
-        idt = meta.get("id_type", "bigint")
-        ids_df = spark.createDataFrame([(i,) for i in ids], f"{id_col} {idt}")
-        stored = 0
-    ids_df.distinct().coalesce(1).write.mode("append").parquet(
-        tombstones_path(index_dir)
-    )
-    # bound the tombstone set's own file growth at the source: one append
-    # per erase request forever would otherwise regrow the listing cost
-    # the index families' maintenance just closed
-    from .tombstones import maintain_tombstones
-
-    maintain_tombstones(spark, index_dir)
-    return int(stored)
+    id_col = load_index_meta(spark, index_dir)["id_col"]
+    # the RESOLVED view, not the raw doclen directory: a doc inserted via
+    # revise lives only in the _rev sidecars and must still count as
+    # stored, an id already erased must not. An absent or dataless doclen
+    # (a delete racing the first batch, or after an erase-everything
+    # purge) reads as empty, typed from the meta's advisory id_type.
+    resolved = index_doclen(spark, index_dir, id_col=id_col)
+    return burn(spark, index_dir, ids, id_col, resolved)
 
 
 def _search_tombstones(spark, index_dir: str, id_col: str, heal="repair"):
@@ -1169,9 +747,8 @@ def purge_search_tombstones(spark, index_dir: str, clear: bool = False) -> dict:
     # dataless and this branch stays unreachable — but the journal's
     # final=None state is layout-legal, so a filesystem/engine that does
     # produce it must not leave an unreadable index behind
-    erased_all = fs.exists(dl_p) and not any(
-        not st.getPath().getName().startswith(("_", "."))
-        for st in fs.listStatus(dl_p)
+    erased_all = fs.exists(dl_p) and not has_data_files(
+        spark, _doclen_dir(index_dir)
     )
     if erased_all:
         # FULL erasure: a dataless doclen directory would read as
@@ -1204,22 +781,17 @@ def purge_search_tombstones(spark, index_dir: str, clear: bool = False) -> dict:
                 ),
                 exclude_cols=["fp"],
             )
-        # ...and their REVISION markers: _apply_revisions anti-joins a
+        # ...and their REVISION markers: apply_revisions anti-joins a
         # revised id's main-store rows, so a re-ingested id (the stated
         # point of clear=True) would be permanently invisible behind a
         # stale marker whose _rev rows this purge just removed
-        rv = jvm.org.apache.hadoop.fs.Path(_revisions_dir(index_dir))
+        mdir = markers_dir(index_dir)
+        rv = jvm.org.apache.hadoop.fs.Path(mdir)
         if erased_all:
-            for d in (
-                _revisions_dir(index_dir),
-                index_dir.rstrip("/") + "_rev",
-            ):
-                p2 = jvm.org.apache.hadoop.fs.Path(d)
-                if fs.exists(p2):
-                    fs.delete(p2, True)
+            drop_revisions(spark, index_dir)
         elif fs.exists(rv):
             compact_small_files(
-                spark, _revisions_dir(index_dir),
+                spark, mdir,
                 exclude=tomb, exclude_cols=[id_col],
                 force=True, include_graduated=True,
                 transform=lambda df: df.distinct(),
@@ -1227,15 +799,10 @@ def purge_search_tombstones(spark, index_dir: str, clear: bool = False) -> dict:
             # a fold that removed every marker leaves a dataless dir or a
             # 0-row file (engine-dependent) — drop it either way so
             # read_revisions sees a clean absence, not an empty frame
-            emptied = not any(
-                not st.getPath().getName().startswith(("_", "."))
-                for st in fs.listStatus(rv)
-            )
-            if not emptied:
-                emptied = spark.read.parquet(
-                    _revisions_dir(index_dir)
-                ).isEmpty()
-            if emptied:
+            if (
+                not has_data_files(spark, mdir)
+                or spark.read.parquet(mdir).isEmpty()
+            ):
                 fs.delete(rv, True)
         tp = jvm.org.apache.hadoop.fs.Path(tombstones_path(index_dir))
         if fs.exists(tp):
@@ -1292,19 +859,9 @@ def maintain_search_index(
         # skipped entirely (one fs stat) when nothing was ever revised.
         revs_pending = read_revisions(spark, index_dir, meta["id_col"])
         if revs_pending is not None:
-            from pyspark.errors import AnalysisException
-
-            from ..errors import is_missing_or_dataless
-
             n_rev = revs_pending.count()
-            try:
-                n_docs = (
-                    spark.read.parquet(_doclen_dir(index_dir)).count()
-                )
-            except AnalysisException as exc:
-                if not is_missing_or_dataless(exc):
-                    raise
-                n_docs = 0
+            dl = read_or_empty(spark, _doclen_dir(index_dir))
+            n_docs = 0 if dl is None else dl.count()
             if n_rev and n_rev >= absorb_revised_at * max(n_docs, 1):
                 absorbed = absorb_search_revisions(spark, index_dir)[
                     "absorbed_docs"
@@ -1364,7 +921,7 @@ def maintain_search_index(
             exclude=tomb, exclude_cols=ex_cols,
         )
     files_merged += compact_small_files(
-        spark, _revisions_dir(index_dir), max_files=max_files_per_bucket,
+        spark, markers_dir(index_dir), max_files=max_files_per_bucket,
         transform=lambda df: df.distinct(),
     )
     # the tombstone set's OWN lifecycle: every erase request appends one
@@ -1736,8 +1293,10 @@ def pruned_postings(
     # the main buckets are empty — an insert-via-revise has no main rows)
     if revs is _UNSET:
         revs = read_revisions(spark, index_dir, id_col)
-    postings = _apply_revisions(
-        spark, index_dir, postings, id_col, revs, terms=terms,
+    postings = apply_revisions(
+        spark, index_dir, postings, id_col, revs,
+        _rev_terms_dir(index_dir), ["term", id_col, "tf"],
+        where=F.col("term").isin(terms),
         heal="detect" if heal == "detect" else "repair",
     )
     if tomb is _UNSET:
@@ -1756,28 +1315,21 @@ def index_doclen(
     post-purge index would. Every batch consumer of the shared store
     must take doclen from HERE (not a raw directory read), or its scores
     drift across the physical purge."""
-    from pyspark.errors import AnalysisException
-
-    from ..errors import is_missing_or_dataless
-
     if heal == "detect":
         detect_search_index(spark, index_dir, buckets=[])
     elif heal:
         recover_search_index(spark, index_dir, buckets=[])
-    try:
-        doclen = spark.read.parquet(_doclen_dir(index_dir))
-        doclen.schema
-    except AnalysisException as exc:
+    doclen = read_or_empty(spark, _doclen_dir(index_dir))
+    if doclen is None:
         # absent or dataless (an erase-everything purge): empty, typed
         # from the layout meta's advisory id_type
-        if not is_missing_or_dataless(exc):
-            raise
         idt = load_index_meta(spark, index_dir).get("id_type", "bigint")
         doclen = spark.createDataFrame([], f"{id_col} {idt}, dl bigint")
     if revs is _UNSET:
         revs = read_revisions(spark, index_dir, id_col)
-    doclen = _apply_revisions(
-        spark, index_dir, doclen, id_col, revs, doclen=True,
+    doclen = apply_revisions(
+        spark, index_dir, doclen, id_col, revs,
+        _rev_doclen_dir(index_dir), [id_col, "dl"],
         heal="detect" if heal == "detect" else "repair",
     )
     if tomb is _UNSET:
@@ -1801,7 +1353,10 @@ def index_postings_full(
     )
     if revs is _UNSET:
         revs = read_revisions(spark, index_dir, id_col)
-    df = _apply_revisions(spark, index_dir, df, id_col, revs)
+    df = apply_revisions(
+        spark, index_dir, df, id_col, revs,
+        _rev_terms_dir(index_dir), ["term", id_col, "tf"],
+    )
     if tomb is _UNSET:
         tomb = _search_tombstones(spark, index_dir, id_col)
     if tomb is not None:

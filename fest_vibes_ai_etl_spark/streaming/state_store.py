@@ -20,6 +20,11 @@ family doesn't re-derive them:
 - **Stream start** (:func:`start_stream`): every ``foreachBatch``
   processor in the package starts through one call.
 
+- **Probe memo** (:func:`_memo_for` / :func:`invalidate_probe_memo` /
+  :func:`recover_dirs`): the once-per-session-per-store facts a probe
+  would otherwise re-verify on every call, dropped by every owner op that
+  can invalidate them.
+
 - **Small-file compaction for append-per-batch directories**
   (:func:`compact_small_files` / :func:`recover_dir_compaction`): a
   directory that gains one file per micro-batch grows its listing and
@@ -83,6 +88,22 @@ def detect_dir_compaction(spark: SparkSession, dir_path: str) -> bool:
         dir_path.rstrip("/") + "/" + _MANIFEST
     )
     return bool(fs.exists(man_p))
+
+
+def _is_data_file(name: str) -> bool:
+    return not name.startswith(("_", ".")) and name.endswith(".parquet")
+
+
+def has_data_files(spark: SparkSession, dir_path: str) -> bool:
+    """True when ``dir_path`` exists and holds a file a parquet read opens:
+    visible and ``.parquet``, the compactor's own rule. A directory can
+    exist with none (a crashed append's empty cell dir, an all-rows-
+    excluded merge), and schema inference over it throws, so readers and
+    rewriters gate on this."""
+    _, fs, jp = _fs_for(spark, dir_path)
+    return bool(fs.exists(jp)) and any(
+        _is_data_file(st.getPath().getName()) for st in fs.listStatus(jp)
+    )
 
 
 # --- layout meta -----------------------------------------------------------
@@ -260,7 +281,7 @@ def compact_small_files(
             # (between batches only — the single-writer rule)
             fs.delete(st.getPath(), False)
             continue
-        if name.startswith(("_", ".")) or not name.endswith(".parquet"):
+        if not _is_data_file(name):
             continue
         if include_graduated or st.getLen() < target_bytes:
             small.append(st.getPath())
@@ -282,8 +303,7 @@ def compact_small_files(
     parts = [
         st.getPath()
         for st in fs.listStatus(stage_p)
-        if st.getPath().getName().endswith(".parquet")
-        and not st.getPath().getName().startswith(("_", "."))
+        if _is_data_file(st.getPath().getName())
     ]
     final_name = f"part-merged-{tok}.parquet" if parts else None
     man_path = dir_path.rstrip("/") + "/" + _MANIFEST
@@ -315,6 +335,75 @@ def compact_small_files(
     fs.delete(jvm.org.apache.hadoop.fs.Path(man_path), False)
     fs.delete(stage_p, True)
     return len(small)
+
+
+# --- per-(session, store) probe memo -----------------------------------------
+#
+# The probe's fixed per-call overhead (meta py4j read, crash-heal manifest
+# stats, per-bucket dataless listings) is a correctness cost exactly ONCE
+# per session per store — everything it guards against is either immutable
+# (the layout meta), monotone (a bucket with data never loses it except
+# under maintenance/purge), or owner-op-caused (a crashed compaction's
+# journal). So probes memoize per (Spark application id, store):
+#
+# - ``meta``: the layout dict — immutable after creation; the advisory
+#   backfill path (_check_meta) invalidates.
+# - ``healed``: directories recover_dir_compaction already cleared this
+#   session. Sound because only owner ops (maintenance, purge, revise,
+#   absorb) can CREATE a new crash journal, and each invalidates the memo
+#   at ENTRY — a pass that dies mid-compaction leaves the memo empty, so
+#   the next probe re-heals.
+# - ``nonempty``: partition dirs known to hold data (positive knowledge
+#   only — absence is never memoized, so a stream append that creates a
+#   bucket between probes is picked up by the next listing).
+#
+# Cross-session limits are the SAME single-writer contract the heal path
+# already documents: maintenance never runs concurrently with a probe of
+# the same store. A foreign session's writes between this session's
+# probes are appends (visible: never memoized away) or its own
+# maintenance (which must not overlap probes anyway).
+
+_PROBE_MEMO: dict = {}
+
+
+def _memo_for(spark, index_dir: str) -> dict:
+    """The per-(session, store) memo, VALIDATED against the store's
+    generation stamp (round 14): every fenced owner op — in this session
+    or ANY OTHER — bumps ``<store>/_gen`` at entry, so a memo whose
+    recorded gen no longer matches is from before some writer ran (or
+    crashed mid-run) and is dropped wholesale. Cost: one directory
+    listing per call — the cross-session closure of the staleness seam
+    the same-session invalidate-at-entry cannot see (a foreign writer
+    process dying mid-compaction while this session holds a memoized
+    'healed' claim)."""
+    from .writer_lease import read_store_gen
+
+    key = (spark.sparkContext.applicationId, index_dir.rstrip("/"))
+    gen = read_store_gen(spark, index_dir)
+    memo = _PROBE_MEMO.get(key)
+    if memo is None or memo.get("gen") != gen:
+        memo = {"meta": None, "healed": set(), "nonempty": set(), "gen": gen}
+        _PROBE_MEMO[key] = memo
+    return memo
+
+
+def invalidate_probe_memo(index_dir: str) -> None:
+    """Drop every session's memo of this store — called at the ENTRY of
+    any op that can rewrite/shrink its directories (maintenance, purge,
+    revise, absorb) or change its meta (advisory backfill)."""
+    tag = index_dir.rstrip("/")
+    for k in [k for k in _PROBE_MEMO if k[1] == tag]:
+        del _PROBE_MEMO[k]
+
+
+def recover_dirs(spark, index_dir: str, dirs, memoize: bool = True) -> None:
+    """Heal crashed compactions on the given directories, skipping ones
+    the probe memo already cleared this session (see the memo contract)."""
+    healed = _memo_for(spark, index_dir)["healed"] if memoize else set()
+    for d in dirs:
+        if d not in healed:
+            recover_dir_compaction(spark, d)
+            healed.add(d)
 
 
 def start_stream(

@@ -31,9 +31,9 @@ from fest_vibes_ai_etl_spark.streaming.incremental_search import (
     forward_terms_for_docs,
     index_doclen,
     maintain_search_index,
-    read_revisions,
     revise_search_document,
 )
+from fest_vibes_ai_etl_spark.streaming.revisions import read_revisions
 
 
 def _docs(spark, n=60):
@@ -302,10 +302,6 @@ def test_absorb_ivf_revisions_matches_probe_and_restores_fast_path(
     stats = ivf.absorb_ivf_revisions(spark, idx)
     assert stats["absorbed_vectors"] == 2
     assert stats["cells_rewritten"] > 0
-    from fest_vibes_ai_etl_spark.streaming.incremental_search import (
-        read_revisions,
-    )
-
     assert read_revisions(spark, idx, "vec_id") is None
     assert probe() == before
     # still exact vs brute force over the edited corpus

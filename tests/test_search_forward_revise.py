@@ -22,13 +22,13 @@ from fest_vibes_ai_etl_spark.streaming.incremental_search import (
     forward_terms_for_docs,
     index_doclen,
     index_postings_full,
-    invalidate_probe_memo,
     load_index_meta,
     maintain_search_index,
-    read_revisions,
     revise_search_document,
     settle_forward_index,
 )
+from fest_vibes_ai_etl_spark.streaming.revisions import read_revisions
+from fest_vibes_ai_etl_spark.streaming.state_store import invalidate_probe_memo
 
 
 def _docs(spark, n=80):
@@ -357,6 +357,89 @@ def test_revise_ivf_vector_updates_probe_results(spark, tmp_path):
         ivf.revise_ivf_vector(spark, idx, other, 3, new_vec)
 
 
+
+def _ivf_vectors(spark, n: int, k: int):
+    """(rows, emb frame, centers) for n seeded 8-d vectors under a k-cell
+    quantizer."""
+    import numpy as np
+
+    from fest_vibes_ai_etl_spark.operators import ivf
+
+    rng = np.random.default_rng(7)
+    rows = [(i, [float(x) for x in rng.normal(size=8)]) for i in range(n)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    _, centers = ivf.build_ivf_index(emb, k=k, seed=1, fit_sample=n)
+    return rows, emb, centers
+
+
+def test_revise_ivf_retry_with_different_vector_never_mixes(spark, tmp_path):
+    """The IVF twin of the search retry test: a revise whose marker never
+    landed, retried with a DIFFERENT vector, purges the dead attempt's
+    (id, rev) residue — the sidecar holds exactly one row for (9, 1), and
+    a full-probe top-k equals brute force over the corrected corpus."""
+    import shutil
+
+    from fest_vibes_ai_etl_spark.operators import ivf
+    from fest_vibes_ai_etl_spark.operators.similarity import topk_cosine
+
+    rows, emb, centers = _ivf_vectors(spark, 60, 4)
+    idx = str(tmp_path / "ivfadd")
+    ivf.make_index_add_processor(idx, centers)(emb, 0)
+
+    assert ivf.revise_ivf_vector(spark, idx, centers, 9, rows[0][1]) == 1
+    # the crash: the marker directory vanishes, the sidecar row remains
+    shutil.rmtree(idx + "_revisions")
+    invalidate_probe_memo(idx)
+    corrected = rows[1][1]
+    assert ivf.revise_ivf_vector(spark, idx, centers, 9, corrected) == 1
+
+    side = spark.read.parquet(idx + "_rev").filter("vec_id = 9 AND rev = 1")
+    assert side.count() == 1
+    queries = emb.filter(F.col("vec_id") < 3)
+    got = (
+        ivf.ivf_topk(ivf.read_ivf_index(spark, idx), centers, queries,
+                     topk=5, nprobe=4)
+        .orderBy("query_id", "rk")
+        .collect()
+    )
+    edited = spark.createDataFrame(
+        [(i, corrected if i == 9 else v) for i, v in rows],
+        "vec_id long, embedding array<double>",
+    )
+    want = topk_cosine(edited, queries, k=5).orderBy("query_id", "rk").collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+
+
+def test_revise_ivf_into_store_without_cell_data(spark, tmp_path):
+    """A meta-but-no-cell-data store (an empty first add batch) is a legal
+    layout: a vector inserted there by revise is served by the resolved
+    view, counted by delete, and gone after it. A store with neither a
+    meta nor cell data refuses a read with a typed error."""
+    from fest_vibes_ai_etl_spark.operators import ivf
+
+    rows, emb, centers = _ivf_vectors(spark, 40, 4)
+    idx = str(tmp_path / "ivfadd")
+    ivf.make_index_add_processor(idx, centers)(emb.limit(0), 0)
+    assert os.path.exists(idx + "/_meta.json")
+
+    # insert id 5 with vec 6's embedding: query 6 finds it at cosine 1
+    assert ivf.revise_ivf_vector(spark, idx, centers, 5, rows[6][1]) == 1
+    view = ivf.read_ivf_index(spark, idx)
+    assert [r["vec_id"] for r in view.collect()] == [5]
+    top1 = ivf.ivf_topk(
+        view, centers, emb.filter("vec_id = 6"), topk=1, nprobe=4
+    ).collect()[0]
+    assert top1["vec_id"] == 5 and top1["cosine"] == pytest.approx(1.0)
+    assert ivf.delete_from_ivf_index(spark, idx, [5]) == 1
+    assert ivf.read_ivf_index(spark, idx).count() == 0
+    # with neither a meta nor cell data there is no index to read, but a
+    # delete racing the first batch still burns its ids
+    never = str(tmp_path / "never_written")
+    with pytest.raises(ivf.IVFIndexLayoutError, match="not an IVF index"):
+        ivf.read_ivf_index(spark, never)
+    assert ivf.delete_from_ivf_index(spark, never, [5]) == 0
+    assert os.path.isdir(never + "_tombstones")
+
 def test_revise_retry_with_different_text_never_mixes(spark, tmp_path):
     """A dead revise attempt's rows must not weld with a retry that
     carries corrected text: the retry purges the (id, rev) residue and
@@ -399,7 +482,6 @@ def test_purge_clear_lets_a_reingested_id_serve_again(spark, tmp_path):
         delete_from_search_index,
         make_search_index_processor,
         purge_search_tombstones,
-        read_revisions,
         revise_search_document,
     )
 

@@ -219,7 +219,7 @@ def test_read_only_probe_detects_inflight_compaction(spark, tmp_path):
     # planted by a "foreign session" (this test), which the probe memo —
     # by the single-writer contract — does not see: clear it the way a
     # fresh owner session starts, with no memo.
-    from fest_vibes_ai_etl_spark.streaming.incremental_search import (
+    from fest_vibes_ai_etl_spark.streaming.state_store import (
         invalidate_probe_memo,
     )
 

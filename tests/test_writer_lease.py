@@ -225,7 +225,7 @@ def test_gen_stamp_closes_cross_session_memo_staleness(
     )
     before = inc.bm25_over_index(spark, idx, ["merge"], topn=10).collect()
     key = (spark.sparkContext.applicationId, idx.rstrip("/"))
-    session_a_memo = copy.deepcopy(inc._PROBE_MEMO[key])
+    session_a_memo = copy.deepcopy(state_store._PROBE_MEMO[key])
     assert session_a_memo["healed"], "probe must have memoized healed dirs"
 
     # foreign writer: dies in the roll-forward window (merged segment
@@ -240,8 +240,8 @@ def test_gen_stamp_closes_cross_session_memo_staleness(
 
     # session A still holds its pre-crash memo (restore the snapshot the
     # foreign writer's own-process invalidation wiped)
-    inc._PROBE_MEMO[key] = session_a_memo
-    fresh = inc._memo_for(spark, idx)
+    state_store._PROBE_MEMO[key] = session_a_memo
+    fresh = state_store._memo_for(spark, idx)
     assert fresh is not session_a_memo, "gen mismatch must drop the memo"
     assert fresh["healed"] == set()
     # and the probe therefore re-heals and ranks EXACTLY as before the
@@ -251,8 +251,8 @@ def test_gen_stamp_closes_cross_session_memo_staleness(
 
     # control: with a matching gen the memo IS trusted (the fast path
     # the stamp must not break)
-    inc._PROBE_MEMO[key]["probe_marker"] = True
-    assert inc._memo_for(spark, idx).get("probe_marker") is True
+    state_store._PROBE_MEMO[key]["probe_marker"] = True
+    assert state_store._memo_for(spark, idx).get("probe_marker") is True
 
 
 def test_compaction_journal_carries_lease_epoch(spark, tmp_path, monkeypatch):

@@ -138,7 +138,7 @@ def main() -> None:
     if args.sweep:
         import glob
 
-        from fest_vibes_ai_etl_spark.streaming.incremental_search import (
+        from fest_vibes_ai_etl_spark.streaming.state_store import (
             invalidate_probe_memo,
         )
         from fest_vibes_ai_etl_spark.streaming.tombstones import (
