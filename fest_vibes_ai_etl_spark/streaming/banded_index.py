@@ -32,9 +32,14 @@ byte-identical in the corpus, and the stream HEALS the gap: replayed rows'
 missing (id, key) pairs are re-appended (see the callers' heal step), so
 the index converges to the corpus.
 
-The executor-side append is shared: :class:`PartitionedAppend` is the one
-per-batch partitioned append of every corpus-as-state store (these
-sidecars, the IVF cells, the search postings and forward rows).
+The executor-side append is shared: :func:`append_partitioned` is the one
+per-batch partitioned write of every corpus-as-state store (these
+sidecars, the IVF cells, the search postings and forward rows), several
+stores in ONE job — :class:`PartitionedAppend` is a store's destination
+and its one-store case, :func:`append_many` the banded sidecars' fused
+case. The write has no fixed task count: :func:`batch_partitions` sizes
+its shuffle to the batch, explicitly, so the count holds whether or not
+adaptive query execution runs.
 """
 
 from __future__ import annotations
@@ -70,13 +75,6 @@ _AUTO_BANDS_FACTOR = 8
 # what its first batch implied.
 _MAX_AUTO_BANDS = 1024
 
-# Writer-task count for per-batch appends. Hash-partitioning on the
-# partition column puts each partition value in exactly one task at ANY
-# partition count, so this only trades task-launch overhead against
-# file-creation parallelism: appends are micro-batch-sized, and inheriting
-# spark.sql.shuffle.partitions (200 on a stock cluster) would launch
-# hundreds of mostly-empty Python workers per append, twice per batch.
-_APPEND_WRITE_TASKS = 16
 
 # serializes the scoped parallelPartitionDiscovery.threshold raise in
 # _read_parquet_dirs (spark.conf is session-global; see there)
@@ -554,20 +552,6 @@ class BandedFingerprintIndex:
             self._data_schema = df.schema
         return df.drop("pband")
 
-    def _append_unfused(
-        self, spark: SparkSession, banded: DataFrame, creating: bool
-    ) -> list[int]:
-        """This index's own append, outside :func:`append_many`'s fused
-        job — taken when some fused spec has no trusted direct-append
-        destination. The write set is treated as unknown afterwards (a
-        committer write reports nothing), so dirty tracking degrades to
-        one full walk at the next maintenance tick."""
-        self._appender.append(banded)
-        self._reset_maintenance_state()
-        if creating:
-            self._write_meta(spark)
-        return []
-
     def append(self, pairs: DataFrame) -> list[int]:
         """Append (id, key) rows; the band column is derived here so
         callers can't write an inconsistent banding (and the layout is
@@ -606,7 +590,9 @@ class BandedFingerprintIndex:
 
         ``repartition`` by band keeps the one-file-per-touched-band
         invariant (each band's rows land in exactly one task) and is a
-        shuffle boundary, so the upstream plan keeps its parallelism.
+        shuffle boundary, so the upstream plan keeps its parallelism
+        (the write's task count follows the data, see
+        :func:`append_partitioned`).
         The returned band set feeds maintain()'s batch-proportional
         fragmentation detection exactly (the write itself reports what
         it touched). Implemented as the one-index case of
@@ -1302,21 +1288,22 @@ def _pyarrow_filesystem(kind: str, dest: str, fs_options: dict | None):
     return pafs.FileSystem.from_uri(dest)
 
 
-def _make_band_writer(dests: list[dict], append_id: str):
-    """Executor-side writer for direct band appends, shared by the
-    single-index and fused multi-index paths. ``dests`` has one entry per
-    appended index: ``{"kind", "dest", "fs_options", "cols":
+def _make_band_writer(dests: list[dict]):
+    """Executor-side writer of :func:`append_partitioned`'s fused job.
+    ``dests`` has one entry per appended store: ``{"kind", "dest",
+    "fs_options", "append_id", "part_prefix", "cols":
     [(prefixed_name, original_name), ...]}`` — plain data only, so the
     closure ships by value. Incoming Arrow batches carry ``(idx_pos,
-    pband, <every index's prefixed columns>)``; each (index, band) group
-    becomes ONE parquet file holding that index's own columns under
-    their original names.
+    pband, <every store's prefixed columns>)``; each (store, partition)
+    group becomes ONE parquet file holding that store's own columns under
+    their original names, in ``<part_prefix>=<value>/``.
 
     Failure model (documented on :meth:`BandedFingerprintIndex.append`):
     per-attempt ``_tmp-`` staging names so a crash leaves only files
     parquet readers ignore, then a rename to a DETERMINISTIC final name
-    — ``part-{append_id}-b{band}`` — so task retries and speculative
-    attempts replace rather than duplicate."""
+    — ``part-{append_id}-b{band}``, the append id of the store's own
+    entry — so task retries and speculative attempts replace rather than
+    duplicate."""
 
     def write_bands(batches):
         # executor closure: self-contained imports (workers don't
@@ -1347,7 +1334,7 @@ def _make_band_writer(dests: list[dict], append_id: str):
             mine = tbl.filter(pc.equal(tbl.column("idx_pos"), pos))
             spec = mine.select(["pband"] + [p for p, _ in d["cols"]])
             spec = spec.rename_columns(["pband"] + [o for _, o in d["cols"]])
-            prefix = d.get("part_prefix", "pband")
+            prefix, append_id = d["part_prefix"], d["append_id"]
             for band in pc.unique(spec.column("pband")).to_pylist():
                 sub = spec.filter(pc.equal(spec.column("pband"), band)).drop(
                     ["pband"]
@@ -1392,21 +1379,21 @@ def _make_band_writer(dests: list[dict], append_id: str):
 
 
 def _fused_frame_contract(dests: list[dict]) -> int:
-    """Freeze :func:`append_many`'s fused-frame invariant: every prefixed
-    column name is unique across sidecars, and the union row is exactly
-    ``(idx_pos, pband)`` + one slot per (index, field) — returned as the
-    expected width. The executor writer slices each index's columns back
-    out BY NAME, so a collision (today structurally impossible under the
-    ``i{pos}_`` scheme, but one prefix-scheme edit away) would silently
-    cross-contaminate sidecars; a width drift (a third sidecar wired in
-    wrong, a renamed pair column) would silently fatten every append's
-    rows. Cheap to check, loud to break."""
+    """Freeze :func:`append_partitioned`'s fused-frame invariant: every
+    prefixed column name is unique across stores, and the union row is
+    exactly ``(idx_pos, pband)`` + one slot per (store, field) — returned
+    as the expected width. The executor writer slices each store's
+    columns back out BY NAME, so a collision (today structurally
+    impossible under the ``i{pos}_`` scheme, but one prefix-scheme edit
+    away) would silently cross-contaminate stores; a width drift (a
+    store wired in wrong, a renamed pair column) would silently fatten
+    every append's rows. Cheap to check, loud to break."""
     prefixed = [name for d in dests for name, _ in d["cols"]]
     if len(set(prefixed)) != len(prefixed):
         dupes = sorted({n for n in prefixed if prefixed.count(n) > 1})
         raise AssertionError(
-            f"append_many fused-frame invariant violated: prefixed column "
-            f"names collide across sidecars ({dupes}) — the per-index "
+            f"fused-append frame invariant violated: prefixed column "
+            f"names collide across stores ({dupes}) — the per-store "
             f"slices would cross-contaminate"
         )
     return 2 + len(prefixed)
@@ -1422,14 +1409,10 @@ def append_many(
     ``_fpidx``; near: ``_exactidx`` + ``_bandidx``) would otherwise pay
     two mapInArrow jobs per batch — two job submissions + two rounds of
     Python-worker task launches, a measured ~4 s slice of the span
-    family's fixed per-batch overhead. Fusing works because the per-band
-    writer already switches on destination directories: the frames are
-    unioned under DISJOINT prefixed column names (unrelated schemas — a
-    string ``fp`` next to a long ``fp``, a data column literally named
-    ``band`` — can then share one frame) with an ``idx_pos`` tag, the
-    shuffle co-locates on (idx_pos, pband) so the one-file-per-
-    (index, band) invariant holds, and the writer routes each tag to its
-    own index root.
+    family's fixed per-batch overhead. The indexes' rows go through
+    :func:`append_partitioned`'s one fused write under one append id
+    (each index's ``pband`` column is derived here, from its own
+    banding).
 
     Crash model is UNCHANGED from per-index appends: the stream's single
     in-flight marker already brackets both sidecar appends, a mid-job
@@ -1437,72 +1420,30 @@ def append_many(
     maintain()), and deterministic final names make task retries replace
     rather than duplicate. On ANY failure every spec's dirty tracking is
     degraded to the full-walk state — a dead job may have staged temps
-    into bands no dirty set ever learned.
-
-    Any spec whose filesystem lacks a trusted pyarrow mapping sends every
-    spec down its own unfused append, the committer write for the
-    untrusted ones (mixed trusted/untrusted sidecar destinations aren't a
-    real deployment shape — both sidecars sit next to the same corpus —
-    and the committer write reports no band set, so there is nothing to
-    fuse)."""
+    into bands no dirty set ever learned. An index whose filesystem
+    lacks a trusted pyarrow mapping takes the committer write, which
+    reports no band set; then every list comes back empty and every
+    spec's tracking degrades the same way (mixed trusted/untrusted
+    sidecar destinations aren't a real deployment shape — the sidecars
+    sit next to the same corpus)."""
     if not specs:
         return []
     spark = specs[0][1].sparkSession
     creating: list[bool] = []
-    dests: list[dict] = []
     for idx, pairs in specs:
         creating.append(not idx._exists_raw(spark))
         idx._resolve_bands_for_write(spark, pairs)
-        kind, dest = idx._appender.destination(spark)
-        dests.append(
-            {"kind": kind, "dest": dest, "fs_options": idx._appender.fs_options}
-        )
-    if any(d["kind"] is None for d in dests):
-        out = []
-        for (idx, pairs), was_creating in zip(specs, creating):
-            banded = pairs.withColumn(
-                "pband", idx.band_of(F.col(idx.key_col))
-            )
-            out.append(idx._append_unfused(spark, banded, was_creating))
-        return out
     append_id = uuid.uuid4().hex  # deterministic final names per append
-    schemas = [pairs.schema for _, pairs in specs]
-    for i, schema in enumerate(schemas):
-        dests[i]["cols"] = [(f"i{i}_{f.name}", f.name) for f in schema.fields]
-    expected_width = _fused_frame_contract(dests)
-    frames = []
-    for i, (idx, pairs) in enumerate(specs):
-        cols = [
-            F.lit(i).cast("int").alias("idx_pos"),
-            idx.band_of(F.col(idx.key_col)).alias("pband"),
-        ]
-        for j, schema in enumerate(schemas):
-            for f in schema.fields:
-                cols.append(
-                    (F.col(f.name) if j == i else F.lit(None).cast(f.dataType))
-                    .alias(f"i{j}_{f.name}")
-                )
-        frames.append(pairs.select(*cols))
-    union = frames[0]
-    for f in frames[1:]:
-        union = union.unionByName(f)
-    if len(union.columns) != expected_width:
-        raise AssertionError(
-            f"append_many fused-frame invariant violated: union carries "
-            f"{len(union.columns)} columns, expected {expected_width} "
-            f"(idx_pos + pband + one per (index, field)) — a sidecar's "
-            f"schema leaked extra columns into every appended row"
-        )
-    writer = _make_band_writer(dests, append_id)
     try:
-        written = (
-            union.repartition(
-                _APPEND_WRITE_TASKS,
-                F.col("idx_pos"),
-                F.col("pband"),
-            )
-            .mapInArrow(writer, "idx_pos long, pband long, n long")
-            .collect()
+        written = append_partitioned(
+            [
+                (
+                    idx._appender,
+                    pairs.withColumn("pband", idx.band_of(F.col(idx.key_col))),
+                    append_id,
+                )
+                for idx, pairs in specs
+            ]
         )
     except BaseException:
         # a mid-job death may have staged _tmp- files into bands the
@@ -1512,13 +1453,12 @@ def append_many(
         for idx, _ in specs:
             idx._reset_maintenance_state()
         raise
-    out = [[] for _ in specs]
-    for r in written:
-        out[r.idx_pos].append(r.pband)
-    out = [sorted(set(b)) for b in out]
+    unknown = any(bands is None for bands in written)
     try:
-        for (idx, _), bands, was_creating in zip(specs, out, creating):
-            if idx._dirty_bands is not None:
+        for (idx, _), bands, was_creating in zip(specs, written, creating):
+            if unknown:
+                idx._reset_maintenance_state()
+            elif idx._dirty_bands is not None:
                 idx._dirty_bands.update(bands)
             if was_creating:
                 # meta AFTER data: a crash in between leaves an index
@@ -1535,7 +1475,149 @@ def append_many(
         for idx, _ in specs:
             idx._reset_maintenance_state()
         raise
-    return out
+    return [[] if unknown else bands for bands in written]
+
+
+def batch_partitions(spark: SparkSession, nbytes: int) -> int:
+    """Task count for ``nbytes`` of batch data: one per
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (the size AQE
+    coalesces shuffles to), at least 1 and at most the cluster's default
+    parallelism. The per-batch writes and the search stream's batch frame
+    take their counts from it."""
+    jutils = spark._jvm.org.apache.spark.network.util.JavaUtils
+    advisory = jutils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    parallelism = spark.sparkContext.defaultParallelism
+    return max(1, min(-(-nbytes // advisory), parallelism))
+
+
+def _planned_bytes(df: DataFrame) -> int:
+    """The optimizer's size estimate of ``df`` — plan statistics, no
+    job."""
+    return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+
+
+def append_partitioned(
+    appends: list[tuple["PartitionedAppend", DataFrame, str | None]],
+    guard: bool = False,
+    tasks: int | None = None,
+) -> list[list[int] | None]:
+    """The one direct write of every partitioned store: each ``(store,
+    df, append_id)`` lands ``df`` under ``store``'s hive-style partition
+    directories (``df`` carries ``store.part_col``), ALL stores in ONE
+    ``mapInArrow`` job. Returns each store's written partition values,
+    positionally — None after a committer write (write set unknown).
+    ``append_id`` None draws a fresh uuid.
+
+    Fusing: the frames are unioned under DISJOINT prefixed column names
+    (unrelated schemas — a string ``fp`` next to a long ``fp``, a data
+    column literally named ``band`` — can then share one frame) with an
+    ``idx_pos`` tag, and the executor writer routes each tag to its own
+    root under its own append id. One job instead of one per store: the
+    search stream's postings and forward rows, the dedup streams' two
+    sidecars.
+
+    Task count: ``tasks``, the caller's measure of its batch (the search
+    stream passes the count its text bytes give: plan statistics do not
+    multiply an ``explode``'s rows), else :func:`batch_partitions` of
+    the optimizer's size estimate of the rows — one task for a
+    micro-batch, as many as the bytes need for a backfill. A fixed count would launch that many mostly-empty Python
+    workers per append whatever the batch holds. The count is explicit
+    rather than left to adaptive query execution's coalescing: Spark
+    runs a micro-batch of a stateful streaming query without AQE, where
+    a count-less shuffle would take ``spark.sql.shuffle.partitions``
+    tasks. Hash partitioning puts each
+    (store, partition) value in exactly one task at any count, so the
+    one-file-per-(append id, partition) invariant holds.
+
+    ``guard`` (per store with ``key_cols``): ``df`` is first anti-joined
+    at ``key_cols`` against the rows already stored under ``df``'s own
+    partitions — rows that may have landed under a DIFFERENT append id (a
+    crashed attempt's, unknowable after a checkpoint re-point), which
+    name-based skipping cannot see. A store without a trusted pyarrow
+    mapping always takes that anti-join, then the Spark committer write
+    (no skip-if-landed names at all)."""
+    spark = appends[0][1].sparkSession
+    targets = [store.destination(spark) for store, _, _ in appends]
+    guarded = [
+        store.key_cols is not None and (guard or kind is None)
+        for (store, _, _), (kind, _) in zip(appends, targets)
+    ]
+    # guarded frames are read twice: the partition collect, then the write
+    held = [df.persist() for (_, df, _), g in zip(appends, guarded) if g]
+    try:
+        out: list[list[int] | None] = [None] * len(appends)
+        # the direct-written stores: (output slot, frame, data fields)
+        direct: list[tuple[int, DataFrame, list]] = []
+        dests: list[dict] = []
+        for i, ((store, df, aid), (kind, dest), g) in enumerate(
+            zip(appends, targets, guarded)
+        ):
+            rows = store._unstored(df) if g else df
+            if kind is None:
+                (
+                    rows.repartition(
+                        tasks or batch_partitions(spark, _planned_bytes(rows)),
+                        F.col(store.part_col),
+                    )
+                    .write.mode("append")
+                    .partitionBy(store.part_col)
+                    .parquet(store.path)
+                )
+                continue
+            fields = [f for f in rows.schema.fields if f.name != store.part_col]
+            pos = len(dests)
+            dests.append(
+                {
+                    "kind": kind,
+                    "dest": dest,
+                    "fs_options": store.fs_options,
+                    "append_id": aid or uuid.uuid4().hex,
+                    "part_prefix": store.part_col,
+                    "cols": [(f"i{pos}_{f.name}", f.name) for f in fields],
+                }
+            )
+            direct.append((i, rows, fields))
+        if not dests:
+            return out
+        expected_width = _fused_frame_contract(dests)
+        union = None
+        for pos, (_, rows, _) in enumerate(direct):
+            cols = [
+                F.lit(pos).cast("int").alias("idx_pos"),
+                F.col(dests[pos]["part_prefix"]).cast("int").alias("pband"),
+            ]
+            for j, (_, _, fields) in enumerate(direct):
+                for (name, _), f in zip(dests[j]["cols"], fields):
+                    value = (
+                        F.col(f.name) if j == pos else F.lit(None).cast(f.dataType)
+                    )
+                    cols.append(value.alias(name))
+            frame = rows.select(*cols)
+            union = frame if union is None else union.unionByName(frame)
+        if len(union.columns) != expected_width:
+            raise AssertionError(
+                f"fused-append frame invariant violated: union carries "
+                f"{len(union.columns)} columns, expected {expected_width} "
+                f"(idx_pos + pband + one per (store, field)) — a store's "
+                f"schema leaked extra columns into every appended row"
+            )
+        n = tasks or batch_partitions(spark, _planned_bytes(union))
+        written = (
+            union.repartition(n, F.col("idx_pos"), F.col("pband"))
+            .mapInArrow(_make_band_writer(dests), "idx_pos long, pband long, n long")
+            .collect()
+        )
+        parts: list[set[int]] = [set() for _ in dests]
+        for r in written:
+            parts[r.idx_pos].add(r.pband)
+        for (i, _, _), p in zip(direct, parts):
+            out[i] = sorted(p)
+        return out
+    finally:
+        for df in held:
+            df.unpersist()
 
 
 class PartitionedAppend:
@@ -1546,6 +1628,8 @@ class PartitionedAppend:
     inference reads it back), written DIRECTLY from executors — the
     dynamic-partition committer costs ~10 ms of driver-side commit work
     per partition directory per write, paid every micro-batch forever.
+    Several stores' appends fuse into one job through
+    :func:`append_partitioned`; :meth:`append` is its one-store case.
 
     Failure model (the banded index's, see
     :meth:`BandedFingerprintIndex.append`): invisible ``_tmp-`` staging,
@@ -1565,7 +1649,8 @@ class PartitionedAppend:
     credentials for S3-compatible stores — MinIO, on-prem gateways, test
     servers). None = pyarrow's ``FileSystem.from_uri`` defaults.
     ``key_cols`` is the row identity the guard anti-joins on (see
-    :meth:`append`); None = an unkeyed store, never guarded here."""
+    :func:`append_partitioned`); None = an unkeyed store, never
+    guarded."""
 
     def __init__(
         self,
@@ -1609,57 +1694,10 @@ class PartitionedAppend:
         self, df: DataFrame, append_id: str | None = None, guard: bool = False
     ) -> list[int] | None:
         """Append ``df``; returns the partition values written, or None
-        after a committer write (write set unknown). ``append_id``
-        defaults to a fresh uuid.
-
-        With ``key_cols`` set, ``df`` is first anti-joined at ``key_cols``
-        against the rows already stored under ``df``'s own partitions
-        when ``guard=True`` — rows that may have landed under a
-        DIFFERENT append id (a crashed attempt's, unknowable after a
-        checkpoint re-point), which name-based skipping cannot see — and
-        whenever the write falls back to the committer, which has no
-        skip-if-landed names at all."""
-        spark = df.sparkSession
-        kind, dest = self.destination(spark)
-        guard = self.key_cols is not None and (guard or kind is None)
-        if guard:
-            # read twice: the partition collect, then the write
-            df = df.persist()
-        try:
-            rows = self._unstored(df) if guard else df
-            if kind is None:
-                (
-                    rows.repartition(_APPEND_WRITE_TASKS, F.col(self.part_col))
-                    .write.mode("append")
-                    .partitionBy(self.part_col)
-                    .parquet(self.path)
-                )
-                return None
-            data_cols = [f.name for f in rows.schema.fields if f.name != self.part_col]
-            frame = rows.select(
-                F.lit(0).cast("int").alias("idx_pos"),
-                F.col(self.part_col).cast("int").alias("pband"),
-                *[F.col(c).alias(f"i0_{c}") for c in data_cols],
-            )
-            dests = [
-                {
-                    "kind": kind,
-                    "dest": dest,
-                    "fs_options": self.fs_options,
-                    "cols": [(f"i0_{c}", c) for c in data_cols],
-                    "part_prefix": self.part_col,
-                }
-            ]
-            writer = _make_band_writer(dests, append_id or uuid.uuid4().hex)
-            written = (
-                frame.repartition(_APPEND_WRITE_TASKS, F.col("pband"))
-                .mapInArrow(writer, "idx_pos long, pband long, n long")
-                .collect()
-            )
-            return sorted({r.pband for r in written})
-        finally:
-            if guard:
-                df.unpersist()
+        after a committer write (write set unknown) — the one-store case
+        of :func:`append_partitioned`, which documents ``append_id`` and
+        ``guard``."""
+        return append_partitioned([(self, df, append_id)], guard=guard)[0]
 
     def _unstored(self, df: DataFrame) -> DataFrame:
         """Rows of ``df`` whose ``key_cols`` are not already stored —

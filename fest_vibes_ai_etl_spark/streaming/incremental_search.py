@@ -14,7 +14,8 @@ sidecars and the IVF cell store:
 - ``<index_dir>/postings/tb=<bucket>/`` — (term, tf, doc_id) rows under
   hive-style term-bucket directories (tb = pmod(xxhash64(term),
   n_term_buckets)), appended through the index stores' shared
-  :class:`banded_index.PartitionedAppend` (executor-direct writes) with
+  :func:`banded_index.append_partitioned` (executor-direct writes, ONE
+  job for the postings and the forward rows below) with
   an append id derived from the micro-batch content — deterministic
   final names + the writer's skip-if-landed rule make the postings
   append REPLAY-IDEMPOTENT: a crashed attempt's landed buckets are
@@ -27,8 +28,8 @@ sidecars and the IVF cell store:
   column.
 - ``<index_dir>/forward/db=<bucket>/`` (round 13) — the doc-major
   FORWARD sidecar: the same (term, tf, doc_id) rows bucketed by
-  ``pmod(xxhash64(cast(id as string)), n_doc_buckets)``, appended with
-  the postings append's exact replay-idempotence (append-id suffix
+  ``pmod(xxhash64(cast(id as string)), n_doc_buckets)``, written in the
+  postings' job with their exact replay-idempotence (append-id suffix
   ``f``), so data-derived term passes (Rocchio's candidate vocabulary)
   read ≤ |docs| buckets instead of the whole inverted store. Meta-gated
   by ``n_doc_buckets``; :func:`settle_forward_index` backfills legacy
@@ -79,6 +80,18 @@ all; the marker brackets only doclen → docidx):
 - die after postings, before the marker clears: same heal path; every
   re-append is a no-op or harmless.
 
+Per-batch cost follows the batch: the fingerprint job that names the
+append also sums the batch's text bytes, and the one persisted per-batch
+frame is brought to :func:`banded_index.batch_partitions` of them
+(``ceil(bytes / advisoryPartitionSizeInBytes)``, at most the default
+parallelism) before anything reads it, so the stages that scan it — the
+postings aggregation's map side, the doclen write (one file per
+partition), the docidx pairs — run that many tasks, not
+``spark.sql.shuffle.partitions``. The postings + forward write takes the
+same count explicitly, so it holds with adaptive query execution off (a
+stateful upstream); the aggregation's reduce side is left to AQE's
+coalescing.
+
 Maintenance: every ``maintain_every`` batches the processor compacts the
 ``_docidx`` sidecar (the banded index's own per-band maintenance) AND the
 postings/doclen directories (:func:`maintain_search_index`) — each batch
@@ -102,6 +115,8 @@ from pyspark.sql import functions as F
 from .banded_index import (
     BandedFingerprintIndex,
     PartitionedAppend,
+    append_partitioned,
+    batch_partitions,
     hadoop_read_json,
 )
 from .dedup_stream import _heal_exact_index, _settle_indexes
@@ -122,6 +137,7 @@ from .state_store import (
     _memo_for,
     has_data_files,
     invalidate_probe_memo,
+    literal_frame,
     recover_dirs,
 )
 from .writer_lease import fenced
@@ -514,8 +530,8 @@ def revise_search_document(
     meta = load_index_meta(spark, index_dir)
     id_col = meta["id_col"]
     idt = meta.get("id_type", "bigint")
-    one = spark.createDataFrame(
-        [(doc_id, new_text)], f"{id_col} {idt}, text string"
+    one = literal_frame(
+        spark, [(doc_id, new_text)], f"{id_col} {idt}, text string"
     )
     terms = (
         one.select(
@@ -966,10 +982,11 @@ def make_search_index_processor(
     ``n_doc_buckets`` maintains the doc-major FORWARD sidecar alongside
     the postings (settled/backfilled at open for pre-forward stores; the
     stored bucket count always wins; None disables). Its per-batch
-    append is the postings append's second store — same tokenized rows,
-    same deterministic append-id replay idempotence (suffix ``f``), same
-    guarded heal path, same committer fallback — so the two layouts stay
-    row-identical under every crash window the postings survive."""
+    append is the second store of the postings' one write job — same
+    tokenized rows, same deterministic append-id replay idempotence
+    (suffix ``f``), same guarded heal path, same committer fallback — so
+    the two layouts stay row-identical under every crash window the
+    postings survive."""
     from ..functions import text as T
 
     docidx = BandedFingerprintIndex(
@@ -1104,7 +1121,9 @@ def make_search_index_processor(
         # gets different names and can never mix two texts' postings
         # under one document. Computed over `deduped` (not the raw batch)
         # so a raw batch that merely reorders or repeats rows of the same
-        # logical content still converges. One tiny column-agg job.
+        # logical content still converges. The same one-row job sizes the
+        # batch: its text bytes set the partition count of the per-batch
+        # frame below.
         fp_row = deduped.select(
             F.coalesce(
                 F.sum(
@@ -1117,44 +1136,49 @@ def make_search_index_processor(
                 F.lit(0).cast("decimal(38,0)"),
             ).alias("s"),
             F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.sum(F.octet_length(text_col)), F.lit(0)).alias("bytes"),
         ).collect()[0]
         batch_fp = int(fp_row["s"]) % (1 << 60)
+        n_parts = batch_partitions(spark, int(fp_row["bytes"]))
         append_id = f"srchb{batch_id:x}-{batch_fp:015x}-{int(fp_row['n']):x}"
 
         def append_postings(tok: DataFrame, aid: str, guard: bool) -> None:
-            """Postings, then forward rows, of a tokenized ``(id, tk)``
-            frame. ``guard=False`` (the steady-state batch append) relies
-            on the deterministic append id for replay idempotence;
-            ``guard=True`` (the heal path) anti-joins at (term, doc) first
-            — a heal's rows may have landed under a DIFFERENT append id
-            (the crashed attempt's), so name-based skipping cannot see
-            them, and the heal's own id must differ from the main
-            append's so a heal that writes files can never cause the main
-            append's same-band files to be skipped."""
+            """Postings and forward rows of a tokenized ``(id, tk)`` frame,
+            in ONE fused write job — the same ``(term, id, tf)`` rows
+            under two partition columns, postings under ``aid`` and
+            forward under ``aid + "f"``. ``guard=False`` (the steady-state
+            batch append) relies on the deterministic append ids for
+            replay idempotence; ``guard=True`` (the heal path) anti-joins
+            each store at (term, doc) first — a heal's rows may have
+            landed under a DIFFERENT append id (the crashed attempt's), so
+            name-based skipping cannot see them, and the heal's own id
+            must differ from the main append's so a heal that writes
+            files can never cause the main append's same-band files to be
+            skipped."""
             post = (
                 tok.select(F.col(id_col), F.explode("tk").alias("term"))
                 .groupBy("term", id_col)
                 .agg(F.count(F.lit(1)).alias("tf"))
             )
             appends = [
-                (postings, term_bucket(F.col("term"), n_term_buckets), aid,
-                 dirty_tb),
+                (postings, post.withColumn(
+                    "tb", term_bucket(F.col("term"), n_term_buckets)), aid),
             ]
+            dirty = [dirty_tb]
             if fw_ndb[0] is not None:
                 appends.append(
-                    (forward, doc_bucket(F.col(id_col), int(fw_ndb[0])),
-                     aid + "f", dirty_db)
+                    (forward, post.withColumn(
+                        "db", doc_bucket(F.col(id_col), int(fw_ndb[0]))),
+                     aid + "f")
                 )
-            for store, bucket, store_aid, dirty in appends:
-                written = store.append(
-                    post.withColumn(store.part_col, bucket),
-                    append_id=store_aid,
-                    guard=guard,
-                )
+                dirty.append(dirty_db)
+            for written, parts in zip(
+                append_partitioned(appends, guard=guard, tasks=n_parts), dirty
+            ):
                 if written is None:
                     dirty_unknown.append(True)
                 else:
-                    dirty.update(written)
+                    parts.update(written)
 
         if replayed is not None:
             # docs recorded in doclen whose postings/docidx rows the
@@ -1172,10 +1196,17 @@ def make_search_index_processor(
         from pyspark.storagelevel import StorageLevel
 
         # one tokenize for postings + doclen + sidecar (batch-bounded
-        # persist, unpersisted before return — the foreachBatch rule)
-        enriched = fresh.select(
-            F.col(id_col), T.tokens(F.col(text_col)).alias("tk")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        # persist, unpersisted before return — the foreachBatch rule),
+        # brought to the batch's own partition count first: a cached
+        # plan keeps its output partitioning, so without it every stage
+        # over this frame (the postings groupBy, the doclen write — one
+        # file per partition — and the docidx append) would run
+        # spark.sql.shuffle.partitions tasks whatever the batch holds
+        enriched = (
+            fresh.select(F.col(id_col), T.tokens(F.col(text_col)).alias("tk"))
+            .coalesce(n_parts)
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
         try:
             # postings FIRST: this append is replay-idempotent, so a crash
             # anywhere before the doclen commit replays cleanly with no

@@ -202,8 +202,11 @@ def revise(
     # journals — invalidate at ENTRY so a crash mid-compaction leaves no
     # memoized 'healed' claim masking the fresh journal
     state_store.invalidate_probe_memo(index_dir)
+    # both probes JOIN the id against the hinted sets, so the bounded-
+    # broadcast hint sits where it applies (outside a join it only logs)
+    one = state_store.literal_frame(spark, [(rid,)], f"{id_col} {id_type}")
     tomb = tombstones.read_tombstones(spark, index_dir, cols=[id_col])
-    if tomb is not None and tomb.filter(F.col(id_col) == F.lit(rid)).count():
+    if tomb is not None and one.join(tomb, id_col, "left_semi").count():
         raise ValueError(
             f"revise refused: id {rid!r} is tombstoned (erased) in "
             f"{index_dir} — erasure burns are permanent; re-ingest under "
@@ -212,11 +215,11 @@ def revise(
     revs = read_revisions(spark, index_dir, id_col)
     cur = 0
     if revs is not None:
-        row = revs.filter(F.col(id_col) == F.lit(rid)).collect()
+        row = one.join(revs, id_col).collect()
         cur = int(row[0]["rev"]) if row else 0
     new_rev = cur + 1
-    key = spark.createDataFrame(
-        [(rid, new_rev)], f"{id_col} {id_type}, rev int"
+    key = state_store.literal_frame(
+        spark, [(rid, new_rev)], f"{id_col} {id_type}, rev int"
     )
     at_key = (F.col(id_col) == F.lit(rid)) & (F.col("rev") == F.lit(new_rev))
     for frame, d in rows:
@@ -294,13 +297,13 @@ def burn(
     types them: a string-keyed store must never get a bigint tombstone
     file whose anti-join silently never matches."""
     if resolved is None:
-        ids_df = spark.createDataFrame(
-            [(i,) for i in ids], f"{id_col} {id_type}"
+        ids_df = state_store.literal_frame(
+            spark, [(i,) for i in ids], f"{id_col} {id_type}"
         )
         stored = 0
     else:
-        ids_df = spark.createDataFrame(
-            [(i,) for i in ids], T.StructType([resolved.schema[id_col]])
+        ids_df = state_store.literal_frame(
+            spark, [(i,) for i in ids], T.StructType([resolved.schema[id_col]])
         )
         # distinct ids, not matching rows: crash-replay residue can
         # duplicate a row and would over-count the report

@@ -25,6 +25,10 @@ family doesn't re-derive them:
   would otherwise re-verify on every call, dropped by every owner op that
   can invalidate them.
 
+- **Driver-local key frames** (:func:`literal_frame`): the ids and
+  (id, rev) keys the owner ops burn, probe and exclude, as one-task JVM
+  relations instead of Python-RDD scans, linear in the key count.
+
 - **Small-file compaction for append-per-batch directories**
   (:func:`compact_small_files` / :func:`recover_dir_compaction`): a
   directory that gains one file per micro-batch grows its listing and
@@ -169,6 +173,28 @@ def _fs_for(spark: SparkSession, path: str):
     jvm = spark._jvm
     jp = jvm.org.apache.hadoop.fs.Path(path)
     return jvm, jp.getFileSystem(spark._jsc.hadoopConfiguration()), jp
+
+
+def literal_frame(spark: SparkSession, rows: list[tuple], schema) -> DataFrame:
+    """``rows`` (driver-side keys: ints, strings, None) as a frame of
+    ``schema`` — a StructType or DDL string. The rows travel as ONE JSON
+    string literal parsed by ``from_json`` over a one-row range, so the
+    frame plans as one JVM task whatever the row count, and building it
+    costs one literal, not one expression per value. ``createDataFrame``
+    over a Python list plans a parallelized Python RDD instead: every
+    scan of it launches one Python-worker task per default-parallelism
+    slice. A value its field type cannot hold fails the scan
+    (``FAILFAST``) instead of reading as NULL."""
+    import json
+
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    if not isinstance(schema, T.StructType):
+        schema = T.StructType.fromDDL(schema)
+    payload = json.dumps([dict(zip(schema.names, row)) for row in rows])
+    parsed = F.from_json(F.lit(payload), T.ArrayType(schema), {"mode": "FAILFAST"})
+    return spark.range(0, 1, 1, 1).select(F.inline(parsed))
 
 
 def _gone_race(fs, path) -> bool:

@@ -55,6 +55,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .state_store import literal_frame
 from .writer_lease import fenced
 
 # The dedup families' fingerprint for NULL text (incremental_dedup's
@@ -207,9 +208,7 @@ def delete_from_dedup_corpus(
     rows: list = []
     if corpus is not None:
         id_field = corpus.schema[id_col]
-        ids_df = spark.createDataFrame(
-            [(i,) for i in ids], T.StructType([id_field])
-        )
+        ids_df = literal_frame(spark, [(i,) for i in ids], T.StructType([id_field]))
         pairs = (
             corpus.join(F.broadcast(ids_df), id_col, "left_semi")
             .select(
@@ -225,9 +224,9 @@ def delete_from_dedup_corpus(
     stored_ids = {r[0] for r in rows}
     rows += [(i, None) for i in set(ids) - stored_ids]
     schema = T.StructType([id_field, T.StructField("fp", T.StringType())])
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(tombstones_path(corpus_dir))
+    literal_frame(spark, rows, schema).write.mode("append").parquet(
+        tombstones_path(corpus_dir)
+    )
     # one file per erase request forever would regrow per-batch listing
     # cost — compact past the threshold (deletes run between batches)
     maintain_tombstones(spark, corpus_dir)
@@ -293,8 +292,8 @@ def remove_tombstones(
     from pyspark.sql import types as T
 
     tomb = spark.read.parquet(tdir)
-    ids_df = spark.createDataFrame(
-        [(i,) for i in ids], T.StructType([tomb.schema[id_col]])
+    ids_df = literal_frame(
+        spark, [(i,) for i in ids], T.StructType([tomb.schema[id_col]])
     )
     doomed = (
         tomb.select(id_col)

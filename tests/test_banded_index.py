@@ -1026,7 +1026,7 @@ def test_failed_append_degrades_dirty_tracking_to_full_walk(
 
     real_writer = bi._make_band_writer
 
-    def dying_writer(dests, append_id):
+    def dying_writer(dests):
         dest = dests[0]["dest"]
 
         def writer(batches):
@@ -1368,6 +1368,8 @@ def test_existing_final_band_file_is_never_deleted_or_rewritten(spark, tmp_path)
             "kind": "local",
             "dest": base,
             "fs_options": None,
+            "append_id": append_id,
+            "part_prefix": "pband",
             "cols": [("i0_id", "id"), ("i0_fp", "fp")],
         }
     ]
@@ -1380,7 +1382,7 @@ def test_existing_final_band_file_is_never_deleted_or_rewritten(spark, tmp_path)
     written = (
         df.repartition(2, F.col("idx_pos"), F.col("pband"))
         .mapInArrow(
-            bi._make_band_writer(dests, append_id),
+            bi._make_band_writer(dests),
             "idx_pos long, pband long, n long",
         )
         .collect()

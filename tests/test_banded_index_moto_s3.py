@@ -144,6 +144,12 @@ def _keys(client, prefix):
         token = resp["NextContinuationToken"]
 
 
+def _with_id(dests, append_id):
+    """The writer's per-destination entries: ``append_id`` and the
+    ``pband=`` directory prefix on every dest."""
+    return [{**d, "append_id": append_id, "part_prefix": "pband"} for d in dests]
+
+
 def _run_append(spark, dests, append_id, rows=64, n_bands=8, pos=0):
     """Drive the REAL executor writer through a real Spark job: the
     banded frame is shaped exactly as append_many ships it (idx_pos tag
@@ -156,7 +162,7 @@ def _run_append(spark, dests, append_id, rows=64, n_bands=8, pos=0):
     )
     return (
         df.repartition(4, F.col("idx_pos"), F.col("pband"))
-        .mapInArrow(_make_band_writer(dests, append_id), OUT_SCHEMA)
+        .mapInArrow(_make_band_writer(_with_id(dests, append_id)), OUT_SCHEMA)
         .collect()
     )
 
@@ -314,7 +320,7 @@ def test_fused_writer_routes_two_indexes_to_their_roots(spark, moto_s3):
     written = (
         base_a.unionByName(base_b)
         .repartition(4, F.col("idx_pos"), F.col("pband"))
-        .mapInArrow(_make_band_writer(dests, append_id), OUT_SCHEMA)
+        .mapInArrow(_make_band_writer(_with_id(dests, append_id)), OUT_SCHEMA)
         .collect()
     )
     assert sum(r.n for r in written if r.idx_pos == 0) == 20

@@ -11,7 +11,6 @@ from conftest import SF_DIR
 from fest_vibes_ai_etl_spark.operators.search import bm25_topk, build_postings
 from fest_vibes_ai_etl_spark.sources import table
 from fest_vibes_ai_etl_spark.streaming import incremental_search as inc
-from fest_vibes_ai_etl_spark.streaming.banded_index import PartitionedAppend
 from fest_vibes_ai_etl_spark.streaming.state_store import start_stream
 
 TERMS = ["merge", "hash", "window"]
@@ -75,29 +74,39 @@ def _assert_converged(spark, idx, upto=140):
     assert dl.count() == dl.select("doc_id").distinct().count()
     post = spark.read.parquet(idx + "/postings")
     assert post.count() == post.select("term", "doc_id").distinct().count()
+    # the forward sidecar holds exactly the postings rows, each once
+    rows = [tuple(r) for r in post.select("term", "doc_id", "tf").collect()]
+    fwd = [
+        tuple(r)
+        for r in spark.read.parquet(idx + "/forward")
+        .select("term", "doc_id", "tf")
+        .collect()
+    ]
+    assert len(fwd) == len(set(fwd))
+    assert set(fwd) == set(rows)
 
 
 def test_stream_index_crash_in_postings_append_heals(spark, tmp_path, monkeypatch):
-    """Die during the postings append (before doclen commits): no marker
-    is set yet, so the replay converges on the postings append's replay
-    idempotence alone."""
+    """Die during the fused postings + forward write (before doclen
+    commits): no marker is set yet, so the replay converges on the
+    write's replay idempotence alone."""
     idx = str(tmp_path / "sidx")
     proc = inc.make_search_index_processor(idx, n_term_buckets=8)
     batches = _slices(spark)
     proc(batches[0], 0)
     calls = {"n": 0}
-    real = PartitionedAppend.append
+    real = inc.append_partitioned
 
-    def dying(self, *a, **kw):
+    def dying(*a, **kw):
         calls["n"] += 1
-        real(self, *a, **kw)  # the files LAND (worst case), then the driver dies
+        real(*a, **kw)  # the files LAND (worst case), then the driver dies
         raise RuntimeError("injected crash in postings append")
 
-    monkeypatch.setattr(PartitionedAppend, "append", dying)
+    monkeypatch.setattr(inc, "append_partitioned", dying)
     with pytest.raises(RuntimeError, match="injected crash"):
         proc(batches[1], 1)
     assert calls["n"] == 1
-    monkeypatch.setattr(PartitionedAppend, "append", real)
+    monkeypatch.setattr(inc, "append_partitioned", real)
     proc2 = inc.make_search_index_processor(idx, n_term_buckets=8)
     proc2(batches[1], 1)
     proc2(batches[2], 2)
@@ -213,17 +222,17 @@ def test_stream_index_intra_batch_duplicate_id_deterministic(spark, tmp_path, mo
     idx = str(tmp_path / "sidx")
     proc = inc.make_search_index_processor(idx, n_term_buckets=8)
     calls = {"n": 0}
-    real = PartitionedAppend.append
+    real = inc.append_partitioned
 
-    def dying(self, *a, **kw):
+    def dying(*a, **kw):
         calls["n"] += 1
-        real(self, *a, **kw)  # worst case: the winner's files LAND, then we die
+        real(*a, **kw)  # worst case: the winner's files LAND, then we die
         raise RuntimeError("injected crash in postings append")
 
-    monkeypatch.setattr(PartitionedAppend, "append", dying)
+    monkeypatch.setattr(inc, "append_partitioned", dying)
     with pytest.raises(RuntimeError, match="injected crash"):
         proc(batch, 0)
-    monkeypatch.setattr(PartitionedAppend, "append", real)
+    monkeypatch.setattr(inc, "append_partitioned", real)
     # replay: fresh processor (restart), same batch id, rows REORDERED —
     # the deterministic winner + content fingerprint must re-derive the
     # same append id and skip the landed buckets instead of filling the
@@ -279,3 +288,72 @@ def test_stream_index_repointed_checkpoint_heal_no_collision(spark, tmp_path, mo
     assert post.count() == post.select("term", "doc_id").distinct().count()
     dl = spark.read.parquet(idx + "/doclen")
     assert dl.count() == dl.select("doc_id").distinct().count()
+
+
+def _tasks_run(sc, job_ids) -> int:
+    """Tasks the jobs' stages ran (skipped stages ran none)."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10000)
+    stages = set()
+    for j in job_ids:
+        stages.update(sc.statusTracker().getJobInfo(j).stageIds)
+    infos = [sc.statusTracker().getStageInfo(s) for s in stages]
+    return sum(i.numCompletedTasks for i in infos if i is not None)
+
+
+# One steady batch through start_stream (availableNow, the deployed
+# path) at the spark fixture's settings (local[4], 8 shuffle
+# partitions), measured as (jobs, tasks). With adaptive query execution
+# on — Spark 4 keeps it on for a stateless micro-batch: (16, 98) when the
+# postings and forward rows took one write job each at a fixed 16 write
+# tasks and the per-batch frame kept the shuffle's 8 partitions; (15, 17)
+# with the batch-sized frame and one fused, batch-sized write. With AQE
+# off, as in a micro-batch of a stateful query: (8, 104), then (7, 29);
+# a write shuffle left without a count reads (7, 43) there. A second
+# write job, a fixed or an unsized write count crosses a ceiling.
+STEADY_CEILINGS = {True: (15, 30), False: (7, 36)}
+
+
+@pytest.mark.parametrize("aqe", [True, False], ids=["aqe", "no_aqe"])
+def test_steady_batch_jobs_and_tasks_bounded(spark, tmp_path, aqe):
+    """Regression canary for the search stream's per-batch cost: a
+    steady-state micro-batch submits a bounded number of Spark jobs AND
+    runs a bounded number of tasks, with or without AQE. Catches the
+    postings and forward writes coming un-fused (one more job), a fixed
+    write-task count coming back, a write whose count is left to AQE, or
+    the per-batch frame losing its batch-sized partitioning (every stage
+    over it back at spark.sql.shuffle.partitions tasks)."""
+    docs = table(spark, SF_DIR, "documents").select("doc_id", "text")
+    src = str(tmp_path / "src")
+    for lo in (0, 40, 80):
+        docs.filter(f"doc_id >= {lo} AND doc_id < {lo + 40}").coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+    proc = inc.make_search_index_processor(str(tmp_path / "sidx"), n_term_buckets=8)
+    sc = spark.sparkContext
+    batch_jobs = {}
+
+    def counted(batch_df, batch_id):
+        # the stream runs each micro-batch under its own job group
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        before = set(sc.statusTracker().getJobIdsForGroup(group))
+        proc(batch_df, batch_id)
+        after = set(sc.statusTracker().getJobIdsForGroup(group))
+        batch_jobs[batch_id] = sorted(after - before)
+
+    stream = (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    spark.conf.set("spark.sql.adaptive.enabled", str(aqe).lower())
+    try:
+        q = start_stream(counted, stream, str(tmp_path / "ckpt"))
+        assert q.awaitTermination(300), "stream did not finish in 300s"
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert sorted(batch_jobs) == [0, 1, 2]
+    jobs = batch_jobs[2]  # batches 0 and 1 create and warm the index
+    tasks = _tasks_run(sc, jobs)
+    max_jobs, max_tasks = STEADY_CEILINGS[aqe]
+    assert 0 < len(jobs) <= max_jobs, f"{len(jobs)} Spark jobs"
+    assert 0 < tasks <= max_tasks, f"{tasks} tasks"

@@ -346,9 +346,9 @@ def test_processor_plumbs_fs_options_and_caches_resolution(
     calls = []
     real = bi._make_band_writer
 
-    def spy(dests, append_id):
+    def spy(dests):
         calls.append(dests)
-        return real(dests, append_id)
+        return real(dests)
 
     monkeypatch.setattr(bi, "_make_band_writer", spy)
     resolutions = []

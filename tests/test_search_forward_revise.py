@@ -29,6 +29,7 @@ from fest_vibes_ai_etl_spark.streaming.incremental_search import (
 )
 from fest_vibes_ai_etl_spark.streaming.revisions import read_revisions
 from fest_vibes_ai_etl_spark.streaming.state_store import invalidate_probe_memo
+from fest_vibes_ai_etl_spark.streaming.tombstones import read_tombstones
 
 
 def _docs(spark, n=80):
@@ -547,3 +548,65 @@ def test_rev_sidecar_crash_heal_and_detect(spark, tmp_path):
     after = bm25_over_index(spark, store, ["healme", "merge"], topn=20).collect()
     assert after == before
     assert not os.path.exists(os.path.join(rdir, dup))
+
+
+def _hint_warnings(spark, log_path: str, action) -> list[str]:
+    """The HintErrorLogger warnings Spark logs while ``action()`` runs,
+    captured through a file appender on that one logger."""
+    log4j = spark._jvm.org.apache.logging.log4j
+    name = "org.apache.spark.sql.catalyst.analysis.HintErrorLogger"
+    logger = log4j.LogManager.getLogger(name)
+    level = logger.getLevel()
+    appender = (
+        log4j.core.appender.FileAppender.newBuilder()
+        .withFileName(log_path)
+        .setName("hint-capture")
+        .build()
+    )
+    appender.start()
+    log4j.core.config.Configurator.setLevel(name, log4j.Level.WARN)
+    logger.setAdditive(False)
+    logger.addAppender(appender)
+    try:
+        action()
+    finally:
+        logger.removeAppender(appender)
+        appender.stop()
+        logger.setAdditive(True)
+        log4j.core.config.Configurator.setLevel(name, level)
+    with open(log_path) as fh:
+        return [line for line in fh if "join hint" in line]
+
+
+def test_revise_logs_no_broadcast_hint_warning(spark, tmp_path):
+    """revise looks its id up in the tombstone and marker sets, which
+    carry the bounded-broadcast hint for their join consumers. The
+    lookups join the id against them, so the hint sits in a join: a
+    filter there would make every revise log "A join hint ... is not
+    part of a join relation". The control shows the capture sees that
+    warning."""
+    store = _store(spark, tmp_path)
+    delete_from_search_index(spark, store, [11])
+    revise_search_document(spark, store, 12, "first revision words")
+    control = _hint_warnings(
+        spark,
+        str(tmp_path / "control.log"),
+        lambda: F.broadcast(spark.range(3)).filter("id = 1").count(),
+    )
+    assert control, "the capture saw no warning for a hint outside a join"
+    revs = []
+    warned = _hint_warnings(
+        spark,
+        str(tmp_path / "revise.log"),
+        lambda: revs.append(
+            revise_search_document(spark, store, 12, "second revision")
+        ),
+    )
+    assert revs == [2]
+    assert warned == []
+    # the join consumers' reads keep the hint
+    def hinted(df):
+        return "strategy=broadcast" in df._jdf.queryExecution().analyzed().toString()
+
+    assert hinted(read_tombstones(spark, store, cols=["doc_id"]))
+    assert hinted(read_revisions(spark, store, "doc_id"))

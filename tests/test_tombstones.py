@@ -508,3 +508,30 @@ def test_ivf_delete_tombstones_at_probe_and_burns_readds(spark, tmp_path):
     )
     raw = spark.read.parquet(index_dir).filter(F.col("vec_id") == victim)
     assert raw.count() == 1  # only the pre-delete row: never re-added
+
+
+def test_literal_frame_is_a_typed_one_task_jvm_relation(spark):
+    """The owner ops' id and key frames: typed from the schema (DDL or
+    StructType), empty when given no rows, and planned with no Python
+    RDD scan — createDataFrame over a Python list starts a Python worker
+    per default-parallelism slice on every scan."""
+    from pyspark.sql import types as T
+
+    from fest_vibes_ai_etl_spark.streaming.state_store import literal_frame
+
+    keys = literal_frame(spark, [("7", 3), ("9", 1)], "doc_id string, rev int")
+    assert [f.dataType.simpleString() for f in keys.schema.fields] == [
+        "string", "int",
+    ]
+    assert sorted(tuple(r) for r in keys.collect()) == [("7", 3), ("9", 1)]
+    rows = literal_frame(
+        spark, [(5, None)],
+        T.StructType([T.StructField("doc_id", T.LongType()),
+                      T.StructField("fp", T.StringType())]),
+    )
+    assert [tuple(r) for r in rows.collect()] == [(5, None)]
+    empty = literal_frame(spark, [], "doc_id bigint")
+    assert empty.schema.simpleString() == "struct<doc_id:bigint>"
+    assert empty.count() == 0
+    plan = keys._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan and "splits=1" in plan
