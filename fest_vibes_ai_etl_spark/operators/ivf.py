@@ -638,7 +638,11 @@ def make_index_add_processor(
         # on an EXISTING index must propagate, or a replayed batch would
         # skip the anti-join and append duplicates, breaking the
         # replays-converge contract exactly when the index is unhealthy.
-        from ..streaming.banded_index import hadoop_list_names
+        from ..streaming.banded_index import (
+            TMP_PREFIX,
+            hadoop_list_names,
+            is_data_file,
+        )
 
         jpath = jvm.org.apache.hadoop.fs.Path
         existing_cells: set[str] = set()
@@ -663,9 +667,9 @@ def make_index_add_processor(
             has_data = False
             for st in fs.listStatus(jpath(d)):
                 name = st.getPath().getName()
-                if name.startswith("_tmp-"):
+                if name.startswith(TMP_PREFIX):
                     fs.delete(st.getPath(), False)
-                elif not name.startswith(("_", ".")):
+                elif is_data_file(name):
                     has_data = True
             if has_data:
                 live.append(d)

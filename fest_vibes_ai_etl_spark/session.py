@@ -50,12 +50,20 @@ CONF_FAILURES: dict[str, str] = {}
 
 
 def configure(spark: SparkSession) -> SparkSession:
-    """Assert runtime-settable confs on an existing session (driver-provided).
+    """Assert runtime-settable confs on an existing session (driver-provided),
+    once per session: a marker in the session's own SQLConf records that it
+    ran, so a caller's later setting (say AQE off) is not reverted by the
+    next scan, and a scan costs one conf read instead of six sets. A
+    ``newSession()`` has a fresh SQLConf and is configured on first use; a
+    clone (a stream's batch session) copies the confs and the marker.
 
     Failures are recorded in :data:`CONF_FAILURES` and warned once rather than
     swallowed; callers that depend on a conf (e.g. UTC session TZ for
     NTZ-cast identity) can check it, and sources fall back to dtype
     inspection instead of assuming the conf stuck (sources/tables.py)."""
+    marker = "spark.fest_vibes.configured"
+    if spark.conf.get(marker, None) == "true":
+        return spark
     for k, v in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
@@ -69,6 +77,7 @@ def configure(spark: SparkSession) -> SparkSession:
                     RuntimeWarning,
                     stacklevel=2,
                 )
+    spark.conf.set(marker, "true")
     _ship_package(spark)
     return spark
 

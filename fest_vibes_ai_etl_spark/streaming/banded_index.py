@@ -21,8 +21,9 @@ so the constant drops by roughly ``n_bands / touched_bands``. Size
 ``n_bands`` ≫ the typical batch's distinct-fingerprint count for deep
 pruning (the 100 TB deployment shape is thousands of bands; the default 64
 keeps local test corpora from fragmenting into thousands of tiny files).
-Periodic per-band compaction (coalescing a band directory's accumulated
-small files) is plain parquet maintenance and changes nothing semantically.
+Periodic per-band compaction merges a band directory's small files through
+the package's one journaled compactor (``state_store.compact_small_files``,
+size-tiered like the search buckets) and changes nothing semantically.
 
 Crash consistency (single-writer stream): the corpus append commits FIRST,
 the index append second. A crash between the two leaves index rows missing
@@ -74,6 +75,27 @@ _AUTO_BANDS_FACTOR = 8
 # per-band cost is always proportional to what the index HOLDS, not to
 # what its first batch implied.
 _MAX_AUTO_BANDS = 1024
+
+# staging-name prefix of an executor-side direct append: parquet readers
+# skip underscore-prefixed names, so a crash leaves only invisible temps,
+# which maintenance sweeps
+TMP_PREFIX = "_tmp-"
+
+# root journal of a per-band maintenance pass: names the bands it merges
+# (see BandedFingerprintIndex._compact_bands)
+_MAINTAIN_JOURNAL = "_maintain.json"
+
+
+def _bands_for_keys(distinct: int) -> int:
+    n = _MIN_AUTO_BANDS
+    while n < distinct * _AUTO_BANDS_FACTOR and n < _MAX_AUTO_BANDS:
+        n *= 2
+    return n
+
+
+def is_data_file(name: str) -> bool:
+    """True for a file a parquet read opens: visible and ``.parquet``."""
+    return not name.startswith(("_", ".")) and name.endswith(".parquet")
 
 
 # serializes the scoped parallelPartitionDiscovery.threshold raise in
@@ -243,9 +265,10 @@ class BandedFingerprintIndex:
       were derived (winnow k/w, MinHash num_hashes/bands), and an index
       over differently-derived keys answers a different question: it
       must be rebuilt, never probed;
-    - opens also heal crashed maintenance swaps before anything else, so
-      a process death inside maintain()/reband() can't leave a band (or
-      the index) invisibly stranded at a sibling path.
+    - opens also heal a crashed maintenance pass (its root journal) and
+      a crashed re-band swap before anything else, so a process death
+      inside maintain()/reband() can't leave a band half-merged or the
+      index stranded at a sibling path.
     """
 
     def __init__(
@@ -311,24 +334,11 @@ class BandedFingerprintIndex:
     # --- layout metadata -----------------------------------------------
     # The meta lives INSIDE the index directory (underscore-prefixed, so
     # parquet listings ignore it): layout and data then move as ONE unit
-    # through every directory rename (compaction swaps, re-banding), and
+    # through every directory rename (the re-band swap), and
     # no crash window can leave data under one banding described by a
     # meta from another. Write order is always data-then-meta: a crash in
     # between leaves an index without meta, which the legacy/refuse path
     # turns into a loud rebuild — never a silent wrong probe.
-
-    def _meta_path(self, spark: SparkSession, root: str | None = None):
-        jvm = spark._jvm
-        return jvm.org.apache.hadoop.fs.Path(
-            (root or self.path).rstrip("/") + "/_meta.json"
-        )
-
-    def _legacy_meta_path(self, spark: SparkSession):
-        # early round-8 builds kept the meta as a SIBLING file
-        jvm = spark._jvm
-        return jvm.org.apache.hadoop.fs.Path(
-            self.path.rstrip("/") + "_meta.json"
-        )
 
     def _write_meta(self, spark: SparkSession, root: str | None = None,
                     n_bands: int | None = None) -> None:
@@ -357,23 +367,38 @@ class BandedFingerprintIndex:
         """Reconcile instance config with the stored layout; runs once per
         instance (the layout is immutable after creation — only
         ``invalidate`` resets it). Crash recovery runs FIRST: a process
-        death inside maintain()'s or reband()'s rename windows leaves a
-        band (or the whole index) stranded at a sibling path, and every
-        probe until recovery would silently miss that slice of history —
-        so the heal must happen at open time, not only inside the next
-        maintenance call."""
+        death inside reband()'s rename window leaves the whole index at a
+        sibling path, and one inside a maintenance pass leaves a band's
+        merged segment visible beside its inputs — every probe until
+        recovery would miss or double-count that slice of history, so
+        the heal must happen at open time, not only inside the next
+        maintenance call.
+
+        A sibling left by the retired directory-swap maintenance
+        (``_bandold``/``_bandtmp`` per band, ``_precompact``/
+        ``_compacting`` for the whole index) is REFUSED, not healed:
+        which copy is current is not recorded anywhere, and the corpus
+        rebuild the stream callers take on this error is always
+        correct."""
         if self._layout_checked:
             return
         fs, path = self._fs(spark)
         jvm = spark._jvm
         self._reband_recover(fs, jvm)
-        self._compact_recover(fs, jvm)
-        if fs.exists(path):
-            self._band_recover(fs, jvm)
+        for suffix in ("_bandold", "_bandtmp", "_precompact", "_compacting"):
+            if fs.exists(jvm.org.apache.hadoop.fs.Path(self.path.rstrip("/") + suffix)):
+                raise BandedIndexLayoutError(
+                    f"banded index {self.path}: a {suffix} sibling is left "
+                    f"from a crash inside the retired directory-swap "
+                    f"maintenance, and which copy is current is unknown — "
+                    f"invalidate() and rebuild from the corpus (stream "
+                    f"callers do this automatically)"
+                )
         if not fs.exists(path):
             # nothing on disk yet: the meta is written right after the
             # data that creates the index
             return
+        self._recover_maintenance(spark)
         meta = self._read_meta(spark)
         if meta is None:
             # Legacy index (pre-meta rounds), or a crash between the
@@ -426,19 +451,10 @@ class BandedFingerprintIndex:
                 f"across it would silently miss duplicates: "
                 + "; ".join(errs)
             )
-        # n_bands: the STORED value always wins once the index exists.
-        # Unlike key_col/schema_tag (which say how the KEYS were derived —
-        # a mismatch there means the index answers a different question
-        # and must be rebuilt), the band count is pure physical sizing:
-        # probing with the stored value is always correct, whatever the
-        # caller passed. Raising here instead would make every restart
-        # after an auto-reband (maintain() legitimately grows n_bands as
-        # the corpus grows) pay a full rebuild just to get back to a
-        # layout maintain() would immediately re-band again — a perpetual
-        # rewrite cycle. The constructor's n_bands is therefore a
-        # CREATION-TIME sizing hint only. Loud, though: an operator who
-        # changed the value expecting a resize should learn it's a no-op
-        # (re-sizing is maintain()'s byte-target re-banding, not config).
+        # n_bands: the STORED value always wins (see the class docstring:
+        # the constructor's value is a creation-time sizing hint only).
+        # Loud, though: an operator who changed it expecting a resize
+        # should learn it's a no-op (re-sizing is maintain()'s re-band).
         if self.n_bands is not None and self.n_bands != int(meta["n_bands"]):
             logging.getLogger(__name__).warning(
                 "banded index %s: constructor n_bands=%d ignored — the "
@@ -462,11 +478,7 @@ class BandedFingerprintIndex:
         lists, so a key-dense first batch must not commit the index to
         tens of thousands of directories; byte-target re-banding grows
         the count as the index fills."""
-        distinct = pairs.select(self.key_col).distinct().count()
-        n = _MIN_AUTO_BANDS
-        while n < distinct * _AUTO_BANDS_FACTOR and n < _MAX_AUTO_BANDS:
-            n *= 2
-        return n
+        return _bands_for_keys(pairs.select(self.key_col).distinct().count())
 
     def _resolve_bands_for_write(self, spark: SparkSession, pairs: DataFrame) -> None:
         """Fix ``n_bands`` before the first write creates the layout:
@@ -483,10 +495,6 @@ class BandedFingerprintIndex:
         fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
         return fs, path
 
-    def _exists_raw(self, spark: SparkSession) -> bool:
-        fs, path = self._fs(spark)
-        return bool(fs.exists(path))
-
     def exists(self, spark: SparkSession) -> bool:
         """One filesystem stat — NOT a parquet resolution, which would
         recursively list every band directory (a whole Spark job for a
@@ -494,42 +502,23 @@ class BandedFingerprintIndex:
         layout-validated here (once per instance): ``exists() -> True``
         gates the callers' migration rebuild, so answering True across a
         layout mismatch would suppress exactly the rebuild that fixes it.
-        The layout check runs BEFORE the stat: it heals crashed
-        maintenance swaps, which can leave the live directory itself
-        renamed aside."""
+        The layout check runs BEFORE the stat: its re-band heal can move
+        the live directory back into place."""
         fs, path = self._fs(spark)
         self._check_layout(spark)
-        if not fs.exists(path):
-            return False
-        return True
-
-    def read(self, spark: SparkSession) -> DataFrame | None:
-        """Full index frame, or None if never written."""
-        from ..errors import is_path_not_found
-
-        self._check_layout(spark)
-        try:
-            df = spark.read.parquet(self.path)
-            df.schema  # force resolution
-            return df
-        except AnalysisException as exc:
-            if not is_path_not_found(exc):
-                raise
-            return None
+        return bool(fs.exists(path))
 
     def read_bands(self, spark: SparkSession, bands: list[int]) -> DataFrame | None:
         """Pruned read, or None when no requested band exists yet (or the
-        index was never written at all — the class's not-found contract,
-        same as ``read()``). The band directories are named EXPLICITLY
-        (``basePath`` + per-band paths): only the touched directories are
+        index was never written at all). The band directories are named
+        EXPLICITLY (``basePath`` + per-band paths): only the touched directories are
         ever listed — a plain ``spark.read.parquet(root).filter(pband IN
         ...)`` prunes the SCAN but still pays a full recursive listing of
         every band at dataframe creation, which measured as the dominant
         probe cost. One ``listStatus`` of the root (a single readdir)
         filters the request to bands that exist, so a fresh band in the
-        batch never 404s. The layout check (which includes crashed-swap
-        recovery) runs BEFORE the existence test — a crashed re-band can
-        leave the live directory itself renamed aside."""
+        batch never 404s. The layout check (crash recovery included) runs
+        BEFORE the existence test, as in :meth:`exists`."""
         fs, root = self._fs(spark)
         self._check_layout(spark)
         if not fs.exists(root):
@@ -558,35 +547,12 @@ class BandedFingerprintIndex:
         validated first, so an append can't fragment an index built under
         a different banding). Returns the band numbers actually written.
 
-        The write is a DIRECT executor-side parquet write (Arrow batches
-        → one ``pq.write_table`` per band per task), not a Spark
-        ``partitionBy`` append: the dynamic-partition commit machinery
-        costs ~10 ms of driver-side work PER PARTITION DIRECTORY per
-        write (measured 12 s for a ~900-band append whether the writer
-        was one task or thirty-two, committer v1 or v2 — the cost is the
-        job-commit/output-listing walk, not file creation), which a
-        fingerprint-dense stream (span winnowing, ~10² fps/doc ⇒ hundreds
-        of touched bands) pays EVERY micro-batch forever. Direct writes
-        cut that to the file I/O itself. Filesystems without a trusted
-        pyarrow mapping fall back to the committer path (see
-        :class:`PartitionedAppend`) — slow, never wrong.
-
-        Failure model, replacing what the Hadoop task-commit protocol
-        gave the old path:
-
-        - *process death mid-append*: files land under a ``_tmp-`` name
-          (parquet readers ignore underscore-prefixed files) and are
-          renamed into place, so a crash leaves only invisible temps
-          (swept by maintain()) plus MISSING index rows for stored docs
-          — exactly the gap the streams' in-flight marker + heal covers;
-          never a torn visible file.
-        - *task retry / speculative attempts*: the FINAL name is
-          deterministic per (append, band) — a driver-generated append
-          id, not a per-attempt uuid — so a second attempt replaces the
-          first attempt's file (same rows for that band) instead of
-          adding a duplicate file whose rows would double-count
-          ``n_shared`` in the span probe and wrongly drop unique docs.
-          Only the ``_tmp-`` staging name is per-attempt.
+        The write is :class:`PartitionedAppend`'s direct executor-side
+        write (why, and its failure model, are documented there): a crash
+        leaves only invisible temps plus MISSING index rows for stored
+        docs — exactly the gap the streams' in-flight marker + heal covers;
+        a retried task replaces its file instead of adding a duplicate
+        whose rows would double-count ``n_shared`` in the span probe.
 
         ``repartition`` by band keeps the one-file-per-touched-band
         invariant (each band's rows land in exactly one task) and is a
@@ -620,9 +586,7 @@ class BandedFingerprintIndex:
             rows, distinct = pairs.agg(
                 F.count(F.lit(1)), F.approx_count_distinct(self.key_col)
             ).first()
-            by_keys = _MIN_AUTO_BANDS
-            while by_keys < distinct * _AUTO_BANDS_FACTOR and by_keys < _MAX_AUTO_BANDS:
-                by_keys *= 2
+            by_keys = _bands_for_keys(distinct)
             target = 256 << 20  # the maintain() re-banding target
             by_bytes = _MIN_AUTO_BANDS
             while by_bytes < _MAX_BANDS and rows * 16 / by_bytes > target:
@@ -642,30 +606,24 @@ class BandedFingerprintIndex:
         self._reset_maintenance_state()
 
     def invalidate(self, spark: SparkSession) -> None:
-        """Delete the index, its marker, AND the compaction siblings.
+        """Delete the index, its marker, AND its swap siblings.
         Called by the streams when the corpus is absent or the stored
         layout contradicts theirs: an index that does not cover the
         corpus would make the stream miss duplicates forever — absence
-        forces the migration rebuild instead. The _precompact/_compacting leftovers must die too: a stale
-        _precompact surviving invalidation would let a later compact()
-        'recover' exactly the stale index this call deleted."""
-        fs, path = self._fs(spark)
-        jvm = spark._jvm
-        for p in (
-            path,  # internal meta dies with the directory
-            jvm.org.apache.hadoop.fs.Path(self.path.rstrip("/") + "_precompact"),
-            jvm.org.apache.hadoop.fs.Path(self.path.rstrip("/") + "_compacting"),
-            jvm.org.apache.hadoop.fs.Path(self.path.rstrip("/") + "_bandold"),
-            jvm.org.apache.hadoop.fs.Path(self.path.rstrip("/") + "_bandtmp"),
-            jvm.org.apache.hadoop.fs.Path(self.path.rstrip("/") + "_rebandold"),
-            jvm.org.apache.hadoop.fs.Path(self.path.rstrip("/") + "_rebandtmp"),
-            self._legacy_meta_path(spark),
+        forces the migration rebuild instead. The retired swaps'
+        leftovers (which every open refuses) die too, or the rebuilt
+        index would be refused again."""
+        fs, _ = self._fs(spark)
+        for suffix in (
+            "",  # the index, its internal meta and journal die with it
+            "_precompact", "_compacting", "_bandold", "_bandtmp",
+            "_rebandold", "_rebandtmp",
+            "_meta.json",  # early round-8 builds kept the meta as a sibling
+            ".inflight",
         ):
+            p = spark._jvm.org.apache.hadoop.fs.Path(self.path.rstrip("/") + suffix)
             if fs.exists(p):
                 fs.delete(p, True)
-        marker = self._marker_path(spark)
-        if fs.exists(marker):
-            fs.delete(marker, False)
         self._layout_checked = False
         # back to the constructor's world: the adopted layout died with
         # the data (keeping an old index's adopted n_bands would size a
@@ -701,114 +659,122 @@ class BandedFingerprintIndex:
         fs, _ = self._fs(spark)
         return bool(fs.exists(self._marker_path(spark)))
 
-    def compact(self, spark: SparkSession) -> None:
-        """Rewrite the index with one file per band. Streaming appends add
-        one small file per touched band per micro-batch; over a long run a
-        band directory accumulates thousands of files and the probe's open
-        cost grows with file count, not data size. Compaction is plain
-        parquet maintenance — same rows, same banding — staged through a
-        sibling directory and swapped in atomically-enough for the
-        SINGLE-WRITER stream this index serves (run it between batches or
-        from the stream's own maintenance hook, not concurrently with a
-        probe)."""
-        fs, path = self._fs(spark)
-        jvm = spark._jvm
-        tmp = self.path.rstrip("/") + "_compacting"
-        old = self.path.rstrip("/") + "_precompact"
-        tmp_path = jvm.org.apache.hadoop.fs.Path(tmp)
-        old_path = jvm.org.apache.hadoop.fs.Path(old)
-        # recovery / refusal BEFORE doing anything destructive:
-        # a leftover _precompact means a prior compact() died between its
-        # two renames — restore it if the live index is gone, refuse (and
-        # tell the operator what's what) if both exist; renaming the live
-        # index INTO an existing _precompact dir would bury it.
-        if fs.exists(old_path):
-            if not fs.exists(path):
-                if not fs.rename(old_path, path):
-                    raise RuntimeError(
-                        f"compact recovery: rename {old} -> {self.path} failed"
-                    )
-            else:
-                raise RuntimeError(
-                    f"refusing to compact: {old} exists from a crashed "
-                    f"compaction alongside a live index at {self.path} — "
-                    f"verify which is current and delete the other first"
-                )
-        if fs.exists(tmp_path):
-            fs.delete(tmp_path, True)  # stale staging from a prior crash
-        df = self.read(spark)
-        if df is None:
-            return
-        (
-            df.repartition("pband")
-            .write.mode("overwrite")
-            .partitionBy("pband")
-            .parquet(tmp)
-        )
-        # the staged copy carries its own meta so the swap moves layout
-        # and data as one unit
-        self._write_meta(spark, root=tmp)
-        if not fs.rename(path, old_path):
-            raise RuntimeError(f"compact: rename {self.path} -> {old} failed")
-        if not fs.rename(tmp_path, path):
-            # put the original back before failing — and say so loudly if
-            # even that fails: the live index is then stranded at
-            # _precompact, which the operator must know
-            restored = fs.rename(old_path, path)
-            raise RuntimeError(
-                f"compact: rename {tmp} -> {self.path} failed"
-                + (
-                    ""
-                    if restored
-                    else f"; ROLLBACK ALSO FAILED — live index stranded at "
-                    f"{old}, restore it manually before the next probe"
-                )
-            )
-        fs.delete(old_path, True)
-        # whole-index rewrite: byte sizes changed everywhere; re-learn on
-        # the next maintain() tick
-        self._reset_maintenance_state()
-
     # --- per-band maintenance ------------------------------------------
-    # compact() rewrites the WHOLE index — right for a one-off cleanup,
-    # wrong as a recurring hook: a long-running stream fragments only the
-    # bands it touches, and rewriting terabytes of untouched bands to fix
-    # a few fragmented ones is the kind of maintenance cost that scales
-    # with index size instead of batch size. maintain() compacts ONLY
-    # bands whose file count crossed the threshold; untouched bands keep
-    # their exact files (byte-identical, never rewritten).
+    # A long-running stream fragments only the bands it touches, so
+    # maintain() merges ONLY bands whose file count crossed the threshold;
+    # untouched bands keep their exact files (never rewritten). Every
+    # merge is state_store.compact_small_files, journaled inside its band;
+    # one root journal names a pass's bands before the first merge and is
+    # dropped after the last, so an open finds a crashed pass with one
+    # stat instead of one per band.
 
-    def _band_recover(self, fs, jvm) -> None:
-        """Heal a crashed per-band swap before doing anything else. The
-        swap order (stage fully → rename band out → rename staged in →
-        delete old) means a leftover ``_bandold/pband=B`` is either the
-        live copy (root band missing: restore it) or a superseded old
-        copy (root band present — and COMPLETE, because the staged
-        replacement was fully written before any rename: delete it)."""
-        old_root = jvm.org.apache.hadoop.fs.Path(self.path.rstrip("/") + "_bandold")
-        tmp_root = jvm.org.apache.hadoop.fs.Path(self.path.rstrip("/") + "_bandtmp")
-        if fs.exists(old_root) or fs.exists(tmp_root):
-            # a crashed swap means the on-disk state diverged from this
-            # instance's dirty/byte bookkeeping — re-learn it on the next
-            # maintain() with one full walk
+    def _journal_path(self) -> str:
+        return self.path.rstrip("/") + "/" + _MAINTAIN_JOURNAL
+
+    def _stored_bands(self, spark: SparkSession) -> list[int]:
+        fs, root = self._fs(spark)
+        names = hadoop_list_names(spark._jvm, fs, root)
+        return sorted(int(n.split("=", 1)[1]) for n in names if n.startswith("pband="))
+
+    def _band_sizes(self, fs, jvm, band: int) -> list[int]:
+        """Byte sizes of a band's data files, sweeping crashed-append
+        temps on the way (maintenance runs between batches under the
+        single-writer rule, so any temp seen here is garbage)."""
+        sizes = []
+        band_p = jvm.org.apache.hadoop.fs.Path(f"{self.path}/pband={band}")
+        for f in fs.listStatus(band_p):
+            name = f.getPath().getName()
+            if name.startswith(TMP_PREFIX):
+                fs.delete(f.getPath(), False)
+            elif is_data_file(name):
+                sizes.append(f.getLen())
+        return sizes
+
+    def _settle_band(self, spark: SparkSession, fs, band: int, excluded: bool) -> None:
+        """After a band merge: remove the band when no row is left (all
+        ``excluded`` — the compactor leaves no file or a 0-row one; with
+        no schema cached, a fresh instance's ``read_bands`` could not read
+        a dataless band), else refresh its byte-cache entry."""
+        band_dir = f"{self.path}/pband={band}"
+        p = spark._jvm.org.apache.hadoop.fs.Path(band_dir)
+        if not fs.exists(p):
+            return
+        sizes = self._band_sizes(fs, spark._jvm, band)
+        if not sizes or (excluded and spark.read.parquet(band_dir).isEmpty()):
+            fs.delete(p, True)
+            if self._band_bytes is not None:
+                self._band_bytes.pop(band, None)
+        elif self._band_bytes is not None:
+            self._band_bytes[band] = sum(sizes)
+
+    def _compact_bands(
+        self,
+        spark: SparkSession,
+        bands: list[int],
+        max_files: int,
+        exclude: DataFrame | None = None,
+        exclude_cols: list[str] | None = None,
+        purge: bool = False,
+    ) -> int:
+        """Merge each band under the root journal; returns the number of
+        bands merged. ``purge`` is the compactor's erase form (``force`` +
+        ``include_graduated``). A pass that dies leaves this instance
+        unchecked, so its next open heals like a fresh instance's."""
+        if not bands:
+            return 0
+        from . import state_store
+
+        fs, _ = self._fs(spark)
+        journal = self._journal_path()
+        try:
+            hadoop_write_json(
+                spark, journal, {"bands": bands, "excluded": exclude is not None}
+            )
+            merged = 0
+            for band in bands:
+                n = state_store.compact_small_files(
+                    spark, f"{self.path}/pband={band}", max_files,
+                    exclude=exclude, exclude_cols=exclude_cols,
+                    force=purge, include_graduated=purge,
+                )
+                merged += n > 0
+                self._settle_band(spark, fs, band, exclude is not None and n > 0)
+            fs.delete(spark._jvm.org.apache.hadoop.fs.Path(journal), False)
+        except BaseException:
+            self._layout_checked = False
             self._reset_maintenance_state()
-        if fs.exists(old_root):
-            for st in fs.listStatus(old_root):
-                name = st.getPath().getName()
-                if not name.startswith("pband="):
-                    continue
-                live = jvm.org.apache.hadoop.fs.Path(self.path + "/" + name)
-                if not fs.exists(live):
-                    if not fs.rename(st.getPath(), live):
-                        raise RuntimeError(
-                            f"maintain recovery: rename {st.getPath()} -> "
-                            f"{live} failed"
-                        )
-                else:
-                    fs.delete(st.getPath(), True)
-            fs.delete(old_root, True)
-        if fs.exists(tmp_root):
-            fs.delete(tmp_root, True)  # staging is always safe to drop
+            raise
+        return merged
+
+    def _recover_maintenance(self, spark: SparkSession) -> None:
+        """Heal a pass that died under its root journal: each listed
+        band's compaction journal rolls it back or forward, a band left
+        without rows is removed, and the next maintain() re-learns the
+        bookkeeping with one full walk. One stat when no journal exists."""
+        journal = hadoop_read_json(spark, self._journal_path())
+        if journal is None:
+            return
+        from . import state_store
+
+        fs, _ = self._fs(spark)
+        for band in journal["bands"]:
+            state_store.recover_dir_compaction(spark, f"{self.path}/pband={band}")
+            self._settle_band(spark, fs, band, journal["excluded"])
+        self._reset_maintenance_state()
+        fs.delete(spark._jvm.org.apache.hadoop.fs.Path(self._journal_path()), False)
+
+    def _open_for_maintenance(self, spark: SparkSession) -> bool:
+        """Heal every crashed pass; False when there is no index. The
+        re-band heal runs BEFORE the existence check: a crashed re-band can
+        leave the live directory itself missing (its content is at
+        _rebandtmp/_rebandold), and an early return would strand it."""
+        fs, root = self._fs(spark)
+        self._reband_recover(fs, spark._jvm)
+        if not fs.exists(root):
+            return False
+        self._check_layout(spark)
+        self._recover_maintenance(spark)
+        return True
 
     def maintain(
         self,
@@ -818,17 +784,16 @@ class BandedFingerprintIndex:
         exclude: DataFrame | None = None,
         exclude_cols: list[str] | None = None,
     ) -> int:
-        """Compact every band directory holding more than
-        ``max_files_per_band`` parquet files down to one file; returns the
-        number of band directories rewritten (all ``n_bands`` of them
-        when the size check below triggers a re-band, which subsumes
-        per-band compaction). Streaming appends add one small file
-        per touched band per micro-batch, so probe open-cost grows with
-        file count; this hook (called by the streams between batches)
-        bounds it without compact()'s full-index rewrite. Single-writer
-        discipline applies: run between batches, never concurrently with
-        a probe or append. Crash-safe via the stage/swap in
-        ``_band_recover``.
+        """Merge the small files of every band directory holding more
+        than ``max_files_per_band`` parquet files; returns the number of
+        bands merged (all ``n_bands`` of them when the size check below
+        triggers a re-band, which subsumes per-band compaction).
+        Streaming appends add one small file per touched band per
+        micro-batch, so probe open-cost grows with file count; this hook
+        (called by the streams between batches) bounds it. Merges are
+        the compactor's, so size-tiered: files at or above its target
+        size are graduated and never rewritten again. Single-writer
+        discipline: between batches, never concurrently with a probe.
 
         ``target_band_bytes`` is the re-banding trigger: when the AVERAGE
         band outgrows it (the corpus grew far past the size n_bands was
@@ -855,76 +820,34 @@ class BandedFingerprintIndex:
         ``exclude`` (with ``exclude_cols`` join keys) is the tombstone
         fold hook: every band this tick rewrites (and a re-band, which
         rewrites all of them) drops the excluded rows. Opportunistic by
-        design — rows in bands that never fragment survive until those
-        bands are rewritten, so callers' probes must anti-join the
-        tombstone set regardless (the dedup streams do)."""
-        fs, root = self._fs(spark)
-        jvm = spark._jvm
-        # recovery BEFORE the existence check: a crashed re-band can leave
-        # the live directory itself missing (its content is at _rebandtmp/
-        # _rebandold), and an early return here would strand it
-        self._reband_recover(fs, jvm)
-        if not fs.exists(root):
+        design — rows in bands that never fragment, or in graduated
+        segments, survive until those files are rewritten, so callers'
+        probes must anti-join the tombstone set regardless (the dedup
+        streams do); :meth:`purge` reaches every file."""
+        if not self._open_for_maintenance(spark):
             return 0
-        self._check_layout(spark)
-        self._band_recover(fs, jvm)
+        fs, _ = self._fs(spark)
+        jvm = spark._jvm
         full_walk = self._dirty_bands is None or self._band_bytes is None
         self.last_maintain_walk = "full" if full_walk else "dirty"
-        fragmented: list[str] = []
         if full_walk:
             self._band_bytes = {}
-            inspected = []
-            for st in fs.listStatus(root):
-                name = st.getPath().getName()
-                if not name.startswith("pband="):
-                    continue
-                band = int(name.split("=", 1)[1])
-                inspected.append(band)
-                n_files = 0
-                nbytes = 0
-                for f in fs.listStatus(st.getPath()):
-                    name_f = f.getPath().getName()
-                    # _tmp- leftovers from a crashed direct append are
-                    # not live data (readers ignore underscore-prefixed
-                    # files): don't count them, DELETE them — maintain()
-                    # runs between batches under the single-writer rule,
-                    # so any temp seen here is garbage, and without the
-                    # sweep they would pile up in band dirs forever
-                    if name_f.startswith("_tmp-"):
-                        fs.delete(f.getPath(), False)
-                        continue
-                    if name_f.endswith(".parquet") and not name_f.startswith("_"):
-                        n_files += 1
-                        nbytes += f.getLen()
-                self._band_bytes[band] = nbytes
-                if n_files > max_files_per_band:
-                    fragmented.append(name)
-            self.last_maintain_inspected = sorted(inspected)
+            bands = self._stored_bands(spark)
         else:
-            self.last_maintain_inspected = sorted(self._dirty_bands)
-            for band in self.last_maintain_inspected:
-                band_path = jvm.org.apache.hadoop.fs.Path(
-                    f"{self.path}/pband={band}"
-                )
-                if not fs.exists(band_path):
-                    # touched sets are supersets of the bands actually
-                    # written (probe keys include rows later filtered out)
-                    continue
-                n_files = 0
-                nbytes = 0
-                for f in fs.listStatus(band_path):
-                    name_f = f.getPath().getName()
-                    if name_f.startswith("_tmp-"):
-                        # crashed-append staging garbage: sweep (see the
-                        # full-walk branch for why this is safe here)
-                        fs.delete(f.getPath(), False)
-                        continue
-                    if name_f.endswith(".parquet") and not name_f.startswith("_"):
-                        n_files += 1
-                        nbytes += f.getLen()
-                self._band_bytes[band] = nbytes
-                if n_files > max_files_per_band:
-                    fragmented.append(f"pband={band}")
+            bands = sorted(self._dirty_bands)
+        self.last_maintain_inspected = bands
+        fragmented: list[int] = []
+        for band in bands:
+            # touched sets are supersets of the bands actually written
+            # (probe keys include rows later filtered out)
+            if not full_walk and not fs.exists(
+                jvm.org.apache.hadoop.fs.Path(f"{self.path}/pband={band}")
+            ):
+                continue
+            sizes = self._band_sizes(fs, jvm, band)
+            self._band_bytes[band] = sum(sizes)
+            if len(sizes) > max_files_per_band:
+                fragmented.append(band)
         self._dirty_bands = set()
         total_bytes = sum(self._band_bytes.values())
         if (
@@ -941,51 +864,22 @@ class BandedFingerprintIndex:
             n_new = min(n_new, _MAX_BANDS)
             self.reband(spark, n_new, exclude=exclude, exclude_cols=exclude_cols)
             return self.n_bands  # reband subsumes per-band compaction
-        if not fragmented:
+        return self._compact_bands(
+            spark, fragmented, max_files_per_band, exclude, exclude_cols
+        )
+
+    def purge(
+        self, spark: SparkSession, exclude: DataFrame, exclude_cols: list[str]
+    ) -> int:
+        """Fold ``exclude``'s rows out of EVERY band, graduated segments
+        included — a physical erase must reach every file, which the
+        size-tiered :meth:`maintain` never promises. Returns the number
+        of bands rewritten."""
+        if not self._open_for_maintenance(spark):
             return 0
-        tmp_root = self.path.rstrip("/") + "_bandtmp"
-        old_root = self.path.rstrip("/") + "_bandold"
-        fs.mkdirs(jvm.org.apache.hadoop.fs.Path(old_root))
-        for name in fragmented:
-            band_dir = self.path + "/" + name
-            staged = tmp_root + "/" + name
-            # band files store no partition column (partitionBy strips
-            # it), so a plain dir read + rewrite reproduces the layout
-            band_df = spark.read.parquet(band_dir)
-            if exclude is not None:
-                # the exclude frame carries its own broadcast hint (or not
-                # — read_tombstones' bounded-broadcast escape decides)
-                band_df = band_df.join(exclude, exclude_cols, "left_anti")
-            band_df.coalesce(1).write.mode("overwrite").parquet(staged)
-            live = jvm.org.apache.hadoop.fs.Path(band_dir)
-            old = jvm.org.apache.hadoop.fs.Path(old_root + "/" + name)
-            stg = jvm.org.apache.hadoop.fs.Path(staged)
-            if not fs.rename(live, old):
-                raise RuntimeError(f"maintain: rename {band_dir} -> {old} failed")
-            if not fs.rename(stg, live):
-                restored = fs.rename(old, live)
-                raise RuntimeError(
-                    f"maintain: rename {staged} -> {band_dir} failed"
-                    + (
-                        ""
-                        if restored
-                        else f"; ROLLBACK ALSO FAILED — band stranded at "
-                        f"{old}, restore it manually before the next probe"
-                    )
-                )
-            fs.delete(old, True)
-            # refresh the byte cache for the rewritten band (compaction
-            # changes encoded size) so the re-band trigger's running
-            # total stays exact without any extra walk
-            nbytes = 0
-            for f in fs.listStatus(live):
-                name_f = f.getPath().getName()
-                if name_f.endswith(".parquet") and not name_f.startswith("_"):
-                    nbytes += f.getLen()
-            self._band_bytes[int(name.split("=", 1)[1])] = nbytes
-        fs.delete(jvm.org.apache.hadoop.fs.Path(old_root), True)
-        fs.delete(jvm.org.apache.hadoop.fs.Path(tmp_root), True)
-        return len(fragmented)
+        return self._compact_bands(
+            spark, self._stored_bands(spark), 0, exclude, exclude_cols, purge=True
+        )
 
     # --- re-banding ------------------------------------------------------
     # n_bands is chosen when the index is CREATED, sized to the corpus as
@@ -1036,31 +930,6 @@ class BandedFingerprintIndex:
             self._layout_checked = False
             self.n_bands = None
 
-    def _compact_recover(self, fs, jvm) -> None:
-        """Open-time heal for compact()'s crash window: a death between
-        its two renames leaves the live index complete at ``_precompact``
-        — without this, ``exists()`` reports the index gone and the
-        stream pays a full silent rebuild, and the stale ``_precompact``
-        then poisons every later compact() with its both-exist refusal.
-        Only the unambiguous case is healed here (live missing → restore
-        the old copy, drop the possibly-partial staging); live-and-
-        ``_precompact``-both-present stays compact()'s loud refusal —
-        that state can also be an operator's manual copy, and deleting
-        either side on open would be guessing."""
-        old_p = jvm.org.apache.hadoop.fs.Path(self.path.rstrip("/") + "_precompact")
-        live = jvm.org.apache.hadoop.fs.Path(self.path)
-        if fs.exists(old_p) and not fs.exists(live):
-            self._reset_maintenance_state()
-            if not fs.rename(old_p, live):
-                raise RuntimeError(
-                    f"compact recovery: rename {old_p} -> {self.path} failed"
-                )
-            tmp_p = jvm.org.apache.hadoop.fs.Path(
-                self.path.rstrip("/") + "_compacting"
-            )
-            if fs.exists(tmp_p):
-                fs.delete(tmp_p, True)
-
     def reband(
         self,
         spark: SparkSession,
@@ -1079,9 +948,7 @@ class BandedFingerprintIndex:
         self._reband_recover(fs, jvm)
         if not fs.exists(path):
             return
-        df = self.read(spark)
-        if df is None:
-            return
+        df = spark.read.parquet(self.path)
         if exclude is not None:
             df = df.join(exclude, exclude_cols, "left_anti")
         tmp = self.path.rstrip("/") + "_rebandtmp"
@@ -1298,12 +1165,13 @@ def _make_band_writer(dests: list[dict]):
     group becomes ONE parquet file holding that store's own columns under
     their original names, in ``<part_prefix>=<value>/``.
 
-    Failure model (documented on :meth:`BandedFingerprintIndex.append`):
+    Failure model (documented on :class:`PartitionedAppend`):
     per-attempt ``_tmp-`` staging names so a crash leaves only files
     parquet readers ignore, then a rename to a DETERMINISTIC final name
     — ``part-{append_id}-b{band}``, the append id of the store's own
     entry — so task retries and speculative attempts replace rather than
     duplicate."""
+    tmp_prefix = TMP_PREFIX  # captured by value: the closure ships alone
 
     def write_bands(batches):
         # executor closure: self-contained imports (workers don't
@@ -1361,7 +1229,7 @@ def _make_band_writer(dests: list[dict]):
                 # the loser, whose retry then sees the file and skips.
                 final = f"{band_dir}/part-{append_id}-b{band}.parquet"
                 if filesystem.get_file_info(final).type == pafs.FileType.NotFound:
-                    tmp = f"{band_dir}/_tmp-{uuid.uuid4().hex}.parquet"
+                    tmp = f"{band_dir}/{tmp_prefix}{uuid.uuid4().hex}.parquet"
                     with filesystem.open_output_stream(tmp) as out:
                         pq.write_table(sub, out)
                     filesystem.move(tmp, final)
@@ -1431,7 +1299,8 @@ def append_many(
     spark = specs[0][1].sparkSession
     creating: list[bool] = []
     for idx, pairs in specs:
-        creating.append(not idx._exists_raw(spark))
+        fs, root = idx._fs(spark)
+        creating.append(not fs.exists(root))
         idx._resolve_bands_for_write(spark, pairs)
     append_id = uuid.uuid4().hex  # deterministic final names per append
     try:
@@ -1631,10 +1500,18 @@ class PartitionedAppend:
     Several stores' appends fuse into one job through
     :func:`append_partitioned`; :meth:`append` is its one-store case.
 
-    Failure model (the banded index's, see
-    :meth:`BandedFingerprintIndex.append`): invisible ``_tmp-`` staging,
-    then skip-if-landed final names ``part-{append_id}-b{value}``. A
-    caller that derives ``append_id`` DETERMINISTICALLY from its batch
+    Failure model, replacing what the Hadoop task-commit protocol gave:
+
+    - *process death mid-append*: files land under a ``_tmp-`` name
+      (invisible to parquet readers) and are renamed into place, so a
+      crash leaves only invisible temps (swept by maintenance), never a
+      torn visible file;
+    - *task retry / speculative attempts*: the FINAL name
+      ``part-{append_id}-b{value}`` is deterministic per (append,
+      partition) and skipped if already landed, so a second attempt
+      never adds a duplicate file. Only the staging name is per-attempt.
+
+    A caller that derives ``append_id`` DETERMINISTICALLY from its batch
     content gets REPLAY-IDEMPOTENT appends (a crashed attempt's landed
     partitions are skipped, missing ones filled); otherwise it must
     converge replays itself — ``key_cols`` + ``guard``, or its own

@@ -782,19 +782,16 @@ def purge_search_tombstones(spark, index_dir: str, clear: bool = False) -> dict:
         # forget the ids EVERYWHERE: without the tombstone entry burn, a
         # stale _docidx row would make the stream skip a re-sent id
         # forever although doclen (purged) no longer holds it — fold the
-        # sidecar too
+        # sidecar too, graduated segments included
         docidx = BandedFingerprintIndex(
             _docidx_path(index_dir), key_col="fpk", schema_tag=_SCHEMA_TAG
         )
         if erased_all:
             docidx.invalidate(spark)
-        elif docidx.exists(spark):
-            docidx.maintain(
+        else:
+            docidx.purge(
                 spark,
-                max_files_per_band=0,
-                exclude=tomb.select(
-                    F.col(id_col).cast("string").alias("fp")
-                ),
+                exclude=tomb.select(F.col(id_col).cast("string").alias("fp")),
                 exclude_cols=["fp"],
             )
         # ...and their REVISION markers: apply_revisions anti-joins a

@@ -49,10 +49,14 @@ family doesn't re-derive them:
   A crash before (3) rolls BACK (inputs intact, staging swept); a crash
   after (3) rolls FORWARD (final is live, surviving inputs deleted).
   Between the crash and recovery a raw reader could see final+inputs
-  simultaneously — the same single-writer discipline as the banded
-  index's swaps applies: owners run :func:`recover_dir_compaction` at
-  open time (the stream processors and probes here do), and maintenance
-  never runs concurrently with a probe.
+  simultaneously, so the single-writer discipline applies: owners run
+  :func:`recover_dir_compaction` at open time (the stream processors and
+  probes here do; the banded index finds its crashed bands through one
+  root journal), and maintenance never runs concurrently with a probe.
+  This is the package's only crash-safe small-file merge: every store
+  family's compaction (search buckets, doclen, forward rows, ``_rev``
+  sidecars, revision markers, tombstones, banded sidecar bands) runs on
+  it.
 """
 
 from __future__ import annotations
@@ -62,7 +66,12 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .banded_index import hadoop_read_json, hadoop_write_json
+from .banded_index import (
+    TMP_PREFIX,
+    hadoop_read_json,
+    hadoop_write_json,
+    is_data_file,
+)
 
 _MANIFEST = "_compact.json"
 _STAGE_PREFIX = "_cstage-"
@@ -94,10 +103,6 @@ def detect_dir_compaction(spark: SparkSession, dir_path: str) -> bool:
     return bool(fs.exists(man_p))
 
 
-def _is_data_file(name: str) -> bool:
-    return not name.startswith(("_", ".")) and name.endswith(".parquet")
-
-
 def has_data_files(spark: SparkSession, dir_path: str) -> bool:
     """True when ``dir_path`` exists and holds a file a parquet read opens:
     visible and ``.parquet``, the compactor's own rule. A directory can
@@ -106,7 +111,7 @@ def has_data_files(spark: SparkSession, dir_path: str) -> bool:
     rewriters gate on this."""
     _, fs, jp = _fs_for(spark, dir_path)
     return bool(fs.exists(jp)) and any(
-        _is_data_file(st.getPath().getName()) for st in fs.listStatus(jp)
+        is_data_file(st.getPath().getName()) for st in fs.listStatus(jp)
     )
 
 
@@ -302,12 +307,12 @@ def compact_small_files(
         if name.startswith(_STAGE_PREFIX):
             fs.delete(st.getPath(), True)  # stale staging from a crash
             continue
-        if name.startswith("_tmp-"):
+        if name.startswith(TMP_PREFIX):
             # crashed direct-append staging: invisible garbage, sweep
             # (between batches only — the single-writer rule)
             fs.delete(st.getPath(), False)
             continue
-        if not _is_data_file(name):
+        if not is_data_file(name):
             continue
         if include_graduated or st.getLen() < target_bytes:
             small.append(st.getPath())
@@ -329,7 +334,7 @@ def compact_small_files(
     parts = [
         st.getPath()
         for st in fs.listStatus(stage_p)
-        if _is_data_file(st.getPath().getName())
+        if is_data_file(st.getPath().getName())
     ]
     final_name = f"part-merged-{tok}.parquet" if parts else None
     man_path = dir_path.rstrip("/") + "/" + _MANIFEST

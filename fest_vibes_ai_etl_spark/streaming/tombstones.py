@@ -21,7 +21,9 @@ lakehouse corpus has no row-level delete, so erasure is two-phase:
      after the physical purge (the invariant that makes purge timing an
      operations choice, not a correctness event);
    - sidecar maintenance folds tombstoned rows out of every band it
-     rewrites (``BandedFingerprintIndex.maintain(exclude=...)``).
+     merges through the journaled compactor
+     (``BandedFingerprintIndex.maintain(exclude=...)``; rows in graduated
+     segments wait for ``purge``, the search purge's erase of every file).
 
 2. **Purge** (:func:`purge_corpus_tombstones`): rewrite the corpus
    without the tombstoned ids — staged + swapped exactly like the banded

@@ -3,12 +3,16 @@ dedup streams' stored sets, and crash-gap healing."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from fest_vibes_ai_etl_spark.streaming.banded_index import BandedFingerprintIndex
+from fest_vibes_ai_etl_spark.streaming.banded_index import (
+    BandedFingerprintIndex,
+    BandedIndexLayoutError,
+)
 from fest_vibes_ai_etl_spark.streaming.incremental_near_dedup import (
     make_near_dedup_processor,
     near_index_path,
@@ -91,53 +95,6 @@ def test_index_roundtrip_prunes_partitions(spark, tmp_path):
     assert (999999, 13) in {
         (r.id, r.fp) for r in idx.read_bands(spark, [13 % 8]).collect()
     }
-
-
-def test_index_compaction_preserves_rows_and_reduces_files(spark, tmp_path):
-    idx = BandedFingerprintIndex(str(tmp_path / "idx"), "fp", n_bands=4)
-    for batch in range(5):  # streaming shape: one small file per band per batch
-        idx.append(
-            spark.range(batch * 100, batch * 100 + 100).select(
-                F.col("id"), F.xxhash64("id").alias("fp")
-            )
-        )
-    before = {(r.id, r.fp) for r in spark.read.parquet(str(tmp_path / "idx")).select("id", "fp").collect()}
-
-    def n_files():
-        return sum(
-            len([f for f in os.listdir(os.path.join(tmp_path / "idx", d)) if f.endswith(".parquet")])
-            for d in os.listdir(tmp_path / "idx") if d.startswith("pband=")
-        )
-
-    files_before = n_files()
-    assert files_before >= 20  # 5 appends x 4 bands
-    idx.compact(spark)
-    assert n_files() <= 4  # one file per band
-    after = {(r.id, r.fp) for r in spark.read.parquet(str(tmp_path / "idx")).select("id", "fp").collect()}
-    assert after == before
-    # pruned reads still work post-compaction
-    assert idx.read_bands(spark, [0]).count() > 0
-
-
-def test_index_compaction_crash_recovery_and_refusal(spark, tmp_path):
-    import shutil
-
-    import pytest
-
-    base = str(tmp_path / "idx")
-    idx = BandedFingerprintIndex(base, "fp", n_bands=4)
-    idx.append(spark.range(100).select(F.col("id"), F.xxhash64("id").alias("fp")))
-    rows = {(r.id, r.fp) for r in spark.read.parquet(base).select("id", "fp").collect()}
-    # crash between compact()'s two renames: live index only at _precompact
-    os.rename(base, base + "_precompact")
-    idx.compact(spark)  # must restore, then compact normally
-    assert {(r.id, r.fp) for r in spark.read.parquet(base).select("id", "fp").collect()} == rows
-    assert not os.path.exists(base + "_precompact")
-    # both live and _precompact present: refuse rather than bury the live one
-    shutil.copytree(base, base + "_precompact")
-    with pytest.raises(RuntimeError, match="refusing to compact"):
-        idx.compact(spark)
-    assert os.path.exists(base) and os.path.exists(base + "_precompact")
 
 
 def _stored_ids(spark, corpus):
@@ -353,7 +310,7 @@ def test_maintain_compacts_only_fragmented_bands(spark, tmp_path):
     """Per-band maintenance: bands over the file threshold are compacted
     to one file; untouched bands keep their exact files (byte-identical,
     never rewritten) — the property that makes maintain() affordable on a
-    terabyte index where compact()'s full rewrite is not."""
+    terabyte index where a whole-index rewrite is not."""
     base = str(tmp_path / "idx")
     idx = BandedFingerprintIndex(base, "fp", n_bands=8)
     idx.build_from(spark.range(400).select(F.col("id"), F.xxhash64("id").alias("fp")))
@@ -383,21 +340,159 @@ def test_maintain_compacts_only_fragmented_bands(spark, tmp_path):
     assert idx.maintain(spark, max_files_per_band=4) == 0  # idempotent
 
 
-def test_maintain_crash_recovery_restores_band(spark, tmp_path):
-    """A crash between maintain()'s two renames leaves the live band copy
-    under _bandold; the next maintain must restore it before doing
-    anything else, and a stale _bandtmp staging dir is dropped."""
-    base = str(tmp_path / "idx")
+def _two_fragmented_bands(spark, base):
+    """A 4-band index whose bands 0 and 1 hold four files each (the
+    others one): maintain(max_files_per_band=2) merges exactly two bands.
+    Returns the stored pairs."""
     idx = BandedFingerprintIndex(base, "fp", n_bands=4)
     idx.build_from(spark.range(100).select(F.col("id"), F.xxhash64("id").alias("fp")))
-    before = _index_pairs(spark, base)
-    os.makedirs(base + "_bandold")
-    os.rename(os.path.join(base, "pband=2"), base + "_bandold/pband=2")
-    os.makedirs(base + "_bandtmp/pband=9")  # stale staging
-    assert idx.maintain(spark, max_files_per_band=4) == 0
-    assert _index_pairs(spark, base) == before
-    assert not os.path.exists(base + "_bandold")
-    assert not os.path.exists(base + "_bandtmp")
+    for i in range(3):
+        idx.append(spark.createDataFrame(
+            [(10_000 + 2 * i + b, 4 * (i + 1) + b) for b in (0, 1)], "id long, fp long"
+        ))
+    return sorted(_index_pairs(spark, base))
+
+
+def _assert_healed_and_converges(spark, base, stored):
+    """A fresh instance reads every stored pair exactly once, leaves no
+    journal behind, and its maintain() converges."""
+    fresh = BandedFingerprintIndex(base, "fp")
+    got = fresh.read_bands(spark, list(range(4))).collect()
+    assert sorted((r.id, r.fp) for r in got) == stored
+    journals = [base + "/_maintain.json"] + [
+        f"{base}/pband={b}/_compact.json" for b in range(4)
+    ]
+    assert not any(os.path.exists(j) for j in journals)
+    fresh.maintain(spark, max_files_per_band=2)
+    assert fresh.maintain(spark, max_files_per_band=2) == 0
+    got = fresh.read_bands(spark, list(range(4))).collect()
+    assert sorted((r.id, r.fp) for r in got) == stored
+    assert not any(os.path.exists(j) for j in journals)
+
+
+def test_maintain_crash_recovery_restores_band(spark, tmp_path, monkeypatch):
+    """Kill points inside one band's merge. After the band's compaction
+    manifest, before its rename: recovery rolls the band BACK (inputs
+    intact). After the rename, before the input deletes: a raw read
+    would see the merged segment beside its inputs, and recovery rolls
+    FORWARD."""
+    from fest_vibes_ai_etl_spark.streaming import state_store
+
+    real_write = state_store.hadoop_write_json
+
+    def die_after_manifest(spark_, path, obj):
+        real_write(spark_, path, obj)
+        if path.endswith(state_store._MANIFEST):
+            raise RuntimeError("injected crash after band manifest")
+
+    def die_before_deletes(fs, jvm, d, names):
+        raise RuntimeError("injected crash before input deletes")
+
+    for name, seam, dying in (
+        ("manifest", "hadoop_write_json", die_after_manifest),
+        ("rename", "_delete_inputs", die_before_deletes),
+    ):
+        base = str(tmp_path / name)
+        stored = _two_fragmented_bands(spark, base)
+        idx = BandedFingerprintIndex(base, "fp")
+        with monkeypatch.context() as m:
+            m.setattr(state_store, seam, dying)
+            with pytest.raises(RuntimeError, match="injected crash"):
+                idx.maintain(spark, max_files_per_band=2)
+        assert os.path.exists(base + "/_maintain.json")
+        _assert_healed_and_converges(spark, base, stored)
+
+
+def test_stranded_band_recovered_at_open(spark, tmp_path, monkeypatch):
+    """Kill points around the bands of one pass. After the root journal,
+    before any band: nothing to roll. Between two bands: the first is
+    merged, the second untouched. Opens (read_bands) must heal from the
+    root journal BEFORE probing, so no probe double-counts or misses a
+    band's history."""
+    from fest_vibes_ai_etl_spark.streaming import banded_index as bi
+    from fest_vibes_ai_etl_spark.streaming import state_store
+
+    real_write = bi.hadoop_write_json
+
+    def die_after_journal(spark_, path, obj):
+        real_write(spark_, path, obj)
+        if path.endswith("/_maintain.json"):
+            raise RuntimeError("injected crash after root journal")
+
+    real_compact = state_store.compact_small_files
+    calls = []
+
+    def die_on_second_band(*args, **kwargs):
+        calls.append(args[1])
+        if len(calls) == 2:
+            raise RuntimeError("injected crash between bands")
+        return real_compact(*args, **kwargs)
+
+    for name, module, seam, dying in (
+        ("journal", bi, "hadoop_write_json", die_after_journal),
+        ("between", state_store, "compact_small_files", die_on_second_band),
+    ):
+        base = str(tmp_path / name)
+        stored = _two_fragmented_bands(spark, base)
+        idx = BandedFingerprintIndex(base, "fp")
+        with monkeypatch.context() as m:
+            m.setattr(module, seam, dying)
+            with pytest.raises(RuntimeError, match="injected crash"):
+                idx.maintain(spark, max_files_per_band=2)
+        assert os.path.exists(base + "/_maintain.json")
+        _assert_healed_and_converges(spark, base, stored)
+    assert len(calls) == 2
+
+
+def test_all_tombstoned_band_is_removed(spark, tmp_path):
+    """A merge that excludes every row of a band removes the band: a
+    fresh instance (no cached schema) must never be handed a band it
+    cannot read, so read_bands answers None for it."""
+    base = str(tmp_path / "idx")
+    idx = BandedFingerprintIndex(base, "fp", n_bands=4)
+    for i in range(3):  # band 1: three files, every row tombstoned
+        idx.append(spark.createDataFrame([(i, 4 * i + 1)], "id long, fp long"))
+    idx.append(spark.createDataFrame([(99, 2)], "id long, fp long"))  # band 2
+    gone = spark.createDataFrame([(0,), (1,), (2,)], "id long")
+    assert idx.maintain(spark, max_files_per_band=1, exclude=gone, exclude_cols=["id"]) == 1
+    assert not os.path.exists(base + "/pband=1")
+    fresh = BandedFingerprintIndex(base, "fp")
+    assert fresh.read_bands(spark, [1]) is None
+    assert [(r.id, r.fp) for r in fresh.read_bands(spark, [1, 2]).collect()] == [(99, 2)]
+
+
+def test_purge_folds_graduated_segments(spark, tmp_path):
+    """Size-tiered maintain() never rewrites a segment of the compactor's
+    target size (32 MiB) or more, so a tombstoned row there survives it.
+    purge() — the search purge's _docidx fold — must reach that file
+    too, or a re-sent id would be skipped forever."""
+    base = str(tmp_path / "idx")
+    idx = BandedFingerprintIndex(base, "fpk", n_bands=1)
+    # ~128 incompressible bytes per row: one band file well past 32 MiB
+    idx.build_from(
+        spark.range(300_000).select(
+            F.col("id").cast("string").alias("fp"),
+            F.col("id").alias("fpk"),
+            F.sha2(F.col("id").cast("string"), 512).alias("pad"),
+        )
+    )
+    band = os.path.join(base, "pband=0")
+    (big,) = [f for f in os.listdir(band) if f.endswith(".parquet")]
+    assert os.path.getsize(os.path.join(band, big)) >= 32 << 20
+    for i in range(2):
+        idx.append(spark.createDataFrame(
+            [(f"s{i}", 10 ** 9 + i, "x")], "fp string, fpk long, pad string"
+        ))
+    gone = spark.createDataFrame([("7",), ("s0",)], "fp string")
+
+    def stored(fp):
+        return spark.read.parquet(base).filter(F.col("fp") == fp).count()
+
+    assert idx.maintain(spark, max_files_per_band=1, exclude=gone, exclude_cols=["fp"]) == 1
+    assert stored("7") == 1 and stored("s0") == 0  # the graduated row survived
+    assert idx.purge(spark, gone, ["fp"]) == 1
+    assert stored("7") == 0 and stored("s1") == 1
+    assert spark.read.parquet(base).count() == 300_000  # 300,002 stored, 2 erased
 
 
 def test_reband_preserves_rows_and_updates_meta(spark, tmp_path):
@@ -487,32 +582,6 @@ def test_reband_crash_recovery(spark, tmp_path):
     assert not os.path.exists(base + "_rebandold")
 
 
-def test_crashed_compact_recovered_at_open(spark, tmp_path):
-    """A death between compact()'s two renames leaves the live index at
-    _precompact. A fresh open must restore it — otherwise exists()
-    reports the index gone (full silent rebuild) and the stale
-    _precompact poisons every later compact() with the both-exist
-    refusal. The both-present case stays compact()'s loud refusal."""
-    import shutil
-
-    base = str(tmp_path / "idx")
-    idx = BandedFingerprintIndex(base, "fp", n_bands=4)
-    idx.build_from(spark.range(100).select(F.col("id"), F.xxhash64("id").alias("fp")))
-    rows = _index_pairs(spark, base)
-    os.rename(base, base + "_precompact")
-    os.makedirs(base + "_compacting")  # possibly-partial staging
-    fresh = BandedFingerprintIndex(base, "fp")
-    assert fresh.exists(spark)  # open-time heal restored the live index
-    assert _index_pairs(spark, base) == rows
-    assert not os.path.exists(base + "_precompact")
-    assert not os.path.exists(base + "_compacting")
-    # ambiguous both-present state is untouched by opens
-    shutil.copytree(base, base + "_precompact")
-    another = BandedFingerprintIndex(base, "fp")
-    assert another.exists(spark)
-    assert os.path.exists(base + "_precompact")
-
-
 def test_span_stream_deleted_corpus_invalidates_sidecars(spark, tmp_path):
     """Deleting the corpus but not its sidecars must not let the first
     batch of a fresh ingestion probe (or append into) indexes describing
@@ -543,6 +612,30 @@ def test_span_stream_deleted_corpus_invalidates_sidecars(spark, tmp_path):
         (r.doc_id, r.fp)
         for r in spark.read.parquet(corpus).select("doc_id", "fp").collect()
     }
+
+
+def test_legacy_swap_sibling_rebuilds_span_index(spark, tmp_path):
+    """A _bandold sibling can only be left by a crash inside the retired
+    per-band directory swap, and which copy is current is not recorded:
+    opens refuse, and the span stream invalidates and rebuilds the index
+    from the corpus, dropping whatever the live copy held."""
+    src1, src2 = str(tmp_path / "s1"), str(tmp_path / "s2")
+    corpus = str(tmp_path / "corpus")
+    spark.createDataFrame(B1, "doc_id long, text string").coalesce(1).write.parquet(src1)
+    spark.createDataFrame(B2, "doc_id long, text string").coalesce(1).write.parquet(src2)
+    _run_span(spark, src1, corpus, str(tmp_path / "k1"))
+    idx_dir = span_index_path(corpus)
+    # a stale pair that only a rebuild drops, then the legacy leftover
+    BandedFingerprintIndex(idx_dir, "fp").append(
+        spark.createDataFrame([(424242, 7)], "id long, fp long")
+    )
+    os.makedirs(idx_dir + "_bandold/pband=2")
+    with pytest.raises(BandedIndexLayoutError, match="_bandold"):
+        BandedFingerprintIndex(idx_dir, "fp").exists(spark)
+    _run_span(spark, src2, corpus, str(tmp_path / "k2"))
+    assert not os.path.exists(idx_dir + "_bandold")
+    assert _index_pairs(spark, idx_dir) == _corpus_pairs(spark, corpus)
+    assert _stored_ids(spark, corpus) == {1, 2, 3, 11}
 
 
 def test_near_heal_catches_batchmate_of_replayed_doc(spark, tmp_path):
@@ -632,31 +725,6 @@ def test_span_stream_restart_with_different_n_bands_stays_correct(spark, tmp_pat
     idx_dir = span_index_path(corpus)
     assert json.load(open(idx_dir + "/_meta.json"))["n_bands"] == 16
     assert _index_pairs(spark, idx_dir) == _corpus_pairs(spark, corpus)
-
-
-def test_stranded_band_recovered_at_open(spark, tmp_path):
-    """A process death between maintain()'s two per-band renames leaves a
-    band at _bandold and missing from the live root. Opens (exists/
-    read_bands) must heal it BEFORE probing — otherwise every probe
-    silently misses that band's history until the next maintain() call,
-    and a replayed batch whose fps hash there re-appends duplicates."""
-    base = str(tmp_path / "idx")
-    idx = BandedFingerprintIndex(base, "fp", n_bands=4)
-    idx.build_from(spark.range(200).select(F.col("id"), F.xxhash64("id").alias("fp")))
-    rows = _index_pairs(spark, base)
-    # simulate the crash window: band 2 renamed out, staged copy lost
-    os.makedirs(base + "_bandold")
-    os.rename(os.path.join(base, "pband=2"), base + "_bandold/pband=2")
-    fresh = BandedFingerprintIndex(base, "fp")
-    assert fresh.exists(spark)  # open runs recovery
-    assert os.path.exists(os.path.join(base, "pband=2"))
-    assert not os.path.exists(base + "_bandold")
-    assert _index_pairs(spark, base) == rows
-    # and a probe into the recovered band sees its rows
-    got = fresh.read_bands(spark, [2])
-    assert {(r.id, r.fp) for r in got.collect()} == {
-        (i, f) for (i, f) in rows if f % 4 == 2
-    }
 
 
 def test_crashed_reband_recovered_at_open(spark, tmp_path):
@@ -883,9 +951,10 @@ def test_maintain_detection_is_batch_proportional(spark, tmp_path):
     assert idx.maintain(spark, max_files_per_band=4) == 0
     assert idx.last_maintain_walk == "dirty"
     assert idx.last_maintain_inspected == []
-    # crash-recovery residue (a stale _bandtmp staging dir) invalidates
-    # the bookkeeping: the next tick re-learns with one full walk
-    os.makedirs(base + "_bandtmp/pband=99")
+    # crash-recovery residue (a leftover root journal) invalidates the
+    # bookkeeping: the next tick re-learns with one full walk
+    with open(base + "/_maintain.json", "w") as fh:
+        json.dump({"bands": [], "excluded": False}, fh)
     assert idx.maintain(spark, max_files_per_band=4) == 0
     assert idx.last_maintain_walk == "full"
     assert _index_pairs(spark, base) == before | added

@@ -98,3 +98,23 @@ def test_virgin_session_parity(virgin, duck, name):
 def test_catalog_queries_load_registry():
     catalog.queries()
     assert all(n in catalog.REGISTRY for n in VIRGIN_QUERIES)
+
+
+def test_configure_runs_once_per_session(spark):
+    """``table()`` configures a session once: a conf the caller sets
+    afterwards survives the next scan, and a ``newSession()`` (its own
+    SQLConf) still gets the package values on its first scan."""
+    from fest_vibes_ai_etl_spark.sources.tables import table
+
+    aqe = "spark.sql.adaptive.enabled"
+    mine = spark.newSession()
+    table(mine, SF_DIR, "region")
+    mine.conf.set(aqe, "false")
+    table(mine, SF_DIR, "region")
+    assert mine.conf.get(aqe) == "false"
+    fresh = spark.newSession()
+    fresh.conf.set(aqe, "false")
+    fresh.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    table(fresh, SF_DIR, "nation")
+    assert fresh.conf.get(aqe) == "true"
+    assert fresh.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
