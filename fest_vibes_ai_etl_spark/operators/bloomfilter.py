@@ -31,9 +31,10 @@ DEFAULT_BITS = 1 << 20
 DEFAULT_HASHES = 5
 
 
-def _positions(key: Column, num_bits: int, num_hashes: int) -> list[Column]:
+def _positions(key: Column, num_bits: int) -> list[Column]:
     return [
-        F.pmod(F.xxhash64(key, F.lit(i)), F.lit(num_bits)) for i in range(num_hashes)
+        F.pmod(F.xxhash64(key, F.lit(i)), F.lit(num_bits))
+        for i in range(DEFAULT_HASHES)
     ]
 
 
@@ -41,7 +42,6 @@ def bloom_words_df(
     build_side: DataFrame,
     key: str,
     num_bits: int = DEFAULT_BITS,
-    num_hashes: int = DEFAULT_HASHES,
 ) -> DataFrame:
     """The bloom bitmap as a ONE-ROW DataFrame (``bm``: array<bigint> of
     ``num_bits/64`` words): explode → distinct → per-word ``bit_or``, with
@@ -52,7 +52,7 @@ def bloom_words_df(
     n_words = num_bits >> 6
     pos = (
         build_side.select(
-            F.explode(F.array(*_positions(F.col(key), num_bits, num_hashes))).alias("p")
+            F.explode(F.array(*_positions(F.col(key), num_bits))).alias("p")
         )
         .distinct()
     )
@@ -76,15 +76,14 @@ def bloom_words_df(
 
 
 def bloom_might_contain_native(
-    bm: Column, key: Column, num_bits: int = DEFAULT_BITS, num_hashes: int = DEFAULT_HASHES
+    bm: Column, key: Column, num_bits: int = DEFAULT_BITS
 ) -> Column:
     """JVM-native probe over a word-array bitmap COLUMN (from
     :func:`bloom_words_df`): the build's k seeded-xxhash64 positions and
     word/bit layout, evaluated entirely in whole-stage codegen — no Arrow
     boundary, no Python workers (guide §4.1: prefer built-ins)."""
     cond = None
-    for i in range(num_hashes):
-        h = F.pmod(F.xxhash64(key, F.lit(i)), F.lit(num_bits))
+    for h in _positions(key, num_bits):
         word = F.element_at(bm, (F.shiftright(h, 6) + 1).cast("int"))
         # call_function: the SQL shiftright accepts a COLUMN shift amount
         # (the python F.shiftright wrapper insists on a literal int)
@@ -111,7 +110,8 @@ NATIVE_ATTACH_MAX_BITS = 1 << 16
 def sized_bits(n_keys: int) -> int:
     """Bitmap bits for ~1% FP at ``n_keys`` (m ≈ 9.6·n, the standard
     -n·ln p/ln²2 sizing), floored at 1024 bits and rounded to whole
-    64-bit words. With k=5 hashes the realized FP at m=9.6n is ~1.1%."""
+    64-bit words. With the k = ``DEFAULT_HASHES`` = 5 hashes every build
+    and probe uses, the realized FP at m=9.6n is ~1.1%."""
     m = max(1024, int(9.6 * max(n_keys, 1)) + 63)
     return m - m % 64
 
@@ -122,7 +122,6 @@ def bloom_semi_join(
     probe_key: str,
     build_key: str,
     num_bits: int | None = None,
-    num_hashes: int = DEFAULT_HASHES,
 ) -> DataFrame:
     """Semi-join ``probe_side`` to ``build_side`` with a bloom pre-filter,
     then a real semi join that removes the bloom false positives — the
@@ -143,12 +142,12 @@ def bloom_semi_join(
         num_bits = sized_bits(build_side.count())
     pre = probe_side
     if num_bits <= NATIVE_ATTACH_MAX_BITS:
-        bm = bloom_words_df(build_side, build_key, num_bits, num_hashes)
+        bm = bloom_words_df(build_side, build_key, num_bits)
         pre = (
             probe_side.crossJoin(F.broadcast(bm))
             .filter(
                 bloom_might_contain_native(
-                    F.col("bm"), F.col(probe_key), num_bits, num_hashes
+                    F.col("bm"), F.col(probe_key), num_bits
                 )
             )
             .drop("bm")

@@ -827,9 +827,9 @@ def read_ivf_index(spark, index_dir: str, heal: str = "repair") -> DataFrame:
     data yet (an empty first add batch, or a crash between the meta and
     the data) reads as empty main rows, so its insert-via-revise vectors
     still serve; with neither, :class:`IVFIndexLayoutError`.
-    ``heal="detect"`` is the read-only mode: a crashed tombstone-revoke
-    swap or sidecar compaction raises instead of being repaired (repair
-    renames — single-writer only)."""
+    ``heal="detect"`` is the read-only mode: a crashed revision-sidecar
+    compaction raises instead of being repaired (repair renames —
+    single-writer only)."""
     from ..streaming.tombstones import read_tombstones
 
     meta = _add_meta(spark, index_dir)
@@ -845,7 +845,7 @@ def read_ivf_index(spark, index_dir: str, heal: str = "repair") -> DataFrame:
         sidecar_dir(index_dir), df.columns,
         heal="detect" if heal == "detect" else "repair",
     )
-    tomb = read_tombstones(spark, index_dir, cols=[id_col], heal=heal)
+    tomb = read_tombstones(spark, index_dir, cols=[id_col])
     if tomb is None:
         return df
     return df.join(tomb, id_col, "left_anti")

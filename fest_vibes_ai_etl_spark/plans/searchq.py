@@ -420,7 +420,7 @@ def search_rocchio_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per pass — Rocchio issues four store reads, each of which was
     # re-deriving it.
     recover_search_index(spark, store)
-    tomb = _search_tombstones(spark, store, "doc_id", heal="repair")
+    tomb = _search_tombstones(spark, store, "doc_id")
     revs = read_revisions(spark, store, "doc_id")
     return rocchio_expanded_topk(
         None,

@@ -714,12 +714,12 @@ class BandedFingerprintIndex:
         max_files: int,
         exclude: DataFrame | None = None,
         exclude_cols: list[str] | None = None,
-        purge: bool = False,
+        erase: bool = False,
     ) -> int:
         """Merge each band under the root journal; returns the number of
-        bands merged. ``purge`` is the compactor's erase form (``force`` +
-        ``include_graduated``). A pass that dies leaves this instance
-        unchecked, so its next open heals like a fresh instance's."""
+        bands merged. ``erase`` selects the compactor's erase form. A pass
+        that dies leaves this instance unchecked, so its next open heals
+        like a fresh instance's."""
         if not bands:
             return 0
         from . import state_store
@@ -734,8 +734,7 @@ class BandedFingerprintIndex:
             for band in bands:
                 n = state_store.compact_small_files(
                     spark, f"{self.path}/pband={band}", max_files,
-                    exclude=exclude, exclude_cols=exclude_cols,
-                    force=purge, include_graduated=purge,
+                    exclude=exclude, exclude_cols=exclude_cols, erase=erase,
                 )
                 merged += n > 0
                 self._settle_band(spark, fs, band, exclude is not None and n > 0)
@@ -871,15 +870,21 @@ class BandedFingerprintIndex:
     def purge(
         self, spark: SparkSession, exclude: DataFrame, exclude_cols: list[str]
     ) -> int:
-        """Fold ``exclude``'s rows out of EVERY band, graduated segments
-        included — a physical erase must reach every file, which the
-        size-tiered :meth:`maintain` never promises. Returns the number
-        of bands rewritten."""
-        if not self._open_for_maintenance(spark):
+        """Fold ``exclude``'s rows out of every band that holds one,
+        graduated segments included — a physical erase must reach every
+        file, which the size-tiered :meth:`maintain` never promises. One
+        thin scan names those bands, so the rewrite follows the erased
+        rows, not the index. Returns the number of bands rewritten."""
+        if not self._open_for_maintenance(spark) or not self._stored_bands(spark):
             return 0
-        return self._compact_bands(
-            spark, self._stored_bands(spark), 0, exclude, exclude_cols, purge=True
+        held = (
+            spark.read.parquet(self.path)
+            .join(exclude, exclude_cols, "left_semi")
+            .select("pband")
+            .distinct()
         )
+        bands = sorted(r[0] for r in held.collect())
+        return self._compact_bands(spark, bands, 0, exclude, exclude_cols, erase=True)
 
     # --- re-banding ------------------------------------------------------
     # n_bands is chosen when the index is CREATED, sized to the corpus as

@@ -28,9 +28,11 @@ probed across.
 
 Per batch:
 
-1. once per stream, heal a crashed purge swap; read the tombstones;
+1. once per stream, heal a crashed compaction of the corpus and of the
+   tombstone set; read the tombstones;
 2. fingerprint the batch and burn tombstoned ids and fingerprints;
-3. read history — only ``PATH_NOT_FOUND`` is a first batch;
+3. read history — only ``PATH_NOT_FOUND`` is a first batch (an older
+   version's purge-swap leftover is refused there);
 4. an absent corpus invalidates every sidecar (every time it is
    observed); otherwise settle the sidecars once per stream;
 5. a surviving in-flight marker selects the heal path;
@@ -40,8 +42,13 @@ Per batch:
 7. drop within-batch victims, then probe the similarity sidecar;
 8. rebuild the survivors from one evaluation, then mark in-flight →
    corpus append → fused sidecar append → clear in-flight;
-9. unpersist, and every ``maintain_every`` batches compact bands over
-   ``maintain_max_files`` files, folding tombstoned rows out.
+9. unpersist, and every ``maintain_every`` batches compact the corpus
+   and every sidecar band over ``maintain_max_files`` files, size-tiered
+   (the corpus's bounded census), folding tombstoned rows out of the
+   bands.
+
+Physical erasure is :meth:`DedupStream.purge`, an operator op run
+between batches.
 
 Crash consistency: the in-flight marker brackets the corpus append and
 the sidecar appends, corpus FIRST. A crash in the window can only leave
@@ -67,7 +74,17 @@ from .banded_index import (
     append_many,
     combined_touched_bands,
 )
-from .tombstones import NULL_TEXT_SENTINEL, purge_recover, read_tombstones
+from .state_store import (
+    compact_small_files,
+    has_data_files,
+    recover_dir_compaction,
+)
+from .tombstones import (
+    NULL_TEXT_SENTINEL,
+    read_tombstones,
+    refuse_swap_leftover,
+    tombstones_path,
+)
 
 
 def fingerprint(text_col: str = "text"):
@@ -255,16 +272,17 @@ class DedupStream:
         # never re-enter the corpus
         self.burn_cols = [self.id_col, "fp"] if self.id_col else ["fp"]
         self._idx_settled: list[bool] = []  # non-empty: layouts validated
-        self._purge_checked = False
+        self._opened = False  # open-time heal done
         self._n_done = 0  # completed batches, drives maintenance
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if not self._purge_checked:
-            # a crashed purge swap would otherwise read as "corpus
-            # deleted" and silently restart the corpus from empty
-            purge_recover(spark, self.corpus_dir)
-            self._purge_checked = True
+        if not self._opened:
+            # a crashed census, purge or revoke leaves a compaction
+            # journal: heal it before anything reads the corpus or the set
+            for d in (self.corpus_dir, tombstones_path(self.corpus_dir)):
+                recover_dir_compaction(spark, d)
+            self._opened = True
         tomb = read_tombstones(spark, self.corpus_dir)
         docs = batch_df.dropDuplicates([self.id_col]) if self.id_col else batch_df
         cached = self.family.signatures(docs)
@@ -333,6 +351,10 @@ class DedupStream:
             # the exact failure this operator exists to prevent.
             if not is_path_not_found(exc):
                 raise
+            # before any sidecar is invalidated as describing a gone corpus
+            refuse_swap_leftover(
+                spark, self.corpus_dir, "_prepurge", "_purgetmp", "purge"
+            )
             return None
 
     def _settle(self, spark, hist) -> bool:
@@ -458,17 +480,67 @@ class DedupStream:
             return fresh
         return fresh.join(victims, self.id_col, "left_anti")
 
-    def _maintain(self, spark, tomb) -> None:
-        # fold tombstoned rows out of every band this tick rewrites (the
-        # sidecars key rows by "id", the fp-only one by "fp")
+    def _sidecar_exclude(self, tomb: DataFrame):
+        """The tombstone set keyed as the sidecars key their rows: by
+        ``id``, or by ``fp`` in the fp-only exact sidecar."""
         key = "id" if self.id_col else "fp"
-        ex = (
-            tomb.select(F.col(self.id_col or "fp").alias(key))
-            if tomb is not None
-            else None
-        )
+        return tomb.select(F.col(self.id_col or "fp").alias(key)), [key]
+
+    def _maintain(self, spark, tomb) -> None:
+        # a tick that dies leaves a journal: the next batch heals it
+        self._opened = False
+        # the corpus's bounded census keeps its tombstoned rows: erasing
+        # them is the purge's job, so a revoke before it finds them
+        compact_small_files(spark, self.corpus_dir, self.maintain_max_files)
+        ex, cols = self._sidecar_exclude(tomb) if tomb is not None else (None, None)
         for idx in self.sidecars:
             idx.maintain(
                 spark, max_files_per_band=self.maintain_max_files,
-                exclude=ex, exclude_cols=[key],
+                exclude=ex, exclude_cols=cols,
             )
+
+    def purge(self, spark, clear: bool = False) -> int:
+        """Physically erase the tombstoned docs; returns the corpus rows
+        removed. Three steps under the writer lease on the corpus, each
+        idempotent, so re-running after a crash converges:
+
+        1. the corpus is rewritten without the tombstoned ids (the
+           compactor's erase form);
+        2. every sidecar is folded the same way
+           (``BandedFingerprintIndex.purge``);
+        3. with ``clear=True``, the tombstone set is dropped — only now,
+           or a stale ``_exactidx`` row would drop re-sent content
+           forever.
+
+        Full erasure leaves a readable-empty corpus. An operator op (an
+        erasure SLA), not a per-batch cost: run it with the stream
+        stopped or between batches (single-writer)."""
+        from .writer_lease import writer_lease
+
+        with writer_lease(spark, self.corpus_dir, "purge"):
+            self._opened = False  # as for _maintain
+            tomb = read_tombstones(spark, self.corpus_dir)
+            if tomb is None:
+                return 0
+            # the set names its own id column (the fp-only family has none)
+            idc = next(c for c in tomb.columns if c != "fp")
+            doomed = tomb.select(idc)
+            removed = 0
+            recover_dir_compaction(spark, self.corpus_dir)
+            if has_data_files(spark, self.corpus_dir):
+                corpus = spark.read.parquet(self.corpus_dir)
+                removed = corpus.join(doomed, idc, "left_semi").count()
+            if removed:
+                compact_small_files(
+                    spark, self.corpus_dir, erase=True,
+                    exclude=doomed, exclude_cols=[idc],
+                )
+            ex, cols = self._sidecar_exclude(tomb)
+            for idx in self.sidecars:
+                idx.purge(spark, exclude=ex, exclude_cols=cols)
+            if clear:
+                p = spark._jvm.org.apache.hadoop.fs.Path(
+                    tombstones_path(self.corpus_dir)
+                )
+                p.getFileSystem(spark._jsc.hadoopConfiguration()).delete(p, True)
+            return removed

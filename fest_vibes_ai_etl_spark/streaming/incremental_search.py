@@ -312,7 +312,7 @@ def _live_bucket_paths(
     AND hold data files, memo-aware: buckets known non-empty skip the
     listings entirely (positive knowledge only — see the memo contract).
     A dir can exist with ZERO data files (an all-rows-tombstoned merge
-    journals final=None and deletes every input) — schema inference over
+    may journal no finals and delete every input) — schema inference over
     it would crash the probe, so dataless dirs are skipped like absent
     ones. ≤ |names| bounded listings."""
     memo_ne = _memo_for(spark, index_dir)["nonempty"]
@@ -494,7 +494,7 @@ def forward_terms_for_docs(
         heal="detect" if heal == "detect" else "repair",
     )
     if tomb is _UNSET:
-        tomb = _search_tombstones(spark, index_dir, id_col, heal=heal)
+        tomb = _search_tombstones(spark, index_dir, id_col)
     if tomb is not None:
         out = out.join(tomb, id_col, "left_anti")
     return out
@@ -633,14 +633,13 @@ def delete_from_search_index(spark, index_dir: str, ids: list) -> int:
     return burn(spark, index_dir, ids, id_col, resolved)
 
 
-def _search_tombstones(spark, index_dir: str, id_col: str, heal="repair"):
+def _search_tombstones(spark, index_dir: str, id_col: str):
     """Distinct tombstoned ids as a (id_col) frame, or None. The frame is
     broadcast-hinted only while the set is small (read_tombstones'
-    bounded-broadcast escape) — consumers join it as is. ``heal`` follows
-    the probe convention ("repair" owner-side, "detect" read-only)."""
+    bounded-broadcast escape) — consumers join it as is."""
     from .tombstones import read_tombstones
 
-    return read_tombstones(spark, index_dir, cols=[id_col], heal=heal)
+    return read_tombstones(spark, index_dir, cols=[id_col])
 
 
 @fenced("purge")
@@ -648,15 +647,14 @@ def purge_search_tombstones(spark, index_dir: str, clear: bool = False) -> dict:
     """Physically drop tombstoned docs from the index: rewrite ONLY the
     postings buckets that contain them (one thin column-pruned scan names
     the buckets — bounded by n_term_buckets) plus the doclen directory,
-    through the same journaled compactor maintenance uses (force mode,
-    graduated segments included), so a crash anywhere heals at the next
-    open. Probes rank identically before and after (they anti-join the
-    tombstone set) — purge timing is an operations choice, not a
-    correctness event. The tombstone set is KEPT by default (the id stays
-    burned — the ``_docidx`` replay guard still holds it, so a re-sent id
-    is skipped); ``clear=True`` drops it when the
-    erasure must also forget the ids. Single-writer: stream stopped or
-    between batches."""
+    through the erase form of the journaled compactor maintenance uses,
+    so a crash anywhere heals at the next open. Probes rank identically
+    before and after (they anti-join the tombstone set) — purge timing
+    is an operations choice, not a correctness event. The tombstone set
+    is KEPT by default (the id stays burned — the ``_docidx`` replay
+    guard still holds it, so a re-sent id is skipped); ``clear=True``
+    drops it when the erasure must also forget the ids. Single-writer:
+    stream stopped or between batches."""
     from pyspark.errors import AnalysisException
 
     from ..errors import is_path_not_found
@@ -691,8 +689,7 @@ def purge_search_tombstones(spark, index_dir: str, clear: bool = False) -> dict:
             f"{pdir}/tb={b}",
             exclude=tomb,
             exclude_cols=[id_col],
-            force=True,
-            include_graduated=True,
+            erase=True,
         )
     # the forward sidecar's affected db= buckets are computable from the
     # tombstoned ids alone (db = hash(id)) — one tiny column job
@@ -717,14 +714,13 @@ def purge_search_tombstones(spark, index_dir: str, clear: bool = False) -> dict:
                     f"{fdir}/db={b}",
                     exclude=tomb,
                     exclude_cols=[id_col],
-                    force=True,
-                    include_graduated=True,
+                    erase=True,
                 )
     # a revised-then-erased doc also has rows in the _rev sidecars
     for d in (_rev_terms_dir(index_dir), _rev_doclen_dir(index_dir)):
         compact_small_files(
             spark, d, exclude=tomb, exclude_cols=[id_col],
-            force=True, include_graduated=True,
+            erase=True,
         )
     # resolved-view count (main ∪ latest-rev sidecar doclen, WITHOUT the
     # tombstone filter — these are exactly the docs being purged)
@@ -752,16 +748,15 @@ def purge_search_tombstones(spark, index_dir: str, clear: bool = False) -> dict:
         _doclen_dir(index_dir),
         exclude=tomb,
         exclude_cols=[id_col],
-        force=True,
-        include_graduated=True,
+        erase=True,
     )
     jvm = spark._jvm
     dl_p = jvm.org.apache.hadoop.fs.Path(_doclen_dir(index_dir))
     fs = dl_p.getFileSystem(spark._jsc.hadoopConfiguration())
     # DEFENSE: on this engine an all-rows-excluded merge writes one 0-row
     # schema-bearing file (verified live), so a doclen is normally never
-    # dataless and this branch stays unreachable — but the journal's
-    # final=None state is layout-legal, so a filesystem/engine that does
+    # dataless and this branch stays unreachable — but a journal with no
+    # finals is layout-legal, so a filesystem/engine that does
     # produce it must not leave an unreadable index behind
     erased_all = fs.exists(dl_p) and not has_data_files(
         spark, _doclen_dir(index_dir)
@@ -806,7 +801,7 @@ def purge_search_tombstones(spark, index_dir: str, clear: bool = False) -> dict:
             compact_small_files(
                 spark, mdir,
                 exclude=tomb, exclude_cols=[id_col],
-                force=True, include_graduated=True,
+                erase=True,
                 transform=lambda df: df.distinct(),
             )
             # a fold that removed every marker leaves a dataless dir or a
@@ -1328,7 +1323,7 @@ def pruned_postings(
         heal="detect" if heal == "detect" else "repair",
     )
     if tomb is _UNSET:
-        tomb = _search_tombstones(spark, index_dir, id_col, heal=heal)
+        tomb = _search_tombstones(spark, index_dir, id_col)
     if tomb is not None:
         postings = postings.join(tomb, id_col, "left_anti")
     return postings
@@ -1361,7 +1356,7 @@ def index_doclen(
         heal="detect" if heal == "detect" else "repair",
     )
     if tomb is _UNSET:
-        tomb = _search_tombstones(spark, index_dir, id_col, heal=heal)
+        tomb = _search_tombstones(spark, index_dir, id_col)
     if tomb is not None:
         doclen = doclen.join(tomb, id_col, "left_anti")
     return doclen
@@ -1414,7 +1409,7 @@ def bm25_over_index(
     # one tombstone resolution + one heal/detect pass for both reads
     # (pruned_postings' pass covers doclen AND the query buckets in
     # either mode, so index_doclen skips its own)
-    tomb = _search_tombstones(spark, index_dir, id_col, heal=heal)
+    tomb = _search_tombstones(spark, index_dir, id_col)
     revs = read_revisions(spark, index_dir, id_col)
     postings = pruned_postings(
         spark, index_dir, terms, id_col=id_col, tomb=tomb, revs=revs,

@@ -228,7 +228,7 @@ def revise(
             state_store.compact_small_files(
                 spark, d, exclude=F.broadcast(key),
                 exclude_cols=[id_col, "rev"],
-                force=True, include_graduated=True,
+                erase=True,
             )
         at_rev = frame.withColumn("rev", F.lit(new_rev).cast("int"))
         at_rev.coalesce(1).write.mode("append").parquet(d)
@@ -270,7 +270,7 @@ def absorb(spark, index_dir: str, id_col: str, targets) -> tuple[int, list]:
                 spark, d,
                 exclude=rev_ids, exclude_cols=[id_col],
                 transform=lambda df, f=fresh: df.unionByName(f),
-                force=True, include_graduated=True,
+                erase=True,
             )
         elif not fresh.isEmpty():
             fresh.coalesce(1).write.mode("append").parquet(d)

@@ -13,8 +13,9 @@ makes the pipeline exactly-once *in effect* with no transactional sink.
 
 Snapshots are versioned partitions (``v=<stored vmax + 1>`` — monotone
 across restarts and checkpoint replays) so a reader never races a writer;
-readers take the max version. Old versions are pruned
-opportunistically (keep the last few for time travel / debugging)."""
+readers take the max version. Nothing prunes old versions: every batch
+adds one ``v=`` partition, kept for time travel and debugging, so the
+table grows by one snapshot per batch."""
 
 from __future__ import annotations
 

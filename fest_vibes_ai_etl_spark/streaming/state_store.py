@@ -37,26 +37,32 @@ family doesn't re-derive them:
   at or above ``target_bytes`` are graduated segments and are never
   rewritten again, so total rewrite work over a stream's life is
   O(n log n) in bytes appended (the LSM argument), not O(batches ×
-  index size). Crash safety is a roll-forward journal, not a directory
-  swap (a swap would have to rewrite the graduated segments too):
+  index size). Its erase form (``erase=True``) rewrites every file
+  without the excluded rows: the one physical erase of every store
+  family. Crash safety is a roll-forward journal, not a directory swap
+  (a swap would have to rewrite the graduated segments too):
 
-  1. merged segment written under an invisible ``_cstage-*`` staging dir;
-  2. ``_compact.json`` manifest (atomic write) records the final name and
-     the exact input files;
-  3. the segment is renamed to its visible final name;
-  4. the inputs are deleted; the manifest is dropped.
+  1. the output segments are written under an invisible ``_cstage-*``
+     staging dir;
+  2. ``_compact.json`` manifest (atomic write) records the finals, the
+     stage and the exact input files;
+  3. each final is renamed from the stage to its visible name;
+  4. the inputs are deleted; the manifest and the stage are dropped.
 
-  A crash before (3) rolls BACK (inputs intact, staging swept); a crash
-  after (3) rolls FORWARD (final is live, surviving inputs deleted).
-  Between the crash and recovery a raw reader could see final+inputs
-  simultaneously, so the single-writer discipline applies: owners run
-  :func:`recover_dir_compaction` at open time (the stream processors and
-  probes here do; the banded index finds its crashed bands through one
-  root journal), and maintenance never runs concurrently with a probe.
-  This is the package's only crash-safe small-file merge: every store
-  family's compaction (search buckets, doclen, forward rows, ``_rev``
-  sidecars, revision markers, tombstones, banded sidecar bands) runs on
-  it.
+  A crash before (2) leaves inputs intact and the staging swept by the
+  next pass. From (2) on, recovery rolls FORWARD while every final is
+  visible or still staged (renaming the rest, then deleting the
+  inputs), and rolls BACK otherwise (visible finals deleted, inputs
+  kept). Between the crash and recovery a raw reader could see finals
+  and inputs simultaneously, so the single-writer discipline applies:
+  owners run :func:`recover_dir_compaction` at open time (the stream
+  processors and probes here do; the banded index finds its crashed
+  bands through one root journal), and maintenance never runs
+  concurrently with a probe. This is the package's only crash-safe
+  rewrite of a store directory besides the banded re-band: every store
+  family's compaction and erase (search buckets, doclen, forward rows,
+  ``_rev`` sidecars, revision markers, the dedup corpus, tombstones,
+  banded sidecar bands) runs on it.
 """
 
 from __future__ import annotations
@@ -216,54 +222,77 @@ def _gone_race(fs, path) -> bool:
 
 def _delete_inputs(fs, jvm, dir_path: str, names: list[str]) -> None:
     """Drop a completed merge's input files (idempotent — recovery re-runs
-    it for any inputs a crash left behind, and a concurrent recovery that
-    already deleted one is tolerated). Split out so crash tests can
-    inject a death between the rename and the deletes."""
+    it for any inputs a crash left behind; ``delete`` of a missing path
+    returns False, and a concurrent recovery that deleted one first is
+    tolerated). Split out so crash tests can inject a death between the
+    last rename and the deletes."""
     for name in names:
         p = jvm.org.apache.hadoop.fs.Path(dir_path.rstrip("/") + "/" + name)
         try:
-            if fs.exists(p):
-                fs.delete(p, False)
+            fs.delete(p, False)
         except Exception:  # noqa: BLE001 - py4j-wrapped IOException
             if not _gone_race(fs, p):
                 raise
 
 
+def _promote(fs, jvm, dir_path: str, stage: str, names: list[str]) -> None:
+    """Rename each staged final to its visible name, in order. Split out
+    so crash tests can inject a death between two finals' renames."""
+    for name in names:
+        src = jvm.org.apache.hadoop.fs.Path(f"{stage}/{name}")
+        dst = jvm.org.apache.hadoop.fs.Path(f"{dir_path.rstrip('/')}/{name}")
+        if not fs.rename(src, dst) and not fs.exists(dst):
+            raise IOError(
+                f"compaction: rename {src} -> {dst} failed; manifest left "
+                f"for recovery"
+            )
+
+
 def recover_dir_compaction(spark: SparkSession, dir_path: str) -> None:
     """Heal a crashed :func:`compact_small_files` on ``dir_path``. The
-    manifest is the journal: final name present and visible → roll
-    forward (delete surviving inputs); final missing → roll back (drop
-    the manifest; the invisible staging dir is swept by the next
-    compaction pass). One ``exists`` stat in the steady state."""
-    jvm, fs, jp = _fs_for(spark, dir_path)
-    man_path = dir_path.rstrip("/") + "/" + _MANIFEST
-    man_p = jvm.org.apache.hadoop.fs.Path(man_path)
+    manifest is the journal: when every final it names is visible or
+    still in the stage, roll FORWARD (rename the staged ones, delete
+    surviving inputs); otherwise roll BACK (delete the visible finals,
+    keep the inputs). A manifest with no finals journals an
+    all-rows-excluded merge, so deletion IS the compaction. A legacy
+    manifest names one ``final`` and no stage. One ``exists`` stat in
+    the steady state."""
+    jvm, fs, _ = _fs_for(spark, dir_path)
+    root = dir_path.rstrip("/")
+    man_p = jvm.org.apache.hadoop.fs.Path(root + "/" + _MANIFEST)
     if not fs.exists(man_p):
         return
     try:
-        man = hadoop_read_json(spark, man_path)
+        man = hadoop_read_json(spark, root + "/" + _MANIFEST)
     except Exception:  # noqa: BLE001 - a concurrent recovery dropped it
         if _gone_race(fs, man_p):
             return
         raise
     if man is None:  # torn manifest cannot exist (atomic write) — stale tmp
         return
-    final = man.get("final")
-    final_p = (
-        jvm.org.apache.hadoop.fs.Path(dir_path.rstrip("/") + "/" + final)
-        if final
-        else None
-    )
-    if final is None or fs.exists(final_p):
-        # final==None journals an all-rows-excluded merge (no output
-        # segment): the inputs' rows were all tombstoned, deletion IS the
-        # compaction — roll forward either way
-        _delete_inputs(fs, jvm, dir_path, man.get("inputs", []))
+    if "finals" in man:
+        finals = man["finals"]
+    else:
+        finals = [man["final"]] if man.get("final") else []
+    stage = f"{root}/{man['stage']}" if man.get("stage") else None
+    Path = jvm.org.apache.hadoop.fs.Path
+    visible = [n for n in finals if fs.exists(Path(f"{root}/{n}"))]
+    staged = [
+        n for n in finals
+        if n not in visible and stage and fs.exists(Path(f"{stage}/{n}"))
+    ]
+    if len(visible) + len(staged) == len(finals):
+        _promote(fs, jvm, root, stage, staged)
+        _delete_inputs(fs, jvm, root, man.get("inputs", []))
+    else:
+        _delete_inputs(fs, jvm, root, visible)
     try:
         fs.delete(man_p, False)
     except Exception:  # noqa: BLE001 - concurrent recovery dropped it
         if not _gone_race(fs, man_p):
             raise
+    if stage:
+        fs.delete(Path(stage), True)
 
 
 def compact_small_files(
@@ -273,8 +302,7 @@ def compact_small_files(
     target_bytes: int = 32 << 20,
     exclude: DataFrame | None = None,
     exclude_cols: list[str] | None = None,
-    force: bool = False,
-    include_graduated: bool = False,
+    erase: bool = False,
     transform=None,
 ) -> int:
     """Merge one directory's small parquet files (< ``target_bytes``) into
@@ -288,11 +316,13 @@ def compact_small_files(
     hint (or absence) governs the join strategy — callers pass frames
     from ``read_tombstones``, which applies the bounded-broadcast escape.
     ``transform`` (df → df) rewrites the merged rows (the tombstone set's
-    own maintenance passes ``distinct``). ``force=True`` compacts (and
-    folds) even below the file-count threshold, and
-    ``include_graduated=True`` rewrites the graduated segments too (one
-    output segment, whatever its size) — together, the purge path: a
-    physical erase must reach every file.
+    own maintenance passes ``distinct``).
+
+    ``erase=True`` is the physical-erase form (purge, revoke, absorb,
+    revise): it rewrites EVERY data file, graduated segments included,
+    whatever the file count, and writes ``max(1, bytes // target_bytes)``
+    output segments, so erasing a large store stays as parallel as the
+    store instead of one task writing one giant segment.
 
     Single-writer discipline: call between batches, never concurrently
     with a probe of the same directory. Crash-safe via the manifest
@@ -301,7 +331,9 @@ def compact_small_files(
     if not fs.exists(jp):
         return 0
     recover_dir_compaction(spark, dir_path)
+    root = dir_path.rstrip("/")
     small: list = []
+    nbytes = 0
     for st in fs.listStatus(jp):
         name = st.getPath().getName()
         if name.startswith(_STAGE_PREFIX):
@@ -314,55 +346,53 @@ def compact_small_files(
             continue
         if not is_data_file(name):
             continue
-        if include_graduated or st.getLen() < target_bytes:
+        if erase or st.getLen() < target_bytes:
             small.append(st.getPath())
+            nbytes += st.getLen()
     if len(small) == 0:
         return 0
-    if not force and len(small) <= max_files:
+    if not erase and len(small) <= max_files:
         return 0
     if len(small) == 1 and exclude is None:
         return 0  # nothing to merge and nothing to fold
-    tok = uuid.uuid4().hex
-    stage = dir_path.rstrip("/") + "/" + _STAGE_PREFIX + tok
+    stage_name = _STAGE_PREFIX + uuid.uuid4().hex
+    stage = f"{root}/{stage_name}"
     df = spark.read.parquet(*[str(p) for p in small])
     if exclude is not None:
         df = df.join(exclude, exclude_cols, "left_anti")
     if transform is not None:
         df = transform(df)
-    df.coalesce(1).write.mode("overwrite").parquet(stage)
+    n_out = max(1, nbytes // target_bytes) if erase else 1
+    df.coalesce(n_out).write.mode("overwrite").parquet(stage)
     stage_p = jvm.org.apache.hadoop.fs.Path(stage)
-    parts = [
-        st.getPath()
+    # the stage's part names are unique per write job: they become the
+    # visible finals unchanged
+    finals = sorted(
+        st.getPath().getName()
         for st in fs.listStatus(stage_p)
         if is_data_file(st.getPath().getName())
-    ]
-    final_name = f"part-merged-{tok}.parquet" if parts else None
-    man_path = dir_path.rstrip("/") + "/" + _MANIFEST
-    # journal BEFORE the visible rename: from here the merge either rolls
-    # forward (final lands) or rolls back (manifest dropped, inputs kept).
-    # The fencing stamp attributes the rewrite to the writer-lease epoch
-    # that performed it (STATE.md §5 enforcement, audit-only for recovery)
+    )
+    inputs = [p.getName() for p in small]
+    # journal BEFORE the first visible rename: from here the merge rolls
+    # forward while its finals are visible or staged, and the inputs go
+    # only after the last rename. The fencing stamp attributes the
+    # rewrite to the writer-lease epoch that performed it (STATE.md §5
+    # enforcement, audit-only for recovery)
     from .writer_lease import current_epoch_for
 
+    man_path = f"{root}/{_MANIFEST}"
     hadoop_write_json(
         spark,
         man_path,
         {
-            "final": final_name,
-            "inputs": [p.getName() for p in small],
+            "finals": finals,
+            "stage": stage_name,
+            "inputs": inputs,
             "lease_epoch": current_epoch_for(dir_path),
         },
     )
-    if parts:
-        final_p = jvm.org.apache.hadoop.fs.Path(
-            dir_path.rstrip("/") + "/" + final_name
-        )
-        if not fs.rename(parts[0], final_p):
-            raise IOError(
-                f"compaction: rename {parts[0]} -> {final_p} failed; "
-                f"manifest left for recovery"
-            )
-    _delete_inputs(fs, jvm, dir_path, [p.getName() for p in small])
+    _promote(fs, jvm, root, stage, finals)
+    _delete_inputs(fs, jvm, root, inputs)
     fs.delete(jvm.org.apache.hadoop.fs.Path(man_path), False)
     fs.delete(stage_p, True)
     return len(small)

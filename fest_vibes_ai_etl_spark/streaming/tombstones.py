@@ -23,18 +23,19 @@ lakehouse corpus has no row-level delete, so erasure is two-phase:
    - sidecar maintenance folds tombstoned rows out of every band it
      merges through the journaled compactor
      (``BandedFingerprintIndex.maintain(exclude=...)``; rows in graduated
-     segments wait for ``purge``, the search purge's erase of every file).
+     segments wait for the purge).
 
-2. **Purge** (:func:`purge_corpus_tombstones`): rewrite the corpus
-   without the tombstoned ids — staged + swapped exactly like the banded
-   index's re-banding (stage fully → rename live out → rename staged in
-   → delete old), healed at every stream open via :func:`purge_recover`.
-   Sidecars need no rebuild: their stale rows for purged ids are hidden
-   by the probes' anti-join and folded out lazily by maintenance. By
+2. **Purge** (``DedupStream.purge``): physical erasure in three
+   idempotent steps. The corpus, then every sidecar
+   (``BandedFingerprintIndex.purge``), is rewritten without the
+   tombstoned rows by the erase form of ``state_store``'s one journaled
+   compactor; then, with ``clear=True``, the tombstone set is dropped. A
+   crash anywhere heals at the next open and a re-run converges. By
    default the tombstone set is KEPT after the purge (a suppression
    list: replaying old raw data must not resurrect erased content);
    ``clear=True`` drops it when the erasure request includes the
-   fingerprints themselves.
+   fingerprints themselves — the sidecars are folded first, so no stale
+   sidecar row outlives the set and suppresses re-sent content.
 
 Single-writer discipline throughout: deletes and purges run between
 batches of the one stream that owns the corpus, never concurrently with
@@ -57,7 +58,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .state_store import literal_frame
+from .state_store import (
+    InFlightRecoveryError,
+    compact_small_files,
+    detect_dir_compaction,
+    literal_frame,
+    recover_dir_compaction,
+)
 from .writer_lease import fenced
 
 # The dedup families' fingerprint for NULL text (incremental_dedup's
@@ -79,14 +86,32 @@ def tombstones_path(store_dir: str) -> str:
 TOMBSTONE_BROADCAST_MAX_BYTES = 8 << 20
 
 
+def refuse_swap_leftover(
+    spark: SparkSession, live: str, old: str, tmp: str, op: str
+) -> None:
+    """Raise when an older version's directory swap died between its
+    renames: the store ``live`` reads absent while ``live + old`` holds
+    it. Nothing can rebuild a corpus or a tombstone set, so the owner
+    restores it by hand; called only where ``live`` was already found
+    absent, so a healthy store pays nothing. A leftover beside a live
+    store is inert."""
+    jvm = spark._jvm
+    live = live.rstrip("/")
+    p = jvm.org.apache.hadoop.fs.Path(live + old)
+    if p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p):
+        raise InFlightRecoveryError(
+            f"{live} is absent but {live}{old} holds it: a {op} swap of an "
+            f"older version died between its renames. Restore it with "
+            f"`mv {live}{old} {live}`, delete {live}{tmp} if present, and "
+            f"re-run the {op}."
+        )
+
+
 def read_tombstones(
-    spark: SparkSession,
-    store_dir: str,
-    cols: list[str] | None = None,
-    heal="repair",
+    spark: SparkSession, store_dir: str, cols: list[str] | None = None
 ) -> DataFrame | None:
     """Distinct tombstone rows (projected to ``cols`` when given), or None
-    when no delete was ever issued. The absent case is ONE Hadoop
+    when no delete was ever issued. The absent case is a Hadoop
     filesystem stat, not a swallowed DataFrame-resolution failure —
     resolution raises through a full analysis pass (~70 ms measured),
     which a per-probe/per-batch check must not pay for the common
@@ -99,28 +124,16 @@ def read_tombstones(
     degrades to a shuffle anti-join instead of a driver OOM. The hint
     survives consumer-side ``select``/``distinct`` (plan-verified).
 
-    ``heal="detect"`` is the read-only mode: a crashed revoke swap is
-    REPORTED (typed error naming the owner op) instead of repaired —
-    repairing renames directories, which only the store's single writer
-    may do."""
+    No read needs a crash heal: the set's rewrites (compaction, revoke)
+    are compactor merges, and the ``distinct()`` hides a crashed one's
+    double-visible files. A crashed revoke thus reads as not yet taken
+    effect — the safe side."""
     jvm = spark._jvm
     tdir = tombstones_path(store_dir)
     p = jvm.org.apache.hadoop.fs.Path(tdir)
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    # heal a crashed revoke swap first — only its dangerous state (the
-    # live dir renamed out) costs a stat here
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(tdir + "_unold")):
-        if heal == "detect":
-            from .state_store import InFlightRecoveryError
-
-            raise InFlightRecoveryError(
-                f"tombstone set at {tdir}: crashed revoke swap "
-                f"({tdir}_unold present) — read-only consumers must not "
-                f"repair; the owner heals it via remove_tombstones / "
-                f"read_tombstones(heal='repair')."
-            )
-        _untomb_recover(spark, store_dir)
     if not fs.exists(p):
+        refuse_swap_leftover(spark, tdir, "_unold", "_untmp", "revoke")
         return None
     # byte census from the same listing a parquet read needs anyway; a
     # crashed compaction's double-visible inputs only overestimate (safe
@@ -155,8 +168,6 @@ def maintain_tombstones(
     window is semantically invisible here). Returns files merged. Called
     from every family's maintenance tick; idempotent and safe to run
     between batches (single-writer, like all maintenance)."""
-    from .state_store import compact_small_files
-
     jvm = spark._jvm
     tdir = tombstones_path(store_dir)
     p = jvm.org.apache.hadoop.fs.Path(tdir)
@@ -235,38 +246,15 @@ def delete_from_dedup_corpus(
     return len(stored_ids)
 
 
-def _untomb_recover(spark: SparkSession, store_dir: str) -> None:
-    """Heal a crashed :func:`remove_tombstones` swap (same shape as the
-    purge swap: stage fully → rename live out → rename staged in →
-    delete old)."""
-    jvm = spark._jvm
-    tdir = tombstones_path(store_dir)
-    live = jvm.org.apache.hadoop.fs.Path(tdir)
-    fs = live.getFileSystem(spark._jsc.hadoopConfiguration())
-    old_p = jvm.org.apache.hadoop.fs.Path(tdir + "_unold")
-    tmp_p = jvm.org.apache.hadoop.fs.Path(tdir + "_untmp")
-    if fs.exists(old_p):
-        if not fs.exists(live):
-            src = tmp_p if fs.exists(tmp_p) else old_p
-            if not fs.rename(src, live):
-                raise RuntimeError(
-                    f"tombstone-revoke recovery: rename {src} -> {tdir} failed"
-                )
-        if fs.exists(old_p):
-            fs.delete(old_p, True)
-    if fs.exists(tmp_p):
-        fs.delete(tmp_p, True)
-
-
 @fenced("untomb")
 def remove_tombstones(
     spark: SparkSession, store_dir: str, ids: list, id_col: str
 ) -> int:
     """REVOKE tombstones for the given ids (the operator-error path: a
     wrong id deleted and caught immediately). Returns how many of the ids
-    were tombstoned. Crash-safe via the staged swap healed by
-    :func:`_untomb_recover` (also run by ``read_tombstones`` when it sees
-    the crash leftover).
+    were tombstoned. The rewrite is a compactor erase of the set; a crash
+    leaves the revoke not yet in effect (see :func:`read_tombstones`),
+    and the next compaction of the set, or a re-run, completes it.
 
     CAVEAT — revocation is only a full restore while the rows are still
     physically present: maintenance FOLDS tombstoned rows out of every
@@ -279,49 +267,28 @@ def remove_tombstones(
     ``revise_ivf_vector``) — the ``on_reinsert`` CDC hook's remedy; the
     dedup corpora have no revise by design (fingerprint burns must stay
     permanent) — see STATE.md §4."""
-    jvm = spark._jvm
-    tdir = tombstones_path(store_dir)
-    live = jvm.org.apache.hadoop.fs.Path(tdir)
-    fs = live.getFileSystem(spark._jsc.hadoopConfiguration())
-    _untomb_recover(spark, store_dir)
-    if not fs.exists(live):
-        return 0
-    from .state_store import recover_dir_compaction
-
-    # heal a crashed maintain_tombstones merge before swap-rewriting the
-    # directory (the swap would otherwise strand its journal manifest)
-    recover_dir_compaction(spark, tdir)
     from pyspark.sql import types as T
 
-    tomb = spark.read.parquet(tdir)
-    ids_df = literal_frame(
-        spark, [(i,) for i in ids], T.StructType([tomb.schema[id_col]])
+    tomb = read_tombstones(spark, store_dir)
+    if tomb is None:
+        return 0
+    ids_df = F.broadcast(
+        literal_frame(spark, [(i,) for i in ids], T.StructType([tomb.schema[id_col]]))
     )
-    doomed = (
-        tomb.select(id_col)
-        .distinct()
-        .join(F.broadcast(ids_df), id_col, "left_semi")
-        .count()
-    )
+    doomed = tomb.select(id_col).distinct().join(ids_df, id_col, "left_semi").count()
     if doomed == 0:
         return 0
-    remaining = tomb.join(F.broadcast(ids_df), id_col, "left_anti")
-    if remaining.isEmpty():
-        fs.delete(live, True)
-        return int(doomed)
-    tmp_p = jvm.org.apache.hadoop.fs.Path(tdir + "_untmp")
-    old_p = jvm.org.apache.hadoop.fs.Path(tdir + "_unold")
-    remaining.coalesce(1).write.mode("overwrite").parquet(tdir + "_untmp")
-    if not fs.rename(live, old_p):
-        raise RuntimeError(f"tombstone revoke: rename {tdir} -> _unold failed")
-    if not fs.rename(tmp_p, live):
-        restored = fs.rename(old_p, live)
-        raise RuntimeError(
-            f"tombstone revoke: rename _untmp -> {tdir} failed"
-            + ("" if restored else "; ROLLBACK ALSO FAILED — tombstones "
-               f"stranded at {tdir}_unold")
+    tdir = tombstones_path(store_dir)
+    if tomb.join(ids_df, id_col, "left_anti").isEmpty():
+        # nothing left: an absent set reads as "no deletes" (a partial
+        # delete leaves a subset of the revoked ids, re-run to finish)
+        p = spark._jvm.org.apache.hadoop.fs.Path(tdir)
+        p.getFileSystem(spark._jsc.hadoopConfiguration()).delete(p, True)
+    else:
+        compact_small_files(
+            spark, tdir, erase=True, exclude=ids_df, exclude_cols=[id_col],
+            transform=lambda df: df.distinct(),
         )
-    fs.delete(old_p, True)
     return int(doomed)
 
 
@@ -331,111 +298,20 @@ def read_dedup_corpus(
 ) -> DataFrame:
     """The corpus as downstream consumers must see it: stored rows minus
     tombstoned ids (exact after purge too — the anti-join is a no-op
-    once the rows are physically gone). ``heal="detect"`` for read-only
-    consumers (see :func:`read_tombstones`)."""
+    once the rows are physically gone). A crashed corpus compaction is
+    healed first (one stat when there is none); ``heal="detect"`` is the
+    read-only mode that raises on it instead."""
+    if heal != "detect":
+        recover_dir_compaction(spark, corpus_dir)
+    elif detect_dir_compaction(spark, corpus_dir):
+        raise InFlightRecoveryError(
+            f"dedup corpus at {corpus_dir}: unhealed compaction journal — "
+            f"read-only consumers must not repair; the owning stream heals "
+            f"it at open (or read_dedup_corpus(heal='repair'))."
+        )
     corpus = spark.read.parquet(corpus_dir)
-    tomb = read_tombstones(spark, corpus_dir, cols=[id_col], heal=heal)
+    tomb = read_tombstones(spark, corpus_dir, cols=[id_col])
     if tomb is None:
         return corpus
     # broadcast-or-shuffle is read_tombstones' call (bounded escape)
     return corpus.join(tomb, id_col, "left_anti")
-
-
-def purge_recover(spark: SparkSession, corpus_dir: str) -> None:
-    """Heal a crashed :func:`purge_corpus_tombstones` swap. Stage order
-    (stage fully → rename live out → rename staged in → delete old)
-    means: ``_prepurge`` present with the live corpus missing is a crash
-    between the renames — the staged copy is COMPLETE, promote it (or
-    restore the old copy if staging is also gone); live present means the
-    old copy is superseded — delete it. Stream processors run this at
-    open (one stat in the steady state): without it a crash inside the
-    swap would read as 'corpus deleted', invalidating the sidecars and
-    silently restarting the corpus from empty."""
-    jvm = spark._jvm
-    live = jvm.org.apache.hadoop.fs.Path(corpus_dir)
-    fs = live.getFileSystem(spark._jsc.hadoopConfiguration())
-    old_p = jvm.org.apache.hadoop.fs.Path(corpus_dir.rstrip("/") + "_prepurge")
-    tmp_p = jvm.org.apache.hadoop.fs.Path(corpus_dir.rstrip("/") + "_purgetmp")
-    if fs.exists(old_p):
-        if not fs.exists(live):
-            src = tmp_p if fs.exists(tmp_p) else old_p
-            if not fs.rename(src, live):
-                raise RuntimeError(
-                    f"purge recovery: rename {src} -> {corpus_dir} failed"
-                )
-        if fs.exists(old_p):
-            fs.delete(old_p, True)
-    if fs.exists(tmp_p):
-        fs.delete(tmp_p, True)  # staging alone: live untouched, drop it
-
-
-@fenced("purge")
-def purge_corpus_tombstones(
-    spark: SparkSession,
-    corpus_dir: str,
-    id_col: str = "doc_id",
-    clear: bool = False,
-) -> int:
-    """Physically rewrite the corpus without the tombstoned ids; returns
-    the number of rows removed. A full-corpus rewrite by construction —
-    an explicit, operator-scheduled GC op (erasure SLAs), not a per-batch
-    cost. Run with the owning stream stopped (single-writer). Sidecars
-    are NOT rebuilt: probes anti-join the tombstone set and maintenance
-    folds stale rows lazily, so ranking/dedup behavior is unchanged by
-    the purge (tested). ``clear=True`` also drops the tombstone set —
-    the default keeps it as a suppression list so replayed raw data
-    cannot resurrect erased content."""
-    purge_recover(spark, corpus_dir)
-    tomb = read_tombstones(spark, corpus_dir, cols=[id_col])
-    if tomb is None:
-        return 0
-    jvm = spark._jvm
-    live = jvm.org.apache.hadoop.fs.Path(corpus_dir)
-    fs = live.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(live):
-        if clear:  # forget the ids even when no corpus ever existed
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(tombstones_path(corpus_dir)), True
-            )
-        return 0
-    corpus = spark.read.parquet(corpus_dir)
-    ids = tomb
-    doomed = corpus.join(ids, id_col, "left_semi").count()
-    if doomed == 0:
-        if clear:
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(tombstones_path(corpus_dir)), True
-            )
-        return 0
-    kept = corpus.join(ids, id_col, "left_anti")
-    tmp = corpus_dir.rstrip("/") + "_purgetmp"
-    old = corpus_dir.rstrip("/") + "_prepurge"
-    # FULL erasure must still leave a READABLE corpus: an empty frame
-    # written at its natural parallelism produces a dataless directory
-    # (zero part files), which the processors deliberately treat as fatal
-    # (only PATH_NOT_FOUND is a first batch) and which crashes
-    # read_dedup_corpus for every downstream consumer. coalesce(1) of the
-    # empty frame writes ONE zero-row, schema-bearing file — the corpus
-    # survives as "exists, holds nothing", streams and readers continue.
-    (kept.coalesce(1) if kept.isEmpty() else kept).write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    old_p = jvm.org.apache.hadoop.fs.Path(old)
-    tmp_p = jvm.org.apache.hadoop.fs.Path(tmp)
-    if not fs.rename(live, old_p):
-        raise RuntimeError(f"purge: rename {corpus_dir} -> {old} failed")
-    if not fs.rename(tmp_p, live):
-        restored = fs.rename(old_p, live)
-        raise RuntimeError(
-            f"purge: rename {tmp} -> {corpus_dir} failed"
-            + (
-                ""
-                if restored
-                else f"; ROLLBACK ALSO FAILED — corpus stranded at {old}, "
-                f"restore it manually before the next batch"
-            )
-        )
-    fs.delete(old_p, True)
-    if clear:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(tombstones_path(corpus_dir)), True)
-    return doomed

@@ -372,9 +372,10 @@ def _assert_healed_and_converges(spark, base, stored):
 
 def test_maintain_crash_recovery_restores_band(spark, tmp_path, monkeypatch):
     """Kill points inside one band's merge. After the band's compaction
-    manifest, before its rename: recovery rolls the band BACK (inputs
-    intact). After the rename, before the input deletes: a raw read
-    would see the merged segment beside its inputs, and recovery rolls
+    manifest, before its rename: the merged segment is still staged, and
+    recovery renames it in and drops the inputs. After the rename,
+    before the input deletes: a raw read would see the merged segment
+    beside its inputs, and recovery deletes the inputs. Both roll
     FORWARD."""
     from fest_vibes_ai_etl_spark.streaming import state_store
 

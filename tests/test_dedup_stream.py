@@ -161,3 +161,61 @@ def test_steady_batch_job_count_bounded(spark, tmp_path, family):
         sc.setJobGroup(group + "_done", "after")
     n = len(sc.statusTracker().getJobIdsForGroup(group))
     assert 0 < n <= JOB_CEILING[family], f"steady {family} batch submitted {n} Spark jobs"
+
+
+@pytest.mark.parametrize("family", FAMILIES)
+def test_purge_clear_readmits_resent_text(spark, tmp_path, family):
+    """``purge(clear=True)`` forgets erased content everywhere: the same
+    text re-sent under a new id is admitted. The purge folds every
+    sidecar before it drops the tombstone set — a stale ``_exactidx``
+    (or similarity) row for the purged doc would otherwise drop the
+    re-sent text forever."""
+    from fest_vibes_ai_etl_spark.streaming.tombstones import (
+        delete_from_dedup_corpus,
+        tombstones_path,
+    )
+
+    corpus = str(tmp_path / "corpus")
+    rows = lambda r: spark.createDataFrame(r, "doc_id long, text string")
+    proc = _processor(family, corpus)
+    proc(rows(B1), 0)
+    delete_from_dedup_corpus(spark, corpus, [1])
+    assert proc.purge(spark, clear=True) == 1
+    assert not os.path.exists(tombstones_path(corpus))
+    proc(rows([(20, B1[0][1])]), 1)
+    stored = spark.read.parquet(corpus)
+    assert sorted(r.doc_id for r in stored.select("doc_id").collect()) == [2, 3, 20]
+    # a re-run converges: nothing left to erase
+    assert proc.purge(spark, clear=True) == 0
+
+
+def _data_files(path):
+    return [
+        n for n in os.listdir(path)
+        if n.endswith(".parquet") and not n.startswith(("_", "."))
+    ]
+
+
+def test_corpus_census_is_bounded(spark, tmp_path):
+    """The maintenance tick compacts the corpus too (size-tiered, like
+    the sidecar bands): 24 small batches with ``maintain_every=4,
+    maintain_max_files=2`` keep the corpus's data-file count bounded
+    instead of growing by a file per batch, and every stored row is
+    kept exactly once."""
+    corpus = str(tmp_path / "corpus")
+    proc = make_exact_dedup_processor(
+        corpus, maintain_every=4, maintain_max_files=2
+    )
+    census = []
+    for b in range(24):
+        proc(spark.createDataFrame(
+            [(b * 4 + i, f"batch {b} doc {i} words") for i in range(4)],
+            "doc_id long, text string",
+        ), b)
+        census.append(len(_data_files(corpus)))
+    # a tick merges every small file into one segment; between ticks
+    # four batches add their files (one each here)
+    assert census[3::4] == [1] * 6, census
+    assert max(census) <= 4, census
+    ids = [r.doc_id for r in spark.read.parquet(corpus).select("doc_id").collect()]
+    assert sorted(ids) == list(range(96))

@@ -138,10 +138,11 @@ def test_processor_maintains_inline_and_stays_correct(spark, tmp_path):
     assert post.count() == post.select("term", "doc_id").distinct().count()
 
 
-def test_crash_before_rename_rolls_back(spark, tmp_path, monkeypatch):
+def test_crash_before_rename_rolls_forward_from_stage(spark, tmp_path, monkeypatch):
     """Die after the manifest is journaled but before the merged segment
-    becomes visible: recovery must roll BACK (inputs intact, ranking
-    unchanged), and the next maintenance completes the merge."""
+    becomes visible: the stage holds every final, so recovery rolls
+    FORWARD (the merge completes, ranking unchanged), and the next
+    maintenance merges what the dead pass never reached."""
     idx = str(tmp_path / "sidx")
     proc = inc.make_search_index_processor(idx, n_term_buckets=8, maintain_every=None)
     for i in range(6):
@@ -158,7 +159,7 @@ def test_crash_before_rename_rolls_back(spark, tmp_path, monkeypatch):
     with pytest.raises(RuntimeError, match="injected crash"):
         inc.maintain_search_index(spark, idx, max_files_per_bucket=1)
     monkeypatch.setattr(state_store, "hadoop_write_json", real)
-    # probe heals (roll-back) and ranks identically
+    # probe heals (roll-forward from the stage) and ranks identically
     assert _rank(spark, idx) == before
     stats = inc.maintain_search_index(spark, idx, max_files_per_bucket=1)
     assert stats["files_merged"] > 0
@@ -195,3 +196,42 @@ def test_crash_after_rename_rolls_forward(spark, tmp_path, monkeypatch):
     assert post.count() == post.select("term", "doc_id").distinct().count()
     dl = spark.read.parquet(idx + "/doclen")
     assert dl.count() == dl.select("doc_id").distinct().count()
+
+
+def test_delete_inputs_tolerates_missing_files(spark, tmp_path):
+    """The input deletes skip no stat: a list naming a file that is
+    already gone (a concurrent recovery deleted it) deletes the present
+    ones and does not raise."""
+    import os
+
+    d = tmp_path / "d"
+    d.mkdir()
+    for name in ("a.parquet", "c.parquet"):
+        (d / name).write_bytes(b"x")
+    jvm, fs, _ = state_store._fs_for(spark, str(d))
+    state_store._delete_inputs(fs, jvm, str(d), ["a.parquet", "b.parquet", "c.parquet"])
+    assert os.listdir(d) == []
+
+
+def test_erase_writes_segments_by_bytes(spark, tmp_path):
+    """The erase form rewrites every file, graduated or not, into
+    ``max(1, bytes // target_bytes)`` segments (capped by the input
+    splits), not one; the size-tiered merge keeps writing one."""
+    import os
+
+    def files(d):
+        return [n for n in os.listdir(d) if n.endswith(".parquet") and n[0] not in "_."]
+
+    for erase, want in ((True, 3), (False, 1)):
+        d = str(tmp_path / f"erase_{erase}")
+        for i in range(3):
+            spark.range(i * 10, i * 10 + 10, 1, 1).write.mode("append").parquet(d)
+        target = 1 if erase else 1 << 20
+        n = state_store.compact_small_files(
+            spark, d, max_files=1, target_bytes=target, erase=erase,
+            exclude=spark.range(0, 1).select(F.col("id")), exclude_cols=["id"],
+        )
+        assert n == 3
+        assert len(files(d)) == want
+        assert sorted(r.id for r in spark.read.parquet(d).collect()) == list(range(1, 30))
+        assert not os.path.exists(d + "/_compact.json")

@@ -230,8 +230,11 @@ def test_read_only_probe_detects_inflight_compaction(spark, tmp_path):
 
 
 def test_read_only_probe_detects_crashed_revoke_swap(spark, tmp_path):
-    """A crashed remove_tombstones swap (live set renamed out) is
-    reported, not repaired, under heal="detect"."""
+    """An older version's revoke swap that died between its renames left
+    the set at ``<set>_unold`` and nothing live. Every read — read-only
+    probes included — refuses with the manual restore instead of reading
+    "no deletes" (which would resurrect every erased doc), and mutates
+    nothing; after the restore the ids are suppressed again."""
     from fest_vibes_ai_etl_spark.streaming.state_store import (
         InFlightRecoveryError,
     )
@@ -241,10 +244,12 @@ def test_read_only_probe_detects_crashed_revoke_swap(spark, tmp_path):
     delete_from_dedup_corpus(spark, corpus, [1, 2, 3])
     tdir = tombstones_path(corpus)
     os.rename(tdir, tdir + "_unold")  # the dangerous half of the swap
+    with pytest.raises(InFlightRecoveryError, match="mv .*_unold"):
+        read_tombstones(spark, corpus, cols=["doc_id"])
     with pytest.raises(InFlightRecoveryError, match="revoke"):
-        read_tombstones(spark, corpus, cols=["doc_id"], heal="detect")
-    assert os.path.isdir(tdir + "_unold")  # untouched
-    # owner mode heals: set restored, ids still suppressed
+        read_dedup_corpus(spark, corpus, heal="detect")
+    assert os.path.isdir(tdir + "_unold") and not os.path.exists(tdir)
+    os.rename(tdir + "_unold", tdir)  # the restore the message names
     got = {r[0] for r in read_tombstones(spark, corpus, cols=["doc_id"]).collect()}
     assert got == {1, 2, 3}
 

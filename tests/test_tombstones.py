@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from conftest import SF_DIR
 
 from fest_vibes_ai_etl_spark.operators.search import bm25_topk, build_postings
@@ -182,7 +183,7 @@ def test_near_dedup_maintenance_folds_and_purge_removes(spark, tmp_path):
     for side in (exact_index_path(corpus), near_index_path(corpus)):
         assert spark.read.parquet(side).filter("id = 1").count() == 0
     # purge: the corpus row is physically gone, later batches unaffected
-    removed = tb.purge_corpus_tombstones(spark, corpus)
+    removed = proc_b.purge(spark)
     assert removed == 1
     raw = spark.read.parquet(corpus)
     assert raw.filter("doc_id = 1").count() == 0
@@ -190,28 +191,6 @@ def test_near_dedup_maintenance_folds_and_purge_removes(spark, tmp_path):
     proc2 = _near_proc(corpus)
     proc2(rows((4, NEAR.replace("lambda", "mu"))), 2)  # still admitted
     assert spark.read.parquet(corpus).filter("doc_id = 4").count() == 1
-
-
-def test_purge_crash_heals_at_stream_open(spark, tmp_path):
-    """Simulate a death between the purge's two renames (live missing,
-    staged + old both present): the processor's open-time heal must
-    restore the corpus instead of silently restarting it from empty."""
-    rows = lambda *r: spark.createDataFrame(list(r), "doc_id long, text string")
-    corpus = str(tmp_path / "corpus")
-    proc = _near_proc(corpus)
-    proc(rows((1, BASE), (10, OTHER)), 0)
-    tb.delete_from_dedup_corpus(spark, corpus, [1])
-    kept = spark.read.parquet(corpus).filter("doc_id != 1")
-    kept.write.parquet(corpus + "_purgetmp")  # the completed staging
-    os.rename(corpus, corpus + "_prepurge")  # crash between the renames
-    proc2 = _near_proc(corpus)
-    proc2(rows((5, "totally fresh text for the heal batch")), 1)
-    stored = spark.read.parquet(corpus)
-    assert stored.filter("doc_id = 10").count() == 1  # history survived
-    assert stored.filter("doc_id = 5").count() == 1
-    assert stored.filter("doc_id = 1").count() == 0  # staged copy won
-    assert not os.path.exists(corpus + "_prepurge")
-    assert not os.path.exists(corpus + "_purgetmp")
 
 
 def test_span_dedup_deleted_doc_stops_suppressing_and_burns(spark, tmp_path):
@@ -244,7 +223,7 @@ def test_span_dedup_deleted_doc_stops_suppressing_and_burns(spark, tmp_path):
     stored = spark.read.parquet(corpus)
     assert stored.filter("doc_id = 2").count() == 1  # passage no longer suppresses
     assert stored.filter("doc_id = 3").count() == 0  # exact bytes: burned fp
-    assert tb.purge_corpus_tombstones(spark, corpus) == 1
+    assert proc.purge(spark) == 1
     assert spark.read.parquet(corpus).filter("doc_id = 1").count() == 0
 
 
@@ -260,13 +239,13 @@ def test_exact_dedup_burned_fingerprint(spark, tmp_path):
     tb.delete_from_dedup_corpus(spark, corpus, [1])
     proc(rows((7, BASE)), 1)  # same bytes, new id: burned
     assert spark.read.parquet(corpus).filter("doc_id = 7").count() == 0
-    assert tb.purge_corpus_tombstones(spark, corpus) == 1
+    assert proc.purge(spark) == 1
     assert spark.read.parquet(corpus).filter("doc_id = 1").count() == 0
 
 
 def test_search_probe_survives_fully_purged_bucket(spark, tmp_path):
     """Purging every doc whose postings live in a bucket leaves the tb=
-    directory EMPTY (the all-rows-excluded merge journals final=None);
+    directory EMPTY (the all-rows-excluded merge may journal no finals);
     a probe whose terms hash there must return empty, not crash on
     schema inference."""
     idx = str(tmp_path / "sidx")
@@ -300,11 +279,9 @@ def test_dedup_delete_burns_in_flight_ids(spark, tmp_path):
 
 def test_remove_tombstones_revokes_a_mistaken_delete(spark, tmp_path):
     """A wrong-id delete caught before any maintenance fold is fully
-    revocable: the doc returns to the ranking byte-identically, the other
-    tombstones survive the swap, and a crashed swap heals at the next
-    tombstone read."""
-    import os
-
+    revocable: the doc returns to the ranking byte-identically and the
+    other tombstones survive the revoke's rewrite. (A revoke's crash
+    windows: ``test_revoke_kill_points_converge``.)"""
     idx = str(tmp_path / "sidx")
     proc = inc.make_search_index_processor(idx, n_term_buckets=8)
     proc(_docs(spark, 0, 80), 0)
@@ -319,16 +296,6 @@ def test_remove_tombstones_revokes_a_mistaken_delete(spark, tmp_path):
     assert tb.remove_tombstones(spark, idx, [v2], "doc_id") == 1
     assert _rank(spark, idx) == before
     assert tb.remove_tombstones(spark, idx, [v1], "doc_id") == 0  # idempotent
-    # crashed swap shape: live renamed out, staged present — the next
-    # tombstone read must heal it
-    inc.delete_from_search_index(spark, idx, [v1])
-    tdir = tb.tombstones_path(idx)
-    kept = spark.read.parquet(tdir)
-    kept.coalesce(1).write.parquet(tdir + "_untmp")
-    os.rename(tdir, tdir + "_unold")
-    assert tb.read_tombstones(spark, idx) is not None  # healed + readable
-    assert not os.path.exists(tdir + "_unold")
-    assert v1 not in {r[0] for r in _rank(spark, idx)}
 
 
 def test_full_erasure_purge_leaves_usable_stores(spark, tmp_path):
@@ -340,7 +307,7 @@ def test_full_erasure_purge_leaves_usable_stores(spark, tmp_path):
     proc = _near_proc(corpus)
     proc(rows((1, BASE), (2, OTHER)), 0)
     tb.delete_from_dedup_corpus(spark, corpus, [1, 2])
-    assert tb.purge_corpus_tombstones(spark, corpus) == 2
+    assert proc.purge(spark) == 2
     # the corpus survives as READABLE-EMPTY (a downstream consumer that
     # read it before the purge must not crash after it), and the stream
     # continues; burned content stays burned, new content lands
@@ -535,3 +502,145 @@ def test_literal_frame_is_a_typed_one_task_jvm_relation(spark):
     assert empty.count() == 0
     plan = keys._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" not in plan and "splits=1" in plan
+
+
+# --- crash windows of the purge and the revoke ---------------------------------
+
+
+def _kill_points(real_promote, calls):
+    """The compactor's crash windows as (seam, dying stand-in) pairs: after
+    the manifest, before the first rename; between two finals' renames;
+    after the last rename, before the input deletes."""
+
+    def die_before_first(fs, jvm, d, stage, names):
+        raise RuntimeError("injected crash before the first rename")
+
+    def die_between(fs, jvm, d, stage, names):
+        calls.append(len(names))
+        real_promote(fs, jvm, d, stage, names[:1])
+        raise RuntimeError("injected crash between two renames")
+
+    def die_before_deletes(fs, jvm, d, names):
+        raise RuntimeError("injected crash before input deletes")
+
+    return [
+        ("first", "_promote", die_before_first),
+        ("between", "_promote", die_between),
+        ("deletes", "_delete_inputs", die_before_deletes),
+    ]
+
+
+def test_purge_kill_points_converge(spark, tmp_path, monkeypatch):
+    """A purge dying inside its corpus erase, at each of the compactor's
+    windows: the journal names staged or visible finals, so a fresh
+    stream's open rolls the erase forward — every surviving row visible
+    exactly once, the erased ones gone — and re-running the purge
+    converges."""
+    from functools import partial
+
+    from fest_vibes_ai_etl_spark.streaming import dedup_stream, state_store
+    from fest_vibes_ai_etl_spark.streaming.incremental_dedup import (
+        make_exact_dedup_processor,
+    )
+
+    rows = lambda r: spark.createDataFrame(r, "doc_id long, text string")
+    calls: list = []
+    # a 1-byte target makes the erase write one segment per input split,
+    # so the journal names several finals
+    small = partial(state_store.compact_small_files, target_bytes=1)
+    for name, seam, dying in _kill_points(state_store._promote, calls):
+        corpus = str(tmp_path / name)
+        proc = make_exact_dedup_processor(corpus, maintain_every=None)
+        for b in range(3):
+            proc(rows([(b * 3 + i, f"{name} text {b} {i}") for i in range(3)]), b)
+        tb.delete_from_dedup_corpus(spark, corpus, [0, 4])
+        with monkeypatch.context() as m:
+            m.setattr(dedup_stream, "compact_small_files", small)
+            m.setattr(state_store, seam, dying)
+            with pytest.raises(RuntimeError, match="injected crash"):
+                proc.purge(spark)
+        assert os.path.exists(corpus + "/_compact.json")
+        fresh = make_exact_dedup_processor(corpus, maintain_every=None)
+        fresh(rows([(100, "a fresh text after the crash")]), 0)
+        assert not os.path.exists(corpus + "/_compact.json")
+        ids = [r.doc_id for r in spark.read.parquet(corpus).collect()]
+        assert sorted(ids) == [1, 2, 3, 5, 6, 7, 8, 100], name
+        assert fresh.purge(spark) == 0
+        assert sorted(r.doc_id for r in spark.read.parquet(corpus).collect()) == [
+            1, 2, 3, 5, 6, 7, 8, 100
+        ]
+    assert calls and calls[0] >= 2
+
+
+def test_revoke_kill_points_converge(spark, tmp_path, monkeypatch):
+    """A revoke dying inside its erase of the tombstone set, at each of the
+    compactor's windows: a fresh reader still sees every tombstone (the
+    revoke has not taken effect — the safe side), and re-running the
+    revoke converges to the set without the revoked id, each row stored
+    once and no journal left."""
+    from functools import partial
+
+    from pyspark.sql import functions as F
+
+    from fest_vibes_ai_etl_spark.streaming import state_store
+
+    calls: list = []
+    small = partial(state_store.compact_small_files, target_bytes=1)
+    for name, seam, dying in _kill_points(state_store._promote, calls):
+        corpus = str(tmp_path / name)
+        spark.range(6).select(
+            F.col("id").alias("doc_id"), F.md5(F.col("id").cast("string")).alias("fp")
+        ).write.parquet(corpus)
+        for i in range(4):  # one tombstone file per erase request
+            tb.delete_from_dedup_corpus(spark, corpus, [i])
+        tdir = tb.tombstones_path(corpus)
+        # the revoke's distinct() shuffles: keep its partitions uncoalesced
+        # so the erase writes several finals
+        conf = "spark.sql.adaptive.coalescePartitions.enabled"
+        prev = spark.conf.get(conf)
+        spark.conf.set(conf, "false")
+        try:
+            with monkeypatch.context() as m:
+                m.setattr(tb, "compact_small_files", small)
+                m.setattr(state_store, seam, dying)
+                with pytest.raises(RuntimeError, match="injected crash"):
+                    tb.remove_tombstones(spark, corpus, [2], "doc_id")
+        finally:
+            spark.conf.set(conf, prev)
+        assert os.path.exists(tdir + "/_compact.json")
+        got = tb.read_tombstones(spark, corpus, ["doc_id"]).collect()
+        assert sorted(r[0] for r in got) == [0, 1, 2, 3], name
+        assert tb.remove_tombstones(spark, corpus, [2], "doc_id") == 1
+        assert not os.path.exists(tdir + "/_compact.json")
+        raw = [r.doc_id for r in spark.read.parquet(tdir).collect()]
+        assert sorted(raw) == [0, 1, 3], name
+    assert calls and calls[0] >= 2
+
+
+def test_legacy_purge_swap_leftover_is_refused(spark, tmp_path):
+    """An older version's purge swap that died between its renames left
+    the corpus at ``<corpus>_prepurge`` and nothing live. Nothing can
+    rebuild a corpus, so the stream refuses with the manual restore,
+    BEFORE it invalidates the sidecars as describing a gone corpus; after
+    the restore the stream continues on its history."""
+    from fest_vibes_ai_etl_spark.streaming.dedup_stream import exact_index_path
+    from fest_vibes_ai_etl_spark.streaming.incremental_near_dedup import (
+        near_index_path,
+    )
+    from fest_vibes_ai_etl_spark.streaming.state_store import (
+        InFlightRecoveryError,
+    )
+
+    rows = lambda *r: spark.createDataFrame(list(r), "doc_id long, text string")
+    corpus = str(tmp_path / "corpus")
+    _near_proc(corpus)(rows((1, BASE), (10, OTHER)), 0)
+    os.rename(corpus, corpus + "_prepurge")
+    proc = _near_proc(corpus)
+    with pytest.raises(InFlightRecoveryError, match="mv .*_prepurge"):
+        proc(rows((5, NEAR)), 1)
+    for side in (exact_index_path(corpus), near_index_path(corpus)):
+        assert os.path.isdir(side)
+    os.rename(corpus + "_prepurge", corpus)
+    proc(rows((5, NEAR), (6, "totally fresh text for the restored corpus")), 1)
+    ids = sorted(r.doc_id for r in spark.read.parquet(corpus).collect())
+    assert ids == [1, 6, 10]  # 5 is a near-copy of the restored doc 1

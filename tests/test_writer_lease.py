@@ -274,7 +274,7 @@ def test_compaction_journal_carries_lease_epoch(spark, tmp_path, monkeypatch):
     for i in range(4):
         spark.range(i * 5, i * 5 + 5).write.mode("append").parquet(d)
     with writer_lease(spark, str(tmp_path / "s"), "maintain") as lease:
-        state_store.compact_small_files(spark, d, max_files=2, force=True)
+        state_store.compact_small_files(spark, d, max_files=2, erase=True)
         assert captured, "compaction should have journaled"
         (payload,) = captured.values()
         assert payload["lease_epoch"] == lease.epoch
