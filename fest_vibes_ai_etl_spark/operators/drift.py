@@ -1,6 +1,6 @@
 """Distribution-drift primitives shared by the batch PSI query
 (plans/statsq.py:events_psi_value_drift) and the streaming monitor
-(streaming/drift.py): reference-fit equal-width binning and the smoothed
+(streaming/monitors.py): reference-fit equal-width binning and the smoothed
 population-stability index.
 
 Scale shape: the reference fit is one bounded aggregate (2 doubles per

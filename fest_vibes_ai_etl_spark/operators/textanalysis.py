@@ -365,7 +365,7 @@ def chunk_documents(
 
 
 # shared by the batch vocabulary-PSI query (plans/textmining.py) and the
-# streaming vocabulary-drift monitor (streaming/vocab_drift.py): one
+# streaming vocabulary-drift monitor (streaming/monitors.py): one
 # constant and one bucket expression so stream and batch land token
 # instances in IDENTICAL cells
 VOCAB_PSI_BUCKETS = 128

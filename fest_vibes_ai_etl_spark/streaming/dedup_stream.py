@@ -75,6 +75,7 @@ from .banded_index import (
     combined_touched_bands,
 )
 from .state_store import (
+    _fs_for,
     compact_small_files,
     has_data_files,
     recover_dir_compaction,
@@ -85,6 +86,7 @@ from .tombstones import (
     refuse_swap_leftover,
     tombstones_path,
 )
+from .writer_lease import GEN_DIRNAME, LEASE_DIRNAME
 
 
 def fingerprint(text_col: str = "text"):
@@ -348,9 +350,14 @@ class DedupStream:
             # UNABLE_TO_INFER_SCHEMA, corrupt files, permissions) must
             # propagate — treating it as "first batch" would re-append
             # every row of the batch as if never seen: silent duplication,
-            # the exact failure this operator exists to prevent.
+            # the exact failure this operator exists to prevent. A corpus
+            # dir holding only the writer lease and the store generation
+            # (a fenced delete before the first batch) has no data yet.
             if not is_path_not_found(exc):
-                raise
+                _, fs, jp = _fs_for(spark, self.corpus_dir)
+                names = {st.getPath().getName() for st in fs.listStatus(jp)}
+                if not names or not names <= {LEASE_DIRNAME, GEN_DIRNAME}:
+                    raise
             # before any sidecar is invalidated as describing a gone corpus
             refuse_swap_leftover(
                 spark, self.corpus_dir, "_prepurge", "_purgetmp", "purge"

@@ -31,19 +31,21 @@ def test_is_path_not_found_message_fallback():
 
 
 def test_unreadable_existing_table_raises_not_first_batch(spark, tmp_path):
-    # an EXISTING but unreadable (empty) directory raises
-    # UNABLE_TO_INFER_SCHEMA — the sketch snapshot loader must propagate
-    # it, not return the "no snapshot yet" None
+    # an EXISTING but unreadable (empty) monitor log raises
+    # UNABLE_TO_INFER_SCHEMA through every reader's fold — never an empty
+    # report that reads as "nothing streamed yet"
     from pyspark.errors import AnalysisException
 
-    from fest_vibes_ai_etl_spark.streaming.sketch_rollup import _latest_snapshot
+    from fest_vibes_ai_etl_spark.streaming.monitors import (
+        latest_sketches,
+        merged_heavy_hitters,
+    )
 
     empty = tmp_path / "existing_but_empty"
     empty.mkdir()
-    with pytest.raises(AnalysisException):
-        _latest_snapshot(spark, str(empty))
-    # genuinely missing path is the legitimate first-batch signal
-    assert _latest_snapshot(spark, str(tmp_path / "missing")) is None
+    for read in (latest_sketches, merged_heavy_hitters):
+        with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
+            read(spark, str(empty)).collect()
 
 
 def test_incremental_dedup_raises_on_unreadable_history(spark, tmp_path):

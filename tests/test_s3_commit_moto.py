@@ -74,6 +74,18 @@ def test_racing_writers_exactly_one_wins(s3_client):
     results: list[tuple[int, bool]] = []
     lock = threading.Lock()
     barrier = threading.Barrier(8)
+    # moto checks If-None-Match and then stores, with no lock between the
+    # two; real S3 decides the condition atomically on the server. One
+    # lock around the fake's put_object restores that atomicity, while
+    # the 8 writers still race through put_if_absent.
+    put_lock = threading.Lock()
+    put_object = s3_client.put_object
+
+    def atomic_put_object(**kw):
+        with put_lock:
+            return put_object(**kw)
+
+    s3_client.put_object = atomic_put_object
 
     def writer(i: int) -> None:
         backend = S3CommitBackend(bucket="bkt", client=s3_client)

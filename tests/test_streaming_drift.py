@@ -1,18 +1,17 @@
 """Streaming PSI monitor: streamed cell-log PSI must equal the batch PSI
-query on identical data, and replaying the stream must converge (the
-batch-id-partitioned overwrite makes micro-batch writes idempotent)."""
+query on identical data; an at-least-once replay of a batch leaves the
+report unchanged, and a fresh checkpoint against the log is refused."""
 
 from __future__ import annotations
-
-import shutil
 
 from pyspark.sql import functions as F
 
 from conftest import SF_DIR
+from monitor_log import assert_refused, replay_last_batch
 
 from fest_vibes_ai_etl_spark.plans import catalog
 from fest_vibes_ai_etl_spark.sources import table
-from fest_vibes_ai_etl_spark.streaming.drift import (
+from fest_vibes_ai_etl_spark.streaming.monitors import (
     reference_cells,
     start_drift_cell_log,
     streamed_psi,
@@ -21,10 +20,10 @@ from fest_vibes_ai_etl_spark.streaming.drift import (
 CUT = "2024-01-16"
 
 
-def _run_monitor(spark, src, stats, log_root, ckpt, schema):
+def _run_monitor(spark, src, stats, log_root, ckpt, schema, files_per_batch=1):
     stream = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
+        .option("maxFilesPerTrigger", files_per_batch)
         .parquet(str(src))
     )
     q = start_drift_cell_log(
@@ -68,16 +67,60 @@ def test_streamed_psi_matches_batch_and_replays(spark, tmp_path):
     }
     assert got == want  # streamed == batch, bit-for-bit
 
-    # replay from scratch (fresh checkpoint, same reader options): the
-    # batch-id partitions are overwritten with identical content — PSI is
-    # unchanged, nothing double-counts
-    shutil.rmtree(tmp_path / "ckpt1")
-    _run_monitor(spark, src, stats, log_root, tmp_path / "ckpt2", tgt.schema)
+    # at-least-once replay: the last batch re-runs on its checkpoint with
+    # the same offsets; its partial already landed, the report is unchanged
+    replay_last_batch(
+        tmp_path / "ckpt1",
+        lambda: _run_monitor(
+            spark, src, stats, log_root, tmp_path / "ckpt1", tgt.schema
+        ),
+    )
     again = {
         r["event_type"]: (r["n_ref"], r["n_tgt"], r["psi"])
         for r in streamed_psi(spark, str(log_root), rcells).collect()
     }
     assert again == want
+
+    # a fresh checkpoint against the same log is refused, writing nothing
+    assert_refused(
+        lambda: _run_monitor(
+            spark, src, stats, log_root, tmp_path / "ckpt2", tgt.schema
+        ),
+        log_root,
+    )
+
+
+def test_fresh_checkpoint_resplit_is_refused_not_double_counted(spark, tmp_path):
+    """The cell log's old batch-id overwrite converged only when a re-run
+    repeated the batch boundaries: these 480 rows streamed one file per
+    batch, then re-streamed three files per batch on a fresh checkpoint,
+    summed to 875. The log pins its checkpoint, so the second start is
+    refused and the log still counts each row once."""
+    i = F.col("id")
+    ev = spark.range(480).select(
+        F.when(i % 3 == 0, "b").otherwise("a").alias("event_type"),
+        (i % 17).cast("double").alias("value"),
+    )
+    stats, _ = reference_cells(ev)
+    src, log_root = tmp_path / "src", tmp_path / "cells"
+    for part in range(3):
+        ev.filter(F.pmod(F.hash("value"), F.lit(3)) == part).coalesce(1).write.mode(
+            "append"
+        ).parquet(str(src))
+    _run_monitor(spark, src, stats, log_root, tmp_path / "ckpt1", ev.schema)
+
+    def total():
+        return spark.read.parquet(str(log_root)).agg(F.sum("n")).first()[0]
+
+    assert total() == 480
+    assert_refused(
+        lambda: _run_monitor(
+            spark, src, stats, log_root, tmp_path / "ckpt2", ev.schema,
+            files_per_batch=3,
+        ),
+        log_root,
+    )
+    assert total() == 480
 
 
 def test_psi_is_zero_when_target_equals_reference(spark):

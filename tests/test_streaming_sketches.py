@@ -1,13 +1,18 @@
-"""Streaming HLL sketch maintenance: stream ≡ batch, replay convergence."""
+"""Streaming sketch and heavy-hitter monitors: stream ≡ batch, an
+at-least-once replay leaves the answer unchanged, and a fresh checkpoint
+against the log is refused."""
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import functions as F
 
 from conftest import SF_DIR
+from monitor_log import assert_refused, replay_last_batch
 
 from fest_vibes_ai_etl_spark.sources import table
-from fest_vibes_ai_etl_spark.streaming.sketch_rollup import (
+from fest_vibes_ai_etl_spark.streaming.monitors import (
     latest_sketches,
     start_sketch_maintenance,
 )
@@ -51,11 +56,13 @@ def test_streaming_sketches_match_batch(spark, tmp_path):
     )
     assert streamed == batch and len(batch) > 0
 
-    # at-least-once replay converges: reprocess everything under a fresh
-    # checkpoint into the SAME table — union of already-seen users is a
-    # no-op, estimates unchanged
-    _run_stream(spark, src, root, str(tmp_path / "ckpt2"))
+    # at-least-once replay of the last batch on its own checkpoint
+    replay_last_batch(
+        tmp_path / "ckpt1", lambda: _run_stream(spark, src, root, str(tmp_path / "ckpt1"))
+    )
     assert _estimates(latest_sketches(spark, root)) == batch
+    # a fresh checkpoint against the same table is refused, writing nothing
+    assert_refused(lambda: _run_stream(spark, src, root, str(tmp_path / "ckpt2")), root)
 
 
 def _hh(df):
@@ -65,7 +72,7 @@ def _hh(df):
 
 
 def test_streaming_freq_rollup_exact_regime_and_replay(spark, tmp_path):
-    from fest_vibes_ai_etl_spark.streaming.freq_rollup import (
+    from fest_vibes_ai_etl_spark.streaming.monitors import (
         merged_heavy_hitters,
         start_freq_maintenance,
     )
@@ -103,18 +110,19 @@ def test_streaming_freq_rollup_exact_regime_and_replay(spark, tmp_path):
             true.update(pat.findall(r.text.lower()))
     assert streamed == {(t, n, 0) for t, n in true.items()}
 
-    # at-least-once replay: same batches -> same fingerprints -> overwrite
-    # of the same partitions; the merged answer must not change
-    run("ckpt2")
+    # at-least-once replay of the last batch: MG summaries add, so a
+    # batch counted twice would double its items; the answer is unchanged
+    replay_last_batch(tmp_path / "ckpt1", lambda: run("ckpt1"))
     assert _hh(merged_heavy_hitters(spark, root)) == streamed
+    assert_refused(lambda: run("ckpt2"), root)
 
 
 def test_streaming_kmv_matches_batch_and_replay_converges(spark, tmp_path):
     """KMV maintenance: streamed per-day k-sets equal the batch-built
-    sketch exactly (trimmed union is associative), and at-least-once
-    replay converges."""
+    sketch exactly (trimmed union is associative), and an at-least-once
+    replay leaves them unchanged."""
     from fest_vibes_ai_etl_spark.operators import kmvsketch
-    from fest_vibes_ai_etl_spark.streaming.sketch_rollup import (
+    from fest_vibes_ai_etl_spark.streaming.monitors import (
         latest_kmv,
         start_kmv_maintenance,
     )
@@ -149,16 +157,18 @@ def test_streaming_kmv_matches_batch_and_replay_converges(spark, tmp_path):
         .collect()
     }
     assert streamed == batch and len(batch) > 0
-    run(str(tmp_path / "ck2"))  # replay everything: no-op union
+    # at-least-once replay of the last batch
+    replay_last_batch(tmp_path / "ck1", lambda: run(str(tmp_path / "ck1")))
     latest_rows = latest_kmv(spark, str(tmp_path / "kmv")).collect()
     streamed2 = {r.day.isoformat(): tuple(r.kset) for r in latest_rows}
     assert streamed2 == batch
-    # A fresh-checkpoint replay restarts batch_id at 0 — versions must
-    # STILL advance past the stored vmax (not write under an old v, which
-    # would both duplicate rows inside an existing snapshot partition and
-    # leave latest_kmv stuck on the pre-replay snapshot). One row per day:
-    # duplicated appends into the max-v partition would double these.
+    # one row per day: a partial landed twice would still fold to one
+    # row, so count the log's files too — one partial per batch, and no
+    # version kept beside it
     assert len(latest_rows) == len(batch)
-    snap = spark.read.parquet(str(tmp_path / "kmv"))
-    vs = sorted(r.v for r in snap.select("v").distinct().collect())
-    assert vs == list(range(len(vs))) and len(vs) == 6  # 3 batches x 2 runs
+    assert len(_data_files(tmp_path / "kmv")) == 3
+    assert_refused(lambda: run(str(tmp_path / "ck2")), tmp_path / "kmv")
+
+
+def _data_files(root):
+    return [n for n in os.listdir(root) if n.endswith(".parquet") and n[0] not in "_."]

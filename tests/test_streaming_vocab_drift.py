@@ -1,13 +1,15 @@
 """Streaming vocabulary-PSI monitor: streamed cell-log PSI must equal the
-batch computation on identical data, replay must converge, and a planted
+batch computation on identical data, an at-least-once replay must leave
+it unchanged, a fresh checkpoint against the log is refused, and a planted
 vocabulary shift must move the statistic."""
 
 from __future__ import annotations
 
 from conftest import SF_DIR
+from monitor_log import assert_refused, replay_last_batch
 
 from fest_vibes_ai_etl_spark.sources import table
-from fest_vibes_ai_etl_spark.streaming.vocab_drift import (
+from fest_vibes_ai_etl_spark.streaming.monitors import (
     start_vocab_cell_log,
     streamed_vocab_psi,
     vocab_reference_cells,
@@ -58,14 +60,21 @@ def test_streamed_vocab_psi_matches_batch_and_replays(spark, tmp_path):
     }
     assert streamed == batch
 
-    # replay under a fresh checkpoint: batch-id partitions overwrite, the
-    # fold converges to the identical report
-    _run_monitor(spark, src, log_root, tmp_path / "ckpt2")
+    # at-least-once replay of the last batch on its own checkpoint: the
+    # report is identical
+    replay_last_batch(
+        tmp_path / "ckpt1", lambda: _run_monitor(spark, src, log_root, tmp_path / "ckpt1")
+    )
     replayed = {
         r.lang: (r.n_ref, r.n_tgt, r.psi)
         for r in streamed_vocab_psi(spark, str(log_root), ref_cells, buckets=BUCKETS).collect()
     }
     assert replayed == streamed
+
+    # a fresh checkpoint against the same log is refused, writing nothing
+    assert_refused(
+        lambda: _run_monitor(spark, src, log_root, tmp_path / "ckpt2"), log_root
+    )
 
 
 def test_planted_vocab_shift_moves_psi(spark, tmp_path):
