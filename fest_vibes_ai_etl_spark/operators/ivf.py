@@ -548,28 +548,26 @@ def make_index_add_processor(
     add-vs-train split). Already-present ids are dropped per batch by an
     anti-join, so replays converge.
 
-    Both per-batch costs are BATCH-proportional, not index-proportional
-    (the same two seams the incremental-dedup family closed in rounds
-    7-10, see ``streaming/banded_index.py``):
+    Both per-batch costs are BATCH-proportional, not index-proportional:
+    the cells are the store's one shared ``PartitionedAppend``
+    (``streaming/banded_index.py``), keyed by the vector id, and every
+    append is GUARDED by it:
 
-    - the replay guard reads ONLY the batch's own cell directories: the
-      quantizer is frozen and assignment deterministic, so a replayed
-      vector lands in the same cell it was stored under — other cells
-      cannot hold its id. (Corollary of the same contract: the index is
-      append-only per id; an UPDATE goes through
+    - the replay guard reads ONLY the batch's own data-holding cell
+      directories: the quantizer is frozen and assignment deterministic,
+      so a replayed vector lands in the same cell it was stored under —
+      other cells cannot hold its id. (Corollary of the same contract:
+      the index is append-only per id; an UPDATE goes through
       :func:`revise_ivf_vector`, and a re-trained quantizer is a
-      rebuild.)
-    - the append is the index stores' shared ``PartitionedAppend``
-      (``streaming/banded_index.py``): written directly from executors
-      instead of through the dynamic-partition committer's
-      ~10 ms-per-cell-directory driver-side commit work; a mid-job
-      death leaves invisible ``_tmp-`` staging files (swept here,
-      bounded to the batch's own cells) and possibly PARTIAL landed
-      cells, which the replay's anti-join converges — the guard reads
-      exactly the cells any partial files landed in. Untrusted
-      filesystems fall back to the committer write, warned once per
-      processor instance; the destination probe runs once, not per
-      batch.
+      rebuild.) The cells are both the store and the guard, so there is
+      no marker and no sidecar to heal.
+    - the append is written directly from executors instead of through
+      the dynamic-partition committer's ~10 ms-per-cell-directory
+      driver-side commit work; a mid-job death leaves invisible ``_tmp-``
+      staging files (swept by the guard, bounded to the batch's own
+      cells) and possibly PARTIAL landed cells, which the replay's
+      anti-join converges. Untrusted filesystems fall back to the
+      committer write, warned once per processor instance.
 
     Config drift is refused, not absorbed: the index persists a
     ``_meta.json`` (centers fingerprint + column names) validated at the
@@ -587,102 +585,37 @@ def make_index_add_processor(
     :func:`_record_staleness_metrics`.
     """
     from ..streaming.banded_index import PartitionedAppend
+    from ..streaming.tombstones import read_tombstones
 
-    appender = PartitionedAppend(index_dir, "cell_id", fs_options)
-    # per-instance once-only state: layout reconciliation and the stored
-    # index's parquet schema (inference re-reads footers for every new
-    # cell set — the same per-probe cost the banded index's schema cache
-    # removes; the schema is layout-pinned by _meta.json, so caching is
-    # sound)
-    state: dict = {"checked": False, "schema": None}
+    appender = PartitionedAppend(index_dir, "cell_id", fs_options, key_cols=[id_col])
+    checked: list[bool] = []  # layout reconciled once per instance
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        jvm = spark._jvm
-        root = jvm.org.apache.hadoop.fs.Path(index_dir)
-        fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not state["checked"]:
+        if not checked:
+            jvm = spark._jvm
+            fs = jvm.org.apache.hadoop.fs.Path(index_dir).getFileSystem(
+                spark._jsc.hadoopConfiguration()
+            )
             _check_add_layout(
                 spark, fs, jvm, index_dir, centers, id_col, vec_col,
                 id_type=batch_df.schema[id_col].dataType.simpleString(),
             )
-            state["checked"] = True
+            checked.append(True)
         assigned = assign_to_centers(batch_df, centers, id_col, vec_col)
-        # the batch's touched cells: bounded by nlist (the quantizer
-        # size) by construction, so the collect is driver-safe. The
-        # staleness pass doubles as the cells collect (its groupBy keys
-        # ARE the distinct cells) so metrics never cost a third
-        # evaluation of the assignment lineage; staleness is measured on
-        # the INCOMING batch (pre anti-join: replays and updates drift
-        # too).
+        # staleness is measured on the INCOMING batch (replays and updates
+        # drift too); its per-cell collect names the guard's cells, so
+        # metrics cost no collect of their own
+        cells = True
         if metrics is not None:
             cells = _record_staleness_metrics(metrics, assigned, centers, vec_col)
-        else:
-            cells = sorted(
-                r.cell_id
-                for r in assigned.select("cell_id").distinct().collect()
-            )
         # burned ids: a tombstoned vector id can never be re-added (the
-        # delete contract in delete_from_ivf_index) — applied AFTER the
-        # staleness pass, which deliberately measures the raw incoming
-        # batch, and cheap: one fs stat per batch until a delete exists
-        from ..streaming.tombstones import read_tombstones
-
+        # delete contract in delete_from_ivf_index); one fs stat per batch
+        # until a delete exists
         tomb = read_tombstones(spark, index_dir, cols=[id_col])
         if tomb is not None:
-            # hinted (or not) by read_tombstones' bounded-broadcast escape
             assigned = assigned.join(tomb, id_col, "left_anti")
-        # Existence + cell listing through the Hadoop fs API (works on
-        # hdfs/s3a too, unlike os.listdir): an explicit probe, not
-        # swallowed read errors — a corrupt footer / transient IO failure
-        # on an EXISTING index must propagate, or a replayed batch would
-        # skip the anti-join and append duplicates, breaking the
-        # replays-converge contract exactly when the index is unhealthy.
-        from ..streaming.banded_index import (
-            TMP_PREFIX,
-            hadoop_list_names,
-            is_data_file,
-        )
-
-        jpath = jvm.org.apache.hadoop.fs.Path
-        existing_cells: set[str] = set()
-        if fs.exists(root):
-            existing_cells = {
-                n
-                for n in hadoop_list_names(jvm, fs, root)
-                if n.startswith("cell_id=")
-            }
-        touched_existing = [
-            f"{index_dir}/cell_id={c}" for c in cells if f"cell_id={c}" in existing_cells
-        ]
-        # sweep crashed-append temps in the batch's own cells (the only
-        # ones a prior attempt of THIS data could have staged into;
-        # single-writer discipline makes any temp garbage) — and drop
-        # cells left with NO data files from the guard read: a
-        # first-attempt death after create_dir but before any final
-        # rename leaves exactly such an empty directory, and these rows
-        # would otherwise be read as zero rows anyway
-        live = []
-        for d in touched_existing:
-            has_data = False
-            for st in fs.listStatus(jpath(d)):
-                name = st.getPath().getName()
-                if name.startswith(TMP_PREFIX):
-                    fs.delete(st.getPath(), False)
-                elif is_data_file(name):
-                    has_data = True
-            if has_data:
-                live.append(d)
-        if live:
-            from ..streaming.banded_index import _read_parquet_dirs
-
-            seen = _read_parquet_dirs(
-                spark, fs, index_dir, live, schema=state["schema"]
-            )
-            if state["schema"] is None:
-                state["schema"] = seen.schema
-            assigned = assigned.join(seen.select(id_col), id_col, "left_anti")
-        appender.append(assigned)
+        appender.append(assigned, guard=cells)
 
     return process
 

@@ -1372,9 +1372,22 @@ def _planned_bytes(df: DataFrame) -> int:
     return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
 
 
+def planned_partitions(df: DataFrame) -> int:
+    """:func:`batch_partitions` of the optimizer's size estimate of
+    ``df`` (no job). A plan with no estimate — an RDD-backed micro-batch,
+    whose statistics default to ``spark.sql.defaultSizeInBytes`` — counts
+    as one partition, not as the default parallelism: a frame cached at
+    that count runs every stage over it at that many tasks."""
+    spark = df.sparkSession
+    jutils = spark._jvm.org.apache.spark.network.util.JavaUtils
+    unknown = jutils.byteStringAsBytes(spark.conf.get("spark.sql.defaultSizeInBytes"))
+    nbytes = _planned_bytes(df)
+    return batch_partitions(spark, 0 if nbytes >= unknown else nbytes)
+
+
 def append_partitioned(
     appends: list[tuple["PartitionedAppend", DataFrame, str | None]],
-    guard: bool = False,
+    guard: bool | list[int] = False,
     tasks: int | None = None,
 ) -> list[list[int] | None]:
     """The one direct write of every partitioned store: each ``(store,
@@ -1409,89 +1422,86 @@ def append_partitioned(
     at ``key_cols`` against the rows already stored under ``df``'s own
     partitions — rows that may have landed under a DIFFERENT append id (a
     crashed attempt's, unknowable after a checkpoint re-point), which
-    name-based skipping cannot see. A store without a trusted pyarrow
-    mapping always takes that anti-join, then the Spark committer write
-    (no skip-if-landed names at all)."""
+    name-based skipping cannot see. ``True`` collects those partitions
+    from ``df``; a list of partition values names them for a caller that
+    already knows a superset (one collect job less). A store without a
+    trusted pyarrow mapping always takes that anti-join, then the Spark
+    committer write (no skip-if-landed names at all)."""
     spark = appends[0][1].sparkSession
     targets = [store.destination(spark) for store, _, _ in appends]
+    known = None if isinstance(guard, bool) else guard
     guarded = [
-        store.key_cols is not None and (guard or kind is None)
+        store.key_cols is not None and (guard is not False or kind is None)
         for (store, _, _), (kind, _) in zip(appends, targets)
     ]
-    # guarded frames are read twice: the partition collect, then the write
-    held = [df.persist() for (_, df, _), g in zip(appends, guarded) if g]
-    try:
-        out: list[list[int] | None] = [None] * len(appends)
-        # the direct-written stores: (output slot, frame, data fields)
-        direct: list[tuple[int, DataFrame, list]] = []
-        dests: list[dict] = []
-        for i, ((store, df, aid), (kind, dest), g) in enumerate(
-            zip(appends, targets, guarded)
-        ):
-            rows = store._unstored(df) if g else df
-            if kind is None:
-                (
-                    rows.repartition(
-                        tasks or batch_partitions(spark, _planned_bytes(rows)),
-                        F.col(store.part_col),
-                    )
-                    .write.mode("append")
-                    .partitionBy(store.part_col)
-                    .parquet(store.path)
+    out: list[list[int] | None] = [None] * len(appends)
+    # the direct-written stores: (output slot, frame, data fields)
+    direct: list[tuple[int, DataFrame, list]] = []
+    dests: list[dict] = []
+    for i, ((store, df, aid), (kind, dest), g) in enumerate(
+        zip(appends, targets, guarded)
+    ):
+        rows = store._unstored(df, known) if g else df
+        if kind is None:
+            (
+                rows.repartition(
+                    tasks or batch_partitions(spark, _planned_bytes(rows)),
+                    F.col(store.part_col),
                 )
-                continue
-            fields = [f for f in rows.schema.fields if f.name != store.part_col]
-            pos = len(dests)
-            dests.append(
-                {
-                    "kind": kind,
-                    "dest": dest,
-                    "fs_options": store.fs_options,
-                    "append_id": aid or uuid.uuid4().hex,
-                    "part_prefix": store.part_col,
-                    "cols": [(f"i{pos}_{f.name}", f.name) for f in fields],
-                }
+                .write.mode("append")
+                .partitionBy(store.part_col)
+                .parquet(store.path)
             )
-            direct.append((i, rows, fields))
-        if not dests:
-            return out
-        expected_width = _fused_frame_contract(dests)
-        union = None
-        for pos, (_, rows, _) in enumerate(direct):
-            cols = [
-                F.lit(pos).cast("int").alias("idx_pos"),
-                F.col(dests[pos]["part_prefix"]).cast("int").alias("pband"),
-            ]
-            for j, (_, _, fields) in enumerate(direct):
-                for (name, _), f in zip(dests[j]["cols"], fields):
-                    value = (
-                        F.col(f.name) if j == pos else F.lit(None).cast(f.dataType)
-                    )
-                    cols.append(value.alias(name))
-            frame = rows.select(*cols)
-            union = frame if union is None else union.unionByName(frame)
-        if len(union.columns) != expected_width:
-            raise AssertionError(
-                f"fused-append frame invariant violated: union carries "
-                f"{len(union.columns)} columns, expected {expected_width} "
-                f"(idx_pos + pband + one per (store, field)) — a store's "
-                f"schema leaked extra columns into every appended row"
-            )
-        n = tasks or batch_partitions(spark, _planned_bytes(union))
-        written = (
-            union.repartition(n, F.col("idx_pos"), F.col("pband"))
-            .mapInArrow(_make_band_writer(dests), "idx_pos long, pband long, n long")
-            .collect()
+            continue
+        fields = [f for f in rows.schema.fields if f.name != store.part_col]
+        pos = len(dests)
+        dests.append(
+            {
+                "kind": kind,
+                "dest": dest,
+                "fs_options": store.fs_options,
+                "append_id": aid or uuid.uuid4().hex,
+                "part_prefix": store.part_col,
+                "cols": [(f"i{pos}_{f.name}", f.name) for f in fields],
+            }
         )
-        parts: list[set[int]] = [set() for _ in dests]
-        for r in written:
-            parts[r.idx_pos].add(r.pband)
-        for (i, _, _), p in zip(direct, parts):
-            out[i] = sorted(p)
+        direct.append((i, rows, fields))
+    if not dests:
         return out
-    finally:
-        for df in held:
-            df.unpersist()
+    expected_width = _fused_frame_contract(dests)
+    union = None
+    for pos, (_, rows, _) in enumerate(direct):
+        cols = [
+            F.lit(pos).cast("int").alias("idx_pos"),
+            F.col(dests[pos]["part_prefix"]).cast("int").alias("pband"),
+        ]
+        for j, (_, _, fields) in enumerate(direct):
+            for (name, _), f in zip(dests[j]["cols"], fields):
+                value = (
+                    F.col(f.name) if j == pos else F.lit(None).cast(f.dataType)
+                )
+                cols.append(value.alias(name))
+        frame = rows.select(*cols)
+        union = frame if union is None else union.unionByName(frame)
+    if len(union.columns) != expected_width:
+        raise AssertionError(
+            f"fused-append frame invariant violated: union carries "
+            f"{len(union.columns)} columns, expected {expected_width} "
+            f"(idx_pos + pband + one per (store, field)) — a store's "
+            f"schema leaked extra columns into every appended row"
+        )
+    n = tasks or batch_partitions(spark, _planned_bytes(union))
+    written = (
+        union.repartition(n, F.col("idx_pos"), F.col("pband"))
+        .mapInArrow(_make_band_writer(dests), "idx_pos long, pband long, n long")
+        .collect()
+    )
+    parts: list[set[int]] = [set() for _ in dests]
+    for r in written:
+        parts[r.idx_pos].add(r.pband)
+    for (i, _, _), p in zip(direct, parts):
+        out[i] = sorted(p)
+    return out
 
 
 class PartitionedAppend:
@@ -1546,6 +1556,7 @@ class PartitionedAppend:
         self.fs_options = fs_options
         self.key_cols = key_cols
         self._dest: tuple[str | None, str | None] | None = None
+        self._schema = None  # the stored rows' schema, after the first guard read
 
     def destination(self, spark: SparkSession) -> tuple[str | None, str | None]:
         """``(kind, dest)`` for the executor-side writer, ``(None, None)``
@@ -1573,7 +1584,8 @@ class PartitionedAppend:
         return self._dest
 
     def append(
-        self, df: DataFrame, append_id: str | None = None, guard: bool = False
+        self, df: DataFrame, append_id: str | None = None,
+        guard: bool | list[int] = False,
     ) -> list[int] | None:
         """Append ``df``; returns the partition values written, or None
         after a committer write (write set unknown) — the one-store case
@@ -1581,24 +1593,42 @@ class PartitionedAppend:
         ``guard``."""
         return append_partitioned([(self, df, append_id)], guard=guard)[0]
 
-    def _unstored(self, df: DataFrame) -> DataFrame:
-        """Rows of ``df`` whose ``key_cols`` are not already stored —
-        reading only ``df``'s own partition directories, column-pruned
-        to the key."""
-        from ..errors import is_path_not_found
-
-        parts = [r[0] for r in df.select(self.part_col).distinct().collect()]
-        if not parts:
+    def _unstored(self, df: DataFrame, parts: list[int] | None = None) -> DataFrame:
+        """Rows of ``df`` whose ``key_cols`` are not already stored. Reads
+        only the data-holding directories of ``df``'s own partitions
+        (``parts``, else collected from ``df``), by explicit path: one
+        root listing, never the other partitions, and no footer
+        inference after the first read (the schema is kept per
+        instance, as :meth:`BandedFingerprintIndex.read_bands` does).
+        A crashed append's ``_tmp-`` leftovers there are swept first
+        (single writer: any temp is garbage), and a directory left with
+        no data file (an attempt that died after creating it) is
+        skipped, as schema inference over it would fail every replay."""
+        spark = df.sparkSession
+        if parts is None:
+            parts = [r[0] for r in df.select(self.part_col).distinct().collect()]
+        jvm = spark._jvm
+        root = jvm.org.apache.hadoop.fs.Path(self.path)
+        fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+        if not parts or not fs.exists(root):
             return df
-        try:
-            stored = (
-                df.sparkSession.read.parquet(self.path)
-                .filter(F.col(self.part_col).isin(parts))
-                .select(*self.key_cols)
-            )
-            stored.schema
-        except AnalysisException as exc:
-            if not is_path_not_found(exc):
-                raise
+        existing = set(hadoop_list_names(jvm, fs, root))
+        live = []
+        for p in parts:
+            d = f"{self.part_col}={p}"
+            if d not in existing:
+                continue
+            names = []
+            for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(f"{self.path}/{d}")):
+                if st.getPath().getName().startswith(TMP_PREFIX):
+                    fs.delete(st.getPath(), False)
+                else:
+                    names.append(st.getPath().getName())
+            if any(is_data_file(n) for n in names):
+                live.append(f"{self.path}/{d}")
+        if not live:
             return df
-        return df.join(stored, self.key_cols, "left_anti")
+        stored = _read_parquet_dirs(spark, fs, self.path, live, schema=self._schema)
+        if self._schema is None:
+            self._schema = stored.schema
+        return df.join(stored.select(*self.key_cols), self.key_cols, "left_anti")

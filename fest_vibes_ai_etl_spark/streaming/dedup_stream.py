@@ -1,4 +1,5 @@
-"""One batch lifecycle for the incremental-dedup streams (exact, span, near).
+"""One batch lifecycle for the corpus-as-state streams: the incremental
+dedup families (exact, span, near) and the search index.
 
 New documents are deduped against EVERYTHING ever ingested — the shape
 ``dropDuplicatesWithinWatermark`` can't express. ``foreachBatch`` makes
@@ -13,6 +14,15 @@ the one AUTHORITATIVE write.
 ``signatures``, its similarity sidecar and the ``sidecar_rows`` it
 derives, and its ``victims`` rule. The exact stream is the family with
 no similarity sidecar, deduping by fingerprint alone.
+
+The search index (``incremental_search``) is the exact family keyed by
+document id: its corpus is ``<index>/doclen``, its exact sidecar
+``<index>_docidx`` holds ``fp = cast(id as string)``, and its survivor
+is ``min(text)`` per id. Its hooks open the index (crash heal, layout
+meta, forward settle), size the persisted batch frame and pin the
+content append id, append postings and forward rows before the marker
+(replay-idempotent, so no marker is needed there), re-append them
+guarded on the heal path, and compact them on the maintenance tick.
 
 Sidecars: every family keeps ``<corpus>_exactidx`` — (id, fp,
 fpk = xxhash64(fp)) rows banded on ``fpk`` (the exact family stores the
@@ -29,8 +39,10 @@ probed across.
 Per batch:
 
 1. once per stream, heal a crashed compaction of the corpus and of the
-   tombstone set; read the tombstones;
-2. fingerprint the batch and burn tombstoned ids and fingerprints;
+   tombstone set, then run the family's ``open``; read the tombstones;
+2. fingerprint the batch (persisted when several jobs read it, then
+   handed to the family's ``begin``) and burn every tombstoned column
+   the batch carries, id and fingerprint;
 3. read history — only ``PATH_NOT_FOUND`` is a first batch (an older
    version's purge-swap leftover is refused there);
 4. an absent corpus invalidates every sidecar (every time it is
@@ -38,14 +50,16 @@ Per batch:
 5. a surviving in-flight marker selects the heal path;
 6. keep the min-id survivor per fingerprint, then run the exact guard
    (steady state: one fused touched-bands collect for all sidecars;
-   heal: the corpus fp anti-join) and heal ``_exactidx``;
+   heal: the corpus fp anti-join) and heal ``_exactidx`` (the family's
+   ``heal`` first re-appends the derived stores of those docs);
 7. drop within-batch victims, then probe the similarity sidecar;
-8. rebuild the survivors from one evaluation, then mark in-flight →
-   corpus append → fused sidecar append → clear in-flight;
+8. rebuild the survivors from one evaluation, then the family's
+   ``pre_commit`` → mark in-flight → corpus append → fused sidecar
+   append → clear in-flight;
 9. unpersist, and every ``maintain_every`` batches compact the corpus
-   and every sidecar band over ``maintain_max_files`` files, size-tiered
-   (the corpus's bounded census), folding tombstoned rows out of the
-   bands.
+   (or run the family's ``tick``) and every sidecar band over
+   ``maintain_max_files`` files, size-tiered (the corpus's bounded
+   census), folding tombstoned rows out of the bands.
 
 Physical erasure is :meth:`DedupStream.purge`, an operator op run
 between batches.
@@ -103,10 +117,6 @@ def exact_index_path(corpus_dir: str) -> str:
     return corpus_dir.rstrip("/") + "_exactidx"
 
 
-def _fpk(col: str = "fp"):
-    return F.xxhash64(F.col(col)).alias("fpk")
-
-
 def _exact_pairs(df: DataFrame, id_col: str | None) -> DataFrame:
     """(id, fp, fpk) rows for the exact sidecar — (fp, fpk) when
     ``id_col`` is None (the exact family). The fp is coalesced to the
@@ -115,43 +125,6 @@ def _exact_pairs(df: DataFrame, id_col: str | None) -> DataFrame:
     return df.select(
         *ids, F.coalesce("fp", F.lit(NULL_TEXT_SENTINEL)).alias("fp")
     ).withColumn("fpk", F.xxhash64(F.col("fp")))
-
-
-def _heal_exact_index(spark, exact_index, repl_pairs: DataFrame) -> None:
-    """Post-crash heal of an ``_exactidx`` sidecar: re-append replayed
-    rows' fingerprints the crashed attempt never got to write.
-    ``repl_pairs`` carries the sidecar's full schema (..., fp, fpk); the
-    anti-join keys on every non-fpk column, so an fpk collision can't
-    mask a genuinely-missing row."""
-    keys = [c for c in repl_pairs.columns if c != "fpk"]
-    ebands = exact_index.touched_bands(repl_pairs.select("fpk"))
-    erows = exact_index.read_bands(spark, ebands) if ebands else None
-    missing = (
-        repl_pairs.join(erows, keys, "left_anti")
-        if erows is not None
-        else (repl_pairs if ebands else None)
-    )
-    if missing is not None and not missing.isEmpty():
-        exact_index.append(missing)
-
-
-def _settle_indexes(spark, idx_builders, idx_settled) -> None:
-    """One-time (per stream) index reconciliation: validate each index's
-    persisted layout, invalidating + rebuilding from the corpus on a
-    mismatch (the corpus is authoritative; probing across a layout
-    mismatch silently admits duplicates), and migration-building any
-    index that doesn't exist yet."""
-    if idx_settled:
-        return
-    for idx, build_pairs in idx_builders:
-        try:
-            present = idx.exists(spark)
-        except BandedIndexLayoutError:
-            idx.invalidate(spark)
-            present = False
-        if not present:
-            idx.build_from(build_pairs())
-    idx_settled.append(True)
 
 
 # Above this many input rows, the single-evaluation rebuild falls back
@@ -210,7 +183,7 @@ class DedupFamily:
       sidecar it is persisted for the batch and every later frame is a
       row filter of it.
     - ``id_col``: the document id, or None to dedup by ``fp`` alone
-      (the fp-only exact sidecar; no id burn, no min-id survivor).
+      (the fp-only exact sidecar, no min-id survivor).
     - ``sidecar``: ``(path, key_col, schema_tag)`` of the similarity
       sidecar, or None.
     - ``sidecar_rows(frame)``: the sidecar's ``(id, key, ...)`` rows for
@@ -220,6 +193,29 @@ class DedupFamily:
       against. ``history`` is None for the within-batch pass (``target``
       is ``live``; the lowest id of each pair wins) and the stored
       corpus for the history probe. Returning None drops nothing.
+
+    A family whose corpus feeds derived stores (the search index, see
+    ``incremental_search``) also supplies:
+
+    - ``corpus``: the corpus directory when it is not the store itself
+      (the store keeps the tombstone set and the writer lease);
+      ``exact``: ``(path, schema_tag)`` of its exact sidecar;
+    - ``survivors(batch)``: the deterministic one row per document,
+      applied before ``signatures`` in place of the lowest-id rule (and
+      the place to size the frame the lifecycle persists);
+    - ``stored(corpus)``: the stored corpus with its ``fp`` column;
+      ``corpus_rows(frame)``: what the corpus stores of ``frame``;
+    - ``open(spark, batch_df)``: runs when the stream opens, after its
+      heals; ``begin(spark, batch_id, cached)``: runs first on the
+      batch's persisted signatures frame;
+    - ``pre_commit(spark, fresh)``: the derived stores' replay-idempotent
+      append, before the in-flight marker;
+    - ``heal(spark, docs)``: re-append the derived stores of the stored
+      docs the exact sidecar lacks after a crash, before that sidecar's
+      own heal;
+    - ``tick(spark)``: the maintenance of the corpus and the derived
+      stores, every ``maintain_every`` batches, in place of the
+      lifecycle's corpus census.
     """
 
     signatures: Callable[[DataFrame], DataFrame]
@@ -227,6 +223,16 @@ class DedupFamily:
     sidecar: tuple[str, str, str] | None = None
     sidecar_rows: Callable[[DataFrame], DataFrame] | None = None
     victims: Callable[..., DataFrame | None] | None = None
+    corpus: str | None = None
+    exact: tuple[str, str] | None = None
+    survivors: Callable[[DataFrame], DataFrame] | None = None
+    stored: Callable[[DataFrame], DataFrame] | None = None
+    corpus_rows: Callable[[DataFrame], DataFrame] | None = None
+    open: Callable | None = None
+    begin: Callable | None = None
+    pre_commit: Callable | None = None
+    heal: Callable | None = None
+    tick: Callable | None = None
 
 
 class DedupStream:
@@ -245,19 +251,21 @@ class DedupStream:
         maintain_max_files: int = 8,
         fs_options: dict | None = None,
     ):
-        self.corpus_dir = corpus_dir
+        self.store_dir = corpus_dir
+        self.corpus_dir = family.corpus or corpus_dir
         self.family = family
         self.id_col = family.id_col
         self.maintain_every = maintain_every
         self.maintain_max_files = maintain_max_files
-        self.exact_index = BandedFingerprintIndex(
+        # the fp-only layout gets a DISTINCT tag, so pointing another
+        # family at this corpus rebuilds instead of appending a second
+        # schema into the index
+        path, tag = family.exact or (
             exact_index_path(corpus_dir),
-            key_col="fpk",
-            n_bands=n_bands,
-            # the fp-only layout gets a DISTINCT tag, so pointing another
-            # family at this corpus rebuilds instead of appending a
-            # second schema into the index
-            schema_tag="exact:md5-xxh64" if self.id_col else "exact:md5-xxh64:fp-only",
+            "exact:md5-xxh64" if self.id_col else "exact:md5-xxh64:fp-only",
+        )
+        self.exact_index = BandedFingerprintIndex(
+            path, key_col="fpk", n_bands=n_bands, schema_tag=tag,
             fs_options=fs_options,
         )
         self.sidecar = None
@@ -270,47 +278,59 @@ class DedupStream:
         self.sidecars = [i for i in (self.sidecar, self.exact_index) if i is not None]
         # one marker brackets every sidecar append
         self.marker = self.sidecars[0]
-        # burned columns: erased content (or a row reusing its id) can
-        # never re-enter the corpus
-        self.burn_cols = [self.id_col, "fp"] if self.id_col else ["fp"]
-        self._idx_settled: list[bool] = []  # non-empty: layouts validated
+        # the signatures frame is read by several jobs when a similarity
+        # sidecar probes it or derived stores are written from it
+        self._persist = family.sidecar is not None or family.pre_commit is not None
+        self._settled = False  # sidecar layouts validated
         self._opened = False  # open-time heal done
         self._n_done = 0  # completed batches, drives maintenance
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        fam = self.family
         if not self._opened:
             # a crashed census, purge or revoke leaves a compaction
             # journal: heal it before anything reads the corpus or the set
-            for d in (self.corpus_dir, tombstones_path(self.corpus_dir)):
+            for d in (self.corpus_dir, tombstones_path(self.store_dir)):
                 recover_dir_compaction(spark, d)
+            if fam.open is not None:
+                fam.open(spark, batch_df)
             self._opened = True
-        tomb = read_tombstones(spark, self.corpus_dir)
-        docs = batch_df.dropDuplicates([self.id_col]) if self.id_col else batch_df
-        cached = self.family.signatures(docs)
-        if self.sidecar is not None:
+        tomb = read_tombstones(spark, self.store_dir)
+        if fam.survivors is not None:
+            docs = fam.survivors(batch_df)
+        else:
+            docs = batch_df.dropDuplicates([self.id_col]) if self.id_col else batch_df
+        cached = fam.signatures(docs)
+        if self._persist:
             # keep a handle to the persisted frame itself: unpersist()
             # requires the SAME plan (uncacheQuery is sameResult-based),
             # and `fresh` is reassigned through joins — unpersisting a
             # derived frame would leak one cache entry per micro-batch
             cached = cached.persist()
         try:
+            if fam.begin is not None:
+                fam.begin(spark, batch_id, cached)
             self._dedup_and_commit(spark, batch_df, cached, tomb)
         finally:
-            if self.sidecar is not None:
+            if self._persist:
                 cached.unpersist()
         self._n_done += 1
         if self.maintain_every and self._n_done % self.maintain_every == 0:
             self._maintain(spark, tomb)
 
     def _dedup_and_commit(self, spark, batch_df, cached, tomb) -> None:
-        fresh = cached
+        fresh, held = cached, None
         if tomb is not None:
-            for c in self.burn_cols:
-                fresh = fresh.join(tomb.select(c), c, "left_anti")
+            # burn every tombstoned column the batch carries: the fp, and
+            # the id (an id deleted while its doc was in flight has no fp)
+            for c in tomb.columns:
+                if c in fresh.columns:
+                    fresh = fresh.join(tomb.select(c), c, "left_anti")
         hist = self._read_history(spark)
         need_heal = self._settle(spark, hist)
-        fresh = self._survivors(fresh)
+        if self.family.survivors is None:
+            fresh = self._survivors(fresh)
         fresh, replayed, bands = self._exact_guard(
             spark, hist, need_heal, cached, fresh
         )
@@ -325,25 +345,46 @@ class DedupStream:
             # semi/anti row filter of the persisted `cached`, so the
             # rebuild is exact); size-gated, see rebuild_from_survivor_ids
             fresh = rebuild_from_survivor_ids(batch_df, cached, fresh, self.id_col)
-        # Without a sidecar nothing is persisted and the two writes below
+        elif self.family.pre_commit is not None:
+            # three writes read the survivors: evaluate the guard once
+            fresh = held = fresh.persist()
+        # Otherwise nothing is persisted and the two writes below
         # re-evaluate `fresh`. That is safe: dropDuplicates may pick a
         # different within-batch survivor on re-run, but the fp-only
         # sidecar stores only (fp, fpk), identical across survivors.
+        try:
+            self._commit(spark, fresh)
+        finally:
+            if held is not None:
+                held.unpersist()
+
+    def _commit(self, spark, fresh: DataFrame) -> None:
+        """The family's replay-idempotent derived-store append, then mark
+        in-flight → corpus append → sidecar append → clear in-flight."""
+        fam = self.family
+        if fam.pre_commit is not None:
+            fam.pre_commit(spark, fresh)
         self.marker.mark_inflight(spark)
-        fresh.write.mode("append").parquet(self.corpus_dir)
+        rows = fam.corpus_rows(fresh) if fam.corpus_rows else fresh
+        rows.write.mode("append").parquet(self.corpus_dir)
         # sidecar appends AFTER the corpus commit (crash ⇒ missing index
         # rows, healed on replay — never phantom rows), FUSED into one
         # Spark job; the write reports each sidecar's band set, feeding
         # maintain()'s batch-proportional detection exactly
-        specs = [(self.exact_index, _exact_pairs(fresh, self.id_col))]
-        if self.sidecar is not None:
-            specs.append((self.sidecar, self.family.sidecar_rows(fresh)))
-        append_many(specs)
+        pairs = _exact_pairs(fresh, self.id_col)
+        if self.sidecar is None:
+            self.exact_index.append(pairs)
+        else:
+            append_many(
+                [(self.exact_index, pairs), (self.sidecar, fam.sidecar_rows(fresh))]
+            )
         self.marker.clear_inflight(spark)
 
     def _read_history(self, spark) -> DataFrame | None:
+        """The stored corpus with its ``fp`` column, or None before the
+        first batch."""
         try:
-            return spark.read.parquet(self.corpus_dir)
+            hist = spark.read.parquet(self.corpus_dir)
         except AnalysisException as exc:
             # ONLY PATH_NOT_FOUND is a legitimate first batch. Anything
             # else (an exists-but-unreadable corpus raises e.g.
@@ -363,6 +404,7 @@ class DedupStream:
                 spark, self.corpus_dir, "_prepurge", "_purgetmp", "purge"
             )
             return None
+        return self.family.stored(hist) if self.family.stored else hist
 
     def _settle(self, spark, hist) -> bool:
         """Reconcile the sidecars with the corpus; True when a prior
@@ -378,13 +420,30 @@ class DedupStream:
             # corpus and sidecars in sync.
             for idx in self.sidecars:
                 idx.invalidate(spark)
-            if not self._idx_settled:
-                self._idx_settled.append(True)
+            self._settled = True
             return False
-        _settle_indexes(spark, self.sidecar_builders(hist), self._idx_settled)
+        self.settle(spark, hist)
         # only a surviving marker makes the heal path worth its cost
         # (corpus fp scan + anti-join sorts)
         return self.marker.was_inflight(spark)
+
+    def settle(self, spark, hist: DataFrame) -> None:
+        """Once per stream: validate each sidecar's persisted layout,
+        invalidating and rebuilding it from the stored corpus ``hist``
+        on a mismatch (the corpus is authoritative; probing across a
+        layout mismatch silently admits duplicates), and build any
+        sidecar that does not exist yet."""
+        if self._settled:
+            return
+        for idx, build_pairs in self.sidecar_builders(hist):
+            try:
+                present = idx.exists(spark)
+            except BandedIndexLayoutError:
+                idx.invalidate(spark)
+                present = False
+            if not present:
+                idx.build_from(build_pairs())
+        self._settled = True
 
     def sidecar_builders(self, hist: DataFrame):
         """``(sidecar, rows thunk)`` pairs deriving every sidecar from the
@@ -416,7 +475,7 @@ class DedupStream:
             # collect is a whole job submission). The similarity keys come
             # from `cached` (all batch docs, pre-filter): a superset of the
             # probe's keys, which only reads a few extra band directories
-            specs = [(self.exact_index, fresh.select(_fpk()))]
+            specs = [(self.exact_index, fresh.select(F.xxhash64("fp").alias("fpk")))]
             if self.sidecar is not None:
                 specs.append((self.sidecar, self.family.sidecar_rows(cached)))
             bands = combined_touched_bands(spark, specs)
@@ -436,8 +495,29 @@ class DedupStream:
         )
         replayed = fresh.join(hkeys, ["fp", *ids], "left_semi")
         fresh = fresh.join(hkeys.select("fp"), "fp", "left_anti")
-        _heal_exact_index(spark, self.exact_index, _exact_pairs(replayed, self.id_col))
+        self._heal_exact(spark, replayed)
         return fresh, replayed, None
+
+    def _heal_exact(self, spark, replayed: DataFrame) -> None:
+        """Re-append the exact-sidecar rows of replayed docs the crashed
+        attempt never wrote — after the family re-appends those docs'
+        derived stores, so a crash here leaves them still missing from the
+        sidecar and healed again. The anti-join keys on every non-fpk
+        column, so an fpk collision can't mask a missing row."""
+        pairs = _exact_pairs(replayed, self.id_col)
+        keys = [c for c in pairs.columns if c != "fpk"]
+        bands = self.exact_index.touched_bands(pairs.select("fpk"))
+        if not bands:
+            return
+        erows = self.exact_index.read_bands(spark, bands)
+        missing = pairs if erows is None else pairs.join(erows, keys, "left_anti")
+        if missing.isEmpty():
+            return
+        if self.family.heal is not None:
+            self.family.heal(
+                spark, replayed.join(missing.select("fp"), "fp", "left_semi")
+            )
+        self.exact_index.append(missing)
 
     def _probe_history(self, spark, hist, tomb, fresh, replayed, bands):
         idx = self.sidecar
@@ -487,24 +567,34 @@ class DedupStream:
             return fresh
         return fresh.join(victims, self.id_col, "left_anti")
 
-    def _sidecar_exclude(self, tomb: DataFrame):
+    def _sidecar_exclude(self, tomb: DataFrame | None):
         """The tombstone set keyed as the sidecars key their rows: by
-        ``id``, or by ``fp`` in the fp-only exact sidecar."""
-        key = "id" if self.id_col else "fp"
-        return tomb.select(F.col(self.id_col or "fp").alias(key)), [key]
+        ``id``, or by ``fp`` in the fp-only exact sidecar; ``(None,
+        None)`` when the set does not carry that column."""
+        key, col = ("id", self.id_col) if self.id_col else ("fp", "fp")
+        if tomb is None or col not in tomb.columns:
+            return None, None
+        return tomb.select(F.col(col).alias(key)), [key]
 
     def _maintain(self, spark, tomb) -> None:
-        # a tick that dies leaves a journal: the next batch heals it
+        # a tick that dies leaves a journal: the next batch re-opens the
+        # stream and heals it (one that returns left none)
         self._opened = False
-        # the corpus's bounded census keeps its tombstoned rows: erasing
-        # them is the purge's job, so a revoke before it finds them
-        compact_small_files(spark, self.corpus_dir, self.maintain_max_files)
-        ex, cols = self._sidecar_exclude(tomb) if tomb is not None else (None, None)
+        if self.family.tick is not None:
+            # the family compacts its corpus with its derived stores
+            self.family.tick(spark)
+        else:
+            # the corpus's bounded census keeps its tombstoned rows:
+            # erasing them is the purge's job, so a revoke before it finds
+            # them
+            compact_small_files(spark, self.corpus_dir, self.maintain_max_files)
+        ex, cols = self._sidecar_exclude(tomb)
         for idx in self.sidecars:
             idx.maintain(
                 spark, max_files_per_band=self.maintain_max_files,
                 exclude=ex, exclude_cols=cols,
             )
+        self._opened = True
 
     def purge(self, spark, clear: bool = False) -> int:
         """Physically erase the tombstoned docs; returns the corpus rows
@@ -524,9 +614,9 @@ class DedupStream:
         stopped or between batches (single-writer)."""
         from .writer_lease import writer_lease
 
-        with writer_lease(spark, self.corpus_dir, "purge"):
+        with writer_lease(spark, self.store_dir, "purge"):
             self._opened = False  # as for _maintain
-            tomb = read_tombstones(spark, self.corpus_dir)
+            tomb = read_tombstones(spark, self.store_dir)
             if tomb is None:
                 return 0
             # the set names its own id column (the fp-only family has none)
@@ -547,7 +637,7 @@ class DedupStream:
                 idx.purge(spark, exclude=ex, exclude_cols=cols)
             if clear:
                 p = spark._jvm.org.apache.hadoop.fs.Path(
-                    tombstones_path(self.corpus_dir)
+                    tombstones_path(self.store_dir)
                 )
                 p.getFileSystem(spark._jsc.hadoopConfiguration()).delete(p, True)
             return removed

@@ -23,9 +23,10 @@ sidecars and the IVF cell store:
   fall back to the dynamic-partition committer (slower, never wrong;
   warned once), where the store's (term, doc) key guards the append.
 - ``<index_dir>_docidx`` — a :class:`BandedFingerprintIndex` over the
-  indexed doc ids, so the per-batch "already indexed?" replay guard
-  reads only the batch's OWN id bands instead of the whole doclen
-  column.
+  indexed doc ids (the exact-dedup sidecar's fp-only layout with
+  ``fp = cast(id as string)``), so the per-batch "already indexed?"
+  replay guard reads only the batch's OWN id bands instead of the whole
+  doclen column.
 - ``<index_dir>/forward/db=<bucket>/`` (round 13) — the doc-major
   FORWARD sidecar: the same (term, tf, doc_id) rows bucketed by
   ``pmod(xxhash64(cast(id as string)), n_doc_buckets)``, written in the
@@ -52,9 +53,18 @@ stored layout REFUSES loudly: probing across a bucket-count change would
 silently miss posting lists — the config-drift class the banded and IVF
 indexes already close.
 
-Crash matrix (postings FIRST — that append is replay-idempotent, so
-every window before the doclen commit replays cleanly with no marker at
-all; the marker brackets only doclen → docidx):
+The stream is a :class:`dedup_stream.DedupStream` family keyed by
+document id, and that lifecycle defines its steps once: the corpus is
+``doclen``, the exact sidecar ``_docidx``, the survivor ``min(text)``
+per id. The family's hooks open the index (crash heal, the layout meta
+below, the forward settle), pin the batch's append id, append postings
+and forward rows before the in-flight marker, re-append them guarded on
+the heal path, and compact them on the maintenance tick.
+
+Crash matrix — the contract those steps keep (postings FIRST — that
+append is replay-idempotent, so every window before the doclen commit
+replays cleanly with no marker at all; the marker brackets only doclen
+→ docidx):
 - die during/after the postings append, before doclen: nothing is
   authoritatively indexed; the replay's guard passes every doc, the
   postings re-append under the SAME append id skips landed buckets and
@@ -80,21 +90,21 @@ all; the marker brackets only doclen → docidx):
 - die after postings, before the marker clears: same heal path; every
   re-append is a no-op or harmless.
 
-Per-batch cost follows the batch: the fingerprint job that names the
-append also sums the batch's text bytes, and the one persisted per-batch
-frame is brought to :func:`banded_index.batch_partitions` of them
-(``ceil(bytes / advisoryPartitionSizeInBytes)``, at most the default
-parallelism) before anything reads it, so the stages that scan it — the
-postings aggregation's map side, the doclen write (one file per
-partition), the docidx pairs — run that many tasks, not
-``spark.sql.shuffle.partitions``. The postings + forward write takes the
-same count explicitly, so it holds with adaptive query execution off (a
-stateful upstream); the aggregation's reduce side is left to AQE's
-coalescing.
+Per-batch cost follows the batch, and the batch's input is evaluated
+once: the lifecycle persists the one signatures frame (deduped text,
+tokens, ``fp``), brought to :func:`banded_index.planned_partitions` of
+the batch before it is cached (adaptive execution does not coalesce a
+cached plan), and the append-id pin, the replay guard's touched bands
+and every write read it. The job that pins
+the append id also sums the batch's text bytes; the postings + forward
+write takes their :func:`banded_index.batch_partitions` count
+explicitly, so it holds with adaptive query execution off (a stateful
+upstream); the aggregation's reduce side is left to AQE's coalescing.
 
-Maintenance: every ``maintain_every`` batches the processor compacts the
-``_docidx`` sidecar (the banded index's own per-band maintenance) AND the
-postings/doclen directories (:func:`maintain_search_index`) — each batch
+Maintenance: every ``maintain_every`` batches the stream compacts the
+postings/doclen directories (:func:`maintain_search_index`, the
+family's tick) AND the ``_docidx`` sidecar (the banded index's own
+per-band maintenance, the lifecycle's) — each batch
 appends one file per touched ``tb=`` bucket plus one doclen file, and
 without compaction probe listing/footer cost grows linearly with stream
 age. The compactor is size-tiered (small files merge into a segment;
@@ -118,8 +128,8 @@ from .banded_index import (
     append_partitioned,
     batch_partitions,
     hadoop_read_json,
+    planned_partitions,
 )
-from .dedup_stream import _heal_exact_index, _settle_indexes
 from .revisions import (
     absorb,
     apply_revisions,
@@ -184,13 +194,6 @@ def _rev_terms_dir(index_dir: str) -> str:
 
 def _rev_doclen_dir(index_dir: str) -> str:
     return sidecar_dir(index_dir, "doclen")
-
-
-def _id_pairs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(fp = doc id as string, fpk = xxhash64) rows for the id sidecar —
-    the exact-dedup sidecar layout with ids in place of fingerprints."""
-    fp = F.col(id_col).cast("string")
-    return df.select(fp.alias("fp")).withColumn("fpk", F.xxhash64(F.col("fp")))
 
 
 def term_bucket(col, n_term_buckets: int):
@@ -950,290 +953,99 @@ def maintain_search_index(
 
 
 def make_search_index_processor(
-    index_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_term_buckets: int = 64,
-    n_bands: int | None = None,
-    maintain_every: int | None = 16,
-    maintain_max_files: int = 8,
-    n_doc_buckets: int | None = 32,
-    fs_options: dict | None = None,
+    index_dir: str, id_col: str = "doc_id", text_col: str = "text",
+    n_term_buckets: int = 64, n_bands: int | None = None,
+    maintain_every: int | None = 16, maintain_max_files: int = 8,
+    n_doc_buckets: int | None = 32, fs_options: dict | None = None,
 ):
-    """The ``foreachBatch`` processor maintaining the term-bucketed
-    postings store + doclen sidecar + id replay guard under
-    ``index_dir`` (probe with :func:`bm25_over_index`); run it as a
-    stream with ``state_store.start_stream``, or drive micro-batches
-    directly from tests and batch backfills.
-
-    Contract: the index is append-only per document id — a replayed or
-    re-sent id is skipped (its first indexed text wins). Re-indexing a
-    changed document goes through :func:`revise_search_document` (the
-    versioned-identity UPDATE path) or a rebuild.
-
-    ``n_doc_buckets`` maintains the doc-major FORWARD sidecar alongside
-    the postings (settled/backfilled at open for pre-forward stores; the
-    stored bucket count always wins; None disables). Its per-batch
-    append is the second store of the postings' one write job — same
-    tokenized rows, same deterministic append-id replay idempotence
-    (suffix ``f``), same guarded heal path, same committer fallback — so
-    the two layouts stay row-identical under every crash window the
-    postings survive."""
+    """The ``foreachBatch`` processor maintaining the index under
+    ``index_dir`` (probe with :func:`bm25_over_index`): the
+    :class:`dedup_stream.DedupStream` family keyed by document id that
+    the module docstring maps out. Run it with ``state_store.start_stream``
+    or drive micro-batches directly. The index is append-only per id: a
+    replayed or re-sent id is skipped (its first indexed text wins); a
+    changed document goes through :func:`revise_search_document` or a
+    rebuild. ``n_doc_buckets`` keeps the forward sidecar (settled at
+    open; the stored count wins; None disables)."""
     from ..functions import text as T
+    from .dedup_stream import DedupFamily, DedupStream
 
-    docidx = BandedFingerprintIndex(
-        _docidx_path(index_dir),
-        key_col="fpk",
-        n_bands=n_bands,
-        schema_tag=_SCHEMA_TAG,
-        fs_options=fs_options,
-    )
     # both stores key a row by (term, doc): the guard's anti-join key
-    postings = PartitionedAppend(
-        _postings_dir(index_dir), "tb", fs_options, key_cols=["term", id_col]
-    )
-    forward = PartitionedAppend(
-        _forward_dir(index_dir), "db", fs_options, key_cols=["term", id_col]
-    )
-    idx_settled: list[bool] = []
-    n_done: list[int] = [0]
-    meta_ok: list[bool] = []
-    # buckets dirtied since the last maintenance tick, reported by the
-    # direct append itself — so maintain() lists only what this stream
-    # actually touched (batch-proportional detection, the banded index's
-    # dirty-set discipline). The committer fallback reports nothing:
-    # dirty_unknown degrades the next tick to one full (≤ n_term_buckets)
-    # walk.
-    dirty_tb: set[int] = set()
-    dirty_unknown: list[bool] = []
-    dirty_db: set[int] = set()
-    fw_ndb: list = []  # effective n_doc_buckets from the settled meta
+    stores = [
+        PartitionedAppend(d, part, fs_options, key_cols=["term", id_col])
+        for d, part in ((_postings_dir(index_dir), "tb"), (_forward_dir(index_dir), "db"))
+    ]
+    # the stored forward bucket count; the batch's append id and task
+    # count; the (postings, forward) buckets dirtied since the last tick
+    # (None after a committer write, which reports none: walk them all)
+    st: dict = {"ndb": None, "aid": None, "parts": None, "dirty": [set(), set()]}
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
+    def open_index(spark, batch_df):
+        recover_search_index(spark, index_dir)
+        idt = batch_df.schema[id_col].dataType.simpleString()
+        _check_meta(spark, index_dir, n_term_buckets, id_col, idt, n_doc_buckets)
+        st["ndb"] = load_index_meta(spark, index_dir).get("n_doc_buckets")
 
-        from ..errors import is_path_not_found
-
-        spark = batch_df.sparkSession
-        if not meta_ok:
-            # open-time heal BEFORE anything reads postings/doclen: a
-            # prior process may have died mid-compaction, leaving a
-            # merged segment and its inputs simultaneously visible
-            recover_search_index(spark, index_dir)
-            _check_meta(
-                spark, index_dir, n_term_buckets, id_col,
-                id_type=batch_df.schema[id_col].dataType.simpleString(),
-                n_doc_buckets=n_doc_buckets,
-            )
-            meta = load_index_meta(spark, index_dir)
-            # the stored layout wins (None = store predates the sidecar
-            # and the caller disabled settling)
-            fw_ndb.append(meta.get("n_doc_buckets"))
-            meta_ok.append(True)
-        # Intra-batch winner must be DETERMINISTIC (min text per id), not
-        # dropDuplicates' partition-order pick: the append id fingerprints
-        # the batch CONTENT, so a crashed-then-replayed batch that chose a
-        # different winner would skip the crashed attempt's landed buckets
-        # (text A's postings) by name while filling unlanded ones with
-        # text B's — exactly the mixed-postings state the fingerprint
-        # exists to prevent. min(text) re-derives byte-identical rows on
-        # every replay, and the fingerprint below is computed over THESE
-        # deduped rows so two raw batches that dedup identically converge
-        # on the same append id.
-        deduped = batch_df.groupBy(id_col).agg(F.min(text_col).alias(text_col))
-        fresh = deduped
-        # burned ids: a tombstoned id can never be (re-)indexed — the
-        # content was erased. Read per batch (one fs stat
-        # when no delete was ever issued). The append-id fingerprint stays
-        # computed over the PRE-burn `deduped` rows so a replayed batch
-        # converges on the same skip-if-landed names even if a delete
-        # landed between the attempt and its replay; any postings the
-        # crashed attempt landed for a then-tombstoned doc are hidden by
-        # the probe's anti-join and folded out by maintenance.
-        tomb = _search_tombstones(spark, index_dir, id_col)
-        if tomb is not None:
-            fresh = fresh.join(tomb, id_col, "left_anti")
-        doclen_dir = _doclen_dir(index_dir)
-        hist = None
-        try:
-            hist = spark.read.parquet(doclen_dir)
-            hist.schema
-        except AnalysisException as exc:
-            if not is_path_not_found(exc):
-                raise
-        need_heal = False
-        if hist is None:
-            # no doclen ⇒ nothing is authoritatively indexed; a surviving
-            # sidecar describes a gone index and must die on every
-            # observation of absence (the exact-dedup rule)
-            docidx.invalidate(spark)
-            if not idx_settled:
-                idx_settled.append(True)
-        else:
-            _settle_indexes(
-                spark, ((docidx, lambda: _id_pairs(hist, id_col)),), idx_settled
-            )
-            need_heal = docidx.was_inflight(spark)
-        replayed = None
-        if hist is not None:
-            if not need_heal:
-                bands = docidx.touched_bands(_id_pairs(fresh, id_col).select("fpk"))
-                rows = docidx.read_bands(spark, bands) if bands else None
-                if rows is not None:
-                    fresh = fresh.join(
-                        rows.select(F.col("fp").cast("string").alias("__seen")),
-                        fresh[id_col].cast("string") == F.col("__seen"),
-                        "left_anti",
-                    )
-            else:
-                # post-crash heal: the doclen id column is the authority
-                seen = hist.select(F.col(id_col))
-                # the crashed window's docs are the ones doclen recorded
-                # but the docidx append never reached — ids ALREADY in the
-                # sidecar were fully committed by earlier batches (their
-                # postings live under a DIFFERENT append id, so
-                # re-appending them would duplicate, not fill holes)
-                repl = fresh.join(seen, id_col, "left_semi")
-                rb = docidx.touched_bands(_id_pairs(repl, id_col).select("fpk"))
-                rrows = docidx.read_bands(spark, rb) if rb else None
-                if rrows is not None:
-                    repl = repl.join(
-                        rrows.select(F.col("fp").cast("string").alias("__done")),
-                        repl[id_col].cast("string") == F.col("__done"),
-                        "left_anti",
-                    )
-                replayed = repl
-                fresh = fresh.join(seen, id_col, "left_anti")
-
-        # Content fingerprint of the DEDUPED batch — ids AND winner text,
-        # because the append id's job is to pin the CONTENT THAT WILL BE
-        # INDEXED: a checkpointed replay (identical batch, deterministic
-        # winner) converges on the same skip-if-landed names, while a
-        # re-pointed checkpoint reusing a batch id with corrected text
-        # gets different names and can never mix two texts' postings
-        # under one document. Computed over `deduped` (not the raw batch)
-        # so a raw batch that merely reorders or repeats rows of the same
-        # logical content still converges. The same one-row job sizes the
-        # batch: its text bytes set the partition count of the per-batch
-        # frame below.
-        fp_row = deduped.select(
-            F.coalesce(
-                F.sum(
-                    F.xxhash64(
-                        F.concat_ws(
-                            ":", F.col(id_col).cast("string"), F.col(text_col)
-                        )
-                    ).cast("decimal(38,0)")
-                ),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("s"),
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum(F.octet_length(text_col)), F.lit(0)).alias("bytes"),
+    def begin(spark, batch_id, docs):
+        # the content pin of the deduped batch (pre-burn: a delete between
+        # an attempt and its replay must not rename its appends), its size
+        h = F.xxhash64(F.concat_ws(":", F.col(id_col).cast("string"), F.col(text_col)))
+        row = docs.select(
+            F.coalesce(F.sum(h.cast("decimal(38,0)")), F.lit(0).cast("decimal(38,0)")),
+            F.count(F.lit(1)),
+            F.coalesce(F.sum(F.octet_length(text_col)), F.lit(0)),
         ).collect()[0]
-        batch_fp = int(fp_row["s"]) % (1 << 60)
-        n_parts = batch_partitions(spark, int(fp_row["bytes"]))
-        append_id = f"srchb{batch_id:x}-{batch_fp:015x}-{int(fp_row['n']):x}"
+        st["aid"] = f"srchb{batch_id:x}-{int(row[0]) % (1 << 60):015x}-{row[1]:x}"
+        st["parts"] = batch_partitions(spark, int(row[2]))
 
-        def append_postings(tok: DataFrame, aid: str, guard: bool) -> None:
-            """Postings and forward rows of a tokenized ``(id, tk)`` frame,
-            in ONE fused write job — the same ``(term, id, tf)`` rows
-            under two partition columns, postings under ``aid`` and
-            forward under ``aid + "f"``. ``guard=False`` (the steady-state
-            batch append) relies on the deterministic append ids for
-            replay idempotence; ``guard=True`` (the heal path) anti-joins
-            each store at (term, doc) first — a heal's rows may have
-            landed under a DIFFERENT append id (the crashed attempt's), so
-            name-based skipping cannot see them, and the heal's own id
-            must differ from the main append's so a heal that writes
-            files can never cause the main append's same-band files to be
-            skipped."""
-            post = (
-                tok.select(F.col(id_col), F.explode("tk").alias("term"))
-                .groupBy("term", id_col)
-                .agg(F.count(F.lit(1)).alias("tf"))
-            )
-            appends = [
-                (postings, post.withColumn(
-                    "tb", term_bucket(F.col("term"), n_term_buckets)), aid),
-            ]
-            dirty = [dirty_tb]
-            if fw_ndb[0] is not None:
-                appends.append(
-                    (forward, post.withColumn(
-                        "db", doc_bucket(F.col(id_col), int(fw_ndb[0]))),
-                     aid + "f")
-                )
-                dirty.append(dirty_db)
-            for written, parts in zip(
-                append_partitioned(appends, guard=guard, tasks=n_parts), dirty
-            ):
-                if written is None:
-                    dirty_unknown.append(True)
-                else:
-                    parts.update(written)
-
-        if replayed is not None:
-            # docs recorded in doclen whose postings/docidx rows the
-            # crashed attempt may not have landed: guarded re-append under
-            # a DISTINCT id (forward: ``hf``) — their rows may sit under
-            # the crashed attempt's (unknowable) append id, and sharing the
-            # main append's id would let a heal that writes files make the
-            # main append's same-band files skip
-            tok = replayed.select(
-                F.col(id_col), T.tokens(F.col(text_col)).alias("tk")
-            )
-            append_postings(tok, append_id + "h", guard=True)
-            _heal_exact_index(spark, docidx, _id_pairs(replayed, id_col))
-
-        from pyspark.storagelevel import StorageLevel
-
-        # one tokenize for postings + doclen + sidecar (batch-bounded
-        # persist, unpersisted before return — the foreachBatch rule),
-        # brought to the batch's own partition count first: a cached
-        # plan keeps its output partitioning, so without it every stage
-        # over this frame (the postings groupBy, the doclen write — one
-        # file per partition — and the docidx append) would run
-        # spark.sql.shuffle.partitions tasks whatever the batch holds
-        enriched = (
-            fresh.select(F.col(id_col), T.tokens(F.col(text_col)).alias("tk"))
-            .coalesce(n_parts)
-            .persist(StorageLevel.MEMORY_AND_DISK)
+    def append(docs, aid, guard):
+        post = (
+            docs.select(F.col(id_col), F.explode("tk").alias("term"))
+            .groupBy("term", id_col)
+            .agg(F.count(F.lit(1)).alias("tf"))
         )
-        try:
-            # postings FIRST: this append is replay-idempotent, so a crash
-            # anywhere before the doclen commit replays cleanly with no
-            # marker. The forward append sits in the same pre-doclen
-            # window under the same idempotence.
-            append_postings(enriched, append_id, guard=False)
-            docidx.mark_inflight(spark)
-            (
-                enriched.select(F.col(id_col), F.size("tk").alias("dl"))
-                .filter(F.col("dl") > 0)
-                .write.mode("append")
-                .parquet(doclen_dir)
-            )
-            docidx.append(_id_pairs(enriched, id_col))
-            docidx.clear_inflight(spark)
-        finally:
-            enriched.unpersist()
-        n_done[0] += 1
-        if maintain_every and n_done[0] % maintain_every == 0:
-            docidx.maintain(spark, max_files_per_band=maintain_max_files)
-            # postings + doclen gain one file per batch; compact the
-            # buckets this stream dirtied (full walk only after a
-            # committer-fallback append, which reports none)
-            maintain_search_index(
-                spark,
-                index_dir,
-                buckets=None if dirty_unknown else sorted(dirty_tb),
-                forward_buckets=None if dirty_unknown else sorted(dirty_db),
-                max_files_per_bucket=maintain_max_files,
-            )
-            dirty_tb.clear()
-            dirty_db.clear()
-            dirty_unknown.clear()
+        frames = [post.withColumn("tb", term_bucket(F.col("term"), n_term_buckets))]
+        if st["ndb"] is not None:
+            frames.append(post.withColumn("db", doc_bucket(F.col(id_col), int(st["ndb"]))))
+        written = append_partitioned(
+            [(s, f, aid + x) for s, f, x in zip(stores, frames, ("", "f"))],
+            guard=guard, tasks=st["parts"],
+        )
+        if None in written:
+            st["dirty"] = None
+        elif st["dirty"] is not None:
+            for dirty, w in zip(st["dirty"], written):
+                dirty.update(w)
 
-    return process
+    def tick(spark):
+        d = st["dirty"]
+        maintain_search_index(
+            spark, index_dir, d and sorted(d[0]), maintain_max_files,
+            forward_buckets=d and sorted(d[1]),
+        )
+        st["dirty"] = [set(), set()]
+
+    family = DedupFamily(
+        signatures=lambda d: d.select(
+            id_col, text_col, F.col(id_col).cast("string").alias("fp"),
+            T.tokens(F.col(text_col)).alias("tk")),
+        corpus=_doclen_dir(index_dir),
+        exact=(_docidx_path(index_dir), _SCHEMA_TAG),
+        # min(text) per id, sized before the lifecycle caches it
+        survivors=lambda b: b.groupBy(id_col).agg(F.min(text_col).alias(text_col))
+        .coalesce(planned_partitions(b)),
+        stored=lambda dl: dl.withColumn("fp", F.col(id_col).cast("string")),
+        corpus_rows=lambda f: f.select(id_col, F.size("tk").alias("dl")).filter("dl > 0"),
+        open=open_index,
+        begin=begin,
+        pre_commit=lambda spark, f: append(f, st["aid"], False),
+        heal=lambda spark, f: append(f, st["aid"] + "h", True),
+        tick=tick,
+    )
+    return DedupStream(
+        index_dir, family, n_bands=n_bands, maintain_every=maintain_every,
+        maintain_max_files=maintain_max_files, fs_options=fs_options,
+    )
 
 
 def pruned_postings(

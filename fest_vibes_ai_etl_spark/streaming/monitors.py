@@ -189,24 +189,26 @@ def start_freq_maintenance(
     summary log."""
 
     def partials(batch_df: DataFrame) -> DataFrame:
-        summaries = token_mg_summaries(batch_df, text_col, k)
-        ests = (
-            summaries.where(F.col("item").isNotNull())
-            .groupBy("item")
-            .agg(F.sum("cnt").alias("cnt"))
-            .withColumn("dec", F.lit(0).cast("long"))
+        # ONE aggregation over one evaluation of the summaries: every row
+        # yields its item's count and, keyed by its partition, that
+        # partition's decrement count (repeated on each of its rows, so
+        # max keeps it once); the log's summed merge adds the per-
+        # partition sentinels (item NULL) into the batch's one
+        sides = F.explode(F.array(
+            F.struct(F.col("item").alias("item"), F.lit(None).cast("int").alias("pid"),
+                     F.col("cnt"), F.lit(0).cast("long").alias("dec")),
+            F.struct(F.lit(None).cast("string").alias("item"), F.col("pid"),
+                     F.lit(0).cast("long").alias("cnt"), F.col("dec")),
+        ))
+        return (
+            token_mg_summaries(batch_df, text_col, k)
+            .select(sides.alias("r"))
+            .select("r.*")
+            .where(F.col("item").isNotNull() | F.col("pid").isNotNull())
+            .groupBy("item", "pid")
+            .agg(F.sum("cnt").alias("cnt"), F.max("dec").alias("dec"))
+            .drop("pid")
         )
-        dec = (
-            summaries.groupBy("pid")
-            .agg(F.first("dec").alias("d"))
-            .agg(F.sum("d").alias("dec"))
-            .select(
-                F.lit(None).cast("string").alias("item"),
-                F.lit(0).cast("long").alias("cnt"),
-                F.col("dec"),
-            )
-        )
-        return ests.unionByName(dec)
 
     rollup = Rollup("misra_gries", {"k": k}, partials, _MG_MERGE)
     return start_rollup(rollup, docs, log_root, checkpoint_dir, available_now)

@@ -225,9 +225,9 @@ def test_delete_before_first_batch_keeps_the_id_burned(spark, tmp_path):
     """A fenced delete before the stream's first batch leaves the corpus
     directory holding only the writer lease and the store generation.
     The first batch still runs as a first batch, and the deleted id stays
-    burned: its tombstone survives and the purge erases the document the
-    batch stored (the exact family burns by fingerprint, and the delete
-    had no stored text to resolve one from)."""
+    burned: the delete had no stored text to resolve a fingerprint from,
+    so the batch burns the id itself — the document is never stored,
+    its tombstone survives, and the purge has nothing to erase."""
     from fest_vibes_ai_etl_spark.streaming.tombstones import (
         delete_from_dedup_corpus,
         read_tombstones,
@@ -240,7 +240,9 @@ def test_delete_before_first_batch_keeps_the_id_burned(spark, tmp_path):
     proc(spark.createDataFrame(
         [(i, f"document number {i}") for i in range(5, 10)], "doc_id long, text string"
     ), 0)
+    ids = sorted(r.doc_id for r in spark.read.parquet(corpus).select("doc_id").collect())
+    assert ids == [5, 6, 8, 9]
     assert [r.doc_id for r in read_tombstones(spark, corpus).collect()] == [7]
-    assert proc.purge(spark) == 1
+    assert proc.purge(spark) == 0
     ids = sorted(r.doc_id for r in spark.read.parquet(corpus).select("doc_id").collect())
     assert ids == [5, 6, 8, 9]

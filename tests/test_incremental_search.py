@@ -357,3 +357,24 @@ def test_steady_batch_jobs_and_tasks_bounded(spark, tmp_path, aqe):
     max_jobs, max_tasks = STEADY_CEILINGS[aqe]
     assert 0 < len(jobs) <= max_jobs, f"{len(jobs)} Spark jobs"
     assert 0 < tasks <= max_tasks, f"{tasks} tasks"
+
+
+def test_steady_batch_evaluates_its_input_once(spark, tmp_path):
+    """A steady micro-batch evaluates its input once: the content pin of
+    the append id, the replay guard's touched bands and every write read
+    the stream's one persisted, batch-sized signatures frame. A counting
+    UDF over the text sees each input row exactly once."""
+    docs = table(spark, SF_DIR, "documents").select("doc_id", "text")
+    proc = inc.make_search_index_processor(str(tmp_path / "sidx"), n_term_buckets=8)
+    proc(docs.filter("doc_id < 40"), 0)
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def counted(text):
+        calls.add(1)
+        return text
+
+    rows = docs.filter("doc_id >= 40 AND doc_id < 80")
+    n = rows.count()
+    proc(rows.withColumn("text", counted("text")), 1)
+    assert n > 0 and calls.value == n, f"{calls.value} UDF calls for {n} rows"

@@ -106,10 +106,7 @@ def prebuild_sidecars(spark, proc) -> None:
     """Build the processor's missing (or layout-stale) sidecars from its
     corpus once, so a timed batch measures the steady-state probe, not
     the one-time migration."""
-    from fest_vibes_ai_etl_spark.streaming.dedup_stream import _settle_indexes
-
-    hist = spark.read.parquet(proc.corpus_dir)
-    _settle_indexes(spark, proc.sidecar_builders(hist), [])
+    proc.settle(spark, spark.read.parquet(proc.corpus_dir))
 
 
 def write_batch_source(spark, base: str, src_dir: str, n_docs: int,
@@ -238,8 +235,10 @@ def main() -> None:
     scales = [int(s) for s in args.scales.split(",")]
     families = ["span", "near"] if args.family == "both" else [args.family]
 
+    from pyspark.sql import functions as F
+
     from fest_vibes_ai_etl_spark.session import get_spark
-    from fest_vibes_ai_etl_spark.streaming.dedup_stream import _fpk, fingerprint
+    from fest_vibes_ai_etl_spark.streaming.dedup_stream import fingerprint
 
     spark = get_spark()
     os.makedirs(args.out, exist_ok=True)
@@ -272,7 +271,7 @@ def main() -> None:
             ebands = eidx.touched_bands(
                 spark.read.parquet(src)
                 .select(fingerprint("text").alias("fp"))
-                .select(_fpk())
+                .select(F.xxhash64("fp").alias("fpk"))
             )
             erows = eidx.read_bands(spark, ebands)
             guard_reads.append(
