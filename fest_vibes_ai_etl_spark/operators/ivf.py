@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, pandas_udf
 
+from .. import fsio
 from ..functions import vector as V
 from ..streaming.revisions import (
     absorb,
@@ -341,8 +342,6 @@ def centers_fingerprint(centers: list[list[float]]) -> str:
 
 def _check_add_layout(
     spark,
-    fs,
-    jvm,
     index_dir: str,
     centers: list[list[float]],
     id_col: str,
@@ -370,14 +369,13 @@ def _check_add_layout(
       in between leaves a meta over an empty index, which is simply the
       layout the next batch appends under.
     """
-    from ..streaming.banded_index import hadoop_read_json, hadoop_write_json
     from ..streaming.state_store import meta_mismatches
 
     import numpy as np
 
     fp = centers_fingerprint(centers)
     meta_path = index_dir.rstrip("/") + "/_meta.json"
-    meta = hadoop_read_json(spark, meta_path)
+    meta = fsio.read_json(spark, meta_path)
     if meta is not None:
         # the families' shared mismatch computation (state_store), with
         # the fingerprint diff enriched by the human-readable shape
@@ -402,13 +400,11 @@ def _check_add_layout(
             # string-keyed stores' delete fallback degrades to bigint
             meta = dict(meta)
             meta["id_type"] = id_type
-            hadoop_write_json(spark, meta_path, meta)
+            fsio.write_json(spark, meta_path, meta)
         return
-    root = jvm.org.apache.hadoop.fs.Path(index_dir)
-    has_data = fs.exists(root) and any(
-        st.getPath().getName().startswith("cell_id=")
-        and has_data_files(spark, str(st.getPath()))
-        for st in fs.listStatus(root)
+    has_data = any(
+        n.startswith("cell_id=") and has_data_files(spark, f"{index_dir}/{n}")
+        for n in fsio.list_names(spark, index_dir)
     )
     if has_data:
         # legacy adoption: verify the claim against a bounded sample
@@ -446,7 +442,7 @@ def _check_add_layout(
         # advisory (recorded, never validated): lets delete_from_ivf_index
         # burn correctly-typed ids before any cell data exists
         meta_out["id_type"] = id_type
-    hadoop_write_json(spark, meta_path, meta_out)
+    fsio.write_json(spark, meta_path, meta_out)
 
 
 def _record_staleness_metrics(
@@ -593,12 +589,8 @@ def make_index_add_processor(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         if not checked:
-            jvm = spark._jvm
-            fs = jvm.org.apache.hadoop.fs.Path(index_dir).getFileSystem(
-                spark._jsc.hadoopConfiguration()
-            )
             _check_add_layout(
-                spark, fs, jvm, index_dir, centers, id_col, vec_col,
+                spark, index_dir, centers, id_col, vec_col,
                 id_type=batch_df.schema[id_col].dataType.simpleString(),
             )
             checked.append(True)
@@ -624,9 +616,7 @@ def _add_meta(spark, index_dir: str, required: bool = False) -> dict | None:
     """The incremental-add index's ``_meta.json`` (None when absent);
     ``required`` refuses a store without one — revise and absorb need its
     pinned quantizer and columns."""
-    from ..streaming.banded_index import hadoop_read_json
-
-    meta = hadoop_read_json(spark, index_dir.rstrip("/") + "/_meta.json")
+    meta = fsio.read_json(spark, index_dir.rstrip("/") + "/_meta.json")
     if meta is None and required:
         raise IVFIndexLayoutError(
             f"no _meta.json under {index_dir}: not an incremental-add IVF "

@@ -98,14 +98,9 @@ def run_pipeline(
             "embed_text"
         )
 
-    golds = {
-        d: gold.to_cache_payload(gold.events_for_date(unembedded, d, ref_date=ref_date))
-        for d in dates
-    }
-    gold_all = None
-    for df in golds.values():
-        gold_all = df if gold_all is None else gold_all.unionByName(df)
-
+    gold_all = gold.to_cache_payload(
+        gold.events_for_dates(unembedded, dates, ref_date=ref_date)
+    )
     return {**silver, "quarantine": quarantined, "cache_payload": gold_all}
 
 

@@ -28,10 +28,17 @@ def _genre_lists(bridge: DataFrame, genre_dim: DataFrame, key: str) -> DataFrame
     )
 
 
-def events_for_date(silver: dict[str, DataFrame], date_str: str, ref_date: str | None = None) -> DataFrame:
-    """One row per event on ``date_str`` with nested artist/venue/genre
-    payloads, ordered by performance_time — the EventDTO cache document."""
-    ev = silver["events"].filter(F.col("event_date") == F.lit(date_str).cast("date"))
+def events_for_dates(
+    silver: dict[str, DataFrame], dates: list[str], ref_date: str | None = None
+) -> DataFrame:
+    """One row per event on any of ``dates`` with nested artist/venue/genre
+    payloads, ordered by performance_time — the EventDTO cache document.
+    One ``event_date IN (...)`` filter over one plan, so the plan's size
+    does not grow with the number of dates; each document's date stays in
+    ``event_date`` (and the payload's ``cache_key``)."""
+    ev = silver["events"].filter(
+        F.col("event_date").isin([F.lit(d).cast("date") for d in dates])
+    )
 
     artist_genres = _genre_lists(silver["artist_genres"], silver["genres"], "artist_id")
     event_genres = _genre_lists(silver["event_genres"], silver["genres"], "event_id")

@@ -259,7 +259,7 @@ def _gold_oracle() -> str:
 def pipeline_gold_event_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     bronze = bronze_fixture(spark)
     silver = normalize.normalize(bronze)
-    g = gold.events_for_date(silver, "2025-03-01", ref_date="2025-03-01")
+    g = gold.events_for_dates(silver, ["2025-03-01"], ref_date="2025-03-01")
     return gold.to_cache_payload(g)
 
 
@@ -434,7 +434,7 @@ def extractor_parse_listing(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pipeline_gold_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     bronze = bronze_fixture(spark)
     silver = normalize.normalize(bronze)
-    g = gold.events_for_date(silver, "2025-03-01", ref_date="2025-03-01")
+    g = gold.events_for_dates(silver, ["2025-03-01"], ref_date="2025-03-01")
     return g.select(
         F.col("event_data.wwoz_event_href").alias("event_href"),
         F.col("artist_data.name").alias("artist_name"),

@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import fsio
+
 
 def write_partitioned(df: DataFrame, path: str, partition_cols: list[str],
                       mode: str = "overwrite") -> None:
@@ -83,26 +85,18 @@ def write_zordered(
 
 def partition_file_census(spark: SparkSession, path: str) -> dict[str, tuple[int, int]]:
     """``{partition_dir_name: (n_files, total_bytes)}`` for one level of
-    hive-style partition directories under ``path`` — via the Hadoop FS
-    API, so it works on any FileSystem implementation, not just local."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(conf)
+    hive-style partition directories under ``path`` (empty when absent) —
+    via the Hadoop FS API, so it works on any FileSystem implementation,
+    not just local."""
     out: dict[str, tuple[int, int]] = {}
-    for st in fs.listStatus(root):
-        if not st.isDirectory():
+    for d in fsio.list_status(spark, path):
+        if not d.is_dir or "=" not in d.name:
             continue
-        name = st.getPath().getName()
-        if "=" not in name:
-            continue
-        n = b = 0
-        for f in fs.listStatus(st.getPath()):
-            fname = f.getPath().getName()
-            if f.isFile() and not fname.startswith("_") and not fname.startswith("."):
-                n += 1
-                b += f.getLen()
-        out[name] = (n, b)
+        files = [
+            f for f in fsio.list_status(spark, f"{path.rstrip('/')}/{d.name}")
+            if not f.is_dir and not f.name.startswith(("_", "."))
+        ]
+        out[d.name] = (len(files), sum(f.size for f in files))
     return out
 
 

@@ -88,18 +88,24 @@ class ConcurrentWriteError(RuntimeError):
 # tell me truthfully whether MY bytes own the name now". Everything else
 # (staged parquet data, vacuum) is plain file IO. Extracting it as a seam
 # lets the same protocol run on:
-#   - local FS / HDFS: O_CREAT|O_EXCL (LocalFSCommitBackend, the default);
+#   - local FS: a private temp file linked into place
+#     (LocalFSCommitBackend, the default);
 #   - S3-style object stores: conditional PUT with If-None-Match:* —
 #     modeled by MemoryObjectStoreCommitBackend, including the one failure
-#     mode conditional PUT adds that O_EXCL cannot produce: an AMBIGUOUS
+#     mode conditional PUT adds that a link cannot produce: an AMBIGUOUS
 #     error (500/timeout) after the write became durable. The contract
 #     resolves it by read-back: manifests embed per-writer staging UUIDs,
 #     so byte-comparing the stored object decides ownership exactly.
 
 
 class LocalFSCommitBackend:
-    """put-if-absent via ``O_CREAT|O_EXCL`` — atomic on POSIX local FS and
-    on HDFS-semantics filesystems (atomic create-no-overwrite)."""
+    """put-if-absent on a POSIX local filesystem, content-atomic: the
+    payload is written to a private temp file, then ``link(2)``-ed into
+    place, which fails with ``EEXIST`` atomically. The name therefore
+    only ever appears fully written. A bare ``O_CREAT|O_EXCL`` followed
+    by ``write()`` would expose an empty file between the two calls: a
+    concurrent reader parses nothing, and a writer that dies there
+    leaves an empty head manifest that no later commit can replace."""
 
     def list(self, commits_dir: str) -> list[str]:
         import os
@@ -115,15 +121,19 @@ class LocalFSCommitBackend:
 
     def put_if_absent(self, path: str, data: bytes) -> bool:
         import os
+        import uuid
 
         os.makedirs(os.path.dirname(path), exist_ok=True)
+        tmp = f"{path}.tmp.{uuid.uuid4().hex}"
+        with open(tmp, "wb") as f:
+            f.write(data)
         try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            os.link(tmp, path)
+            return True
         except FileExistsError:
             return False
-        with os.fdopen(fd, "wb") as f:
-            f.write(data)
-        return True
+        finally:
+            os.remove(tmp)
 
 
 class MemoryObjectStoreCommitBackend:
@@ -274,8 +284,8 @@ class VersionedParquetTable:
     - Table state is an immutable MANIFEST: partition value → data
       directory. Manifests live in ``_commits/v{N}.json``.
     - A merge stages its output under ``data/{uuid}/`` (hive-partitioned),
-      then COMMITS by creating ``_commits/v{N+1}.json`` with
-      ``O_CREAT|O_EXCL`` — the filesystem's compare-and-swap (the same
+      then COMMITS by creating ``_commits/v{N+1}.json`` with the
+      backend's put-if-absent — the filesystem's compare-and-swap (the same
       put-if-absent pattern as the cache-export sink's manifest publish,
       sources/cache_export_sink.py). Exactly one of two racing writers
       creates that name; the loser deletes its staging, re-reads the NEW
@@ -648,7 +658,7 @@ class VersionedParquetTable:
     def _commit_cas(self, version: int, manifest: dict) -> bool:
         """Atomically publish ``manifest`` as ``version`` iff nobody else
         has — the backend's put-if-absent IS the compare-and-swap
-        (O_CREAT|O_EXCL locally; conditional PUT on object stores)."""
+        (a linked temp file locally; conditional PUT on object stores)."""
         import json
         import os
 

@@ -45,14 +45,14 @@ adaptive query execution runs.
 
 from __future__ import annotations
 
-import json
 import logging
 import threading
 import uuid
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .. import fsio
 
 # absolute ceiling on the band count: bands are directories, and a
 # directory per band is the price of partition pruning — 64k is already
@@ -104,7 +104,7 @@ _DISCOVERY_THRESHOLD_LOCK = threading.Lock()
 
 
 def _read_parquet_dirs(
-    spark: SparkSession, fs, base_path: str, paths: list[str], schema=None
+    spark: SparkSession, base_path: str, paths: list[str], schema=None
 ):
     """``spark.read.option("basePath", ...).parquet(*paths)`` with the
     file-listing strategy matched to the filesystem, and an optional
@@ -127,9 +127,9 @@ def _read_parquet_dirs(
     reader = spark.read.option("basePath", base_path)
     if schema is not None:
         reader = reader.schema(schema)
-    scheme = (fs.getUri().getScheme() or "file").lower()
     key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    if scheme in ("file", "hdfs") and len(paths) > int(spark.conf.get(key)):
+    many = len(paths) > int(spark.conf.get(key))
+    if many and fsio.qualify(spark, base_path).scheme in ("file", "hdfs"):
         # spark.conf is SESSION-global: the raise is serialized behind a
         # module lock so two concurrent probes can't interleave their
         # set/restore (restoring the other's temporary value as "prior").
@@ -151,81 +151,6 @@ def _read_parquet_dirs(
             finally:
                 _DISCOVERY_THRESHOLD_LOCK.release()
     return reader.parquet(*paths)
-
-
-def hadoop_list_names(jvm, fs, path) -> list[str]:
-    """Child names of a directory in THREE py4j round-trips total. The
-    obvious ``[st.getPath().getName() for st in fs.listStatus(p)]`` pays
-    two Python↔JVM calls PER ENTRY — measured ~0.8 s for a 2048-band
-    index root, turning every pruned probe's existence filter into the
-    probe's dominant driver cost (vs ~0.1 s here). The FileStatus[] is
-    stringified JVM-side (``ArrayUtils.toString`` — the one array-joining
-    method py4j's reflection can match, since it takes a single
-    ``Object``; commons-lang3 ships with Spark) and split in Python.
-    Child names in this layout (``pband=N``/``cell_id=N``/part files)
-    never contain the ``,`` separator; a COMMA IN THE PARENT PATH would
-    corrupt the split, so that rare case falls back to the per-entry
-    walk."""
-    statuses = fs.listStatus(path)
-    if len(statuses) == 0:
-        return []
-    if "," in str(path):
-        return [st.getPath().getName() for st in statuses]
-    jpaths = jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(statuses)
-    joined = jvm.org.apache.commons.lang3.ArrayUtils.toString(jpaths)
-    return [p.rsplit("/", 1)[-1] for p in joined[1:-1].split(",")]
-
-
-def hadoop_write_json(spark: SparkSession, path: str, obj: dict) -> None:
-    """Write ``obj`` as one JSON file through the Hadoop filesystem API
-    (works on hdfs/s3a/... exactly like the data it describes). Shared by
-    every persisted-store layout meta (the banded index, the IVF cell
-    index): underscore-prefixed names keep the file invisible to parquet
-    listings, so layout and data move as one unit through directory
-    renames.
-
-    ATOMIC via stage-then-rename: a direct create-truncate-write would
-    leave a TORN file if the driver dies mid-write, and a torn meta
-    wedges every restart (json.loads raises on each replay — the exact
-    replay-wedge class the empty-cell-dir fix closes elsewhere). A crash
-    here instead leaves either the old meta, no meta (the callers' loud
-    rebuild/adopt paths), or the staged temp (underscore-invisible,
-    clobbered by the next write). The delete-then-rename is safe here —
-    unlike the band writer's executor-side finals there is exactly one
-    driver-side writer, so no concurrent attempt can interleave."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        path + ".tmp-" + uuid.uuid4().hex
-    )
-    out = fs.create(tmp, True)
-    out.write(bytearray(json.dumps(obj).encode("utf-8")))
-    out.close()
-    if fs.exists(p):
-        fs.delete(p, False)
-    if not fs.rename(tmp, p):
-        # Hadoop rename reports failure as a boolean, not an exception —
-        # surfacing it keeps "meta missing" loud instead of mysterious
-        raise IOError(f"atomic meta write failed: rename {tmp} -> {p}")
-
-
-def hadoop_read_json(spark: SparkSession, path: str) -> dict | None:
-    """Read a JSON file written by :func:`hadoop_write_json`; None when
-    absent. py4j passes byte[] buffers BY VALUE (a Java-side read into a
-    Python bytearray never reflects back), so the read happens wholly
-    JVM-side via commons-io."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return json.loads(text)
 
 
 class BandedIndexLayoutError(RuntimeError):
@@ -342,7 +267,7 @@ class BandedFingerprintIndex:
 
     def _write_meta(self, spark: SparkSession, root: str | None = None,
                     n_bands: int | None = None) -> None:
-        hadoop_write_json(
+        fsio.write_json(
             spark,
             (root or self.path).rstrip("/") + "/_meta.json",
             {
@@ -358,7 +283,7 @@ class BandedFingerprintIndex:
             # early round-8 builds kept the meta as a SIBLING file
             self.path.rstrip("/") + "_meta.json",
         ):
-            meta = hadoop_read_json(spark, p)
+            meta = fsio.read_json(spark, p)
             if meta is not None:
                 return meta
         return None
@@ -382,11 +307,9 @@ class BandedFingerprintIndex:
         correct."""
         if self._layout_checked:
             return
-        fs, path = self._fs(spark)
-        jvm = spark._jvm
-        self._reband_recover(fs, jvm)
+        self._reband_recover(spark)
         for suffix in ("_bandold", "_bandtmp", "_precompact", "_compacting"):
-            if fs.exists(jvm.org.apache.hadoop.fs.Path(self.path.rstrip("/") + suffix)):
+            if fsio.exists(spark, self.path.rstrip("/") + suffix):
                 raise BandedIndexLayoutError(
                     f"banded index {self.path}: a {suffix} sibling is left "
                     f"from a crash inside the retired directory-swap "
@@ -394,7 +317,7 @@ class BandedFingerprintIndex:
                     f"invalidate() and rebuild from the corpus (stream "
                     f"callers do this automatically)"
                 )
-        if not fs.exists(path):
+        if not fsio.exists(spark, self.path):
             # nothing on disk yet: the meta is written right after the
             # data that creates the index
             return
@@ -417,8 +340,7 @@ class BandedFingerprintIndex:
             # may adopt an explicit n_bands: there is no data to
             # mis-probe.
             has_band_dirs = any(
-                st.getPath().getName().startswith("pband=")
-                for st in fs.listStatus(path)
+                n.startswith("pband=") for n in fsio.list_names(spark, self.path)
             )
             if has_band_dirs or self.n_bands is None:
                 raise BandedIndexLayoutError(
@@ -489,12 +411,6 @@ class BandedFingerprintIndex:
             return
         self.n_bands = self._auto_bands(pairs)
 
-    def _fs(self, spark: SparkSession):
-        jvm = spark._jvm
-        path = jvm.org.apache.hadoop.fs.Path(self.path)
-        fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-        return fs, path
-
     def exists(self, spark: SparkSession) -> bool:
         """One filesystem stat — NOT a parquet resolution, which would
         recursively list every band directory (a whole Spark job for a
@@ -504,9 +420,8 @@ class BandedFingerprintIndex:
         layout mismatch would suppress exactly the rebuild that fixes it.
         The layout check runs BEFORE the stat: its re-band heal can move
         the live directory back into place."""
-        fs, path = self._fs(spark)
         self._check_layout(spark)
-        return bool(fs.exists(path))
+        return fsio.exists(spark, self.path)
 
     def read_bands(self, spark: SparkSession, bands: list[int]) -> DataFrame | None:
         """Pruned read, or None when no requested band exists yet (or the
@@ -515,23 +430,19 @@ class BandedFingerprintIndex:
         ever listed — a plain ``spark.read.parquet(root).filter(pband IN
         ...)`` prunes the SCAN but still pays a full recursive listing of
         every band at dataframe creation, which measured as the dominant
-        probe cost. One ``listStatus`` of the root (a single readdir)
-        filters the request to bands that exist, so a fresh band in the
-        batch never 404s. The layout check (crash recovery included) runs
-        BEFORE the existence test, as in :meth:`exists`."""
-        fs, root = self._fs(spark)
+        probe cost. One listing of the root (a single readdir, empty when
+        the index was never written) filters the request to bands that
+        exist, so a fresh band in the batch never 404s. The layout check
+        (crash recovery included) runs BEFORE the listing, as in
+        :meth:`exists`."""
         self._check_layout(spark)
-        if not fs.exists(root):
-            return None
-        existing = set(hadoop_list_names(spark._jvm, fs, root))
+        existing = set(fsio.list_names(spark, self.path))
         paths = [
             f"{self.path}/pband={b}" for b in bands if f"pband={b}" in existing
         ]
         if not paths:
             return None
-        df = _read_parquet_dirs(
-            spark, fs, self.path, paths, schema=self._data_schema
-        )
+        df = _read_parquet_dirs(spark, self.path, paths, schema=self._data_schema)
         if self._data_schema is None:
             # cache the inferred schema for the instance's later probes:
             # appends/compaction/re-banding never change it (single-writer
@@ -613,7 +524,6 @@ class BandedFingerprintIndex:
         forces the migration rebuild instead. The retired swaps'
         leftovers (which every open refuses) die too, or the rebuilt
         index would be refused again."""
-        fs, _ = self._fs(spark)
         for suffix in (
             "",  # the index, its internal meta and journal die with it
             "_precompact", "_compacting", "_bandold", "_bandtmp",
@@ -621,9 +531,7 @@ class BandedFingerprintIndex:
             "_meta.json",  # early round-8 builds kept the meta as a sibling
             ".inflight",
         ):
-            p = spark._jvm.org.apache.hadoop.fs.Path(self.path.rstrip("/") + suffix)
-            if fs.exists(p):
-                fs.delete(p, True)
+            fsio.delete(spark, self.path.rstrip("/") + suffix)
         self._layout_checked = False
         # back to the constructor's world: the adopted layout died with
         # the data (keeping an old index's adopted n_bands would size a
@@ -642,22 +550,17 @@ class BandedFingerprintIndex:
     # start means the previous attempt died inside the corpus→index
     # window and exactly then is the heal join worth running.
 
-    def _marker_path(self, spark: SparkSession):
-        jvm = spark._jvm
-        return jvm.org.apache.hadoop.fs.Path(self.path.rstrip("/") + ".inflight")
+    def _marker_path(self) -> str:
+        return self.path.rstrip("/") + ".inflight"
 
     def mark_inflight(self, spark: SparkSession) -> None:
-        fs, _ = self._fs(spark)
-        out = fs.create(self._marker_path(spark), True)
-        out.close()
+        fsio.touch(spark, self._marker_path())
 
     def clear_inflight(self, spark: SparkSession) -> None:
-        fs, _ = self._fs(spark)
-        fs.delete(self._marker_path(spark), False)
+        fsio.delete(spark, self._marker_path(), False)
 
     def was_inflight(self, spark: SparkSession) -> bool:
-        fs, _ = self._fs(spark)
-        return bool(fs.exists(self._marker_path(spark)))
+        return fsio.exists(spark, self._marker_path())
 
     # --- per-band maintenance ------------------------------------------
     # A long-running stream fragments only the bands it touches, so
@@ -672,36 +575,32 @@ class BandedFingerprintIndex:
         return self.path.rstrip("/") + "/" + _MAINTAIN_JOURNAL
 
     def _stored_bands(self, spark: SparkSession) -> list[int]:
-        fs, root = self._fs(spark)
-        names = hadoop_list_names(spark._jvm, fs, root)
+        names = fsio.list_names(spark, self.path)
         return sorted(int(n.split("=", 1)[1]) for n in names if n.startswith("pband="))
 
-    def _band_sizes(self, fs, jvm, band: int) -> list[int]:
-        """Byte sizes of a band's data files, sweeping crashed-append
-        temps on the way (maintenance runs between batches under the
-        single-writer rule, so any temp seen here is garbage)."""
+    def _band_sizes(self, spark: SparkSession, band: int) -> list[int]:
+        """Byte sizes of a band's data files ([] for an absent band),
+        sweeping crashed-append temps on the way (maintenance runs
+        between batches under the single-writer rule, so any temp seen
+        here is garbage)."""
         sizes = []
-        band_p = jvm.org.apache.hadoop.fs.Path(f"{self.path}/pband={band}")
-        for f in fs.listStatus(band_p):
-            name = f.getPath().getName()
-            if name.startswith(TMP_PREFIX):
-                fs.delete(f.getPath(), False)
-            elif is_data_file(name):
-                sizes.append(f.getLen())
+        band_dir = f"{self.path}/pband={band}"
+        for e in fsio.list_status(spark, band_dir):
+            if e.name.startswith(TMP_PREFIX):
+                fsio.delete(spark, f"{band_dir}/{e.name}", False)
+            elif is_data_file(e.name):
+                sizes.append(e.size)
         return sizes
 
-    def _settle_band(self, spark: SparkSession, fs, band: int, excluded: bool) -> None:
+    def _settle_band(self, spark: SparkSession, band: int, excluded: bool) -> None:
         """After a band merge: remove the band when no row is left (all
         ``excluded`` — the compactor leaves no file or a 0-row one; with
         no schema cached, a fresh instance's ``read_bands`` could not read
         a dataless band), else refresh its byte-cache entry."""
         band_dir = f"{self.path}/pband={band}"
-        p = spark._jvm.org.apache.hadoop.fs.Path(band_dir)
-        if not fs.exists(p):
-            return
-        sizes = self._band_sizes(fs, spark._jvm, band)
+        sizes = self._band_sizes(spark, band)
         if not sizes or (excluded and spark.read.parquet(band_dir).isEmpty()):
-            fs.delete(p, True)
+            fsio.delete(spark, band_dir)
             if self._band_bytes is not None:
                 self._band_bytes.pop(band, None)
         elif self._band_bytes is not None:
@@ -724,10 +623,9 @@ class BandedFingerprintIndex:
             return 0
         from . import state_store
 
-        fs, _ = self._fs(spark)
         journal = self._journal_path()
         try:
-            hadoop_write_json(
+            fsio.write_json(
                 spark, journal, {"bands": bands, "excluded": exclude is not None}
             )
             merged = 0
@@ -737,8 +635,8 @@ class BandedFingerprintIndex:
                     exclude=exclude, exclude_cols=exclude_cols, erase=erase,
                 )
                 merged += n > 0
-                self._settle_band(spark, fs, band, exclude is not None and n > 0)
-            fs.delete(spark._jvm.org.apache.hadoop.fs.Path(journal), False)
+                self._settle_band(spark, band, exclude is not None and n > 0)
+            fsio.delete(spark, journal, False)
         except BaseException:
             self._layout_checked = False
             self._reset_maintenance_state()
@@ -750,26 +648,24 @@ class BandedFingerprintIndex:
         band's compaction journal rolls it back or forward, a band left
         without rows is removed, and the next maintain() re-learns the
         bookkeeping with one full walk. One stat when no journal exists."""
-        journal = hadoop_read_json(spark, self._journal_path())
+        journal = fsio.read_json(spark, self._journal_path())
         if journal is None:
             return
         from . import state_store
 
-        fs, _ = self._fs(spark)
         for band in journal["bands"]:
             state_store.recover_dir_compaction(spark, f"{self.path}/pband={band}")
-            self._settle_band(spark, fs, band, journal["excluded"])
+            self._settle_band(spark, band, journal["excluded"])
         self._reset_maintenance_state()
-        fs.delete(spark._jvm.org.apache.hadoop.fs.Path(self._journal_path()), False)
+        fsio.delete(spark, self._journal_path(), False)
 
     def _open_for_maintenance(self, spark: SparkSession) -> bool:
         """Heal every crashed pass; False when there is no index. The
         re-band heal runs BEFORE the existence check: a crashed re-band can
         leave the live directory itself missing (its content is at
         _rebandtmp/_rebandold), and an early return would strand it."""
-        fs, root = self._fs(spark)
-        self._reband_recover(fs, spark._jvm)
-        if not fs.exists(root):
+        self._reband_recover(spark)
+        if not fsio.exists(spark, self.path):
             return False
         self._check_layout(spark)
         self._recover_maintenance(spark)
@@ -825,8 +721,6 @@ class BandedFingerprintIndex:
         streams do); :meth:`purge` reaches every file."""
         if not self._open_for_maintenance(spark):
             return 0
-        fs, _ = self._fs(spark)
-        jvm = spark._jvm
         full_walk = self._dirty_bands is None or self._band_bytes is None
         self.last_maintain_walk = "full" if full_walk else "dirty"
         if full_walk:
@@ -838,12 +732,11 @@ class BandedFingerprintIndex:
         fragmented: list[int] = []
         for band in bands:
             # touched sets are supersets of the bands actually written
-            # (probe keys include rows later filtered out)
-            if not full_walk and not fs.exists(
-                jvm.org.apache.hadoop.fs.Path(f"{self.path}/pband={band}")
-            ):
+            # (probe keys include rows later filtered out): an absent
+            # band lists empty and is skipped
+            sizes = self._band_sizes(spark, band)
+            if not sizes and not full_walk:
                 continue
-            sizes = self._band_sizes(fs, jvm, band)
             self._band_bytes[band] = sum(sizes)
             if len(sizes) > max_files_per_band:
                 fragmented.append(band)
@@ -899,7 +792,7 @@ class BandedFingerprintIndex:
     # the average band size on the listing walk it already does and
     # triggers the re-band between batches.
 
-    def _reband_recover(self, fs, jvm) -> None:
+    def _reband_recover(self, spark: SparkSession) -> None:
         """Heal a crashed re-band. Order (stage fully under the NEW
         banding, meta inside → rename live out → rename staged in →
         delete old) means: a leftover ``_rebandold`` with the live index
@@ -909,25 +802,23 @@ class BandedFingerprintIndex:
         is superseded — delete it. A leftover ``_rebandtmp`` alone is a
         crash before the swap started: the live index is untouched, drop
         the staging."""
-        old_p = jvm.org.apache.hadoop.fs.Path(self.path.rstrip("/") + "_rebandold")
-        tmp_p = jvm.org.apache.hadoop.fs.Path(self.path.rstrip("/") + "_rebandtmp")
-        live = jvm.org.apache.hadoop.fs.Path(self.path)
+        old = self.path.rstrip("/") + "_rebandold"
+        tmp = self.path.rstrip("/") + "_rebandtmp"
+        has_old, has_tmp = fsio.exists(spark, old), fsio.exists(spark, tmp)
+        if not (has_old or has_tmp):
+            return
+        # crashed-swap healing invalidates the dirty/byte bookkeeping
+        self._reset_maintenance_state()
         promoted = False
-        if fs.exists(old_p) or fs.exists(tmp_p):
-            # crashed-swap healing invalidates the dirty/byte bookkeeping
-            self._reset_maintenance_state()
-        if fs.exists(old_p):
-            if not fs.exists(live):
-                src = tmp_p if fs.exists(tmp_p) else old_p
-                if not fs.rename(src, live):
-                    raise RuntimeError(
-                        f"reband recovery: rename {src} -> {self.path} failed"
-                    )
-                promoted = True
-            if fs.exists(old_p):
-                fs.delete(old_p, True)
-        if fs.exists(tmp_p):
-            fs.delete(tmp_p, True)
+        if has_old and not fsio.exists(spark, self.path):
+            src = tmp if has_tmp else old
+            if not fsio.rename(spark, src, self.path):
+                raise RuntimeError(
+                    f"reband recovery: rename {src} -> {self.path} failed"
+                )
+            promoted = True
+        fsio.delete(spark, old)
+        fsio.delete(spark, tmp)
         if promoted:
             # the promoted copy's own meta (it carries one — staging
             # writes data + meta before any rename) is authoritative:
@@ -947,11 +838,9 @@ class BandedFingerprintIndex:
         wrong layout). ``exclude`` folds tombstoned rows out of the
         rewrite (see ``maintain``). Single-writer discipline: between
         batches only."""
-        fs, path = self._fs(spark)
-        jvm = spark._jvm
         self._check_layout(spark)
-        self._reband_recover(fs, jvm)
-        if not fs.exists(path):
+        self._reband_recover(spark)
+        if not fsio.exists(spark, self.path):
             return
         df = spark.read.parquet(self.path)
         if exclude is not None:
@@ -970,12 +859,10 @@ class BandedFingerprintIndex:
             .parquet(tmp)
         )
         self._write_meta(spark, root=tmp, n_bands=n_bands_new)
-        old_p = jvm.org.apache.hadoop.fs.Path(old)
-        tmp_p = jvm.org.apache.hadoop.fs.Path(tmp)
-        if not fs.rename(path, old_p):
+        if not fsio.rename(spark, self.path, old):
             raise RuntimeError(f"reband: rename {self.path} -> {old} failed")
-        if not fs.rename(tmp_p, path):
-            restored = fs.rename(old_p, path)
+        if not fsio.rename(spark, tmp, self.path):
+            restored = fsio.rename(spark, old, self.path)
             raise RuntimeError(
                 f"reband: rename {tmp} -> {self.path} failed"
                 + (
@@ -985,7 +872,7 @@ class BandedFingerprintIndex:
                     f"{old}, restore it manually before the next probe"
                 )
             )
-        fs.delete(old_p, True)
+        fsio.delete(spark, old)
         self.n_bands = n_bands_new
         # every band was rewritten under the new modulus: the old dirty
         # set and byte cache describe a layout that no longer exists
@@ -1071,18 +958,7 @@ def _resolve_direct_destination(
       executor task on a missing native lib would be a far worse failure
       mode than one slow-but-correct committer write;
     - ``(None, None)`` — any other scheme."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    uri = fs.makeQualified(p).toUri()
-    port = uri.getPort()
-    return _map_destination(
-        (uri.getScheme() or "file").lower(),
-        uri.getUserInfo(),
-        uri.getHost(),
-        None if port is None or int(port) == -1 else int(port),
-        uri.getPath(),
-    )
+    return _map_destination(*fsio.qualify(spark, path))
 
 
 def _map_destination(
@@ -1304,8 +1180,7 @@ def append_many(
     spark = specs[0][1].sparkSession
     creating: list[bool] = []
     for idx, pairs in specs:
-        fs, root = idx._fs(spark)
-        creating.append(not fs.exists(root))
+        creating.append(not fsio.exists(spark, idx.path))
         idx._resolve_bands_for_write(spark, pairs)
     append_id = uuid.uuid4().hex  # deterministic final names per append
     try:
@@ -1607,28 +1482,22 @@ class PartitionedAppend:
         spark = df.sparkSession
         if parts is None:
             parts = [r[0] for r in df.select(self.part_col).distinct().collect()]
-        jvm = spark._jvm
-        root = jvm.org.apache.hadoop.fs.Path(self.path)
-        fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not parts or not fs.exists(root):
-            return df
-        existing = set(hadoop_list_names(jvm, fs, root))
+        existing = set(fsio.list_names(spark, self.path)) if parts else set()
         live = []
         for p in parts:
-            d = f"{self.part_col}={p}"
-            if d not in existing:
+            name = f"{self.part_col}={p}"
+            if name not in existing:
                 continue
-            names = []
-            for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(f"{self.path}/{d}")):
-                if st.getPath().getName().startswith(TMP_PREFIX):
-                    fs.delete(st.getPath(), False)
-                else:
-                    names.append(st.getPath().getName())
+            d = f"{self.path}/{name}"
+            names = fsio.list_names(spark, d)
+            for n in names:
+                if n.startswith(TMP_PREFIX):
+                    fsio.delete(spark, f"{d}/{n}", False)
             if any(is_data_file(n) for n in names):
-                live.append(f"{self.path}/{d}")
+                live.append(d)
         if not live:
             return df
-        stored = _read_parquet_dirs(spark, fs, self.path, live, schema=self._schema)
+        stored = _read_parquet_dirs(spark, self.path, live, schema=self._schema)
         if self._schema is None:
             self._schema = stored.schema
         return df.join(stored.select(*self.key_cols), self.key_cols, "left_anti")

@@ -36,25 +36,12 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import fsio
 from .state_store import start_stream
 
 OP_COL = "op"
 VERSION_COL = "version"
 DELETED_COL = "_deleted"
-
-
-def _fs_exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
-
-
-def _fs_delete(spark: SparkSession, path: str) -> None:
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(p):
-        fs.delete(p, True)
 
 
 def apply_cdc_batch(
@@ -198,7 +185,7 @@ def start_cdc_apply(
                     .distinct()
                     .collect()
                 ]
-                if _fs_exists(spark, journal + "/_SUCCESS"):
+                if fsio.exists(spark, journal + "/_SUCCESS"):
                     # crash replay: the prior attempt journaled its
                     # candidates and may have committed the apply before
                     # dying — the table's pre-state is gone; the journal
@@ -249,7 +236,7 @@ def start_cdc_apply(
         if on_reinsert is not None:
             # only after the hook returned: a crash above re-fires from
             # the journal on replay (at-least-once)
-            _fs_delete(spark, journal)
+            fsio.delete(spark, journal)
         if on_delete is not None:
             drows = batch_df.filter(F.col(OP_COL) == F.lit("d"))
             dkeys = drows.select(*keys).distinct()

@@ -81,6 +81,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import fsio
 from ..errors import is_path_not_found
 from .banded_index import (
     BandedFingerprintIndex,
@@ -89,7 +90,6 @@ from .banded_index import (
     combined_touched_bands,
 )
 from .state_store import (
-    _fs_for,
     compact_small_files,
     has_data_files,
     recover_dir_compaction,
@@ -395,8 +395,7 @@ class DedupStream:
             # dir holding only the writer lease and the store generation
             # (a fenced delete before the first batch) has no data yet.
             if not is_path_not_found(exc):
-                _, fs, jp = _fs_for(spark, self.corpus_dir)
-                names = {st.getPath().getName() for st in fs.listStatus(jp)}
+                names = set(fsio.list_names(spark, self.corpus_dir))
                 if not names or not names <= {LEASE_DIRNAME, GEN_DIRNAME}:
                     raise
             # before any sidecar is invalidated as describing a gone corpus
@@ -636,8 +635,5 @@ class DedupStream:
             for idx in self.sidecars:
                 idx.purge(spark, exclude=ex, exclude_cols=cols)
             if clear:
-                p = spark._jvm.org.apache.hadoop.fs.Path(
-                    tombstones_path(self.store_dir)
-                )
-                p.getFileSystem(spark._jsc.hadoopConfiguration()).delete(p, True)
+                fsio.delete(spark, tombstones_path(self.store_dir))
             return removed

@@ -122,12 +122,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import fsio
 from .banded_index import (
     BandedFingerprintIndex,
     PartitionedAppend,
     append_partitioned,
     batch_partitions,
-    hadoop_read_json,
     planned_partitions,
 )
 from .revisions import (
@@ -252,7 +252,7 @@ def load_index_meta(spark, index_dir: str) -> dict:
     memo = _memo_for(spark, index_dir)
     if memo["meta"] is not None:
         return memo["meta"]
-    meta = hadoop_read_json(spark, index_dir.rstrip("/") + "/" + _META)
+    meta = fsio.read_json(spark, index_dir.rstrip("/") + "/" + _META)
     if meta is None:
         raise SearchIndexLayoutError(
             f"no _meta.json under {index_dir}: not an incremental search "
@@ -265,17 +265,10 @@ def load_index_meta(spark, index_dir: str) -> dict:
 def _postings_bucket_dirs(spark, index_dir: str) -> list[str]:
     """Existing ``tb=`` bucket directory paths under the postings store
     (one root readdir; [] when the store was never written)."""
-    from .banded_index import hadoop_list_names
-
-    jvm = spark._jvm
     pdir = _postings_dir(index_dir)
-    jp = jvm.org.apache.hadoop.fs.Path(pdir)
-    fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jp):
-        return []
     return [
         f"{pdir}/{name}"
-        for name in hadoop_list_names(jvm, fs, jp)
+        for name in fsio.list_names(spark, pdir)
         if name.startswith("tb=")
     ]
 
@@ -328,18 +321,12 @@ def _live_bucket_paths(
         else:
             unknown.append(name)
     if unknown:
-        jvm = spark._jvm
-        jp = jvm.org.apache.hadoop.fs.Path(root_dir)
-        fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(jp):
-            from .banded_index import hadoop_list_names
-
-            existing = set(hadoop_list_names(jvm, fs, jp))
-            for name in unknown:
-                d = f"{root_dir}/{name}"
-                if name in existing and has_data_files(spark, d):
-                    paths.append(d)
-                    memo_ne.add(d)
+        existing = set(fsio.list_names(spark, root_dir))
+        for name in unknown:
+            d = f"{root_dir}/{name}"
+            if name in existing and has_data_files(spark, d):
+                paths.append(d)
+                memo_ne.add(d)
         paths.sort()
     return paths
 
@@ -387,16 +374,11 @@ def settle_forward_index(
     the gate field — a crash anywhere re-runs the backfill; probes never
     see the field without complete data. Owner op (single-writer
     window)."""
-    from .banded_index import hadoop_write_json
-
     meta = load_index_meta(spark, index_dir)
     id_col = meta["id_col"]
     ndb = int(meta.get("n_doc_buckets", n_doc_buckets))
     fdir = _forward_dir(index_dir)
-    jvm = spark._jvm
-    fp = jvm.org.apache.hadoop.fs.Path(fdir)
-    fs = fp.getFileSystem(spark._jsc.hadoopConfiguration())
-    if "n_doc_buckets" in meta and fs.exists(fp):
+    if "n_doc_buckets" in meta and fsio.exists(spark, fdir):
         return ndb  # settled: one memo'd meta read + one stat
     # heal BEFORE the backfill read: a compaction that died post-rename
     # leaves segment+inputs double-visible, and unlike a transient probe
@@ -407,7 +389,6 @@ def settle_forward_index(
         return ndb  # gate present, nothing to build from (fresh/purged)
     if post is not None:
         tmp = index_dir.rstrip("/") + "/forward_fwtmp"
-        tmp_p = jvm.org.apache.hadoop.fs.Path(tmp)
         (
             post.select("term", id_col, "tf")
             .withColumn("db", doc_bucket(F.col(id_col), ndb))
@@ -416,16 +397,15 @@ def settle_forward_index(
             .mode("overwrite")
             .parquet(tmp)
         )
-        if fs.exists(fp):  # stale partial from a crashed settle
-            fs.delete(fp, True)
-        if not fs.rename(tmp_p, fp):
+        fsio.delete(spark, fdir)  # stale partial from a crashed settle
+        if not fsio.rename(spark, tmp, fdir):
             raise RuntimeError(
                 f"forward settle: rename {tmp} -> {fdir} failed"
             )
     if "n_doc_buckets" not in meta:
         meta2 = dict(meta)
         meta2["n_doc_buckets"] = ndb
-        hadoop_write_json(
+        fsio.write_json(
             spark, index_dir.rstrip("/") + "/" + _META, meta2
         )
     invalidate_probe_memo(index_dir)
@@ -573,15 +553,12 @@ def absorb_search_revisions(spark, index_dir: str) -> dict:
     from the rev rows' term hashes), bounded by the edit set's term
     spread, never index-proportional beyond the thin scan. Owner op
     (fenced; nests inside ``maintain_search_index``'s lease)."""
-    from .state_store import _fs_for
-
     meta = load_index_meta(spark, index_dir)
     id_col = meta["id_col"]
     idt = meta.get("id_type", "bigint")
     ntb = int(meta["n_term_buckets"])
     pdir, fdir = _postings_dir(index_dir), _forward_dir(index_dir)
-    _, fs, fp = _fs_for(spark, fdir)
-    forward = "n_doc_buckets" in meta and fs.exists(fp)
+    forward = "n_doc_buckets" in meta and fsio.exists(spark, fdir)
 
     def targets(revs: DataFrame) -> list:
         recover_search_index(spark, index_dir, memoize=False)
@@ -698,10 +675,7 @@ def purge_search_tombstones(spark, index_dir: str, clear: bool = False) -> dict:
     # tombstoned ids alone (db = hash(id)) — one tiny column job
     if "n_doc_buckets" in meta:
         fdir = _forward_dir(index_dir)
-        jvm = spark._jvm
-        jfp = jvm.org.apache.hadoop.fs.Path(fdir)
-        ffs = jfp.getFileSystem(spark._jsc.hadoopConfiguration())
-        if ffs.exists(jfp):
+        if fsio.exists(spark, fdir):
             dbs = [
                 r[0]
                 for r in tomb.select(
@@ -753,29 +727,20 @@ def purge_search_tombstones(spark, index_dir: str, clear: bool = False) -> dict:
         exclude_cols=[id_col],
         erase=True,
     )
-    jvm = spark._jvm
-    dl_p = jvm.org.apache.hadoop.fs.Path(_doclen_dir(index_dir))
-    fs = dl_p.getFileSystem(spark._jsc.hadoopConfiguration())
     # DEFENSE: on this engine an all-rows-excluded merge writes one 0-row
     # schema-bearing file (verified live), so a doclen is normally never
     # dataless and this branch stays unreachable — but a journal with no
     # finals is layout-legal, so a filesystem/engine that does
     # produce it must not leave an unreadable index behind
-    erased_all = fs.exists(dl_p) and not has_data_files(
-        spark, _doclen_dir(index_dir)
-    )
+    dl_dir = _doclen_dir(index_dir)
+    erased_all = fsio.exists(spark, dl_dir) and not has_data_files(spark, dl_dir)
     if erased_all:
         # FULL erasure: a dataless doclen directory would read as
         # unreadable, not absent — delete doclen and postings so the
         # stream's "no doclen ⇒ nothing authoritatively indexed" first-
         # batch path applies cleanly (it invalidates the sidecar itself)
-        fs.delete(dl_p, True)
-        pp = jvm.org.apache.hadoop.fs.Path(pdir)
-        if fs.exists(pp):
-            fs.delete(pp, True)
-        fwp = jvm.org.apache.hadoop.fs.Path(_forward_dir(index_dir))
-        if fs.exists(fwp):
-            fs.delete(fwp, True)
+        for d in (_doclen_dir(index_dir), pdir, _forward_dir(index_dir)):
+            fsio.delete(spark, d)
     if clear:
         # forget the ids EVERYWHERE: without the tombstone entry burn, a
         # stale _docidx row would make the stream skip a re-sent id
@@ -797,10 +762,9 @@ def purge_search_tombstones(spark, index_dir: str, clear: bool = False) -> dict:
         # point of clear=True) would be permanently invisible behind a
         # stale marker whose _rev rows this purge just removed
         mdir = markers_dir(index_dir)
-        rv = jvm.org.apache.hadoop.fs.Path(mdir)
         if erased_all:
             drop_revisions(spark, index_dir)
-        elif fs.exists(rv):
+        elif fsio.exists(spark, mdir):
             compact_small_files(
                 spark, mdir,
                 exclude=tomb, exclude_cols=[id_col],
@@ -814,10 +778,8 @@ def purge_search_tombstones(spark, index_dir: str, clear: bool = False) -> dict:
                 not has_data_files(spark, mdir)
                 or spark.read.parquet(mdir).isEmpty()
             ):
-                fs.delete(rv, True)
-        tp = jvm.org.apache.hadoop.fs.Path(tombstones_path(index_dir))
-        if fs.exists(tp):
-            fs.delete(tp, True)
+                fsio.delete(spark, mdir)
+        fsio.delete(spark, tombstones_path(index_dir))
     return {"buckets_purged": len(tbs), "docs_purged": int(docs)}
 
 
@@ -859,7 +821,7 @@ def maintain_search_index(
     # anything so a death anywhere leaves probes re-verifying from disk
     invalidate_probe_memo(index_dir)
     recover_search_index(spark, index_dir, buckets, memoize=False)
-    meta = hadoop_read_json(spark, index_dir.rstrip("/") + "/" + _META)
+    meta = fsio.read_json(spark, index_dir.rstrip("/") + "/" + _META)
     absorbed = 0
     if absorb_revised_at is not None and meta is not None:
         # fold pending revisions into the main store once the revised
@@ -893,17 +855,11 @@ def maintain_search_index(
     if meta is not None and "n_doc_buckets" in meta:
         fdir = _forward_dir(index_dir)
         if forward_buckets is None:
-            from .banded_index import hadoop_list_names
-
-            jvm = spark._jvm
-            jfp = jvm.org.apache.hadoop.fs.Path(fdir)
-            ffs = jfp.getFileSystem(spark._jsc.hadoopConfiguration())
-            if ffs.exists(jfp):
-                dirs += [
-                    f"{fdir}/{n}"
-                    for n in hadoop_list_names(jvm, ffs, jfp)
-                    if n.startswith("db=")
-                ]
+            dirs += [
+                f"{fdir}/{n}"
+                for n in fsio.list_names(spark, fdir)
+                if n.startswith("db=")
+            ]
         else:
             dirs += [f"{fdir}/db={b}" for b in forward_buckets]
     buckets_compacted = 0

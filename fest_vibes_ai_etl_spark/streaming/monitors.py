@@ -27,13 +27,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import fsio
 from ..functions import text as T
 from ..operators import drift
 from ..operators.freqsketch import token_mg_summaries
 from ..operators.kmvsketch import k_smallest_hashes
 from ..operators.textanalysis import VOCAB_PSI_BUCKETS as VOCAB_BUCKETS
 from ..operators.textanalysis import term_bucket
-from .banded_index import hadoop_read_json
 from .rollup_log import META, Rollup, read_rollup, start_rollup, summed
 
 # --- PSI drift and vocabulary drift: (key, bin, n) cell logs ----------------
@@ -277,7 +277,7 @@ def _trimmed_union(k: int):
 def latest_kmv(spark: SparkSession, root: str) -> DataFrame:
     """The folded KMV table: (day, kset array<bigint>), trimmed to the k
     pinned in the log's meta."""
-    meta = hadoop_read_json(spark, f"{root.rstrip('/')}/{META}") or {}
+    meta = fsio.read_json(spark, f"{root.rstrip('/')}/{META}") or {}
     return read_rollup(spark, root, _trimmed_union(meta.get("k")))
 
 

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import fsio
 from ..errors import is_missing_or_dataless
 from . import state_store, tombstones
 
@@ -60,17 +61,11 @@ def sidecar_dir(index_dir: str, name: str | None = None) -> str:
     return f"{root}/{name}" if name else root
 
 
-def _drop(spark, path: str) -> None:
-    _, fs, jp = state_store._fs_for(spark, path)
-    if fs.exists(jp):
-        fs.delete(jp, True)
-
-
 def drop_revisions(spark, index_dir: str) -> None:
     """Forget every revision: the marker dir FIRST, then the sidecar — the
     reverse order would leave marked ids with no content to serve."""
-    _drop(spark, markers_dir(index_dir))
-    _drop(spark, sidecar_dir(index_dir))
+    fsio.delete(spark, markers_dir(index_dir))
+    fsio.delete(spark, sidecar_dir(index_dir))
 
 
 def read_or_empty(
@@ -90,22 +85,17 @@ def read_or_empty(
 
 def read_revisions(spark, index_dir: str, id_col: str = "doc_id"):
     """Current revision per revised id — (id, rev = max marker), or None
-    when no revise was ever issued (ONE filesystem stat, the
-    read_tombstones discipline). Broadcast-hinted under the same byte
+    when no revise was ever issued (ONE directory listing, empty when
+    absent). Broadcast-hinted under the same byte
     threshold as tombstones (revised sets are edit-rate-bounded; a set
     grown past driver scale degrades to a shuffle join)."""
     rdir = markers_dir(index_dir)
-    _, fs, p = state_store._fs_for(spark, rdir)
-    if not fs.exists(p):
-        return None
     visible = [
-        st
-        for st in fs.listStatus(p)
-        if not st.getPath().getName().startswith(("_", "."))
+        e for e in fsio.list_status(spark, rdir) if not e.name.startswith(("_", "."))
     ]
     if not visible:
-        return None  # dataless (a clear fold raced the dir delete)
-    nbytes = sum(st.getLen() for st in visible)
+        return None  # absent, or dataless (a clear fold raced the dir delete)
+    nbytes = sum(e.size for e in visible)
     df = (
         spark.read.parquet(rdir)
         .groupBy(id_col)
@@ -259,7 +249,7 @@ def absorb(spark, index_dir: str, id_col: str, targets) -> tuple[int, list]:
     state_store.recover_dir_compaction(spark, markers_dir(index_dir))
     revs = read_revisions(spark, index_dir, id_col)
     if revs is None:
-        _drop(spark, sidecar_dir(index_dir))
+        fsio.delete(spark, sidecar_dir(index_dir))
         return 0, []
     n_ids = revs.count()
     rev_ids = revs.select(id_col)

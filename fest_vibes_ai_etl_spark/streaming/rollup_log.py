@@ -37,11 +37,11 @@ from typing import Callable, NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import fsio
 from .banded_index import is_data_file
 from .state_store import (
     _STAGE_PREFIX,
     InFlightRecoveryError,
-    _fs_for,
     adopt_or_refuse_meta,
     compact_small_files,
     detect_dir_compaction,
@@ -101,27 +101,23 @@ def make_rollup_processor(rollup: Rollup, log_root: str):
         if not pinned:
             _pin(spark, root, rollup)
             pinned.append(True)
-        jvm, fs, _ = _fs_for(spark, root)
-        Path = jvm.org.apache.hadoop.fs.Path
-        final = Path(f"{root}/b{batch_id}.parquet")
-        if fs.exists(final):
+        final = f"{root}/b{batch_id}.parquet"
+        if fsio.exists(spark, final):
             return
         compact_small_files(spark, root, transform=rollup.merge)
-        stage = Path(f"{root}/{_STAGE_PREFIX}b{batch_id}")
+        stage = f"{root}/{_STAGE_PREFIX}b{batch_id}"
         (
             rollup.partials(batch_df)
             .coalesce(1)
             .write.mode("overwrite")
-            .parquet(str(stage))
+            .parquet(stage)
         )
         parts = [
-            st.getPath()
-            for st in fs.listStatus(stage)
-            if is_data_file(st.getPath().getName())
+            f"{stage}/{n}" for n in fsio.list_names(spark, stage) if is_data_file(n)
         ]
-        if parts and not fs.rename(parts[0], final):
-            raise IOError(f"monitor log: rename {parts[0]} -> {final} failed")
-        fs.delete(stage, True)
+        if parts and not fsio.rename(spark, parts[0], final):
+            raise OSError(f"monitor log: rename {parts[0]} -> {final} failed")
+        fsio.delete(spark, stage)
 
     return process
 

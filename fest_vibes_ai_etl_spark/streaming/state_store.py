@@ -72,12 +72,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .banded_index import (
-    TMP_PREFIX,
-    hadoop_read_json,
-    hadoop_write_json,
-    is_data_file,
-)
+from .. import fsio
+from .banded_index import TMP_PREFIX, is_data_file
 
 _MANIFEST = "_compact.json"
 _STAGE_PREFIX = "_cstage-"
@@ -102,11 +98,7 @@ def detect_dir_compaction(spark: SparkSession, dir_path: str) -> bool:
     simultaneously, so 'manifest present' is the conservative refusal
     point for a consumer that cannot tell which side of the rename it
     is on."""
-    jvm, fs, _ = _fs_for(spark, dir_path)
-    man_p = jvm.org.apache.hadoop.fs.Path(
-        dir_path.rstrip("/") + "/" + _MANIFEST
-    )
-    return bool(fs.exists(man_p))
+    return fsio.exists(spark, dir_path.rstrip("/") + "/" + _MANIFEST)
 
 
 def has_data_files(spark: SparkSession, dir_path: str) -> bool:
@@ -115,10 +107,7 @@ def has_data_files(spark: SparkSession, dir_path: str) -> bool:
     exist with none (a crashed append's empty cell dir, an all-rows-
     excluded merge), and schema inference over it throws, so readers and
     rewriters gate on this."""
-    _, fs, jp = _fs_for(spark, dir_path)
-    return bool(fs.exists(jp)) and any(
-        is_data_file(st.getPath().getName()) for st in fs.listStatus(jp)
-    )
+    return any(is_data_file(n) for n in fsio.list_names(spark, dir_path))
 
 
 # --- layout meta -----------------------------------------------------------
@@ -151,12 +140,12 @@ def adopt_or_refuse_meta(
     ``advisory`` fields are RECORDED with the meta but never validated
     (e.g. the id column's Spark type, which delete ops use to burn ids
     before any data exists) — pre-advisory metas stay adoptable."""
-    meta = hadoop_read_json(spark, meta_path)
+    meta = fsio.read_json(spark, meta_path)
     if meta is None:
         out = dict(expected)
         if advisory:
             out.update(advisory)
-        hadoop_write_json(spark, meta_path, out)
+        fsio.write_json(spark, meta_path, out)
         return out
     errs = meta_mismatches(meta, expected)
     if errs:
@@ -173,17 +162,11 @@ def adopt_or_refuse_meta(
         if missing:
             meta = dict(meta)
             meta.update(missing)
-            hadoop_write_json(spark, meta_path, meta)
+            fsio.write_json(spark, meta_path, meta)
     return meta
 
 
 # --- per-directory small-file compaction ------------------------------------
-
-
-def _fs_for(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jp = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, jp.getFileSystem(spark._jsc.hadoopConfiguration()), jp
 
 
 def literal_frame(spark: SparkSession, rows: list[tuple], schema) -> DataFrame:
@@ -208,41 +191,40 @@ def literal_frame(spark: SparkSession, rows: list[tuple], schema) -> DataFrame:
     return spark.range(0, 1, 1, 1).select(F.inline(parsed))
 
 
-def _gone_race(fs, path) -> bool:
-    """True when a failed delete/rename is explained by the target no
-    longer existing — i.e. a CONCURRENT recovery of the same crash won
-    the race (two probes healing one dead maintenance pass; the
-    exists-then-act window is not atomic on all filesystems). The loser
-    re-checks state and moves on instead of failing the probe."""
+def _gone_race(spark, path: str) -> bool:
+    """True when a failed delete is explained by the target no longer
+    existing — i.e. a CONCURRENT recovery of the same crash won the race
+    (two probes healing one dead maintenance pass; the exists-then-act
+    window is not atomic on all filesystems). The loser re-checks state
+    and moves on instead of failing the probe."""
     try:
-        return not fs.exists(path)
-    except Exception:  # noqa: BLE001 - can't re-check: treat as real
+        return not fsio.exists(spark, path)
+    except OSError:  # can't re-check: treat as real
         return False
 
 
-def _delete_inputs(fs, jvm, dir_path: str, names: list[str]) -> None:
+def _delete_inputs(spark, dir_path: str, names: list[str]) -> None:
     """Drop a completed merge's input files (idempotent — recovery re-runs
     it for any inputs a crash left behind; ``delete`` of a missing path
     returns False, and a concurrent recovery that deleted one first is
     tolerated). Split out so crash tests can inject a death between the
     last rename and the deletes."""
     for name in names:
-        p = jvm.org.apache.hadoop.fs.Path(dir_path.rstrip("/") + "/" + name)
+        path = dir_path.rstrip("/") + "/" + name
         try:
-            fs.delete(p, False)
-        except Exception:  # noqa: BLE001 - py4j-wrapped IOException
-            if not _gone_race(fs, p):
+            fsio.delete(spark, path, False)
+        except OSError:
+            if not _gone_race(spark, path):
                 raise
 
 
-def _promote(fs, jvm, dir_path: str, stage: str, names: list[str]) -> None:
+def _promote(spark, dir_path: str, stage: str, names: list[str]) -> None:
     """Rename each staged final to its visible name, in order. Split out
     so crash tests can inject a death between two finals' renames."""
     for name in names:
-        src = jvm.org.apache.hadoop.fs.Path(f"{stage}/{name}")
-        dst = jvm.org.apache.hadoop.fs.Path(f"{dir_path.rstrip('/')}/{name}")
-        if not fs.rename(src, dst) and not fs.exists(dst):
-            raise IOError(
+        src, dst = f"{stage}/{name}", f"{dir_path.rstrip('/')}/{name}"
+        if not fsio.rename(spark, src, dst) and not fsio.exists(spark, dst):
+            raise OSError(
                 f"compaction: rename {src} -> {dst} failed; manifest left "
                 f"for recovery"
             )
@@ -255,44 +237,38 @@ def recover_dir_compaction(spark: SparkSession, dir_path: str) -> None:
     surviving inputs); otherwise roll BACK (delete the visible finals,
     keep the inputs). A manifest with no finals journals an
     all-rows-excluded merge, so deletion IS the compaction. A legacy
-    manifest names one ``final`` and no stage. One ``exists`` stat in
-    the steady state."""
-    jvm, fs, _ = _fs_for(spark, dir_path)
+    manifest names one ``final`` and no stage. One stat in the steady
+    state."""
     root = dir_path.rstrip("/")
-    man_p = jvm.org.apache.hadoop.fs.Path(root + "/" + _MANIFEST)
-    if not fs.exists(man_p):
-        return
+    man_path = root + "/" + _MANIFEST
     try:
-        man = hadoop_read_json(spark, root + "/" + _MANIFEST)
-    except Exception:  # noqa: BLE001 - a concurrent recovery dropped it
-        if _gone_race(fs, man_p):
-            return
-        raise
-    if man is None:  # torn manifest cannot exist (atomic write) — stale tmp
+        man = fsio.read_json(spark, man_path)
+    except FileNotFoundError:  # a concurrent recovery dropped it since the stat
+        return
+    if man is None:
         return
     if "finals" in man:
         finals = man["finals"]
     else:
         finals = [man["final"]] if man.get("final") else []
     stage = f"{root}/{man['stage']}" if man.get("stage") else None
-    Path = jvm.org.apache.hadoop.fs.Path
-    visible = [n for n in finals if fs.exists(Path(f"{root}/{n}"))]
+    visible = [n for n in finals if fsio.exists(spark, f"{root}/{n}")]
     staged = [
         n for n in finals
-        if n not in visible and stage and fs.exists(Path(f"{stage}/{n}"))
+        if n not in visible and stage and fsio.exists(spark, f"{stage}/{n}")
     ]
     if len(visible) + len(staged) == len(finals):
-        _promote(fs, jvm, root, stage, staged)
-        _delete_inputs(fs, jvm, root, man.get("inputs", []))
+        _promote(spark, root, stage, staged)
+        _delete_inputs(spark, root, man.get("inputs", []))
     else:
-        _delete_inputs(fs, jvm, root, visible)
+        _delete_inputs(spark, root, visible)
     try:
-        fs.delete(man_p, False)
-    except Exception:  # noqa: BLE001 - concurrent recovery dropped it
-        if not _gone_race(fs, man_p):
+        fsio.delete(spark, man_path, False)
+    except OSError:  # a concurrent recovery dropped it
+        if not _gone_race(spark, man_path):
             raise
     if stage:
-        fs.delete(Path(stage), True)
+        fsio.delete(spark, stage)
 
 
 def compact_small_files(
@@ -327,28 +303,27 @@ def compact_small_files(
     Single-writer discipline: call between batches, never concurrently
     with a probe of the same directory. Crash-safe via the manifest
     journal (see module docstring + :func:`recover_dir_compaction`)."""
-    jvm, fs, jp = _fs_for(spark, dir_path)
-    if not fs.exists(jp):
-        return 0
-    recover_dir_compaction(spark, dir_path)
     root = dir_path.rstrip("/")
-    small: list = []
+    entries = fsio.list_status(spark, root)
+    if any(e.name == _MANIFEST for e in entries):
+        recover_dir_compaction(spark, root)
+        entries = fsio.list_status(spark, root)
+    small: list[str] = []
     nbytes = 0
-    for st in fs.listStatus(jp):
-        name = st.getPath().getName()
-        if name.startswith(_STAGE_PREFIX):
-            fs.delete(st.getPath(), True)  # stale staging from a crash
+    for e in entries:
+        if e.name.startswith(_STAGE_PREFIX):
+            fsio.delete(spark, f"{root}/{e.name}")  # stale staging from a crash
             continue
-        if name.startswith(TMP_PREFIX):
+        if e.name.startswith(TMP_PREFIX):
             # crashed direct-append staging: invisible garbage, sweep
             # (between batches only — the single-writer rule)
-            fs.delete(st.getPath(), False)
+            fsio.delete(spark, f"{root}/{e.name}", False)
             continue
-        if not is_data_file(name):
+        if not is_data_file(e.name):
             continue
-        if erase or st.getLen() < target_bytes:
-            small.append(st.getPath())
-            nbytes += st.getLen()
+        if erase or e.size < target_bytes:
+            small.append(e.name)
+            nbytes += e.size
     if len(small) == 0:
         return 0
     if not erase and len(small) <= max_files:
@@ -357,22 +332,16 @@ def compact_small_files(
         return 0  # nothing to merge and nothing to fold
     stage_name = _STAGE_PREFIX + uuid.uuid4().hex
     stage = f"{root}/{stage_name}"
-    df = spark.read.parquet(*[str(p) for p in small])
+    df = spark.read.parquet(*[f"{root}/{n}" for n in small])
     if exclude is not None:
         df = df.join(exclude, exclude_cols, "left_anti")
     if transform is not None:
         df = transform(df)
     n_out = max(1, nbytes // target_bytes) if erase else 1
     df.coalesce(n_out).write.mode("overwrite").parquet(stage)
-    stage_p = jvm.org.apache.hadoop.fs.Path(stage)
     # the stage's part names are unique per write job: they become the
     # visible finals unchanged
-    finals = sorted(
-        st.getPath().getName()
-        for st in fs.listStatus(stage_p)
-        if is_data_file(st.getPath().getName())
-    )
-    inputs = [p.getName() for p in small]
+    finals = sorted(n for n in fsio.list_names(spark, stage) if is_data_file(n))
     # journal BEFORE the first visible rename: from here the merge rolls
     # forward while its finals are visible or staged, and the inputs go
     # only after the last rename. The fencing stamp attributes the
@@ -381,20 +350,20 @@ def compact_small_files(
     from .writer_lease import current_epoch_for
 
     man_path = f"{root}/{_MANIFEST}"
-    hadoop_write_json(
+    fsio.write_json(
         spark,
         man_path,
         {
             "finals": finals,
             "stage": stage_name,
-            "inputs": inputs,
+            "inputs": small,
             "lease_epoch": current_epoch_for(dir_path),
         },
     )
-    _promote(fs, jvm, root, stage, finals)
-    _delete_inputs(fs, jvm, root, inputs)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(man_path), False)
-    fs.delete(stage_p, True)
+    _promote(spark, root, stage, finals)
+    _delete_inputs(spark, root, small)
+    fsio.delete(spark, man_path, False)
+    fsio.delete(spark, stage)
     return len(small)
 
 

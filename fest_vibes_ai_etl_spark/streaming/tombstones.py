@@ -58,6 +58,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import fsio
 from .state_store import (
     InFlightRecoveryError,
     compact_small_files,
@@ -95,10 +96,8 @@ def refuse_swap_leftover(
     restores it by hand; called only where ``live`` was already found
     absent, so a healthy store pays nothing. A leftover beside a live
     store is inert."""
-    jvm = spark._jvm
     live = live.rstrip("/")
-    p = jvm.org.apache.hadoop.fs.Path(live + old)
-    if p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p):
+    if fsio.exists(spark, live + old):
         raise InFlightRecoveryError(
             f"{live} is absent but {live}{old} holds it: a {op} swap of an "
             f"older version died between its renames. Restore it with "
@@ -128,20 +127,17 @@ def read_tombstones(
     are compactor merges, and the ``distinct()`` hides a crashed one's
     double-visible files. A crashed revoke thus reads as not yet taken
     effect — the safe side."""
-    jvm = spark._jvm
     tdir = tombstones_path(store_dir)
-    p = jvm.org.apache.hadoop.fs.Path(tdir)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
+    if not fsio.exists(spark, tdir):
         refuse_swap_leftover(spark, tdir, "_unold", "_untmp", "revoke")
         return None
     # byte census from the same listing a parquet read needs anyway; a
     # crashed compaction's double-visible inputs only overestimate (safe
     # direction — it can only demote a broadcast to a shuffle join)
     nbytes = sum(
-        st.getLen()
-        for st in fs.listStatus(p)
-        if not st.getPath().getName().startswith(("_", "."))
+        e.size
+        for e in fsio.list_status(spark, tdir)
+        if not e.name.startswith(("_", "."))
     )
     df = spark.read.parquet(tdir)
     if cols:
@@ -167,16 +163,11 @@ def maintain_tombstones(
     read does a ``distinct()`` regardless, so a crash's double-visible
     window is semantically invisible here). Returns files merged. Called
     from every family's maintenance tick; idempotent and safe to run
-    between batches (single-writer, like all maintenance)."""
-    jvm = spark._jvm
-    tdir = tombstones_path(store_dir)
-    p = jvm.org.apache.hadoop.fs.Path(tdir)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return 0
+    between batches (single-writer, like all maintenance); an absent
+    set lists empty and merges nothing."""
     return compact_small_files(
         spark,
-        tdir,
+        tombstones_path(store_dir),
         max_files=max_files,
         target_bytes=target_bytes,
         transform=lambda df: df.distinct(),
@@ -282,8 +273,7 @@ def remove_tombstones(
     if tomb.join(ids_df, id_col, "left_anti").isEmpty():
         # nothing left: an absent set reads as "no deletes" (a partial
         # delete leaves a subset of the revoked ids, re-run to finish)
-        p = spark._jvm.org.apache.hadoop.fs.Path(tdir)
-        p.getFileSystem(spark._jsc.hadoopConfiguration()).delete(p, True)
+        fsio.delete(spark, tdir)
     else:
         compact_small_files(
             spark, tdir, erase=True, exclude=ids_df, exclude_cols=[id_col],

@@ -11,7 +11,7 @@ exclusion instead of versioning.
 Protocol (``<store>/_writer_lease/``):
 
 - ``e{N:012d}.json`` — epoch CLAIM: ``{owner, op, acquired_unix, ttl_s}``,
-  created with put-if-absent (atomic create-no-overwrite).
+  created with put-if-absent (content-atomic create-no-overwrite).
 - ``r{N:012d}.json`` — RELEASE marker for epoch N (also put-if-absent;
   idempotent).
 
@@ -38,12 +38,15 @@ registry of held leases keyed by (thread id, store root); a nested
 and only the outermost exit releases. Two threads of one process are two
 writers and race the CAS exactly like two processes.
 
-Backends: plain/``file:`` paths use ``O_CREAT|O_EXCL``
-(``sources.merge_store.LocalFSCommitBackend`` semantics); other schemes
-go through the JVM Hadoop filesystem's atomic create-no-overwrite
+Backends: plain/``file:`` paths use the versioned table's local
+backend (``sources.merge_store.LocalFSCommitBackend``: a private temp
+file linked into place); other schemes go through the filesystem seam's
+``fsio.put_if_absent``, a staged write renamed without overwrite
 (HDFS-atomic; for real S3 pass an
 ``sources.s3_commit.S3CommitBackend``-shaped object whose conditional
-PUT is the arbiter, the moto-validated path)."""
+PUT is the arbiter, the moto-validated path). A filesystem failure is
+typed, never a raw Py4J trace: the seam's ``OSError``, or
+:class:`WriterLeaseError` when a claim write fails."""
 
 from __future__ import annotations
 
@@ -52,6 +55,9 @@ import os
 import threading
 import time
 import uuid
+
+from .. import fsio
+from ..sources.merge_store import LocalFSCommitBackend
 
 LEASE_DIRNAME = "_writer_lease"
 DEFAULT_TTL_S = 900.0
@@ -77,42 +83,12 @@ def _norm(store_dir: str) -> str:
     return store_dir.rstrip("/")
 
 
-class _LocalLeaseBackend:
-    """put-if-absent via O_CREAT|O_EXCL — atomic on POSIX."""
-
-    def list(self, d: str) -> list[str]:
-        try:
-            return os.listdir(d)
-        except OSError:
-            return []
-
-    def get(self, path: str) -> bytes:
-        with open(path, "rb") as f:
-            return f.read()
+class _LocalLeaseBackend(LocalFSCommitBackend):
+    """The versioned table's content-atomic local put-if-absent, plus
+    the claim age and the census delete the lease needs."""
 
     def mtime(self, path: str) -> float:
         return os.stat(path).st_mtime
-
-    def put_if_absent(self, path: str, data: bytes) -> bool:
-        # CONTENT-atomic, not just name-atomic: a bare O_CREAT|O_EXCL
-        # followed by write() exposes an empty claim file between the two
-        # syscalls, and a concurrent acquirer reading it parses {} → age
-        # from epoch 0 → "TTL expired" → claims the NEXT epoch: multiple
-        # winners (seen as 3/8 winners in the round-15 full-suite run
-        # under heavy load). Write the payload to a private temp file and
-        # LINK it into place — link(2) fails with EEXIST atomically and
-        # the name only ever appears fully written.
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.tmp.{uuid.uuid4().hex}"
-        with open(tmp, "wb") as f:
-            f.write(data)
-        try:
-            os.link(tmp, path)
-            return True
-        except FileExistsError:
-            return False
-        finally:
-            os.remove(tmp)
 
     def delete(self, path: str) -> None:
         try:
@@ -122,70 +98,36 @@ class _LocalLeaseBackend:
 
 
 class _HadoopLeaseBackend:
-    """Atomic create-no-overwrite through the JVM filesystem (HDFS-
-    semantics). NOT safe on S3A (its create is not atomic) — real S3
-    stores should pass an s3_commit-backed adapter instead."""
+    """put-if-absent through the filesystem seam: a staged write renamed
+    without overwrite, atomic where the rename is (HDFS). NOT safe on
+    S3A (its rename is not atomic) — real S3 stores should pass an
+    s3_commit-backed adapter instead."""
 
     def __init__(self, spark):
         self._spark = spark
 
-    def _fs(self, path: str):
-        jvm = self._spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        return jvm, p, p.getFileSystem(self._spark._jsc.hadoopConfiguration())
-
     def list(self, d: str) -> list[str]:
-        jvm, p, fs = self._fs(d)
-        if not fs.exists(p):
-            return []
-        return [st.getPath().getName() for st in fs.listStatus(p)]
+        return fsio.list_names(self._spark, d)
 
     def get(self, path: str) -> bytes:
-        jvm, p, fs = self._fs(path)
-        stream = fs.open(p)
-        try:
-            return bytes(
-                self._spark._jvm.org.apache.commons.io.IOUtils.toByteArray(
-                    stream
-                )
-            )
-        finally:
-            stream.close()
+        return fsio.read_bytes(self._spark, path)
 
     def mtime(self, path: str) -> float:
-        jvm, p, fs = self._fs(path)
-        return fs.getFileStatus(p).getModificationTime() / 1000.0
+        return fsio.mtime(self._spark, path)
 
     def put_if_absent(self, path: str, data: bytes) -> bool:
-        # content-atomic (see the local backend): write a private temp
-        # file, then rename WITHOUT overwrite — atomic on HDFS, so the
-        # target name never exists with a partial payload. A filesystem
-        # failure is a typed error, never a raw Py4J trace; only a plain
-        # False from rename means the claim was lost.
-        from py4j.protocol import Py4JError
-
+        # only a plain False means the claim was lost; a failed call is
+        # the lease's typed error, so a claimant backs off
         try:
-            jvm, p, fs = self._fs(path)
-            tmp_path = f"{path}.tmp.{uuid.uuid4().hex}"
-            _, tp, _ = self._fs(tmp_path)
-            out = fs.create(tp, True)
-            out.write(bytearray(data))
-            out.close()
-            try:
-                return bool(fs.rename(tp, p))
-            finally:
-                if fs.exists(tp):
-                    fs.delete(tp, False)
-        except Py4JError as exc:
+            return fsio.put_if_absent(self._spark, path, data)
+        except OSError as exc:
             raise WriterLeaseError(
-                f"put-if-absent of {path} failed in the filesystem "
-                f"({type(exc).__name__}); back off and retry"
+                f"put-if-absent of {path} failed in the filesystem ({exc}); "
+                f"back off and retry"
             ) from exc
 
     def delete(self, path: str) -> None:
-        jvm, p, fs = self._fs(path)
-        if fs.exists(p):
-            fs.delete(p, False)
+        fsio.delete(self._spark, path, False)
 
 
 def _backend_for(spark, store_dir: str):
@@ -294,14 +236,12 @@ class WriterLease:
         return epoch
 
     def _older_than_ttl(self, path: str) -> bool:
-        from py4j.protocol import Py4JError
-
         mtime = getattr(self.backend, "mtime", None)  # custom backends may lack it
         if mtime is None:
             return False
         try:
             return time.time() - mtime(path) >= self.ttl_s
-        except (OSError, Py4JError):  # the claim vanished or can't be stat-ed
+        except OSError:  # the claim vanished or can't be stat-ed
             return False
 
     def release(self) -> None:

@@ -377,27 +377,28 @@ def test_maintain_crash_recovery_restores_band(spark, tmp_path, monkeypatch):
     before the input deletes: a raw read would see the merged segment
     beside its inputs, and recovery deletes the inputs. Both roll
     FORWARD."""
+    from fest_vibes_ai_etl_spark import fsio
     from fest_vibes_ai_etl_spark.streaming import state_store
 
-    real_write = state_store.hadoop_write_json
+    real_write = fsio.write_json
 
     def die_after_manifest(spark_, path, obj):
         real_write(spark_, path, obj)
         if path.endswith(state_store._MANIFEST):
             raise RuntimeError("injected crash after band manifest")
 
-    def die_before_deletes(fs, jvm, d, names):
+    def die_before_deletes(spark_, d, names):
         raise RuntimeError("injected crash before input deletes")
 
-    for name, seam, dying in (
-        ("manifest", "hadoop_write_json", die_after_manifest),
-        ("rename", "_delete_inputs", die_before_deletes),
+    for name, module, seam, dying in (
+        ("manifest", fsio, "write_json", die_after_manifest),
+        ("rename", state_store, "_delete_inputs", die_before_deletes),
     ):
         base = str(tmp_path / name)
         stored = _two_fragmented_bands(spark, base)
         idx = BandedFingerprintIndex(base, "fp")
         with monkeypatch.context() as m:
-            m.setattr(state_store, seam, dying)
+            m.setattr(module, seam, dying)
             with pytest.raises(RuntimeError, match="injected crash"):
                 idx.maintain(spark, max_files_per_band=2)
         assert os.path.exists(base + "/_maintain.json")
@@ -410,10 +411,10 @@ def test_stranded_band_recovered_at_open(spark, tmp_path, monkeypatch):
     merged, the second untouched. Opens (read_bands) must heal from the
     root journal BEFORE probing, so no probe double-counts or misses a
     band's history."""
-    from fest_vibes_ai_etl_spark.streaming import banded_index as bi
+    from fest_vibes_ai_etl_spark import fsio
     from fest_vibes_ai_etl_spark.streaming import state_store
 
-    real_write = bi.hadoop_write_json
+    real_write = fsio.write_json
 
     def die_after_journal(spark_, path, obj):
         real_write(spark_, path, obj)
@@ -430,7 +431,7 @@ def test_stranded_band_recovered_at_open(spark, tmp_path, monkeypatch):
         return real_compact(*args, **kwargs)
 
     for name, module, seam, dying in (
-        ("journal", bi, "hadoop_write_json", die_after_journal),
+        ("journal", fsio, "write_json", die_after_journal),
         ("between", state_store, "compact_small_files", die_on_second_band),
     ):
         base = str(tmp_path / name)
@@ -1515,7 +1516,7 @@ def test_fused_frame_contract_pins_width_and_disjoint_prefixes(spark, tmp_path):
 
 
 def test_meta_writes_are_staged_then_renamed(spark, tmp_path):
-    """hadoop_write_json must never leave a TORN meta: a truncated
+    """fsio.write_json must never leave a TORN meta: a truncated
     _meta.json wedges every restart (json.loads raises on each replay —
     the same replay-wedge class as the empty-cell-dir fix). Staging +
     rename means a crash leaves the old meta, no meta (the loud
@@ -1525,17 +1526,14 @@ def test_meta_writes_are_staged_then_renamed(spark, tmp_path):
     import json
     import os
 
-    from fest_vibes_ai_etl_spark.streaming.banded_index import (
-        hadoop_read_json,
-        hadoop_write_json,
-    )
+    from fest_vibes_ai_etl_spark import fsio
 
     d = tmp_path / "store"
     d.mkdir()
     meta = str(d / "_meta.json")
-    hadoop_write_json(spark, meta, {"v": 1})
-    hadoop_write_json(spark, meta, {"v": 2})  # overwrite, not append/fail
-    assert hadoop_read_json(spark, meta) == {"v": 2}
+    fsio.write_json(spark, meta, {"v": 1})
+    fsio.write_json(spark, meta, {"v": 2})  # overwrite, not append/fail
+    assert fsio.read_json(spark, meta) == {"v": 2}
     with open(meta) as fh:
         assert json.load(fh) == {"v": 2}
     # no staging temps survive (Hadoop's local ChecksumFileSystem .crc
@@ -1544,13 +1542,14 @@ def test_meta_writes_are_staged_then_renamed(spark, tmp_path):
     assert "_meta.json" in os.listdir(d)
 
 
-def test_read_parquet_dirs_schema_and_listing_strategy(spark, tmp_path):
+def test_read_parquet_dirs_schema_and_listing_strategy(spark, tmp_path, monkeypatch):
     """_read_parquet_dirs: an explicit schema skips footer inference; the
     parallelPartitionDiscovery threshold raise is scoped (restored after
     plan creation, even on error) and applies only to file/hdfs schemes
     — object stores keep Spark's distributed listing."""
     import pytest
 
+    from fest_vibes_ai_etl_spark import fsio
     from fest_vibes_ai_etl_spark.streaming import banded_index as bi
 
     base = str(tmp_path / "t")
@@ -1558,31 +1557,28 @@ def test_read_parquet_dirs_schema_and_listing_strategy(spark, tmp_path):
         F.col("id"), F.pmod(F.col("id"), F.lit(8)).cast("int").alias("pband")
     )
     df.write.partitionBy("pband").parquet(base)
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(base)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
     paths = [f"{base}/pband={b}" for b in range(8)]
     key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
     prior = spark.conf.get(key)
 
     # inferred read (below the default threshold: no conf fiddling)
-    got = bi._read_parquet_dirs(spark, fs, base, paths)
+    got = bi._read_parquet_dirs(spark, base, paths)
     assert got.count() == 40 and spark.conf.get(key) == prior
 
     # explicit schema read returns the same rows
-    got2 = bi._read_parquet_dirs(spark, fs, base, paths, schema=got.schema)
+    got2 = bi._read_parquet_dirs(spark, base, paths, schema=got.schema)
     assert sorted(r.id for r in got2.collect()) == list(range(40))
 
     # above-threshold file-scheme read: raised during creation, restored
     spark.conf.set(key, "2")
     try:
-        got3 = bi._read_parquet_dirs(spark, fs, base, paths, schema=got.schema)
+        got3 = bi._read_parquet_dirs(spark, base, paths, schema=got.schema)
         assert spark.conf.get(key) == "2"  # restored to the (lowered) prior
         assert got3.count() == 40
         # error inside plan creation still restores (finally)
         with pytest.raises(Exception):
             bi._read_parquet_dirs(
-                spark, fs, base, [f"{base}/pband=77", f"{base}/pband=78",
+                spark, base, [f"{base}/pband=77", f"{base}/pband=78",
                                   f"{base}/pband=79"],
                 schema=got.schema,
             ).collect()
@@ -1590,20 +1586,14 @@ def test_read_parquet_dirs_schema_and_listing_strategy(spark, tmp_path):
     finally:
         spark.conf.set(key, prior)
 
-    # a non-file scheme never touches the conf: a stub fs whose URI says
-    # s3 must go straight to the default-listing branch
-    class _U:
-        def getScheme(self):
-            return "s3a"
-
-    class _S3Stub:
-        def getUri(self):
-            return _U()
-
+    # a non-file scheme never touches the conf: a path the filesystem
+    # qualifies as s3 must go straight to the default-listing branch
+    monkeypatch.setattr(
+        fsio, "qualify", lambda s, p: fsio.Qualified("s3a", None, "b", None, p)
+    )
     spark.conf.set(key, "2")
     try:
-        got4 = bi._read_parquet_dirs(spark, _S3Stub(), base, paths,
-                                     schema=got.schema)
+        got4 = bi._read_parquet_dirs(spark, base, paths, schema=got.schema)
         assert spark.conf.get(key) == "2"
         assert got4.count() == 40
     finally:

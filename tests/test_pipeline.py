@@ -180,7 +180,7 @@ def test_bridges_match_dim_join_reference(spark):
 
 
 def test_gold_document_shape_and_order(silver):
-    g = gold.events_for_date(silver, "2025-03-01", ref_date="2025-03-01")
+    g = gold.events_for_dates(silver, ["2025-03-01"], ref_date="2025-03-01")
     rows = g.collect()
     assert len(rows) == 3
     # W1: ordered by performance_time (19:00 Galactic, 20:00 Ellis, 21:30 Kermit)
@@ -200,7 +200,7 @@ def test_gold_document_shape_and_order(silver):
 
 def test_cache_payload_json_round_trips(silver):
     payload = gold.to_cache_payload(
-        gold.events_for_date(silver, "2025-03-01", ref_date="2025-03-02")
+        gold.events_for_dates(silver, ["2025-03-01"], ref_date="2025-03-02")
     )
     rows = payload.collect()
     assert {r.cache_key for r in rows} == {"events:2025-03-01"}

@@ -163,6 +163,21 @@ def test_daily_job_count_ceiling(spark, tmp_path):
     assert 0 < n <= DAILY_JOB_MAX_JOBS, f"daily job submitted {n} Spark jobs"
 
 
+def test_gold_plan_size_is_independent_of_the_date_count(spark):
+    """Gold is one plan with one ``event_date IN (...)`` filter, not one
+    copy per date: its optimized plan has the same node count at 1 and 7
+    dates."""
+    bronze = bronze_fixture(spark)
+
+    def gold_nodes(dates):
+        gold = driver.run_pipeline(spark, bronze, dates, with_embeddings=False)
+        plan = gold["cache_payload"]._jdf.queryExecution().optimizedPlan()
+        return len(plan.treeString().splitlines())
+
+    week = [f"2025-03-{d:02d}" for d in range(1, 8)]
+    assert gold_nodes(week[:1]) == gold_nodes(week)
+
+
 def test_pipeline_persists_into_versioned_table(spark, tmp_path):
     """End-to-end: bronze -> run_pipeline -> versioned fact table. A
     re-run with the same txn id is collapsed (no new version); the stored

@@ -86,16 +86,14 @@ def test_settle_backfills_pre_forward_store(spark, tmp_path):
     on settle; probes refuse before, answer identically after."""
     import shutil
 
-    from fest_vibes_ai_etl_spark.streaming.banded_index import (
-        hadoop_write_json,
-    )
+    from fest_vibes_ai_etl_spark import fsio
 
     store = _store(spark, tmp_path)
     # regress the store to the pre-forward layout
     shutil.rmtree(os.path.join(store, "forward"))
     meta = dict(load_index_meta(spark, store))
     meta.pop("n_doc_buckets")
-    hadoop_write_json(spark, os.path.join(store, "_meta.json"), meta)
+    fsio.write_json(spark, os.path.join(store, "_meta.json"), meta)
     invalidate_probe_memo(store)
 
     from fest_vibes_ai_etl_spark.streaming.incremental_search import (

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F  # noqa: F401
 
 from conftest import SF_DIR
 
+from fest_vibes_ai_etl_spark import fsio
 from fest_vibes_ai_etl_spark.sources import table
 from fest_vibes_ai_etl_spark.streaming import incremental_search as inc
 from fest_vibes_ai_etl_spark.streaming import state_store
@@ -148,17 +149,17 @@ def test_crash_before_rename_rolls_forward_from_stage(spark, tmp_path, monkeypat
     for i in range(6):
         proc(_docs(spark, i * 10, (i + 1) * 10), i)
     before = _rank(spark, idx)
-    real = state_store.hadoop_write_json
+    real = fsio.write_json
 
     def dying(spark_, path, obj):
         real(spark_, path, obj)
         if path.endswith(state_store._MANIFEST):
             raise RuntimeError("injected crash after manifest")
 
-    monkeypatch.setattr(state_store, "hadoop_write_json", dying)
+    monkeypatch.setattr(fsio, "write_json", dying)
     with pytest.raises(RuntimeError, match="injected crash"):
         inc.maintain_search_index(spark, idx, max_files_per_bucket=1)
-    monkeypatch.setattr(state_store, "hadoop_write_json", real)
+    monkeypatch.setattr(fsio, "write_json", real)
     # probe heals (roll-forward from the stage) and ranks identically
     assert _rank(spark, idx) == before
     stats = inc.maintain_search_index(spark, idx, max_files_per_bucket=1)
@@ -179,7 +180,7 @@ def test_crash_after_rename_rolls_forward(spark, tmp_path, monkeypatch):
     real = state_store._delete_inputs
     calls = {"n": 0}
 
-    def dying(fs, jvm, d, names):
+    def dying(spark_, d, names):
         calls["n"] += 1
         raise RuntimeError("injected crash before input deletes")
 
@@ -208,8 +209,7 @@ def test_delete_inputs_tolerates_missing_files(spark, tmp_path):
     d.mkdir()
     for name in ("a.parquet", "c.parquet"):
         (d / name).write_bytes(b"x")
-    jvm, fs, _ = state_store._fs_for(spark, str(d))
-    state_store._delete_inputs(fs, jvm, str(d), ["a.parquet", "b.parquet", "c.parquet"])
+    state_store._delete_inputs(spark, str(d), ["a.parquet", "b.parquet", "c.parquet"])
     assert os.listdir(d) == []
 
 

@@ -23,7 +23,7 @@ def tmproot():
 @pytest.fixture(params=["localfs", "mock_s3", "boto_s3"])
 def make_vt(request):
     """VersionedParquetTable factory parametrized over commit backends:
-    the default O_CREAT|O_EXCL local-FS CAS, the mock object-store
+    the default link-into-place local-FS CAS, the mock object-store
     conditional PUT, and the boto3-shaped S3 adapter running against the
     stubbed client — the race/rebase/model suites must hold under ALL
     (the S3 conditional-PUT adapter is the 100-TB deployment's
@@ -137,6 +137,57 @@ def test_versioned_table_merge_and_snapshot_read(spark, tmproot):
     assert got == {(1, "a", "x2"), (3, "a", "z"), (2, "b", "y")}
     # pruned read touches only the requested partition
     assert {r.p for r in t.read(spark, partition_values=["b"]).collect()} == {"b"}
+
+
+def test_commit_killed_after_create_leaves_table_committable(
+    spark, tmproot, monkeypatch
+):
+    """A writer killed after creating its commit file but before its
+    bytes land must leave no half-written head: ``latest()`` still
+    answers the prior version and the next commit lands. A bare
+    ``O_CREAT|O_EXCL`` create followed by a write left an empty head
+    manifest there, so ``latest()`` raised and every later CAS lost."""
+    import builtins
+    import os
+
+    from fest_vibes_ai_etl_spark.sources.merge_store import VersionedParquetTable
+
+    t = VersionedParquetTable(str(tmproot / "vt"), "p")
+    assert t.merge(spark, _vt_source(spark, [(1, "a", "x")]), keys=["k"]) == 1
+
+    class Killed(BaseException):
+        pass
+
+    class DyingFile:
+        """A file handle whose writer dies at its first write."""
+
+        def __init__(self, f):
+            self._f = f
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self._f.close()
+
+        def write(self, data):
+            raise Killed()
+
+    real_open, real_fdopen = builtins.open, os.fdopen
+    with monkeypatch.context() as m:
+        m.setattr(
+            builtins, "open",
+            lambda f, mode="r", *a, **k: DyingFile(real_open(f, mode, *a, **k))
+            if "w" in mode else real_open(f, mode, *a, **k),
+        )
+        m.setattr(
+            os, "fdopen", lambda fd, *a, **k: DyingFile(real_fdopen(fd, *a, **k))
+        )
+        with pytest.raises(Killed):
+            t._commit_cas(2, {"a": {"dir": "data/dead/p=a"}})
+    assert t.latest()[0] == 1
+    assert t.merge(spark, _vt_source(spark, [(2, "b", "y")]), keys=["k"]) == 2
+    assert {(r.k, r.p) for r in t.read(spark).collect()} == {(1, "a"), (2, "b")}
 
 
 def test_versioned_table_timestamp_partition_column(spark, tmproot, make_vt):

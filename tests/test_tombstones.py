@@ -512,15 +512,15 @@ def _kill_points(real_promote, calls):
     the manifest, before the first rename; between two finals' renames;
     after the last rename, before the input deletes."""
 
-    def die_before_first(fs, jvm, d, stage, names):
+    def die_before_first(spark_, d, stage, names):
         raise RuntimeError("injected crash before the first rename")
 
-    def die_between(fs, jvm, d, stage, names):
+    def die_between(spark_, d, stage, names):
         calls.append(len(names))
-        real_promote(fs, jvm, d, stage, names[:1])
+        real_promote(spark_, d, stage, names[:1])
         raise RuntimeError("injected crash between two renames")
 
-    def die_before_deletes(fs, jvm, d, names):
+    def die_before_deletes(spark_, d, names):
         raise RuntimeError("injected crash before input deletes")
 
     return [

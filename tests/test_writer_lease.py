@@ -230,7 +230,7 @@ def test_gen_stamp_closes_cross_session_memo_staleness(
 
     # foreign writer: dies in the roll-forward window (merged segment
     # visible AND inputs still present — the double-count state)
-    def dying(fs, jvm, d, names):
+    def dying(spark_, d, names):
         raise RuntimeError("injected crash before input deletes")
 
     monkeypatch.setattr(state_store, "_delete_inputs", dying)
@@ -258,17 +258,18 @@ def test_gen_stamp_closes_cross_session_memo_staleness(
 def test_compaction_journal_carries_lease_epoch(spark, tmp_path, monkeypatch):
     """Every journal written under a held lease is stamped with the
     fencing epoch (audit: which writer epoch performed which rewrite)."""
+    from fest_vibes_ai_etl_spark import fsio
     from fest_vibes_ai_etl_spark.streaming import state_store
 
     captured = {}
-    real_write = state_store.hadoop_write_json
+    real_write = fsio.write_json
 
     def spy(s, path, obj):
         if path.endswith(state_store._MANIFEST):
             captured[path] = dict(obj)
         return real_write(s, path, obj)
 
-    monkeypatch.setattr(state_store, "hadoop_write_json", spy)
+    monkeypatch.setattr(fsio, "write_json", spy)
 
     d = str(tmp_path / "s" / "postings" / "tb=0")
     for i in range(4):
@@ -319,13 +320,14 @@ def test_unreadable_head_claim_expires_by_mtime_after_ttl(spark, tmp_path):
     b.release()
 
 
-def test_hadoop_put_if_absent_maps_py4j_errors_to_typed_error(spark):
+def test_hadoop_put_if_absent_maps_py4j_errors_to_typed_error(spark, monkeypatch):
     """A JVM filesystem failure inside the Hadoop backend's put-if-absent
     surfaces as WriterLeaseError (never a raw Py4J trace escaping into
     bump_store_gen's retry loop); a plain False from rename stays a lost
     claim."""
     from py4j.protocol import Py4JJavaError
 
+    from fest_vibes_ai_etl_spark import fsio
     from fest_vibes_ai_etl_spark.streaming.writer_lease import (
         _HadoopLeaseBackend,
     )
@@ -353,9 +355,12 @@ def test_hadoop_put_if_absent_maps_py4j_errors_to_typed_error(spark):
         def exists(self, path):
             return False
 
+        def delete(self, path, recursive):
+            return False
+
     fs = StubFs()
     backend = _HadoopLeaseBackend(spark)
-    backend._fs = lambda path: (None, path, fs)
+    monkeypatch.setattr(fsio, "_resolve", lambda s, path: (fs, path))
     claim = "hdfs://nn/store/_writer_lease/e000000000001.json"
     with pytest.raises(WriterLeaseError, match="put-if-absent"):
         backend.put_if_absent(claim, b"{}")
