@@ -37,13 +37,16 @@ from pyspark.sql.functions import broadcast, pandas_udf
 
 from .. import fsio
 from ..functions import vector as V
+from ..streaming.banded_index import (
+    PartitionedAppend,
+    partitions_holding,
+    read_or_empty,
+)
 from ..streaming.revisions import (
     absorb,
     apply_revisions,
     burn,
     latest_rows,
-    partitions_holding,
-    read_or_empty,
     read_revisions,
     revise,
     sidecar_dir,
@@ -580,7 +583,6 @@ def make_index_add_processor(
     stats and the re-train trigger they feed: see
     :func:`_record_staleness_metrics`.
     """
-    from ..streaming.banded_index import PartitionedAppend
     from ..streaming.tombstones import read_tombstones
 
     appender = PartitionedAppend(index_dir, "cell_id", fs_options, key_cols=[id_col])
@@ -725,7 +727,7 @@ def absorb_ivf_revisions(spark, index_dir: str) -> dict:
             _vector_schema(meta, "rev int"),
         ).select(id_col, vec_col, "cell_id")
         cells = partitions_holding(
-            spark, index_dir, revs.select(id_col), id_col, "cell_id"
+            spark, index_dir, revs.select(id_col), [id_col], "cell_id"
         ) | {r[0] for r in fresh.select("cell_id").distinct().collect()}
         return [
             (

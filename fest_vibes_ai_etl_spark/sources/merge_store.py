@@ -849,11 +849,28 @@ class VersionedParquetTable:
         writers (no merge stages for 24h) and are reclaimed with their
         roots — the same mtime-retention contract as Delta VACUUM's window.
         Concurrent READERS of old snapshots remain the caller's contract:
-        run vacuum only when none may hold a pre-latest version."""
+        run vacuum only when none may hold a pre-latest version.
+
+        The same window reclaims ``_commits/*.tmp.*`` files: a writer that
+        died between creating its private commit temp and linking it
+        (:class:`LocalFSCommitBackend`) leaves the temp behind, and no
+        commit ever reads it."""
         import os
         import shutil
         import time as _time
 
+        now = _time.time()
+        try:
+            temps = [n for n in os.listdir(self._commits) if ".tmp." in n]
+        except OSError:
+            temps = []  # no local commits directory (an object-store backend)
+        for n in temps:
+            p = os.path.join(self._commits, n)
+            try:
+                if now - os.path.getmtime(p) >= staging_retention_s:
+                    os.remove(p)
+            except OSError:
+                pass  # its writer linked and removed it meanwhile
         _v, manifest = self.latest()
         live = {
             e["dir"] for k, e in manifest.items() if k not in _RESERVED_KEYS
@@ -863,7 +880,6 @@ class VersionedParquetTable:
             roots = os.listdir(self._data)
         except OSError:
             return 0
-        now = _time.time()
         root_dirs = [r for r in roots if not r.endswith("._STAGING")]
         for r in root_dirs:
             root_path = os.path.join(self._data, r)

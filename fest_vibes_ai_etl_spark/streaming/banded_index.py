@@ -40,7 +40,9 @@ stores in ONE job — :class:`PartitionedAppend` is a store's destination
 and its one-store case, :func:`append_many` the banded sidecars' fused
 case. The write has no fixed task count: :func:`batch_partitions` sizes
 its shuffle to the batch, explicitly, so the count holds whether or not
-adaptive query execution runs.
+adaptive query execution runs. So are two reads every store's owner ops
+make: :func:`read_or_empty` and :func:`partitions_holding`, the one scan
+naming the partitions a rewrite of some ids must reach.
 """
 
 from __future__ import annotations
@@ -49,10 +51,12 @@ import logging
 import threading
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import fsio
+from ..errors import is_missing_or_dataless
 
 # absolute ceiling on the band count: bands are directories, and a
 # directory per band is the price of partition pruning — 64k is already
@@ -151,6 +155,35 @@ def _read_parquet_dirs(
             finally:
                 _DISCOVERY_THRESHOLD_LOCK.release()
     return reader.parquet(*paths)
+
+
+def read_or_empty(
+    spark: SparkSession, path: str, schema: str | None = None
+) -> DataFrame | None:
+    """``path`` read as parquet or, when it is absent or holds no data
+    files, an empty ``schema`` frame (None without a schema)."""
+    try:
+        df = spark.read.parquet(path)
+        df.schema
+        return df
+    except AnalysisException as exc:
+        if not is_missing_or_dataless(exc):
+            raise
+    return None if schema is None else spark.createDataFrame([], schema)
+
+
+def partitions_holding(
+    spark: SparkSession, root: str, ids: DataFrame, key_cols: list[str],
+    part_col: str,
+) -> set:
+    """The ``part_col`` values of ``root``'s partitions that hold a row
+    matching ``ids`` on ``key_cols`` — one thin semi-join scan naming the
+    dirs a rewrite must reach (empty when ``root`` has no data)."""
+    df = read_or_empty(spark, root)
+    if df is None:
+        return set()
+    held = df.join(ids, key_cols, "left_semi").select(part_col).distinct()
+    return {r[0] for r in held.collect()}
 
 
 class BandedIndexLayoutError(RuntimeError):
@@ -768,16 +801,12 @@ class BandedFingerprintIndex:
         file, which the size-tiered :meth:`maintain` never promises. One
         thin scan names those bands, so the rewrite follows the erased
         rows, not the index. Returns the number of bands rewritten."""
-        if not self._open_for_maintenance(spark) or not self._stored_bands(spark):
+        if not self._open_for_maintenance(spark):
             return 0
-        held = (
-            spark.read.parquet(self.path)
-            .join(exclude, exclude_cols, "left_semi")
-            .select("pband")
-            .distinct()
+        bands = partitions_holding(spark, self.path, exclude, exclude_cols, "pband")
+        return self._compact_bands(
+            spark, sorted(bands), 0, exclude, exclude_cols, erase=True
         )
-        bands = sorted(r[0] for r in held.collect())
-        return self._compact_bands(spark, bands, 0, exclude, exclude_cols, erase=True)
 
     # --- re-banding ------------------------------------------------------
     # n_bands is chosen when the index is CREATED, sized to the corpus as

@@ -22,7 +22,8 @@ is ``min(text)`` per id. Its hooks open the index (crash heal, layout
 meta, forward settle), size the persisted batch frame and pin the
 content append id, append postings and forward rows before the marker
 (replay-idempotent, so no marker is needed there), re-append them
-guarded on the heal path, and compact them on the maintenance tick.
+guarded on the heal path, compact them on the maintenance tick, and
+erase them on the purge.
 
 Sidecars: every family keeps ``<corpus>_exactidx`` — (id, fp,
 fpk = xxhash64(fp)) rows banded on ``fpk`` (the exact family stores the
@@ -62,7 +63,8 @@ Per batch:
    census), folding tombstoned rows out of the bands.
 
 Physical erasure is :meth:`DedupStream.purge`, an operator op run
-between batches.
+between batches: the one purge of every family, the search index's
+derived stores included (its ``erase`` hook).
 
 Crash consistency: the in-flight marker brackets the corpus append and
 the sidecar appends, corpus FIRST. A crash in the window can only leave
@@ -215,7 +217,11 @@ class DedupFamily:
       own heal;
     - ``tick(spark)``: the maintenance of the corpus and the derived
       stores, every ``maintain_every`` batches, in place of the
-      lifecycle's corpus census.
+      lifecycle's corpus census;
+    - ``erase(spark, doomed, clear)``: the purge's erase of the derived
+      stores' rows of the tombstoned ids ``doomed`` (a frame of the
+      set's id column), after the corpus erase and before ``clear``
+      drops the tombstone set.
     """
 
     signatures: Callable[[DataFrame], DataFrame]
@@ -233,6 +239,7 @@ class DedupFamily:
     pre_commit: Callable | None = None
     heal: Callable | None = None
     tick: Callable | None = None
+    erase: Callable | None = None
 
 
 class DedupStream:
@@ -597,20 +604,26 @@ class DedupStream:
 
     def purge(self, spark, clear: bool = False) -> int:
         """Physically erase the tombstoned docs; returns the corpus rows
-        removed. Three steps under the writer lease on the corpus, each
-        idempotent, so re-running after a crash converges:
+        removed (for the search index, its doclen rows). Four steps under
+        the writer lease on the store, each idempotent, so re-running
+        after a crash converges:
 
         1. the corpus is rewritten without the tombstoned ids (the
            compactor's erase form);
-        2. every sidecar is folded the same way
+        2. the family's ``erase`` hook erases its derived stores' rows;
+        3. every sidecar is folded the same way
            (``BandedFingerprintIndex.purge``);
-        3. with ``clear=True``, the tombstone set is dropped — only now,
+        4. with ``clear=True``, the tombstone set is dropped — only now,
            or a stale ``_exactidx`` row would drop re-sent content
            forever.
 
-        Full erasure leaves a readable-empty corpus. An operator op (an
-        erasure SLA), not a per-batch cost: run it with the stream
-        stopped or between batches (single-writer)."""
+        The sidecars' exclude is worked out before the first erase: by
+        ``id``, or by ``fp`` in the fp-only exact sidecar, taken from the
+        set or, when the set has no ``fp`` column (the search index's),
+        from ``stored`` over it. Full erasure leaves a readable-empty
+        corpus. An operator op (an erasure SLA), not a per-batch cost:
+        run it with the stream stopped or between batches
+        (single-writer)."""
         from .writer_lease import writer_lease
 
         with writer_lease(spark, self.store_dir, "purge"):
@@ -618,6 +631,9 @@ class DedupStream:
             tomb = read_tombstones(spark, self.store_dir)
             if tomb is None:
                 return 0
+            ex, cols = self._sidecar_exclude(tomb)
+            if ex is None:
+                ex, cols = self.family.stored(tomb).select("fp"), ["fp"]
             # the set names its own id column (the fp-only family has none)
             idc = next(c for c in tomb.columns if c != "fp")
             doomed = tomb.select(idc)
@@ -631,7 +647,8 @@ class DedupStream:
                     spark, self.corpus_dir, erase=True,
                     exclude=doomed, exclude_cols=[idc],
                 )
-            ex, cols = self._sidecar_exclude(tomb)
+            if self.family.erase is not None:
+                self.family.erase(spark, doomed, clear)
             for idx in self.sidecars:
                 idx.purge(spark, exclude=ex, exclude_cols=cols)
             if clear:

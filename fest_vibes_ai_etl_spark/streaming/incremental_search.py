@@ -59,7 +59,9 @@ document id, and that lifecycle defines its steps once: the corpus is
 per id. The family's hooks open the index (crash heal, the layout meta
 below, the forward settle), pin the batch's append id, append postings
 and forward rows before the in-flight marker, re-append them guarded on
-the heal path, and compact them on the maintenance tick.
+the heal path, compact them on the maintenance tick, and erase them on
+the lifecycle's purge (``make_search_index_processor(idx).purge``: the
+one physical erase of every stream store).
 
 Crash matrix — the contract those steps keep (postings FIRST — that
 append is replay-idempotent, so every window before the doclen commit
@@ -124,27 +126,26 @@ from pyspark.sql import functions as F
 
 from .. import fsio
 from .banded_index import (
-    BandedFingerprintIndex,
     PartitionedAppend,
     append_partitioned,
     batch_partitions,
+    partitions_holding,
     planned_partitions,
+    read_or_empty,
 )
 from .revisions import (
     absorb,
     apply_revisions,
     burn,
-    drop_revisions,
     latest_rows,
     markers_dir,
-    partitions_holding,
-    read_or_empty,
     read_revisions,
     revise,
     sidecar_dir,
 )
 from .state_store import (
     _memo_for,
+    compact_small_files,
     has_data_files,
     invalidate_probe_memo,
     literal_frame,
@@ -286,11 +287,13 @@ def recover_search_index(
     maintenance pass may have left mid-merge — the owners (the stream
     processor at open, :func:`bm25_over_index` per probe,
     :func:`maintain_search_index` itself) all do. Directories healed
-    once this session are skipped via the probe memo (sound: only
-    maintenance/purge create new journals, and they invalidate the memo
-    at entry). ``memoize=False`` is for those owner ops themselves: they
-    are ABOUT to write new journals, so their pre-pass must neither trust
-    nor populate the memo."""
+    once this session are skipped via the probe memo (sound: only owner
+    ops create new journals — maintenance, and the processor's ``purge``
+    — and each invalidates the memo at entry: the writer lease bumps the
+    store generation, and maintenance and the purge's ``erase`` hook drop
+    it outright). ``memoize=False`` is for those owner ops themselves:
+    they are ABOUT to write new journals, so their pre-pass must neither
+    trust nor populate the memo."""
     if buckets is None:
         dirs = _postings_bucket_dirs(spark, index_dir)
     else:
@@ -572,7 +575,7 @@ def absorb_search_revisions(spark, index_dir: str) -> dict:
             f"{id_col} {idt}, rev int, dl bigint",
         ).select(id_col, "dl")
         tb = term_bucket(F.col("term"), ntb)
-        tbs = partitions_holding(spark, pdir, rev_ids, id_col, "tb") | {
+        tbs = partitions_holding(spark, pdir, rev_ids, [id_col], "tb") | {
             r[0] for r in post.select(tb).distinct().collect()
         }
         pairs = [(f"{pdir}/tb={b}", post.filter(tb == b)) for b in sorted(tbs)]
@@ -598,7 +601,9 @@ def delete_from_search_index(spark, index_dir: str, ids: list) -> int:
     gone), maintenance folds their rows out of every file it rewrites,
     and the stream BURNS the ids at batch entry — a replayed or re-sent
     doc under a tombstoned id can never be re-indexed. Physical removal
-    is :func:`purge_search_tombstones`. Returns how many of the ids were
+    is the processor's ``purge`` (:meth:`dedup_stream.DedupStream.purge`,
+    which erases doclen, then every derived store, then ``_docidx``).
+    Returns how many of the ids were
     actually indexed (all requested ids are tombstoned regardless — a
     delete may race a doc that is still in flight). Single-writer
     discipline: run between micro-batches of a HEALTHY stream — replay a
@@ -622,165 +627,43 @@ def _search_tombstones(spark, index_dir: str, id_col: str):
     return read_tombstones(spark, index_dir, cols=[id_col])
 
 
-@fenced("purge")
-def purge_search_tombstones(spark, index_dir: str, clear: bool = False) -> dict:
-    """Physically drop tombstoned docs from the index: rewrite ONLY the
-    postings buckets that contain them (one thin column-pruned scan names
-    the buckets — bounded by n_term_buckets) plus the doclen directory,
-    through the erase form of the journaled compactor maintenance uses,
-    so a crash anywhere heals at the next open. Probes rank identically
-    before and after (they anti-join the tombstone set) — purge timing
-    is an operations choice, not a correctness event. The tombstone set
-    is KEPT by default (the id stays burned — the ``_docidx`` replay
-    guard still holds it, so a re-sent id is skipped); ``clear=True``
-    drops it when the erasure must also forget the ids. Single-writer:
-    stream stopped or between batches."""
-    from pyspark.errors import AnalysisException
-
-    from ..errors import is_path_not_found
-    from .state_store import compact_small_files
-    from .tombstones import tombstones_path
-
+def _erase_derived(spark, index_dir: str, doomed: DataFrame, clear: bool) -> None:
+    """The family's purge hook (``DedupFamily.erase``), run after the
+    doclen erase: the doomed ids' rows leave the postings buckets that
+    hold them (one thin scan names them), the forward buckets their ids
+    hash to and the ``_rev`` sidecars, through the compactor's erase
+    form; with ``clear=True`` their revision markers go too, or a
+    re-ingested id would stay hidden behind a stale marker whose
+    ``_rev`` rows are gone."""
     meta = load_index_meta(spark, index_dir)
     id_col = meta["id_col"]
-    # purge rewrites/empties directories: probes must re-verify from disk
+    # the purge rewrites and empties directories: probes re-verify from
+    # disk; heal every crashed compaction before the scan reads them
     invalidate_probe_memo(index_dir)
     recover_search_index(spark, index_dir, memoize=False)
-    tomb = _search_tombstones(spark, index_dir, id_col)
-    if tomb is None:
-        return {"buckets_purged": 0, "docs_purged": 0}
-    pdir = _postings_dir(index_dir)
-    tbs: list[int] = []
-    try:
-        post = spark.read.parquet(pdir)
-        tbs = [
-            r[0]
-            for r in post.join(tomb, id_col, "left_semi")
-            .select("tb")
-            .distinct()
-            .collect()
-        ]
-    except AnalysisException as exc:
-        if not is_path_not_found(exc):
-            raise
-    for b in sorted(tbs):
-        compact_small_files(
-            spark,
-            f"{pdir}/tb={b}",
-            exclude=tomb,
-            exclude_cols=[id_col],
-            erase=True,
-        )
-    # the forward sidecar's affected db= buckets are computable from the
-    # tombstoned ids alone (db = hash(id)) — one tiny column job
-    if "n_doc_buckets" in meta:
-        fdir = _forward_dir(index_dir)
-        if fsio.exists(spark, fdir):
-            dbs = [
-                r[0]
-                for r in tomb.select(
-                    doc_bucket(F.col(id_col), int(meta["n_doc_buckets"]))
-                    .alias("db")
-                )
-                .distinct()
-                .collect()
-            ]
-            for b in sorted(dbs):
-                compact_small_files(
-                    spark,
-                    f"{fdir}/db={b}",
-                    exclude=tomb,
-                    exclude_cols=[id_col],
-                    erase=True,
-                )
+    pdir, fdir = _postings_dir(index_dir), _forward_dir(index_dir)
+    tbs = partitions_holding(spark, pdir, doomed, [id_col], "tb")
+    dirs = [f"{pdir}/tb={b}" for b in sorted(tbs)]
+    if "n_doc_buckets" in meta and fsio.exists(spark, fdir):
+        db = doc_bucket(F.col(id_col), int(meta["n_doc_buckets"]))
+        dbs = sorted(r[0] for r in doomed.select(db).distinct().collect())
+        dirs += [f"{fdir}/db={b}" for b in dbs]
     # a revised-then-erased doc also has rows in the _rev sidecars
-    for d in (_rev_terms_dir(index_dir), _rev_doclen_dir(index_dir)):
+    dirs += [_rev_terms_dir(index_dir), _rev_doclen_dir(index_dir)]
+    for d in dirs:
         compact_small_files(
-            spark, d, exclude=tomb, exclude_cols=[id_col],
-            erase=True,
+            spark, d, exclude=doomed, exclude_cols=[id_col], erase=True
         )
-    # resolved-view count (main ∪ latest-rev sidecar doclen, WITHOUT the
-    # tombstone filter — these are exactly the docs being purged)
-    revs_all = read_revisions(spark, index_dir, id_col)
-    try:
-        raw_dl = spark.read.parquet(_doclen_dir(index_dir)).select(id_col)
-        raw_dl.schema
-    except AnalysisException as exc:
-        if not is_path_not_found(exc):
-            raise
-        raw_dl = None
-    doomed_dl = raw_dl
-    if revs_all is not None:
-        rev_ids = revs_all.select(id_col)
-        doomed_dl = (
-            rev_ids if doomed_dl is None else doomed_dl.unionByName(rev_ids)
+    mdir = markers_dir(index_dir)
+    if clear and fsio.exists(spark, mdir):
+        compact_small_files(
+            spark, mdir, exclude=doomed, exclude_cols=[id_col], erase=True,
+            transform=lambda df: df.distinct(),
         )
-    docs = (
-        doomed_dl.join(tomb, id_col, "left_semi").distinct().count()
-        if doomed_dl is not None
-        else 0
-    )
-    compact_small_files(
-        spark,
-        _doclen_dir(index_dir),
-        exclude=tomb,
-        exclude_cols=[id_col],
-        erase=True,
-    )
-    # DEFENSE: on this engine an all-rows-excluded merge writes one 0-row
-    # schema-bearing file (verified live), so a doclen is normally never
-    # dataless and this branch stays unreachable — but a journal with no
-    # finals is layout-legal, so a filesystem/engine that does
-    # produce it must not leave an unreadable index behind
-    dl_dir = _doclen_dir(index_dir)
-    erased_all = fsio.exists(spark, dl_dir) and not has_data_files(spark, dl_dir)
-    if erased_all:
-        # FULL erasure: a dataless doclen directory would read as
-        # unreadable, not absent — delete doclen and postings so the
-        # stream's "no doclen ⇒ nothing authoritatively indexed" first-
-        # batch path applies cleanly (it invalidates the sidecar itself)
-        for d in (_doclen_dir(index_dir), pdir, _forward_dir(index_dir)):
-            fsio.delete(spark, d)
-    if clear:
-        # forget the ids EVERYWHERE: without the tombstone entry burn, a
-        # stale _docidx row would make the stream skip a re-sent id
-        # forever although doclen (purged) no longer holds it — fold the
-        # sidecar too, graduated segments included
-        docidx = BandedFingerprintIndex(
-            _docidx_path(index_dir), key_col="fpk", schema_tag=_SCHEMA_TAG
-        )
-        if erased_all:
-            docidx.invalidate(spark)
-        else:
-            docidx.purge(
-                spark,
-                exclude=tomb.select(F.col(id_col).cast("string").alias("fp")),
-                exclude_cols=["fp"],
-            )
-        # ...and their REVISION markers: apply_revisions anti-joins a
-        # revised id's main-store rows, so a re-ingested id (the stated
-        # point of clear=True) would be permanently invisible behind a
-        # stale marker whose _rev rows this purge just removed
-        mdir = markers_dir(index_dir)
-        if erased_all:
-            drop_revisions(spark, index_dir)
-        elif fsio.exists(spark, mdir):
-            compact_small_files(
-                spark, mdir,
-                exclude=tomb, exclude_cols=[id_col],
-                erase=True,
-                transform=lambda df: df.distinct(),
-            )
-            # a fold that removed every marker leaves a dataless dir or a
-            # 0-row file (engine-dependent) — drop it either way so
-            # read_revisions sees a clean absence, not an empty frame
-            if (
-                not has_data_files(spark, mdir)
-                or spark.read.parquet(mdir).isEmpty()
-            ):
-                fsio.delete(spark, mdir)
-        fsio.delete(spark, tombstones_path(index_dir))
-    return {"buckets_purged": len(tbs), "docs_purged": int(docs)}
+        # a fold that removed every marker leaves a dataless dir or a
+        # 0-row file: drop it so read_revisions sees a clean absence
+        if not has_data_files(spark, mdir) or spark.read.parquet(mdir).isEmpty():
+            fsio.delete(spark, mdir)
 
 
 @fenced("maintain")
@@ -814,8 +697,6 @@ def maintain_search_index(
     the main store so probes return to the marker-free fast path. None
     disables (revisions then absorb only at rebuild or via an explicit
     absorb call)."""
-    from .state_store import compact_small_files
-
     # maintenance can crash mid-compaction (new journals) and can empty a
     # bucket (all-rows-tombstoned merge): invalidate BEFORE touching
     # anything so a death anywhere leaves probes re-verifying from disk
@@ -997,6 +878,7 @@ def make_search_index_processor(
         pre_commit=lambda spark, f: append(f, st["aid"], False),
         heal=lambda spark, f: append(f, st["aid"] + "h", True),
         tick=tick,
+        erase=lambda spark, doomed, clear: _erase_derived(spark, index_dir, doomed, clear),
     )
     return DedupStream(
         index_dir, family, n_bands=n_bands, maintain_every=maintain_every,

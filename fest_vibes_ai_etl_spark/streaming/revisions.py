@@ -41,14 +41,13 @@ checks the quantizer fingerprint, assigns the cell and names its
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import fsio
-from ..errors import is_missing_or_dataless
 from . import state_store, tombstones
+from .banded_index import read_or_empty
 
 
 def markers_dir(index_dir: str) -> str:
@@ -66,21 +65,6 @@ def drop_revisions(spark, index_dir: str) -> None:
     reverse order would leave marked ids with no content to serve."""
     fsio.delete(spark, markers_dir(index_dir))
     fsio.delete(spark, sidecar_dir(index_dir))
-
-
-def read_or_empty(
-    spark, path: str, schema: str | None = None
-) -> DataFrame | None:
-    """``path`` read as parquet or, when it is absent or holds no data
-    files, an empty ``schema`` frame (None without a schema)."""
-    try:
-        df = spark.read.parquet(path)
-        df.schema
-        return df
-    except AnalysisException as exc:
-        if not is_missing_or_dataless(exc):
-            raise
-    return None if schema is None else spark.createDataFrame([], schema)
 
 
 def read_revisions(spark, index_dir: str, id_col: str = "doc_id"):
@@ -151,24 +135,6 @@ def latest_rows(
     return read_or_empty(spark, rev_dir, schema).join(
         revs, [id_col, "rev"], "left_semi"
     )
-
-
-def partitions_holding(
-    spark, root: str, ids: DataFrame, id_col: str, part_col: str
-) -> set:
-    """The ``part_col`` values of ``root``'s partitions that hold any of
-    ``ids`` — one thin semi-join scan naming the dirs a rewrite must
-    reach (empty when ``root`` has no data)."""
-    df = read_or_empty(spark, root)
-    if df is None:
-        return set()
-    return {
-        r[0]
-        for r in df.join(ids, id_col, "left_semi")
-        .select(part_col)
-        .distinct()
-        .collect()
-    }
 
 
 def revise(

@@ -25,12 +25,14 @@ lakehouse corpus has no row-level delete, so erasure is two-phase:
      (``BandedFingerprintIndex.maintain(exclude=...)``; rows in graduated
      segments wait for the purge).
 
-2. **Purge** (``DedupStream.purge``): physical erasure in three
-   idempotent steps. The corpus, then every sidecar
-   (``BandedFingerprintIndex.purge``), is rewritten without the
-   tombstoned rows by the erase form of ``state_store``'s one journaled
-   compactor; then, with ``clear=True``, the tombstone set is dropped. A
-   crash anywhere heals at the next open and a re-run converges. By
+2. **Purge** (``DedupStream.purge``, the one purge of every stream
+   store, the search index's included): physical erasure in idempotent
+   steps. The corpus, then the family's derived stores (its ``erase``
+   hook), then every sidecar (``BandedFingerprintIndex.purge``), is
+   rewritten without the tombstoned rows by the erase form of
+   ``state_store``'s one journaled compactor; then, with ``clear=True``,
+   the tombstone set is dropped. A crash anywhere heals at the next open
+   and a re-run converges. By
    default the tombstone set is KEPT after the purge (a suppression
    list: replaying old raw data must not resurrect erased content);
    ``clear=True`` drops it when the erasure request includes the

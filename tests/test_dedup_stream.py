@@ -189,6 +189,46 @@ def test_purge_clear_readmits_resent_text(spark, tmp_path, family):
     assert proc.purge(spark, clear=True) == 0
 
 
+def test_search_purge_clear_erases_every_store_and_readmits_the_id(spark, tmp_path):
+    """The search index purges through the same ``DedupStream.purge``.
+    Its tombstone set has no ``fp`` column, so the exact sidecar
+    ``_docidx`` is folded by the family's stored fp, ``cast(doc_id as
+    string)``. After ``purge(clear=True)`` the erased doc is physically
+    gone from doclen, postings, the forward rows and the ``_rev``
+    sidecars, its revision marker is folded, the tombstone set is
+    dropped, and the same id re-sent is indexed again."""
+    from fest_vibes_ai_etl_spark.streaming.incremental_search import (
+        bm25_over_index,
+        delete_from_search_index,
+        make_search_index_processor,
+        revise_search_document,
+    )
+    from fest_vibes_ai_etl_spark.streaming.revisions import read_revisions
+    from fest_vibes_ai_etl_spark.streaming.tombstones import tombstones_path
+
+    idx = str(tmp_path / "idx")
+    rows = lambda r: spark.createDataFrame(r, "doc_id long, text string")
+    proc = make_search_index_processor(idx, n_term_buckets=8)
+    proc(rows([(i, f"merge hash body {i} words") for i in range(1, 9)]), 0)
+    for i in (3, 5):
+        revise_search_document(spark, idx, i, f"merge revised body {i}")
+    delete_from_search_index(spark, idx, [3])
+    assert proc.purge(spark, clear=True) == 1
+    for sub in ("/doclen", "/postings", "/forward", "_rev/terms", "_rev/doclen"):
+        raw = spark.read.parquet(idx + sub)
+        assert raw.filter("doc_id = 3").count() == 0, sub
+        assert raw.filter("doc_id = 5").count() > 0, sub
+    docidx = spark.read.parquet(idx + "_docidx")
+    assert docidx.filter("fp = '3'").count() == 0
+    assert docidx.filter("fp = '4'").count() == 1
+    assert [r.doc_id for r in read_revisions(spark, idx, "doc_id").collect()] == [5]
+    assert not os.path.exists(tombstones_path(idx))
+    proc(rows([(3, "merge reborn body")]), 1)
+    hits = [r[0] for r in bm25_over_index(spark, idx, ["reborn"], topn=5).collect()]
+    assert hits == [3]
+    assert proc.purge(spark, clear=True) == 0
+
+
 def _data_files(path):
     return [
         n for n in os.listdir(path)

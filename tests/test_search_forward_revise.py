@@ -480,7 +480,6 @@ def test_purge_clear_lets_a_reingested_id_serve_again(spark, tmp_path):
         bm25_over_index,
         delete_from_search_index,
         make_search_index_processor,
-        purge_search_tombstones,
         revise_search_document,
     )
 
@@ -493,8 +492,7 @@ def test_purge_clear_lets_a_reingested_id_serve_again(spark, tmp_path):
     proc(docs, 0)
     revise_search_document(spark, idx, 2, "merge revised body")
     delete_from_search_index(spark, idx, [2])
-    stats = purge_search_tombstones(spark, idx, clear=True)
-    assert stats["docs_purged"] == 1
+    assert proc.purge(spark, clear=True) == 1
     assert read_revisions(spark, idx, "doc_id") is None  # markers forgotten
     # the id is unburned and re-ingestable: the stream indexes it fresh
     proc(

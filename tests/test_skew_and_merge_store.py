@@ -190,6 +190,33 @@ def test_commit_killed_after_create_leaves_table_committable(
     assert {(r.k, r.p) for r in t.read(spark).collect()} == {(1, "a"), (2, "b")}
 
 
+def test_vacuum_sweeps_aged_commit_temps(spark, tmproot):
+    """A commit temp left by a writer that died between creating and
+    linking it is swept by vacuum once it is older than the staging
+    retention; a fresh temp (a writer that may still link it) is kept,
+    and every commit still reads."""
+    import os
+    import uuid
+
+    from fest_vibes_ai_etl_spark.sources.merge_store import VersionedParquetTable
+
+    t = VersionedParquetTable(str(tmproot / "vt"), "p")
+    t.merge(spark, _vt_source(spark, [(1, "a", "x")]), keys=["k"])
+    t.merge(spark, _vt_source(spark, [(2, "b", "y")]), keys=["k"])
+    aged = os.path.join(t._commits, f"v000000000002.json.tmp.{uuid.uuid4().hex}")
+    fresh = os.path.join(t._commits, f"v000000000003.json.tmp.{uuid.uuid4().hex}")
+    for p in (aged, fresh):
+        with open(p, "wb") as f:
+            f.write(b'{"a": {"dir": "data/dead/p=a"}}')
+    os.utime(aged, (1, 1))  # ancient mtime: well past any retention
+    t.vacuum(staging_retention_s=3600)
+    assert not os.path.exists(aged)
+    assert os.path.exists(fresh)
+    assert t.history() == [1, 2]
+    rows = [{(r.k, r.p) for r in t.read_version(spark, v).collect()} for v in (1, 2)]
+    assert rows == [{(1, "a")}, {(1, "a"), (2, "b")}]
+
+
 def test_versioned_table_timestamp_partition_column(spark, tmproot, make_vt):
     """TIMESTAMP-typed partition column round-trip on both commit backends:
     manifest keys must match Spark's actual directory names, including the

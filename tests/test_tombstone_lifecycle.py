@@ -265,7 +265,7 @@ def test_purge_reaches_forward_and_revision_sidecars(spark, tmp_path):
     from fest_vibes_ai_etl_spark.streaming.incremental_search import (
         bm25_over_index,
         delete_from_search_index,
-        purge_search_tombstones,
+        make_search_index_processor,
         revise_search_document,
     )
 
@@ -278,8 +278,7 @@ def test_purge_reaches_forward_and_revision_sidecars(spark, tmp_path):
     revise_search_document(spark, store, 3, "revised unique content words")
     delete_from_search_index(spark, store, [3, 5])
     before = bm25_over_index(spark, store, ["merge", "hash"], topn=20).collect()
-    stats = purge_search_tombstones(spark, store)
-    assert stats["docs_purged"] >= 1
+    assert make_search_index_processor(store).purge(spark) >= 1
     after = bm25_over_index(spark, store, ["merge", "hash"], topn=20).collect()
     assert after == before  # purge timing is an operations choice
 

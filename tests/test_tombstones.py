@@ -79,8 +79,7 @@ def test_search_tombstoned_id_burned_and_purge_is_invisible(spark, tmp_path):
     dl = spark.read.parquet(idx + "/doclen")
     assert dl.filter(f"doc_id = {victim}").count() == 1  # old row, pre-purge
     # purge: physically gone from postings AND doclen; ranking unchanged
-    stats = inc.purge_search_tombstones(spark, idx)
-    assert stats["docs_purged"] == 1 and stats["buckets_purged"] > 0
+    assert proc.purge(spark) == 1
     assert (
         spark.read.parquet(idx + "/doclen").filter(f"doc_id = {victim}").count()
         == 0
@@ -256,7 +255,7 @@ def test_search_probe_survives_fully_purged_bucket(spark, tmp_path):
     )
     proc(batch, 0)
     inc.delete_from_search_index(spark, idx, [1])
-    inc.purge_search_tombstones(spark, idx)
+    proc.purge(spark)
     got = inc.bm25_over_index(spark, idx, ["zzuniqueterm"], topn=5).collect()
     assert got == []
     # the rest of the index still serves
@@ -323,7 +322,7 @@ def test_full_erasure_purge_leaves_usable_stores(spark, tmp_path):
     sproc = inc.make_search_index_processor(idx, n_term_buckets=8)
     sproc(rows((1, "merge hash window")), 0)
     inc.delete_from_search_index(spark, idx, [1])
-    inc.purge_search_tombstones(spark, idx)
+    sproc.purge(spark)
     assert inc.bm25_over_index(spark, idx, TERMS, topn=5).collect() == []
     sproc2 = inc.make_search_index_processor(idx, n_term_buckets=8)
     sproc2(rows((2, "merge hash window again")), 1)
@@ -532,10 +531,10 @@ def _kill_points(real_promote, calls):
 
 def test_purge_kill_points_converge(spark, tmp_path, monkeypatch):
     """A purge dying inside its corpus erase, at each of the compactor's
-    windows: the journal names staged or visible finals, so a fresh
-    stream's open rolls the erase forward — every surviving row visible
-    exactly once, the erased ones gone — and re-running the purge
-    converges."""
+    windows, for the exact dedup corpus and the search index's doclen:
+    the journal names staged or visible finals, so a fresh stream's open
+    rolls the erase forward — every surviving row visible exactly once,
+    the erased ones gone — and re-running the purge converges."""
     from functools import partial
 
     from fest_vibes_ai_etl_spark.streaming import dedup_stream, state_store
@@ -569,7 +568,33 @@ def test_purge_kill_points_converge(spark, tmp_path, monkeypatch):
         assert sorted(r.doc_id for r in spark.read.parquet(corpus).collect()) == [
             1, 2, 3, 5, 6, 7, 8, 100
         ]
-    assert calls and calls[0] >= 2
+    # the search index, dying inside its doclen erase: the open rolls it
+    # forward, the ranking is the pre-purge one, and the re-run erases the
+    # derived stores with no doclen row left to remove
+    for name, seam, dying in _kill_points(state_store._promote, calls):
+        idx = str(tmp_path / f"search_{name}")
+        proc = inc.make_search_index_processor(idx, n_term_buckets=8, maintain_every=None)
+        for b in range(3):
+            proc(_docs(spark, b * 20, (b + 1) * 20), b)
+        victims = [r[0] for r in _rank(spark, idx)[:2]]
+        inc.delete_from_search_index(spark, idx, victims)
+        before = _rank(spark, idx)
+        with monkeypatch.context() as m:
+            m.setattr(dedup_stream, "compact_small_files", small)
+            m.setattr(state_store, seam, dying)
+            with pytest.raises(RuntimeError, match="injected crash"):
+                proc.purge(spark)
+        assert os.path.exists(idx + "/doclen/_compact.json")
+        fresh = inc.make_search_index_processor(idx, n_term_buckets=8, maintain_every=None)
+        fresh(_docs(spark, 0, 20), 0)  # a replay: nothing new is indexed
+        assert not os.path.exists(idx + "/doclen/_compact.json")
+        assert _rank(spark, idx) == before, name
+        assert fresh.purge(spark) == 0
+        gone = f"doc_id IN ({victims[0]}, {victims[1]})"
+        for sub in ("doclen", "postings", "forward"):
+            assert spark.read.parquet(f"{idx}/{sub}").filter(gone).count() == 0, sub
+        assert _rank(spark, idx) == before, name
+    assert len(calls) == 2 and min(calls) >= 2, calls
 
 
 def test_revoke_kill_points_converge(spark, tmp_path, monkeypatch):
